@@ -785,7 +785,7 @@ object ScaleProbe {
       val serving = Serving.open(spark, dir)
       // decision cost: median single-map estimateAllow (pays one
       // manifest read each) vs ALL 32 maps through the batch form
-      // (one read) — the batch form is what collectExactMaps uses
+      // (one read) — the batch form is what collectAdaptiveSets uses
       val maps = (0 until 32).map { i =>
         val v = (i.toLong * 7919L) % (nL.toLong * fpl * rpf)
         Map("attr" -> Seq(v.toString))

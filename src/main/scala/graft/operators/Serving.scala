@@ -1,6 +1,9 @@
 package graft.operators
 
+import graft.functions.{bquant, quantize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** A resident SERVING SESSION over a persisted index — the
   * process-shaped entry point the deploy step produces (the
@@ -35,19 +38,19 @@ final class Serving private[operators] (
   /** Hybrid/MMR surfaces cast ids through bigint for the typed MMR
     * recurrence — a non-integral id would cast to null and decode as
     * 0, silently collapsing every candidate to one id. Fail loudly
-    * instead.
+    * instead. The batch surfaces check their query-id column the same
+    * way (`frame` = the query batch, `what` = "query id column").
     */
-  private def requireIntegralId(op: String): org.apache.spark.sql.types.DataType = {
-    val idType = data.schema(id).dataType
+  private def requireIntegralId(op: String, frame: DataFrame = data,
+      c: String = id, what: String = "id column")
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    val idType = frame.schema(c).dataType
     val integral = idType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
+      case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
-    require(integral,
-      s"$op: id column '$id' must be integral (is $idType)")
+    require(integral, s"$op: $what '$c' must be integral (is $idType)")
     idType
   }
 
@@ -102,7 +105,6 @@ final class Serving private[operators] (
     */
   def searchMmr(query: Array[Double], nProbe: Int, kPool: Int, k: Int,
       lam: Double): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(tier == "raw",
       s"searchMmr: layout at $path is a '$tier' tier — MMR's pair " +
         "similarities need the raw vectors")
@@ -149,49 +151,27 @@ final class Serving private[operators] (
   def searchMmrBatch(queries: DataFrame, qid: String, qvecCol: String,
       nProbe: Int, kPool: Int, k: Int, lam: Double,
       restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(tier == "raw",
       s"searchMmrBatch: layout at $path is a '$tier' tier — MMR's " +
         "pair similarities need the raw vectors")
     val idType = requireIntegralId("searchMmrBatch")
-    val qidType = queries.schema(qid).dataType
-    val qIntegral = qidType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    require(qIntegral,
-      s"searchMmrBatch: query id column '$qid' must be integral (is $qidType)")
+    val qidType = requireIntegralId("searchMmrBatch", queries, qid,
+      "query id column")
     // a duplicate qid would double every per-query candidate row and
     // silently corrupt the pool cut — user input error, fail loudly
     require(queries.groupBy(col(qid)).count()
         .filter(col("count") > 1).isEmpty,
       s"searchMmrBatch: duplicate '$qid' rows in the query batch — " +
         "each query must appear exactly once")
-    val qs = queries.select(col(qid),
-        col(qvecCol).cast("array<double>").as("__qv"))
-      .withColumn("__leaf",
-        explode(IvfIndex.probeExprF32(model, col("__qv"), nProbe)))
-    // In-list pre-prune: the probed-leaf union reaches the scan as a
-    // partition filter (a broadcast-join equality alone would not)
-    val leaves = qs.select("__leaf").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // restricts filter CANDIDATES before the pool cut (the single-
-    // surface convention): the predicates sit directly on the scan
-    // beside the leaf In-list, so parquet pushes both
-    val dataR = restricts.foldLeft(data)(_.filter(_))
-    val scored = dataR.filter(col("leaf_id").isin(leaves: _*))
-      .join(broadcast(qs), col("leaf_id") === col("__leaf"))
-      .select(col(qid), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol), col("__qv"))
-          .as("score"),
-        col(vecCol).cast("array<double>").as("__v"))
-      .groupBy(col(qid), col(id))
-      .agg(first(col("score")).as("score"), first(col("__v")).as("__v"))
-    val pool = Knn.topKPerQuery(scored, kPool, qid, id, Knn.Dot)
-    val cand = pool.select(col(qid).cast("bigint").as("query_id"),
+    // the shared routed candidate pairs (restricts on the pruned scan,
+    // before the pool cut — the single-surface convention); the
+    // vectors ride through the spill collapse into the pool
+    val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe)
+    val scored = collapse(pairs(probes, prune(probes, restricts))
+        .withColumn("__v", col(vecCol).cast("array<double>")),
+      dotKernel.pairScore, Seq("__v"))
+    val pool = Knn.topKPerQuery(scored, kPool, "__qid", id, Knn.Dot)
+    val cand = pool.select(col("__qid").cast("bigint").as("query_id"),
       col(id).cast("bigint").as("vec_id"), col("__v").as("v"),
       col("score").cast("double").as("sq"))
     Knn.mmrRerank(cand, k, lam)
@@ -290,8 +270,6 @@ final class Serving private[operators] (
       restricts: Seq[Column] = Nil,
       adaptive: Boolean = false,
       maxExactFraction: Double = 0.05): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(terms.nonEmpty,
       "searchHybrid: empty term list — a hybrid query needs a lexical " +
         "leg (use search/searchMmr for dense-only retrieval)")
@@ -344,9 +322,7 @@ final class Serving private[operators] (
         Window.orderBy(col("score").desc, col(id))))
       .select(col(id), col("rd"))
     val fused = brank.join(drank, Seq(id), "full_outer")
-      .select(col(id),
-        (coalesce(lit(1.0) / (col("rs") + 60L), lit(0.0)) +
-          coalesce(lit(1.0) / (col("rd") + 60L), lit(0.0))).as("rrf"))
+      .select(col(id), rrf)
     val pool = fused.orderBy(col("rrf").desc, col(id)).limit(kPool)
     mmrLam match {
       case None =>
@@ -387,6 +363,12 @@ final class Serving private[operators] (
     }
   }
 
+  /** Reciprocal-rank fusion of the lexical (`rs`) and dense (`rd`)
+    * ranks, Σ 1/(60+rank); a leg that missed the id contributes 0. */
+  private def rrf: Column =
+    (coalesce(lit(1.0) / (col("rs") + 60L), lit(0.0)) +
+      coalesce(lit(1.0) / (col("rd") + 60L), lit(0.0))).as("rrf")
+
   /** BATCHED [[searchHybrid]] — many (terms, query-vector) pairs run
     * the full hybrid stack in ONE distributed plan, completing the
     * serving matrix's batch column for the hybrid surface: the
@@ -417,24 +399,14 @@ final class Serving private[operators] (
       kPool: Int = 10, k: Int = 5,
       mmrLam: Option[Double] = None,
       restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(hasLexical,
       s"searchHybridBatch: no lexical sidecar at $path — attachLexical first")
     require(tier == "raw",
       s"searchHybridBatch: layout at $path is a '$tier' tier, not raw")
     requireLexicalCurrent("searchHybridBatch")
     mmrLam.foreach(_ => requireIntegralId("searchHybridBatch"))
-    val qidType = queries.schema(qid).dataType
-    val qIntegral = qidType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    require(qIntegral,
-      s"searchHybridBatch: query id column '$qid' must be integral (is $qidType)")
+    val qidType = requireIntegralId("searchHybridBatch", queries, qid,
+      "query id column")
     // a duplicate qid would join its exploded term list twice into
     // the BM25 contributions — doubled lexical scores the dense leg's
     // groupBy then hides. User input error, fail loudly.
@@ -476,30 +448,17 @@ final class Serving private[operators] (
         Window.partitionBy(qid).orderBy(col("score").desc, col(id))))
       .filter(col("rs") <= kLex)
       .select(col(qid), col(id), col("rs"))
-    val qs = queries.select(col(qid),
-        col(qvecCol).cast("array<double>").as("__qv"))
-      .withColumn("__leaf",
-        explode(IvfIndex.probeExprF32(model, col("__qv"), nProbe)))
-    val leaves = qs.select("__leaf").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // the restrict predicates sit directly on the held frame's scan
-    // beside the leaf In-list — parquet pushes both
-    val dataR = restricts.foldLeft(data)(_.filter(_))
-    val dscored = dataR.filter(col("leaf_id").isin(leaves: _*))
-      .join(broadcast(qs), col("leaf_id") === col("__leaf"))
-      .select(col(qid), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol), col("__qv"))
-          .as("score"))
-      .groupBy(col(qid), col(id))
-      .agg(first(col("score")).as("score"))
+    // the dense leg: the shared routed candidate pairs, restricts on
+    // the pruned scan beside the leaf In-list
+    val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe)
+    val dscored = collapse(pairs(probes, prune(probes, restricts)),
+      dotKernel.pairScore, Nil)
     val drank = dscored.withColumn("rd", row_number().over(
-        Window.partitionBy(qid).orderBy(col("score").desc, col(id))))
+        Window.partitionBy("__qid").orderBy(col("score").desc, col(id))))
       .filter(col("rd") <= kDense)
-      .select(col(qid), col(id), col("rd"))
+      .select(col("__qid").as(qid), col(id), col("rd"))
     val fused = brank.join(drank, Seq(qid, id), "full_outer")
-      .select(col(qid), col(id),
-        (coalesce(lit(1.0) / (col("rs") + 60L), lit(0.0)) +
-          coalesce(lit(1.0) / (col("rd") + 60L), lit(0.0))).as("rrf"))
+      .select(col(qid), col(id), rrf)
     val pool = fused.withColumn("rank", row_number().over(
         Window.partitionBy(qid).orderBy(col("rrf").desc, col(id)))
         .cast("bigint"))
@@ -618,7 +577,6 @@ final class Serving private[operators] (
     * incident response.
     */
   def verifyBqCodes(): Long = {
-    import org.apache.spark.sql.functions._
     require(hasBq,
       s"verifyBqCodes: layout at $path has no bq_code companion column")
     data.filter(graft.functions.bquant.codeDrift(col(vecCol),
@@ -640,7 +598,6 @@ final class Serving private[operators] (
     * ([[graft.functions.bquant.codeDrift]]).
     */
   def verifyBqCodesSince(fromVersion: Int): Long = {
-    import org.apache.spark.sql.functions._
     require(hasBq,
       s"verifyBqCodesSince: layout at $path has no bq_code column")
     // fresh = files ADDED since the baseline PLUS in-place rewrites
@@ -675,7 +632,6 @@ final class Serving private[operators] (
     * One groupBy on the 8 B code, partial-aggregable, one max.
     */
   def signTiePlateau(): Long = {
-    import org.apache.spark.sql.functions._
     require(hasBq,
       s"signTiePlateau: layout at $path has no bq_code companion column")
     // coalesce: on an EMPTY layout the outer agg(max) is one NULL row
@@ -697,7 +653,7 @@ final class Serving private[operators] (
     * Output — two shapes, like the raw path's [[IvfIndex.searchDf]]:
     * bare (no crowding, no metadata) = (id, leaf_id, sq_score) top-k
     * by score desc; with `crowding` and/or `metadata` the full
-    * serving tail applies ([[codedSingleTail]]) and the shape is
+    * serving tail applies ([[singleTail]]) and the shape is
     * (id, metadata columns…, sq_score, rank) ordered by rank —
     * leaf_id is not carried through the tail.
     */
@@ -708,25 +664,13 @@ final class Serving private[operators] (
     require(tier == "sq",
       s"searchSq: layout at $path is a '$tier' tier, not SQ8 " +
         "(no sq_code column)")
-    import org.apache.spark.sql.functions._
-    import graft.functions.quantize
-    val leaves = model.topLeaves(query, nProbe)
     val (qMa, qPacked) = quantize.packLocal(query)
-    val candidates = restricts.foldLeft(
-      data.filter(col("leaf_id").isin(leaves: _*)))((df, p) => df.filter(p))
+    val candidates = prune(model.topLeaves(query, nProbe), restricts)
     val scoreCol = quantize.score(
       quantize.packedDot(col("sq_code"), lit(qPacked)),
       col("ma"), lit(qMa))
-    if (crowding.isEmpty && metadata.isEmpty)
-      candidates
-        .select(col(id), col("leaf_id"), scoreCol.as("sq_score"))
-        .groupBy(col(id))
-        .agg(min(col("leaf_id")).as("leaf_id"),
-          first(col("sq_score")).as("sq_score"))
-        .orderBy(col("sq_score").desc, col(id))
-        .limit(k)
-    else codedSingleTail(candidates, scoreCol, "sq_score", k,
-      crowding, metadata)
+    singleTail(candidates, scoreCol, "sq_score", k, crowding,
+      metadata)
   }
 
   /** PQ-tier ADC search — the resident-handle form of the
@@ -742,7 +686,7 @@ final class Serving private[operators] (
     * Output — two shapes, like the raw path's [[IvfIndex.searchDf]]:
     * bare (no crowding, no metadata) = (id, leaf_id, adc_score)
     * top-k by score desc; with `crowding` and/or `metadata` the full
-    * serving tail applies ([[codedSingleTail]]) and the shape is
+    * serving tail applies ([[singleTail]]) and the shape is
     * (id, metadata columns…, adc_score, rank) ordered by rank —
     * leaf_id is not carried through the tail.
     */
@@ -753,25 +697,14 @@ final class Serving private[operators] (
     require(tier == "pq",
       s"searchAdc: layout at $path is a '$tier' tier, not PQ " +
         "(no pq_code column)")
-    import org.apache.spark.sql.functions._
     val cb = ProductQuantizer.loadCodebook(spark, path)
     val q = ProductQuantizer.loadRotation(spark, path)
       .map(r => ProductQuantizer.rotate(query, r)).getOrElse(query)
-    val leaves = model.topLeaves(query, nProbe)
-    val candidates = restricts.foldLeft(
-      data.filter(col("leaf_id").isin(leaves: _*)))((df, p) => df.filter(p))
+    val candidates = prune(model.topLeaves(query, nProbe), restricts)
     val scoreCol = ProductQuantizer.adcScoreExpr(col("pq_code"),
       ProductQuantizer.adcTable(q, cb))
-    if (crowding.isEmpty && metadata.isEmpty)
-      candidates
-        .select(col(id), col("leaf_id"), scoreCol.as("adc_score"))
-        .groupBy(col(id))
-        .agg(min(col("leaf_id")).as("leaf_id"),
-          first(col("adc_score")).as("adc_score"))
-        .orderBy(col("adc_score").desc, col(id))
-        .limit(k)
-    else codedSingleTail(candidates, scoreCol, "adc_score", k,
-      crowding, metadata)
+    singleTail(candidates, scoreCol, "adc_score", k, crowding,
+      metadata)
   }
 
   /** BQ SHORTLIST-THEN-RESCORE search on the resident handle — the
@@ -788,7 +721,7 @@ final class Serving private[operators] (
     *
     * Output — two shapes, like [[searchSq]]: bare = (id, leaf_id,
     * score) top-k by exact score desc; with `crowding`/`metadata`
-    * the shared serving tail applies ([[codedSingleTail]]) and the
+    * the shared serving tail applies ([[singleTail]]) and the
     * shape is (id, metadata columns…, score, rank) ordered by rank.
     */
   def searchBqRerank(query: Array[Double], nProbe: Int, m: Int, k: Int,
@@ -802,11 +735,7 @@ final class Serving private[operators] (
     require(hasBq,
       s"searchBqRerank: layout at $path has no bq_code companion " +
         "column — build it with graft.functions.bquant.packSigns")
-    import org.apache.spark.sql.functions._
-    import graft.functions.bquant
-    val leaves = model.topLeaves(query, nProbe)
-    val candidates = restricts.foldLeft(
-      data.filter(col("leaf_id").isin(leaves: _*)))((df, p) => df.filter(p))
+    val candidates = prune(model.topLeaves(query, nProbe), restricts)
     // stage 1: sign-dot shortlist over the 8 B codes; spill copies of
     // one id collapse (identical codes → identical score, max is a
     // formality), ties broken by id so the survivor set is
@@ -822,16 +751,7 @@ final class Serving private[operators] (
     val rescored = candidates.join(broadcast(shortlist), Seq(id))
     val scoreCol = graft.functions.vectors.dotProduct(
       col(vecCol).cast("array<double>"), typedLit(query.toSeq))
-    if (crowding.isEmpty && metadata.isEmpty)
-      rescored
-        .select(col(id), col("leaf_id"), scoreCol.as("score"))
-        .groupBy(col(id))
-        .agg(min(col("leaf_id")).as("leaf_id"),
-          first(col("score")).as("score"))
-        .orderBy(col("score").desc, col(id))
-        .limit(k)
-    else codedSingleTail(rescored, scoreCol, "score", k,
-      crowding, metadata)
+    singleTail(rescored, scoreCol, "score", k, crowding, metadata)
   }
 
   /** BATCHED [[searchBqRerank]] — the two-stage shortlist-rescore
@@ -845,7 +765,7 @@ final class Serving private[operators] (
     * corpus is never shuffled; the only wide exchange is the
     * window's per-query partitioning of candidate scores, the same
     * shape every batch tail already pays. Crowding / metadata ride
-    * the shared [[batchTail]]; the PER-QUERY surface
+    * the shared [[tail]]; the PER-QUERY surface
     * (`allowCol`/`attrs` allow-maps, `numCol`/`numAttrs` numeric
     * restriction sets — the shared validated contracts) filters each
     * (candidate, query) pair BEFORE the shortlist window, so every
@@ -862,9 +782,6 @@ final class Serving private[operators] (
       attrs: Seq[String] = Nil,
       numCol: Option[String] = None,
       numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.bquant
     require(m >= k, s"shortlist m=$m must be ≥ k=$k")
     require(tier == "raw",
       s"searchBatchBqRerank: layout at $path is a '$tier' tier — the " +
@@ -872,41 +789,18 @@ final class Serving private[operators] (
     require(hasBq,
       s"searchBatchBqRerank: layout at $path has no bq_code companion " +
         "column — build it with graft.functions.bquant.packSigns")
-    require(allowCol.isEmpty == attrs.isEmpty,
-      "searchBatchBqRerank: per-query restricts need BOTH the " +
-        "allow-map column (allowCol) and the constrained attributes " +
-        "(attrs)")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchBqRerank: per-query numeric restricts need BOTH " +
-        "the restriction column (numCol) and the constrained " +
-        "attributes (numAttrs)")
-    val probes = queries.select(Seq(col(qid).as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qv")) ++
-        allowCol.map(c => checkedAllow(c, attrs).as("__allow")).toSeq ++
-        numCol.map(c => checkedNum(c, numAttrs).as("__numr")).toSeq: _*)
-      .withColumn("leaf_id",
-        explode(IvfIndex.probeExprF32(model, col("__qv"),
-          math.max(1, nProbe))))
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    val side = restricts.foldLeft(pruned)(_.filter(_))
+    val pq = PerQuery(allowCol, attrs, numCol, numAttrs)
+    checkPerQuery("searchBatchBqRerank", pq, crowding)
+    val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe,
+      pq.columns)
+    val side = prune(probes, restricts)
     // stage 1: sign-dot per (candidate, query) pair over the codes
     // only — the per-query filters sit BEFORE the shortlist window,
     // so each tenant's m slots go to rows that tenant may see; spill
     // copies collapse before the per-query window limit. Stage 2
     // needs no re-filter: a surviving (qid, id) pair already passed.
-    // (allowCol ⇒ attrs.nonEmpty by the require above, so no
-    // empty-attrs arm here — unlike the adaptive fallbacks' cores)
-    val pairPreds = allowCol.map(_ => allowPredicate(attrs)).toSeq ++
-      numCol.map(_ => numPredicate(numAttrs)).toSeq
-    val sl = pairPreds.foldLeft(side.join(probes, Seq("leaf_id")))(
-        _.filter(_))
-      .select(col("__qid"), col(id),
-        bquant.signDot(col("bq_code"), col("__qv")).as("__bq"))
-      .groupBy(col("__qid"), col(id)).agg(max(col("__bq")).as("__bq"))
+    val sl = collapse(pairs(probes, side, pq), signKernel.pairScore, Nil,
+        signKernel.scoreName)
       .withColumn("__rn", row_number().over(Window
         .partitionBy(col("__qid"))
         .orderBy(col("__bq").desc, col(id))))
@@ -914,58 +808,52 @@ final class Serving private[operators] (
       .select(col("__qid"), col(id))
     // stage 2: exact rescore of the |Q|·m survivors — the pair list
     // broadcasts, the pruned scan is probed once more, corpus never
-    // shuffles
+    // shuffles. Rescore against the CHECKPOINTED query vectors, not a
+    // second evaluation of the caller's frame — a non-deterministic
+    // upstream plan would otherwise shortlist one set of vectors and
+    // rescore different ones
     val crowdAttr = crowding.map(_._1).toSeq
-    // rescore against the CHECKPOINTED query vectors, not a second
-    // evaluation of the caller's frame — a non-deterministic upstream
-    // plan would otherwise shortlist one set of vectors and rescore
-    // different ones
     val qframe = probes.select(col("__qid"), col("__qv"))
       .dropDuplicates("__qid")
     val rescored = side
       .select(Seq(col(id), col(vecCol)) ++ crowdAttr.map(col): _*)
       .join(broadcast(sl), Seq(id))
       .join(broadcast(qframe), Seq("__qid"))
-      .select(Seq(col("__qid"), col(id),
-        graft.functions.vectors.dotProduct(
-          col(vecCol).cast("array<double>"), col("__qv")).as("score")) ++
-        crowdAttr.map(col): _*)
-    val aggs = Seq(max(col("score")).as("score")) ++
-      crowdAttr.map(a => first(col(a)).as(a))
-    val unique = rescored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-    batchTail(unique, qid, k, crowding, metadata)
+    tail(collapse(rescored, dotKernel.pairScore, crowdAttr), qid, k,
+      crowding, metadata)
   }
 
-  /** The full serving tail (spill collapse → crowding cap → top-k →
-    * metadata join) for a SINGLE coded-tier query — identical
-    * semantics to the raw path's [[IvfIndex.searchExactDf]] tail
-    * (one candidate per id, crowding by attribute value over the
-    * quantized scores, rank 1-based by score desc then id), reusing
-    * the shared [[batchTail]] with a constant query id so the two
-    * tails can never drift. The reference provisions crowding and
-    * restricts per datapoint regardless of how the deployed index
-    * stores vectors (setup_vector_search.py:45-76) — the storage
-    * tier changes the scan kernel, never the serving shape.
-    * Output: (id, metadata columns…, `scoreName`, rank).
+  /** The SINGLE-query serving tail. Bare (no crowding, no metadata):
+    * spill copies collapse per id (lowest leaf kept), top-k by score
+    * desc = (id, leaf_id, `scoreName`). Otherwise the full tail (spill
+    * collapse → crowding cap → top-k → metadata join) with identical
+    * semantics to the raw path's [[IvfIndex.searchExactDf]] tail (one
+    * candidate per id, crowding by attribute value, rank 1-based by
+    * score desc then id), reusing the batch [[tail]] with a constant
+    * query id so the two tails can never drift. The reference
+    * provisions crowding and restricts per datapoint regardless of how
+    * the deployed index stores vectors (setup_vector_search.py:45-76)
+    * — the storage tier changes the scan kernel, never the serving
+    * shape. Output: (id, metadata columns…, `scoreName`, rank).
     */
-  private def codedSingleTail(candidates: DataFrame, score: Column,
-      scoreName: String, k: Int, crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val crowdAttr = crowding.map(_._1).toSeq
-    val scored = candidates.select(
-      Seq(lit(0).as("__qid"), col(id), score.as("score")) ++
-        crowdAttr.map(col): _*)
-    val aggs = Seq(max(col("score")).as("score")) ++
-      crowdAttr.map(a => first(col(a)).as(a))
-    val unique = scored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-    batchTail(unique, "__q", k, crowding, metadata)
-      .drop("__q")
-      .withColumnRenamed("rn", "rank")
-      .withColumnRenamed("score", scoreName)
-      .orderBy("rank")
+  private def singleTail(candidates: DataFrame, score: Column,
+      scoreName: String, k: Int, crowding: Option[(String, Int)] = None,
+      metadata: Option[(DataFrame, String)] = None): DataFrame = {
+    if (crowding.isEmpty && metadata.isEmpty)
+      candidates
+        .select(col(id), col("leaf_id"), score.as(scoreName))
+        .groupBy(col(id))
+        .agg(min(col("leaf_id")).as("leaf_id"),
+          first(col(scoreName)).as(scoreName))
+        .orderBy(col(scoreName).desc, col(id))
+        .limit(k)
+    else
+      tail(collapse(candidates, score, crowding.map(_._1).toSeq,
+          qidCol = lit(0).as("__qid")), "__q", k, crowding, metadata)
+        .drop("__q")
+        .withColumnRenamed("rn", "rank")
+        .withColumnRenamed("score", scoreName)
+        .orderBy("rank")
   }
 
   /** Multi-vector LATE-INTERACTION search against the held layout —
@@ -984,33 +872,44 @@ final class Serving private[operators] (
     */
   def searchMaxSim(queryVecs: Seq[Array[Double]], nProbe: Int, k: Int,
       docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(queryVecs.nonEmpty, "searchMaxSim needs ≥ 1 query vector")
-    // same 1024-leaf In-list bound as the batch paths: a large
-    // queryVecs × nProbe product degrades to the full scan (extra
-    // candidates only cost work, never rows) instead of a huge plan
-    val leaves = queryVecs.flatMap(q => model.topLeaves(q, nProbe))
-      .distinct
-    val pruned0 = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves: _*)) else data
-    // per-datapoint restricts, the same contract as the single-vector
-    // paths: ANDed predicates over the layout's own columns, sitting
-    // directly on the pruned scan (keep them on top-level columns so
-    // they reach PushedFilters)
-    val pruned = restricts.foldLeft(pruned0)(_ filter _)
     val qdf = spark.createDataFrame(
       queryVecs.zipWithIndex.map { case (q, i) => (i, q.toSeq) })
       .toDF("__qidx", "__qv")
-    pruned
-      .crossJoin(broadcast(qdf))
-      .groupBy(col(docCol), col("__qidx"))
-      .agg(max(graft.functions.vectors.dotProduct(col(vecCol),
-        col("__qv"))).as("__best"))
-      .groupBy(col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("score"))
-      .orderBy(col("score").desc, col(docCol))
-      .limit(k)
+    maxSimTop(maxSimScan(queryVecs, nProbe, restricts), qdf,
+      dotKernel.pairScore, docCol, k)
   }
+
+  /** The single-query MaxSim candidate scan: the UNION of every query
+    * vector's probed leaves under the shared 1024-leaf In-list bound
+    * ([[prune]] — a large queryVecs × nProbe product degrades to the
+    * full scan, extra candidates only cost work, never rows), with
+    * the per-datapoint restricts on the pruned scan (the same contract
+    * as the single-vector paths — keep them on top-level columns so
+    * they reach PushedFilters).
+    */
+  private def maxSimScan(queryVecs: Seq[Array[Double]], nProbe: Int,
+      restricts: Seq[Column]): DataFrame =
+    prune(queryVecs.flatMap(q => model.topLeaves(q, nProbe)).distinct,
+      restricts)
+
+  /** Late-interaction scores: `cand` × the broadcast token frame
+    * `qdf` (`__qidx` + the kernel's columns), per-(key…, token) MAX of
+    * `pairScore`, exact-decimal sum per key → `name`. Keys are
+    * (docCol) for a single query, (__qid, docCol) for a batch. */
+  private def maxSim(paired: DataFrame, keys: Seq[String],
+      pairScore: Column, name: String): DataFrame =
+    paired.groupBy((keys :+ "__qidx").map(col): _*)
+      .agg(max(pairScore).as("__best"))
+      .groupBy(keys.map(col): _*)
+      .agg(graft.Exact.dsum(col("__best"), 12).as(name))
+
+  /** Single-query MaxSim top-`k` (`name` desc, docCol asc). */
+  private def maxSimTop(cand: DataFrame, qdf: DataFrame, pairScore: Column,
+      docCol: String, k: Int, name: String = "score"): DataFrame =
+    maxSim(cand.crossJoin(broadcast(qdf)), Seq(docCol), pairScore, name)
+      .orderBy(col(name).desc, col(docCol))
+      .limit(k)
 
   /** [[searchMaxSim]] over the SQ8 TIER — late-interaction serving at
     * the 1/4 memory footprint: the per-(row, qvec) inner loop is the
@@ -1026,34 +925,17 @@ final class Serving private[operators] (
     */
   def searchMaxSimSq(queryVecs: Seq[Array[Double]], nProbe: Int, k: Int,
       docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.quantize
     require(tier == "sq",
       s"searchMaxSimSq: layout at $path is a '$tier' tier, not SQ8")
     require(queryVecs.nonEmpty, "searchMaxSimSq needs ≥ 1 query vector")
-    // same 1024-leaf In-list bound as the batch paths (see
-    // [[searchMaxSim]])
-    val leaves = queryVecs.flatMap(q => model.topLeaves(q, nProbe))
-      .distinct
-    val pruned = restricts.foldLeft(
-      if (leaves.length <= 1024)
-        data.filter(col("leaf_id").isin(leaves: _*)) else data)(_ filter _)
     val qdf = spark.createDataFrame(
       queryVecs.zipWithIndex.map { case (q, i) =>
         val (ma, pk) = quantize.packLocal(q)
         (i, ma, pk)
       })
       .toDF("__qidx", "__qma", "__qpk")
-    pruned
-      .crossJoin(broadcast(qdf))
-      .groupBy(col(docCol), col("__qidx"))
-      .agg(max(quantize.score(
-        quantize.packedDot(col("sq_code"), col("__qpk")),
-        col("ma"), col("__qma"))).as("__best"))
-      .groupBy(col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("score"))
-      .orderBy(col("score").desc, col(docCol))
-      .limit(k)
+    maxSimTop(maxSimScan(queryVecs, nProbe, restricts), qdf,
+      sqKernel.pairScore, docCol, k)
   }
 
   /** [[searchMaxSim]] over the PQ TIER — late interaction at the
@@ -1076,34 +958,20 @@ final class Serving private[operators] (
     */
   def searchMaxSimAdc(queryVecs: Seq[Array[Double]], nProbe: Int, k: Int,
       docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(tier == "pq",
       s"searchMaxSimAdc: layout at $path is a '$tier' tier, not PQ")
     require(queryVecs.nonEmpty, "searchMaxSimAdc needs ≥ 1 query vector")
     val cb = ProductQuantizer.loadCodebook(spark, path)
     val rot = ProductQuantizer.loadRotation(spark, path)
-    // same 1024-leaf In-list bound as the batch paths (see
-    // [[searchMaxSim]])
-    val leaves = queryVecs.flatMap(q => model.topLeaves(q, nProbe))
-      .distinct
-    val pruned = restricts.foldLeft(
-      if (leaves.length <= 1024)
-        data.filter(col("leaf_id").isin(leaves: _*)) else data)(_ filter _)
     val qdf = spark.createDataFrame(
       queryVecs.zipWithIndex.map { case (q, i) =>
         val rq = rot.map(r => ProductQuantizer.rotate(q, r)).getOrElse(q)
         (i, rq.toSeq)
       })
       .toDF("__qidx", "__qv")
-    pruned
-      .crossJoin(broadcast(qdf))
-      .groupBy(col(docCol), col("__qidx"))
-      .agg(max(ProductQuantizer.adcDirectExpr(col("pq_code"),
-        col("__qv"), cb)).as("__best"))
-      .groupBy(col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("score"))
-      .orderBy(col("score").desc, col(docCol))
-      .limit(k)
+    maxSimTop(maxSimScan(queryVecs, nProbe, restricts), qdf,
+      ProductQuantizer.adcDirectExpr(col("pq_code"), col("__qv"), cb),
+      docCol, k)
   }
 
   /** [[searchMaxSim]] over the BQ SHORTLIST rung — late interaction
@@ -1127,8 +995,6 @@ final class Serving private[operators] (
   def searchMaxSimBq(queryVecs: Seq[Array[Double]], nProbe: Int,
       m: Int, k: Int, docCol: String,
       restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.bquant
     require(m >= k, s"shortlist m=$m must be ≥ k=$k")
     require(tier == "raw",
       s"searchMaxSimBq: layout at $path is a '$tier' tier — the BQ " +
@@ -1137,36 +1003,18 @@ final class Serving private[operators] (
       s"searchMaxSimBq: layout at $path has no bq_code companion " +
         "column — build it with graft.functions.bquant.packSigns")
     require(queryVecs.nonEmpty, "searchMaxSimBq needs ≥ 1 query vector")
-    val leaves = queryVecs.flatMap(q => model.topLeaves(q, nProbe))
-      .distinct
-    val pruned = restricts.foldLeft(
-      if (leaves.length <= 1024)
-        data.filter(col("leaf_id").isin(leaves: _*)) else data)(_ filter _)
+    val pruned = maxSimScan(queryVecs, nProbe, restricts)
     val qdf = spark.createDataFrame(
       queryVecs.zipWithIndex.map { case (q, i) => (i, q.toSeq) })
       .toDF("__qidx", "__qv")
     // stage 1: doc shortlist from the 8 B codes only — the raw
     // vector column never loads for docs the signs rule out
-    val shortlist = pruned
-      .crossJoin(broadcast(qdf))
-      .groupBy(col(docCol), col("__qidx"))
-      .agg(max(bquant.signDot(col("bq_code"), col("__qv")))
-        .as("__best"))
-      .groupBy(col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("__bq"))
-      .orderBy(col("__bq").desc, col(docCol))
-      .limit(m)
+    val shortlist = maxSimTop(pruned, qdf, signKernel.pairScore, docCol,
+        m, signKernel.scoreName)
       .select(col(docCol))
     // stage 2: exact float MaxSim over the m surviving docs only
-    pruned.join(broadcast(shortlist), Seq(docCol))
-      .crossJoin(broadcast(qdf))
-      .groupBy(col(docCol), col("__qidx"))
-      .agg(max(graft.functions.vectors.dotProduct(
-        col(vecCol).cast("array<double>"), col("__qv"))).as("__best"))
-      .groupBy(col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("score"))
-      .orderBy(col("score").desc, col(docCol))
-      .limit(k)
+    maxSimTop(pruned.join(broadcast(shortlist), Seq(docCol)), qdf,
+      dotKernel.pairScore, docCol, k)
   }
 
   /** BATCHED multi-vector late interaction — a FRAME of MaxSim
@@ -1195,14 +1043,9 @@ final class Serving private[operators] (
     */
   def searchMaxSimBatch(queries: DataFrame, qid: String,
       qvecsCol: String, nProbe: Int, k: Int, docCol: String,
-      restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol,
-      Nil,
-      graft.functions.vectors.dotProduct(
-        col(vecCol).cast("array<double>"), col("__qv")),
+      restricts: Seq[Column] = Nil): DataFrame =
+    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, dotKernel,
       restricts)
-  }
 
   /** [[searchMaxSimBatch]] with PER-QUERY allow-maps — the
     * late-interaction cell of the per-query restrict surface
@@ -1221,7 +1064,6 @@ final class Serving private[operators] (
       kCol: Option[String] = None,
       numCol: Option[String] = None,
       numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(attrs.nonEmpty,
       "searchMaxSimBatchPerQuery: pass the layout attributes the " +
         "allow-maps may constrain (attrs) — an empty set makes every " +
@@ -1230,14 +1072,8 @@ final class Serving private[operators] (
       "searchMaxSimBatchPerQuery: per-query numeric restricts need " +
         "BOTH the restriction column (numCol) and the constrained " +
         "attributes (numAttrs)")
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol,
-      Nil,
-      graft.functions.vectors.dotProduct(
-        col(vecCol).cast("array<double>"), col("__qv")),
-      restricts,
-      allow = Some((allowCol, attrs)),
-      kCol = kCol,
-      num = numCol.map(c => (c, numAttrs)))
+    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, dotKernel,
+      restricts, PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol))
   }
 
   /** [[searchMaxSimBatch]] on the SQ8 TIER — the batched form of
@@ -1254,17 +1090,11 @@ final class Serving private[operators] (
       restricts: Seq[Column] = Nil,
       allow: Option[(String, Seq[String])] = None,
       kCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.quantize
     require(tier == "sq",
       s"searchMaxSimBatchSq: layout at $path is a '$tier' tier, not SQ8")
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol,
-      Seq("__qma" -> quantize.maxAbs(col("__qv")),
-        "__qpk" -> quantize.packCodes(
-          quantize.codes(col("__qv"), quantize.maxAbs(col("__qv"))))),
-      quantize.score(quantize.packedDot(col("sq_code"), col("__qpk")),
-        col("ma"), col("__qma")),
-      restricts, allow, kCol)
+    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, sqKernel,
+      restricts, PerQuery(allow.map(_._1), allow.toSeq.flatMap(_._2),
+        kCol = kCol))
   }
 
   /** [[searchMaxSimBatch]] on the PQ TIER — the batched form of
@@ -1282,17 +1112,11 @@ final class Serving private[operators] (
       restricts: Seq[Column] = Nil,
       allow: Option[(String, Seq[String])] = None,
       kCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(tier == "pq",
       s"searchMaxSimBatchAdc: layout at $path is a '$tier' tier, not PQ")
-    val cb = ProductQuantizer.loadCodebook(spark, path)
-    val rot = ProductQuantizer.loadRotation(spark, path)
-    val rotated = rot.map(r => ProductQuantizer.rotateExpr(col("__qv"), r))
-      .getOrElse(col("__qv"))
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol,
-      Seq("__qrot" -> rotated),
-      ProductQuantizer.adcDirectExpr(col("pq_code"), col("__qrot"), cb),
-      restricts, allow, kCol)
+    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, adcKernel,
+      restricts, PerQuery(allow.map(_._1), allow.toSeq.flatMap(_._2),
+        kCol = kCol))
   }
 
   /** [[searchMaxSimBatch]] on the BQ SHORTLIST rung — the batched
@@ -1311,9 +1135,6 @@ final class Serving private[operators] (
   def searchMaxSimBatchBq(queries: DataFrame, qid: String,
       qvecsCol: String, nProbe: Int, m: Int, k: Int,
       docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.bquant
     require(m >= k, s"shortlist m=$m must be ≥ k=$k")
     require(tier == "raw",
       s"searchMaxSimBatchBq: layout at $path is a '$tier' tier — the " +
@@ -1321,127 +1142,62 @@ final class Serving private[operators] (
     require(hasBq,
       s"searchMaxSimBatchBq: layout at $path has no bq_code companion " +
         "column — build it with graft.functions.bquant.packSigns")
-    val probes = queries.select(col(qid).as("__qid"),
-        posexplode(col(qvecsCol).cast("array<array<double>>")))
-      .withColumnRenamed("pos", "__qidx")
-      .withColumnRenamed("col", "__qv")
-      .withColumn("leaf_id", explode(IvfIndex.probeExprF32(model,
-        col("__qv"), math.max(1, nProbe))))
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = restricts.foldLeft(
-      if (leaves.length <= 1024)
-        data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    )(_ filter _)
-    val qidLeaves = probes.select(col("__qid"), col("leaf_id")).distinct()
-    val cand = pruned.join(broadcast(qidLeaves), Seq("leaf_id"))
+    val probes = tokenFrame(queries, qid, qvecsCol, dotKernel, nProbe)
+    val cand = maxSimCandidates(probes, restricts)
     val qframe = probes.select(col("__qid"), col("__qidx"), col("__qv"))
       .dropDuplicates("__qid", "__qidx")
     // stage 1: per-qid doc shortlist from the 8 B codes only
-    val sl = cand.join(broadcast(qframe), Seq("__qid"))
-      .groupBy(col("__qid"), col(docCol), col("__qidx"))
-      .agg(max(bquant.signDot(col("bq_code"), col("__qv")))
-        .as("__best"))
-      .groupBy(col("__qid"), col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("__bq"))
+    val sl = maxSim(cand.join(broadcast(qframe), Seq("__qid")),
+        Seq("__qid", docCol), signKernel.pairScore, signKernel.scoreName)
       .withColumn("__rn", row_number().over(Window
         .partitionBy(col("__qid"))
         .orderBy(col("__bq").desc, col(docCol))))
       .filter(col("__rn") <= m)
       .select(col("__qid"), col(docCol))
     // stage 2: exact float MaxSim over each qid's m surviving docs
-    cand.join(broadcast(sl), Seq("__qid", docCol))
-      .join(broadcast(qframe), Seq("__qid"))
-      .groupBy(col("__qid"), col(docCol), col("__qidx"))
-      .agg(max(graft.functions.vectors.dotProduct(
-        col(vecCol).cast("array<double>"), col("__qv"))).as("__best"))
-      .groupBy(col("__qid"), col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("score"))
-      .withColumn("rn", row_number().over(Window
-        .partitionBy(col("__qid"))
-        .orderBy(col("score").desc, col(docCol))).cast("bigint"))
+    maxSimRank(maxSim(cand.join(broadcast(sl), Seq("__qid", docCol))
+        .join(broadcast(qframe), Seq("__qid")), Seq("__qid", docCol),
+        dotKernel.pairScore, "score"), docCol)
       .filter(col("rn") <= k)
       .withColumnRenamed("__qid", qid)
       .select(col(qid), col(docCol), col("score"), col("rn"))
       .orderBy(col(qid), col("rn"))
   }
 
-  /** The shared batched-MaxSim core — routing at the global bound,
-    * 1024-leaf In-list guard, per-qid candidate union, broadcast of
-    * the decorated token frame, per-(qid, doc, token) MAX, exact-
-    * decimal per-(qid, doc) sum, per-qid window top-k. `decorate`
-    * adds per-token derived columns (quantized codes, rotated
-    * vectors) computed ONCE per token in the checkpointed probe
-    * frame; `pairScore` reads layout columns and the decorations.
+  /** The shared batched-MaxSim core — the shared token frame
+    * ([[tokenFrame]]: routing at the global bound, the kernel's
+    * per-token columns computed ONCE per token, eager checkpoint),
+    * the shared 1024-leaf [[prune]], per-qid candidate union,
+    * broadcast of the token frame, per-pair filters, per-(qid, doc,
+    * token) MAX, exact-decimal per-(qid, doc) sum, per-qid window
+    * top-k.
     */
   private def maxSimBatchCore(queries: DataFrame, qid: String,
       qvecsCol: String, nProbe: Int, k: Int, docCol: String,
-      decorate: Seq[(String, Column)], pairScore: Column,
-      restricts: Seq[Column] = Nil,
-      allow: Option[(String, Seq[String])] = None,
-      kCol: Option[String] = None,
-      num: Option[(String, Seq[String])] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
+      kernel: Serving.Kernel, restricts: Seq[Column],
+      pq: PerQuery = PerQuery()): DataFrame = {
     // per-qid allow-maps and NUMERIC restriction sets ride the query
     // row (one contract per qid, shared by all its token vectors) —
-    // validated in-plan like every per-query surface (checkedAllow /
-    // checkedNum raise on an out-of-contract entry)
-    val allowSel = allow.map { case (c, attrs) =>
-      checkedAllow(c, attrs).as("__allow") }.toSeq ++
-      num.map { case (c, numAttrs) =>
-        checkedNum(c, numAttrs).as("__numr") }.toSeq
-    val base = queries.select(Seq(col(qid).as("__qid")) ++ allowSel ++
-        Seq(posexplode(col(qvecsCol).cast("array<array<double>>"))): _*)
-      .withColumnRenamed("pos", "__qidx")
-      .withColumnRenamed("col", "__qv")
-    val probes = decorate.foldLeft(base) {
-        case (df, (n, c)) => df.withColumn(n, c)
-      }
-      .withColumn("leaf_id", explode(IvfIndex.probeExprF32(model,
-        col("__qv"), math.max(1, nProbe))))
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    // batch-wide per-datapoint restricts sit on the pruned scan,
-    // the same contract as the single-query MaxSim forms
-    val pruned = restricts.foldLeft(
-      if (leaves.length <= 1024)
-        data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    )(_ filter _)
-    // each qid scans the union of its own token vectors' leaves;
-    // spill copies landing in two probed leaves collapse in the MAX
-    val qidLeaves = probes.select(col("__qid"), col("leaf_id")).distinct()
-    val cand = pruned.join(broadcast(qidLeaves), Seq("leaf_id"))
-    val qCols = Seq(col("__qid"), col("__qidx"), col("__qv")) ++
-      allow.map(_ => col("__allow")).toSeq ++
-      num.map(_ => col("__numr")).toSeq ++
-      decorate.map { case (n, _) => col(n) }
-    val qframe = probes.select(qCols: _*)
+    // validated in-plan like every per-query surface
+    val probes = tokenFrame(queries, qid, qvecsCol, kernel, nProbe,
+      pq.copy(kCol = None).columns)
+    val qframe = probes.select((Seq("__qid", "__qidx") ++ kernel.scored ++
+        pq.restrictCols).map(col): _*)
       .dropDuplicates("__qid", "__qidx")
-    val paired = cand.join(broadcast(qframe), Seq("__qid"))
-    val preds = allow.map { case (_, attrs) => allowPredicate(attrs) } ++
-      num.map { case (_, numAttrs) => numPredicate(numAttrs) }
-    val filtered = preds.foldLeft(paired)(_ filter _)
-    val ranked = filtered
-      .groupBy(col("__qid"), col(docCol), col("__qidx"))
-      .agg(max(pairScore).as("__best"))
-      .groupBy(col("__qid"), col(docCol))
-      .agg(graft.Exact.dsum(col("__best"), 12).as("score"))
-      .withColumn("rn", row_number().over(Window
-        .partitionBy(col("__qid"))
-        .orderBy(col("score").desc, col(docCol))).cast("bigint"))
+    val paired = maxSimCandidates(probes, restricts)
+      .join(broadcast(qframe), Seq("__qid"))
+    val ranked = maxSimRank(maxSim(pq.preds.foldLeft(paired)(_ filter _),
+      Seq("__qid", docCol), kernel.pairScore, "score"), docCol)
     // per-query k rides a tiny broadcast frame joined AFTER the
     // aggregation (never threaded through it); the effective depth
     // is least(global, per-query) — the contract of every per-query
     // knob — with a NULL per-query k falling back to the global and
-    // anything else non-positive raising in-plan ([[checkedK]], the
-    // same loud-failure convention as the allow/NUMERIC columns)
-    val limited = kCol match {
+    // anything else non-positive raising in-plan ([[checkedLimit]],
+    // the same loud-failure convention as the allow/NUMERIC columns)
+    val limited = pq.kCol match {
       case Some(c) =>
         val kf = queries.select(col(qid).as("__qid"),
-          coalesce(checkedK(c), lit(k.toLong)).as("__pk"))
+          coalesce(checkedLimit(c, "k"), lit(k.toLong)).as("__pk"))
         ranked.join(broadcast(kf), Seq("__qid"))
           .filter(col("rn") <= least(lit(k.toLong), col("__pk")))
           .drop("__pk")
@@ -1452,6 +1208,23 @@ final class Serving private[operators] (
       .select(col(qid), col(docCol), col("score"), col("rn"))
       .orderBy(col(qid), col("rn"))
   }
+
+  /** Batched-MaxSim candidates: the pruned scan joined to the
+    * BROADCAST (qid, leaf) pairs — each qid scans the union of its own
+    * token vectors' leaves; spill copies landing in two probed leaves
+    * collapse in the MAX. */
+  private def maxSimCandidates(probes: DataFrame,
+      restricts: Seq[Column]): DataFrame =
+    prune(probes, restricts).join(
+      broadcast(probes.select(col("__qid"), col("leaf_id")).distinct()),
+      Seq("leaf_id"))
+
+  /** The per-qid rank `rn` (bigint, 1-based, score desc, docCol asc)
+    * of the batched MaxSim surfaces. */
+  private def maxSimRank(scored: DataFrame, docCol: String): DataFrame =
+    scored.withColumn("rn", row_number().over(Window
+      .partitionBy(col("__qid"))
+      .orderBy(col("score").desc, col(docCol))).cast("bigint"))
 
   /** CERTIFIED exact top-k — leaf pruning with a PROOF instead of a
     * recall target (see [[CertifiedSearch]] for the ball bound).
@@ -1477,7 +1250,6 @@ final class Serving private[operators] (
   def searchCertified(query: Array[Double], k: Int,
       restricts: Seq[Column] = Nil,
       initialProbe: Int = 8): (DataFrame, Int) = {
-    import org.apache.spark.sql.functions._
     require(CertifiedSearch.radiiExist(spark, path),
       s"searchCertified needs the _graft_radii sidecar — run " +
         s"CertifiedSearch.buildRadii over $path first")
@@ -1512,16 +1284,8 @@ final class Serving private[operators] (
       else m = math.min(total, math.max(needed, m + 1))
     }
     val certified = ubs.take(m).map(_._1).toSeq
-    val res = source.filter(col("leaf_id").isin(certified: _*))
-      .select(col(id), col("leaf_id"),
-        graft.functions.vectors.dotProduct(col(vecCol), qCol)
-          .as("score"))
-      .groupBy(col(id))
-      .agg(min(col("leaf_id")).as("leaf_id"),
-        first(col("score")).as("score"))
-      .orderBy(col("score").desc, col(id))
-      .limit(k)
-    (res, m)
+    (singleTail(source.filter(col("leaf_id").isin(certified: _*)),
+      graft.functions.vectors.dotProduct(col(vecCol), qCol), "score", k), m)
   }
 
   /** [[searchBatch]] with the SAME selectivity-adaptive pre-filter
@@ -1539,43 +1303,14 @@ final class Serving private[operators] (
       metadata: Option[(DataFrame, String)] = None,
       maxExactFraction: Double = 0.05,
       maxBroadcastQueries: Long = 100000L): DataFrame = {
-    import org.apache.spark.sql.functions._
     if (!searchAdaptivePlan(restricts, maxExactFraction))
       searchBatch(queries, qid, qvecCol, nProbe, k, restricts, crowding,
         metadata)
-    else {
-      val qs = queries.select(col(qid).as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qv"))
-      val side = restricts.foldLeft(data)(_.filter(_))
-      val crowdAttr = crowding.map(_._1).toSeq
-      // the exact plan scores every (restricted row, query) pair —
-      // broadcast the query frame only while it provably fits (a
-      // bounded limit-probe, not a full count); past the threshold a
-      // 10⁶-row batch would be a multi-GB broadcast that OOMs
-      // executors, so the pair generation degrades to the shuffled
-      // cartesian (SHUFFLE_REPLICATE_NL) — same pairs, same results,
-      // no driver-side collect of the query frame
-      // clamp BEFORE the increment: maxBroadcastQueries + 1 overflows
-      // to Long.MinValue on Long.MaxValue ("always broadcast"),
-      // producing a negative limit() that throws at plan time
-      val probeLimit = (math.min(math.max(maxBroadcastQueries, 0L),
-        Int.MaxValue.toLong - 1) + 1).toInt
-      val small = queries.select(col(qid))
-        .limit(probeLimit)
-        .count() <= maxBroadcastQueries
-      val paired = if (small) side.crossJoin(broadcast(qs))
-        else side.crossJoin(qs.hint("shuffle_replicate_nl"))
-      val scored = paired
-        .select(Seq(col("__qid"), col(id),
-          graft.functions.vectors.dotProduct(col(vecCol),
-            col("__qv")).as("score")) ++ crowdAttr.map(col): _*)
-      // spill copies: one candidate per (query, id), like searchBatch
-      val aggs = Seq(max(col("score")).as("score")) ++
-        crowdAttr.map(a => first(col(a)).as(a))
-      val unique = scored.groupBy(col("__qid"), col(id))
-        .agg(aggs.head, aggs.tail: _*)
-      batchTail(unique, qid, k, crowding, metadata)
-    }
+    else
+      tail(exactUnique(queryFrame(queries, qid, qvecCol, dotKernel),
+          restricts, dotKernel, crowding.map(_._1).toSeq,
+          fitsBroadcast(queries.select(col(qid)), maxBroadcastQueries)),
+        qid, k, crowding, metadata)
   }
 
   /** Distributed BATCH search — the reference's batched
@@ -1631,31 +1366,9 @@ final class Serving private[operators] (
   def searchBatch(queries: DataFrame, qid: String, qvecCol: String,
       nProbe: Int, k: Int, restricts: Seq[Column],
       crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val probes = queries.select(col(qid).as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qv"))
-      .withColumn("leaf_id",
-        explode(IvfIndex.probeExprF32(model, col("__qv"),
-          math.max(1, nProbe))))
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    val side = restricts.foldLeft(pruned)(_.filter(_))
-    val crowdAttr = crowding.map(_._1).toSeq
-    val scored = side.join(probes, Seq("leaf_id"))
-      .select(Seq(col("__qid"), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol),
-          col("__qv")).as("score")) ++ crowdAttr.map(col): _*)
-    // a vector stored in two probed leaves is ONE candidate
-    val aggs = Seq(max(col("score")).as("score")) ++
-      crowdAttr.map(a => first(col(a)).as(a))
-    val unique = scored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-    batchTail(unique, qid, k, crowding, metadata)
-  }
+      metadata: Option[(DataFrame, String)]): DataFrame =
+    batch(queries, qid, qvecCol, dotKernel, nProbe, k, restricts, crowding,
+      metadata)
 
   /** [[searchBatch]] with a PER-QUERY leaf-percent override — the
     * batched form of [[searchPercent]]: the reference deploys with a
@@ -1682,7 +1395,6 @@ final class Serving private[operators] (
       restricts: Seq[Column] = Nil,
       crowding: Option[(String, Int)] = None,
       metadata: Option[(DataFrame, String)] = None): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(maxProbe >= 1, s"maxProbe must be ≥ 1, got $maxProbe")
     // clamp BEFORE the slice; an out-of-contract pct (≤0, >100, null)
     // fails loudly rather than silently probing everything
@@ -1694,29 +1406,8 @@ final class Serving private[operators] (
     val want = least(greatest(
       ceil(lit(numLeaves) * checkedPct / 100.0).cast("int"), lit(1)),
       lit(maxProbe))
-    val probes = queries.select(col(qid).as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qv"),
-        want.as("__np"))
-      .withColumn("leaf_id",
-        explode(slice(IvfIndex.probeExprF32(model, col("__qv"),
-          math.max(1, maxProbe)), lit(1), col("__np"))))
-      .drop("__np")
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    val side = restricts.foldLeft(pruned)(_.filter(_))
-    val crowdAttr = crowding.map(_._1).toSeq
-    val scored = side.join(probes, Seq("leaf_id"))
-      .select(Seq(col("__qid"), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol),
-          col("__qv")).as("score")) ++ crowdAttr.map(col): _*)
-    val aggs = Seq(max(col("score")).as("score")) ++
-      crowdAttr.map(a => first(col(a)).as(a))
-    val unique = scored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-    batchTail(unique, qid, k, crowding, metadata)
+    batch(queries, qid, qvecCol, dotKernel, maxProbe, k, restricts,
+      crowding, metadata, slice = Some(want))
   }
 
   /** [[searchBatch]] with PER-QUERY restricts — the reference
@@ -1776,71 +1467,10 @@ final class Serving private[operators] (
       capCol: Option[String] = None,
       numCol: Option[String] = None,
       numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(attrs.nonEmpty || numCol.nonEmpty,
-      "searchBatchPerQuery: pass the layout attributes the allow-maps " +
-        "may constrain (attrs) — an empty set makes every map a no-op")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchPerQuery: per-query numeric restricts need BOTH " +
-        "the restriction column (numCol) and the constrained " +
-        "attributes (numAttrs)")
-    require(capCol.isEmpty || crowding.nonEmpty,
-      "searchBatchPerQuery: capCol needs the crowding attribute " +
-        "(crowding = Some((attr, globalCap)))")
-    val unique = perQueryProbedUnique(queries, qid, qvecCol, allowCol,
-      attrs, nProbe, restricts, crowding, kCol, capCol, numCol, numAttrs)
-    if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else
-      batchTailDynamic(unique, qid, k, crowding, metadata,
-        hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-  }
-
-  /** The probed candidate core of the per-query surface — route,
-    * In-list prune, candidate join, per-pair allow filter, spill
-    * collapse — shared by [[searchBatchPerQuery]] and the adaptive
-    * split. Returns ONE row per (query, id):
-    * (__qid, id, score[, crowdAttr][, __k][, __cap]).
-    */
-  private def perQueryProbedUnique(queries: DataFrame, qid: String,
-      qvecCol: String, allowCol: String, attrs: Seq[String],
-      nProbe: Int, restricts: Seq[Column],
-      crowding: Option[(String, Int)], kCol: Option[String],
-      capCol: Option[String], numCol: Option[String] = None,
-      numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    val probes = queries.select(Seq(col(qid).as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qv"),
-        checkedAllow(allowCol, attrs).as("__allow")) ++
-        numCol.map(c => checkedNum(c, numAttrs).as("__numr")).toSeq ++
-        perQueryCols: _*)
-      .withColumn("leaf_id",
-        explode(IvfIndex.probeExprF32(model, col("__qv"),
-          math.max(1, nProbe))))
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    val side = restricts.foldLeft(pruned)(_.filter(_))
-    val allowed = if (attrs.nonEmpty) allowPredicate(attrs)
-      else col("__allow").isNull || size(map_keys(col("__allow"))) === 0
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val scored = side.join(probes, Seq("leaf_id"))
-      .filter(if (numCol.nonEmpty) allowed && numPredicate(numAttrs)
-        else allowed)
-      .select(Seq(col("__qid"), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol),
-          col("__qv")).as("score")) ++ carried.map(col): _*)
-    val aggs = Seq(max(col("score")).as("score")) ++
-      carried.map(a => first(col(a)).as(a))
-    scored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
+    val pq = PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol, capCol)
+    checkPerQuery("searchBatchPerQuery", pq, crowding, allowRequired = true)
+    batch(queries, qid, qvecCol, dotKernel, nProbe, k, restricts, crowding,
+      metadata, pq)
   }
 
   /** File-level selectivity of a per-query allow-map against THIS
@@ -1918,141 +1548,12 @@ final class Serving private[operators] (
       maxBroadcastQueries: Long = 100000L,
       numCol: Option[String] = None,
       numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(attrs.nonEmpty || numCol.nonEmpty,
-      "searchBatchPerQueryAdaptive: pass the layout attributes the " +
-        "allow-maps may constrain (attrs)")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchPerQueryAdaptive: per-query numeric restricts need " +
-        "BOTH the restriction column (numCol) and the constrained " +
-        "attributes (numAttrs)")
-    require(capCol.isEmpty || crowding.nonEmpty,
-      "searchBatchPerQueryAdaptive: capCol needs the crowding " +
-        "attribute (crowding = Some((attr, globalCap)))")
-    if (numCol.nonEmpty)
-      return perQueryAdaptiveCombined(queries, qid, qvecCol, allowCol,
-        attrs, numCol.get, numAttrs, nProbe, k, restricts, crowding,
-        metadata, kCol, capCol, maxExactFraction, maxDistinctMaps,
-        maxBroadcastQueries)
-    val (exactSets, mkey) = collectAdaptiveSets(queries, allowCol,
-      attrs, None, Nil, maxExactFraction, maxDistinctMaps)
-    if (exactSets.isEmpty)
-      return searchBatchPerQuery(queries, qid, qvecCol, allowCol, attrs,
-        nProbe, k, restricts, crowding, metadata, kCol, capCol)
-
-    val keyed = queries.withColumn("__mkey", mkey)
-    val exactKeys = exactSets.map(_._1)
-    val probedUnique = perQueryProbedUnique(
-      keyed.filter(!col("__mkey").isin(exactKeys: _*)).drop("__mkey"),
-      qid, qvecCol, allowCol, attrs, nProbe, restricts, crowding,
-      kCol, capCol)
-
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    // one guarded pair-generation decision for ALL exact maps (one
-    // bounded probe, not one per map)
-    val probeLimit = (math.min(math.max(maxBroadcastQueries, 0L),
-      Int.MaxValue.toLong - 1) + 1).toInt
-    val small = keyed.filter(col("__mkey").isin(exactKeys: _*))
-      .select(col(qid)).limit(probeLimit)
-      .count() <= maxBroadcastQueries
-    val exactUniques = exactSets.map { case (key, m, n) =>
-      val qs = keyed.filter(col("__mkey") === key)
-        .select(Seq(col(qid).as("__qid"),
-          col(qvecCol).cast("array<double>").as("__qv")) ++
-          perQueryCols: _*)
-      // the map's constraints as pushed predicates — this is what
-      // makes the escape an escape: the scan reads only the files the
-      // stats could not skip ([[allowMapPredicates]]; n is empty on
-      // this allow-only path)
-      val side = (restricts ++ allowMapPredicates(m) ++
-        numSetPredicates(n)).foldLeft(data)(_.filter(_))
-      val paired = if (small) side.crossJoin(broadcast(qs))
-        else side.crossJoin(qs.hint("shuffle_replicate_nl"))
-      val scored = paired.select(Seq(col("__qid"), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol),
-          col("__qv")).as("score")) ++ carried.map(col): _*)
-      val aggs = Seq(max(col("score")).as("score")) ++
-        carried.map(a => first(col(a)).as(a))
-      scored.groupBy(col("__qid"), col(id))
-        .agg(aggs.head, aggs.tail: _*)
-    }
-    val unique = (probedUnique +: exactUniques).reduce(_ unionByName _)
-    if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else
-      batchTailDynamic(unique, qid, k, crowding, metadata,
-        hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-  }
-
-  /** The COMBINED adaptive split — allow-maps AND numeric
-    * restriction sets per query: the distinct key spans both
-    * columns ([[combinedKey]]), a pair escapes to the exact plan
-    * when its compiled predicates (string + implied typed allow
-    * forms ++ typed comparisons) are PROVEN selective against the
-    * manifest stats, and the exact scan pushes those same
-    * predicates. Same bounds and degrades as the allow-only split.
-    */
-  private def perQueryAdaptiveCombined(queries: DataFrame, qid: String,
-      qvecCol: String, allowCol: String, attrs: Seq[String],
-      numCol: String, numAttrs: Seq[String], nProbe: Int, k: Int,
-      restricts: Seq[Column], crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)], kCol: Option[String],
-      capCol: Option[String], maxExactFraction: Double,
-      maxDistinctMaps: Int, maxBroadcastQueries: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val (exactSets, mkey) = collectAdaptiveSets(queries, allowCol,
-      attrs, Some(numCol), numAttrs, maxExactFraction, maxDistinctMaps)
-    if (exactSets.isEmpty)
-      return searchBatchPerQuery(queries, qid, qvecCol, allowCol, attrs,
-        nProbe, k, restricts, crowding, metadata, kCol, capCol,
-        Some(numCol), numAttrs)
-
-    val keyed = queries.withColumn("__mkey", mkey)
-    val exactKeys = exactSets.map(_._1)
-    val probedUnique = perQueryProbedUnique(
-      keyed.filter(!col("__mkey").isin(exactKeys: _*)).drop("__mkey"),
-      qid, qvecCol, allowCol, attrs, nProbe, restricts, crowding,
-      kCol, capCol, Some(numCol), numAttrs)
-
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    val probeLimit = (math.min(math.max(maxBroadcastQueries, 0L),
-      Int.MaxValue.toLong - 1) + 1).toInt
-    val small = keyed.filter(col("__mkey").isin(exactKeys: _*))
-      .select(col(qid)).limit(probeLimit)
-      .count() <= maxBroadcastQueries
-    val exactUniques = exactSets.map { case (key, m, n) =>
-      val qs = keyed.filter(col("__mkey") === key)
-        .select(Seq(col(qid).as("__qid"),
-          col(qvecCol).cast("array<double>").as("__qv")) ++
-          perQueryCols: _*)
-      val side = (restricts ++ allowMapPredicates(m) ++
-        numSetPredicates(n)).foldLeft(data)(_.filter(_))
-      val paired = if (small) side.crossJoin(broadcast(qs))
-        else side.crossJoin(qs.hint("shuffle_replicate_nl"))
-      val scored = paired.select(Seq(col("__qid"), col(id),
-        graft.functions.vectors.dotProduct(col(vecCol),
-          col("__qv")).as("score")) ++ carried.map(col): _*)
-      val aggs = Seq(max(col("score")).as("score")) ++
-        carried.map(a => first(col(a)).as(a))
-      scored.groupBy(col("__qid"), col(id))
-        .agg(aggs.head, aggs.tail: _*)
-    }
-    val unique = (probedUnique +: exactUniques).reduce(_ unionByName _)
-    if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else
-      batchTailDynamic(unique, qid, k, crowding, metadata,
-        hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
+    val pq = PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol, capCol)
+    checkPerQuery("searchBatchPerQueryAdaptive", pq, crowding,
+      allowRequired = true)
+    adaptiveBatch(queries, qid, qvecCol, dotKernel, nProbe, k, restricts,
+      crowding, metadata, pq, maxExactFraction, maxDistinctMaps,
+      maxBroadcastQueries)
   }
 
   /** The shared per-query predicate of the allow-map contract: a
@@ -2060,13 +1561,11 @@ final class Serving private[operators] (
     * query's `__allow` map lacks the key or lists the row's value;
     * NULL map = unrestricted.
     */
-  private def allowPredicate(attrs: Seq[String]): Column = {
-    import org.apache.spark.sql.functions._
+  private def allowPredicate(attrs: Seq[String]): Column =
     col("__allow").isNull || attrs.map(a =>
       !map_contains_key(col("__allow"), lit(a)) ||
         array_contains(element_at(col("__allow"), lit(a)),
           col(a).cast("string"))).reduce(_ && _)
-  }
 
   /** The six comparison operators of the reference's per-request
     * numeric restrictions (`NumericRestriction.op`,
@@ -2087,7 +1586,6 @@ final class Serving private[operators] (
     * the candidate join, codegen row-level work.
     */
   private def numPredicate(numAttrs: Seq[String]): Column = {
-    import org.apache.spark.sql.functions._
     val cand = map(numAttrs.flatMap(a =>
       Seq(lit(a), col(a).cast("double"))): _*)
     col("__numr").isNull || coalesce(forall(col("__numr"), r => {
@@ -2111,7 +1609,6 @@ final class Serving private[operators] (
     * everything — the plan fails loudly on the offending query row
     * instead. */
   private def checkedNum(numCol: String, numAttrs: Seq[String]): Column = {
-    import org.apache.spark.sql.functions._
     val bad = exists(col(numCol), r =>
       !r.getField("attr").isin(numAttrs: _*) ||
         !r.getField("op").isin(NumOps: _*) ||
@@ -2134,17 +1631,13 @@ final class Serving private[operators] (
     * Bound at EVERY `__k`/`__cap` binding site, so the single-vector
     * batch, coded-tier, and MaxSim surfaces share one contract.
     */
-  private def checkedLimit(c: String, what: String): Column = {
-    import org.apache.spark.sql.functions._
+  private def checkedLimit(c: String, what: String): Column =
     when(col(c).isNotNull &&
         (col(c).cast("bigint").isNull || col(c).cast("bigint") < 1),
       raise_error(concat(
         lit(s"per-query $what ($c) must be a positive integer, got: "),
         col(c).cast("string"))))
       .otherwise(col(c).cast("bigint"))
-  }
-
-  private def checkedK(kc: String): Column = checkedLimit(kc, "k")
 
   /** ONE numeric restriction set as pushed scan predicates — the
     * adaptive exact escape's filter for a set collected off the
@@ -2158,7 +1651,6 @@ final class Serving private[operators] (
     */
   private def numSetPredicates(
       set: Seq[(String, String, Double)]): Seq[Column] = {
-    import org.apache.spark.sql.functions._
     set.map { case (a, op, v) =>
       op match {
         case "EQ" => col(a) === lit(v)
@@ -2171,80 +1663,68 @@ final class Serving private[operators] (
     }
   }
 
-  /** The DISTINCT allow-maps of a query batch that are PROVEN
-    * selective — the shared plan-decision step of the adaptive
-    * per-query surfaces ([[searchBatchPerQueryAdaptive]],
-    * [[searchBatchSqAdaptive]]): collect at most `maxDistinctMaps`
-    * distinct maps (more → no evidence at bounded cost → empty),
-    * validate every key against `attrs` (loud driver-side failure —
-    * same contract as the in-plan [[checkedAllow]]), estimate each
-    * against the manifest's promoted file stats, and return the
-    * (json-key, map) pairs whose stats-skipped scan reads ≤
-    * `maxExactFraction` of layout bytes.
-    */
-  private def collectExactMaps(queries: DataFrame, allowCol: String,
-      attrs: Seq[String], maxExactFraction: Double,
-      maxDistinctMaps: Int, maxExactMaps: Int = 32)
-      : Seq[(String, Map[String, Seq[String]])] = {
-    import org.apache.spark.sql.functions._
-    val distinctMaps = queries
-      .select(allowKey(allowCol).as("__mkey"), col(allowCol).as("__allow"))
-      .groupBy("__mkey").agg(first("__allow").as("__allow"))
-      .limit(maxDistinctMaps + 1).collect()
-    if (distinctMaps.length > maxDistinctMaps) return Nil
-    val keyedMaps = distinctMaps.toSeq.map { r =>
-      val m = Option(r.getMap[String, scala.collection.Seq[String]](1))
-        .map(_.map { case (a, vs) => (a, vs.toSeq) }.toMap)
-        .getOrElse(Map.empty[String, Seq[String]])
-      m.keys.find(!attrs.contains(_)).foreach(bad =>
-        throw new IllegalArgumentException(
-          "per-query adaptive search: allow-map key outside " +
-            s"attrs(${attrs.mkString(",")}): $bad"))
-      (r.getString(0), m)
-    }
-    // ONE manifest read estimates every distinct map (a per-map read
-    // would pay a Spark job each — ScaleProbe `padapt`)
-    val estimates = ServingManifest.estimateAllowBatch(spark, path,
-      keyedMaps.map(_._2))
-    val selective = keyedMaps.zip(estimates).flatMap {
-      case ((key, m), est) =>
-        if (m.isEmpty) None
-        else est.map(_.byteFraction).filter(_ <= maxExactFraction)
-          .map(f => (key, m, f))
-    }
-    // every exact map adds a scan branch to the final union — bound
-    // the plan's fan-out: the MOST selective maps (the ones probing
-    // would hurt worst) escape first, any excess rides the probed
-    // plan like an unselective map
-    selective.sortBy(t => (t._3, t._1)).take(maxExactMaps)
-      .map(t => (t._1, t._2))
-  }
+  /** The allow-map in CANONICAL form — entries sorted by key, each
+    * value list sorted — so two logically-equal maps whose internal
+    * key or value order differs serialize to ONE distinct key. Without
+    * this a single logical constraint could occupy several of the
+    * bounded exact-escape slots and add redundant scan branches
+    * (results stay correct either way — routing is self-consistent
+    * per key — this is purely plan economy). */
+  private def canonAllow(allowCol: String): Column =
+    array_sort(transform(map_entries(col(allowCol)), e =>
+      struct(e.getField("key").as("key"),
+        array_sort(e.getField("value")).as("value"))))
 
-  /** [[collectExactMaps]] generalized to the COMBINED per-query
-    * constraint — (allow-map, numeric-restriction set) pairs: the
-    * distinct key spans both columns, each pair compiles to pushable
-    * predicates ([[allowMapPredicates]] ++ [[numSetPredicates]]),
-    * and ONE manifest read
-    * ([[ServingManifest.estimateRestrictBatch]]) estimates them all.
-    * Returns (json-key, allow-map, num-set) triples proven to read
-    * ≤ `maxExactFraction` of layout bytes, most selective first,
-    * capped at `maxExactMaps`.
+  /** The distinct-constraint key of the allow-only adaptive split
+    * ([[collectAdaptiveSets]]). Canonicalized ([[canonAllow]]). */
+  private def allowKey(allowCol: String): Column =
+    coalesce(to_json(canonAllow(allowCol)), lit("null"))
+
+  /** The distinct-constraint key spanning BOTH per-query columns
+    * ([[collectAdaptiveSets]]). Canonicalized on both sides: allow
+    * entries via [[canonAllow]],
+    * restriction tuples sorted (the set is ANDed — order carries no
+    * meaning). */
+  private def combinedKey(allowCol: String, numCol: String): Column =
+    coalesce(to_json(struct(canonAllow(allowCol).as("a"),
+      array_sort(col(numCol)).as("n"))), lit("{}"))
+
+  /** The adaptive-split decision shared by every tier: the DISTINCT
+    * per-query constraint sets of a batch (allow-map alone, or
+    * allow ∧ numeric COMBINED when `numCol` rides the batch) that are
+    * PROVEN selective, plus the distinct-constraint key column the
+    * split partitions the query frame with — returned together so the
+    * collect side and the split side can never key differently.
+    * Collects at most `maxDistinctMaps` distinct sets (more → no
+    * evidence at bounded cost → empty), validates every allow key
+    * against `attrs` and every restriction against `numAttrs`/ops
+    * (loud driver-side failure — same contract as the in-plan
+    * [[checkedAllow]] / [[checkedNum]]), estimates each set against
+    * the manifest's promoted file stats in ONE manifest read, and
+    * returns the (json-key, allow-map, num-set) triples whose
+    * stats-skipped scan reads ≤ `maxExactFraction` of layout bytes.
+    * Every exact set adds a scan branch to the final union, so the
+    * plan's fan-out is bounded: the `maxExactSets` MOST selective sets
+    * (the ones probing would hurt worst) escape, any excess rides the
+    * probed plan like an unselective set. Empty = nothing escapes.
     */
-  private def collectExactSets(queries: DataFrame, allowCol: String,
-      attrs: Seq[String], numCol: String, numAttrs: Seq[String],
+  private def collectAdaptiveSets(queries: DataFrame, allowCol: String,
+      attrs: Seq[String], numCol: Option[String], numAttrs: Seq[String],
       maxExactFraction: Double, maxDistinctMaps: Int,
-      maxExactMaps: Int = 32): Seq[(String, Map[String, Seq[String]],
-      Seq[(String, String, Double)])] = {
-    import org.apache.spark.sql.functions._
-    val key = combinedKey(allowCol, numCol)
+      maxExactSets: Int = 32)
+      : (Seq[(String, Map[String, Seq[String]],
+        Seq[(String, String, Double)])], Column) = {
+    val key = numCol.map(nc => combinedKey(allowCol, nc))
+      .getOrElse(allowKey(allowCol))
     val rows = queries
-      .select(key.as("__mkey"), col(allowCol).as("__allow"),
-        col(numCol).as("__numr"))
+      .select(Seq(key.as("__mkey"), col(allowCol).as("__allow")) ++
+        numCol.map(c => col(c).as("__numr")): _*)
       .groupBy("__mkey")
-      .agg(first("__allow").as("__allow"), first("__numr").as("__numr"))
+      .agg(first("__allow").as("__allow"),
+        numCol.map(_ => first("__numr").as("__numr")).toSeq: _*)
       .limit(maxDistinctMaps + 1).collect()
-    if (rows.length > maxDistinctMaps) return Nil
-    val keyed = rows.toSeq.map { r =>
+    if (rows.length > maxDistinctMaps) return (Nil, key)
+    val sets = rows.toSeq.map { r =>
       val m = Option(r.getMap[String, scala.collection.Seq[String]](1))
         .map(_.map { case (a, vs) => (a, vs.toSeq) }.toMap)
         .getOrElse(Map.empty[String, Seq[String]])
@@ -2252,7 +1732,7 @@ final class Serving private[operators] (
         throw new IllegalArgumentException(
           "per-query adaptive search: allow-map key outside " +
             s"attrs(${attrs.mkString(",")}): $bad"))
-      val n = Option(r.getSeq[org.apache.spark.sql.Row](2))
+      val n = numCol.flatMap(_ => Option(r.getSeq[org.apache.spark.sql.Row](2)))
         .map(_.toSeq.map { x =>
           val a = x.getAs[String]("attr")
           val op = x.getAs[String]("op")
@@ -2265,76 +1745,22 @@ final class Serving private[operators] (
         }).getOrElse(Nil)
       (r.getString(0), m, n)
     }
-    val estimates = ServingManifest.estimateRestrictBatch(spark, path,
-      keyed.map { case (_, m, n) =>
-        allowMapPredicates(m) ++ numSetPredicates(n) })
-    val selective = keyed.zip(estimates).flatMap {
-      case ((key, m, n), est) =>
+    // ONE manifest read estimates every distinct set (a per-set read
+    // would pay a Spark job each — ScaleProbe `padapt`)
+    val estimates =
+      if (numCol.isEmpty)
+        ServingManifest.estimateAllowBatch(spark, path, sets.map(_._2))
+      else ServingManifest.estimateRestrictBatch(spark, path,
+        sets.map { case (_, m, n) =>
+          allowMapPredicates(m) ++ numSetPredicates(n) })
+    val selective = sets.zip(estimates).flatMap {
+      case ((k, m, n), est) =>
         if (m.isEmpty && n.isEmpty) None
         else est.map(_.byteFraction).filter(_ <= maxExactFraction)
-          .map(f => (key, m, n, f))
+          .map(f => (k, m, n, f))
     }
-    selective.sortBy(t => (t._4, t._1)).take(maxExactMaps)
-      .map(t => (t._1, t._2, t._3))
-  }
-
-  /** The allow-map in CANONICAL form — entries sorted by key, each
-    * value list sorted — so two logically-equal maps whose internal
-    * key or value order differs serialize to ONE distinct key. Without
-    * this a single logical constraint could occupy several of the
-    * bounded exact-escape slots and add redundant scan branches
-    * (results stay correct either way — routing is self-consistent
-    * per key — this is purely plan economy). */
-  private def canonAllow(allowCol: String): Column = {
-    import org.apache.spark.sql.functions._
-    array_sort(transform(map_entries(col(allowCol)), e =>
-      struct(e.getField("key").as("key"),
-        array_sort(e.getField("value")).as("value"))))
-  }
-
-  /** The distinct-constraint key of the allow-only adaptive split —
-    * shared by [[collectExactMaps]] and
-    * [[searchBatchPerQueryAdaptive]] so the two sides can never
-    * disagree on which queries escaped. Canonicalized
-    * ([[canonAllow]]). */
-  private def allowKey(allowCol: String): Column = {
-    import org.apache.spark.sql.functions._
-    coalesce(to_json(canonAllow(allowCol)), lit("null"))
-  }
-
-  /** The distinct-constraint key spanning BOTH per-query columns —
-    * shared by [[collectExactSets]] and the adaptive split so the
-    * two sides can never disagree on which queries escaped.
-    * Canonicalized on both sides: allow entries via [[canonAllow]],
-    * restriction tuples sorted (the set is ANDed — order carries no
-    * meaning). */
-  private def combinedKey(allowCol: String, numCol: String): Column = {
-    import org.apache.spark.sql.functions._
-    coalesce(to_json(struct(canonAllow(allowCol).as("a"),
-      array_sort(col(numCol)).as("n"))), lit("{}"))
-  }
-
-  /** The adaptive-split decision shared by every tier: the
-    * PROVEN-selective per-query constraint sets (allow-map alone, or
-    * allow ∧ numeric COMBINED when `numCol` rides the batch) plus
-    * the distinct-constraint key column the split partitions the
-    * query frame with — returned together so the collect side and
-    * the split side can never key differently. Empty set = nothing
-    * escapes, everything probed. */
-  private def collectAdaptiveSets(queries: DataFrame, allowCol: String,
-      attrs: Seq[String], numCol: Option[String], numAttrs: Seq[String],
-      maxExactFraction: Double, maxDistinctMaps: Int)
-      : (Seq[(String, Map[String, Seq[String]],
-        Seq[(String, String, Double)])], Column) = {
-    val sets = numCol match {
-      case Some(nc) => collectExactSets(queries, allowCol, attrs, nc,
-        numAttrs, maxExactFraction, maxDistinctMaps)
-      case None => collectExactMaps(queries, allowCol, attrs,
-        maxExactFraction, maxDistinctMaps).map(t => (t._1, t._2,
-        Seq.empty[(String, String, Double)]))
-    }
-    (sets, numCol.map(nc => combinedKey(allowCol, nc))
-      .getOrElse(allowKey(allowCol)))
+    (selective.sortBy(t => (t._4, t._1)).take(maxExactSets)
+      .map(t => (t._1, t._2, t._3)), key)
   }
 
   /** ONE allow-map's constraints as pushed scan predicates — what the
@@ -2355,7 +1781,6 @@ final class Serving private[operators] (
     */
   private def allowMapPredicates(
       m: Map[String, Seq[String]]): Seq[Column] = {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     m.toSeq.flatMap { case (a, vs) =>
       val exactPred = col(a).cast("string").isin(vs: _*)
@@ -2389,7 +1814,6 @@ final class Serving private[operators] (
     * docstring. Codegen'd row-level work on the (small) query frame.
     */
   private def checkedAllow(allowCol: String, attrs: Seq[String]): Column = {
-    import org.apache.spark.sql.functions._
     val unknown = exists(map_keys(col(allowCol)),
       k => !k.isin(attrs: _*))
     when(col(allowCol).isNotNull && unknown,
@@ -2399,67 +1823,16 @@ final class Serving private[operators] (
       .otherwise(col(allowCol))
   }
 
-  /** [[batchTail]] with PER-QUERY limits: `__k` / `__cap` ride the
-    * unique frame as per-query constants (first-agg'd through the
-    * spill collapse); the effective limits are least(global,
-    * per-query). Same window shapes, same output contract.
-    */
-  private def batchTailDynamic(unique: DataFrame, qid: String, k: Int,
-      crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)],
-      hasK: Boolean, hasCap: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val crowded = crowding match {
-      case Some((attr, cap)) =>
-        val w = Window.partitionBy(col("__qid"), col(attr))
-          .orderBy(col("score").desc, col(id))
-        val capLim = if (hasCap) least(lit(cap), col("__cap")) else lit(cap)
-        unique.withColumn("__crn", row_number().over(w))
-          .filter(col("__crn") <= capLim).drop("__crn").drop(attr)
-      case None => unique
-    }
-    val wq = Window.partitionBy(col("__qid"))
-      .orderBy(col("score").desc, col(id))
-    val kLim = if (hasK) least(lit(k), col("__k")) else lit(k)
-    val ranked = crowded
-      .withColumn("rn", row_number().over(wq).cast("bigint"))
-      .filter(col("rn") <= kLim)
-      .select(col("__qid"), col(id), col("score"), col("rn"))
-    metadata match {
-      case Some((meta, key)) =>
-        val metaCols = meta.columns.filterNot(_ == key).toSeq
-        ranked.as("__r").join(meta.as("__m"),
-            col(s"__r.$id") === col(s"__m.$key"))
-          .select(col("__r.__qid").as(qid) +: col(s"__r.$id") +:
-            metaCols.map(c => col(s"__m.$c")) ++:
-            Seq(col("__r.score"), col("__r.rn")): _*)
-          .orderBy(col(qid), col("rn"))
-      case None =>
-        ranked.withColumnRenamed("__qid", qid)
-          .select(col(qid), col(id), col("score"), col("rn"))
-    }
-  }
-
   /** Distributed BATCH search over the PQ TIER — [[searchBatch]]'s
-    * routing/join/top-k with the ADC kernel: the query frame routes
-    * through the broadcast-f32 expression in RAW space (leaf geometry
-    * is unrotated, like the build), rotates once per query for
-    * scoring when the layout carries an OPQ sidecar, and every
-    * (code, query) candidate scores through
-    * [[ProductQuantizer.adcDirectExpr]] — 4 B/row on the scan side,
-    * no per-query literal table. Same In-list pre-pruning and
-    * graceful degrade as the raw batch path; same f32 routing-parity
-    * caveat. Crowding and the metadata join ride the shared
-    * [[batchTail]], exactly as on the raw path — the tier changes
-    * the scan kernel, never the serving shape. The full PER-QUERY
-    * surface of [[searchBatchPerQuery]] applies unchanged: `allowCol`
-    * + `attrs` for per-query allow-maps (validated in-plan, evaluated
-    * per candidate pair inside the join), `kCol` / `capCol` for
-    * per-query result counts and crowding caps bounded by
-    * least(global, per-query), `numCol` / `numAttrs` for per-query
-    * numeric restriction sets. Output:
-    * (`qid`, id[, metadata columns…], adc_score, rn).
+    * plan with the ADC kernel ([[adcKernel]]: routing in RAW space,
+    * in-plan OPQ rotation, 4 B/row scored through
+    * [[ProductQuantizer.adcDirectExpr]], no per-query literal table).
+    * Same In-list pruning, f32 routing-parity caveat and shared
+    * [[tail]] as the raw path — the tier changes the scan kernel,
+    * never the serving shape — and the full PER-QUERY surface of
+    * [[searchBatchPerQuery]] (`allowCol` + `attrs`, `kCol` / `capCol`
+    * bounded by least(global, per-query), `numCol` / `numAttrs`).
+    * Output: (`qid`, id[, metadata columns…], adc_score, rn).
     */
   def searchBatchAdc(queries: DataFrame, qid: String, qvecCol: String,
       nProbe: Int, k: Int, restricts: Seq[Column] = Nil,
@@ -2473,94 +1846,18 @@ final class Serving private[operators] (
       numAttrs: Seq[String] = Nil): DataFrame = {
     require(tier == "pq",
       s"searchBatchAdc: layout at $path is a '$tier' tier, not PQ")
-    require(allowCol.isEmpty == attrs.isEmpty,
-      "searchBatchAdc: per-query restricts need BOTH the allow-map " +
-        "column (allowCol) and the constrained attributes (attrs)")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchAdc: per-query numeric restricts need BOTH the " +
-        "restriction column (numCol) and the constrained attributes " +
-        "(numAttrs)")
-    require(capCol.isEmpty || crowding.nonEmpty,
-      "searchBatchAdc: capCol needs the crowding attribute " +
-        "(crowding = Some((attr, globalCap)))")
-    val unique = adcProbedUnique(queries, qid, qvecCol, allowCol, attrs,
-      nProbe, restricts, crowding, kCol, capCol, numCol, numAttrs)
-    val tailed = if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else batchTailDynamic(unique, qid, k, crowding, metadata,
-      hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-    tailed.withColumnRenamed("score", "adc_score")
+    val pq = PerQuery(allowCol, attrs, numCol, numAttrs, kCol, capCol)
+    checkPerQuery("searchBatchAdc", pq, crowding)
+    batch(queries, qid, qvecCol, adcKernel, nProbe, k, restricts, crowding,
+      metadata, pq)
   }
 
-  /** The probed candidate core of the PQ/ADC batch surface —
-    * raw-space routing, in-plan OPQ rotation, In-list prune,
-    * candidate join, optional per-pair allow filter, spill
-    * collapse — shared by [[searchBatchAdc]] and
-    * [[searchBatchAdcAdaptive]]'s probed side. Returns ONE row per
-    * (query, id): (__qid, id, score[, crowdAttr][, __k][, __cap]).
-    */
-  private def adcProbedUnique(queries: DataFrame, qid: String,
-      qvecCol: String, allowCol: Option[String], attrs: Seq[String],
-      nProbe: Int, restricts: Seq[Column],
-      crowding: Option[(String, Int)], kCol: Option[String],
-      capCol: Option[String], numCol: Option[String] = None,
-      numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val cb = ProductQuantizer.loadCodebook(spark, path)
-    val rot = ProductQuantizer.loadRotation(spark, path)
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    val probes = queries.select(Seq(col(qid).as("__qid"),
-        col(qvecCol).cast("array<double>").as("__qraw")) ++
-        allowCol.map(c => checkedAllow(c, attrs).as("__allow")).toSeq ++
-        numCol.map(c => checkedNum(c, numAttrs).as("__numr")).toSeq ++
-        perQueryCols: _*)
-      .withColumn("__qv", rot.map(r =>
-        ProductQuantizer.rotateExpr(col("__qraw"), r))
-        .getOrElse(col("__qraw")))
-      .withColumn("leaf_id",
-        explode(IvfIndex.probeExprF32(model, col("__qraw"),
-          math.max(1, nProbe))))
-      .drop("__qraw")
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    val side = restricts.foldLeft(pruned)(_.filter(_))
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val joined = side.join(probes, Seq("leaf_id"))
-    // numeric-only batches: see the sibling comment in sqProbedUnique
-    val pairPreds = allowCol.map(_ =>
-      if (attrs.nonEmpty) allowPredicate(attrs)
-      else col("__allow").isNull ||
-        size(map_keys(col("__allow"))) === 0).toSeq ++
-      numCol.map(_ => numPredicate(numAttrs)).toSeq
-    val filtered = pairPreds.foldLeft(joined)(_.filter(_))
-    val scored = filtered
-      .select(Seq(col("__qid"), col(id),
-        ProductQuantizer.adcDirectExpr(col("pq_code"), col("__qv"), cb)
-          .as("score")) ++ carried.map(col): _*)
-    val aggs = Seq(max(col("score")).as("score")) ++
-      carried.map(a => first(col(a)).as(a))
-    scored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** [[searchBatchPerQueryAdaptive]] on the PQ TIER — the adaptive
-    * per-query recall escape over ADC-scored codes, completing the
-    * tier × surface matrix (raw / SQ8 / PQ all carry it): selective
-    * allow-maps run the EXACT plan — a stats-skipped full scan of
-    * the code table, every surviving (code row, query) pair scored
-    * by [[ProductQuantizer.adcDirectExpr]] with the query rotated
-    * in-plan through the layout's OPQ sidecar when present — while
-    * the rest ride the probed ADC plan; shared tail, identical
-    * output contract to [[searchBatchAdc]]. With `numCol` /
-    * `numAttrs` the split goes COMBINED, exactly as on the SQ8 tier
-    * ([[searchBatchSqAdaptive]]).
+  /** [[searchBatchPerQueryAdaptive]] on the PQ TIER — selective
+    * constraint sets run the EXACT plan (a stats-skipped scan of the
+    * code table, every surviving pair ADC-scored with the query
+    * rotated in-plan), the rest ride the probed ADC plan; shared tail,
+    * identical output contract to [[searchBatchAdc]]. With `numCol` /
+    * `numAttrs` the split goes COMBINED, as on the SQ8 tier.
     */
   def searchBatchAdcAdaptive(queries: DataFrame, qid: String,
       qvecCol: String, allowCol: String, attrs: Seq[String],
@@ -2574,94 +1871,21 @@ final class Serving private[operators] (
       maxBroadcastQueries: Long = 100000L,
       numCol: Option[String] = None,
       numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(tier == "pq",
       s"searchBatchAdcAdaptive: layout at $path is a '$tier' tier, not PQ")
-    require(attrs.nonEmpty || numCol.nonEmpty,
-      "searchBatchAdcAdaptive: pass the layout attributes the " +
-        "allow-maps may constrain (attrs)")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchAdcAdaptive: per-query numeric restricts need BOTH " +
-        "the restriction column (numCol) and the constrained " +
-        "attributes (numAttrs)")
-    require(capCol.isEmpty || crowding.nonEmpty,
-      "searchBatchAdcAdaptive: capCol needs the crowding attribute")
-    val (exactSets, mkey) = collectAdaptiveSets(queries, allowCol,
-      attrs, numCol, numAttrs, maxExactFraction, maxDistinctMaps)
-    // nothing proven selective → everything probed (see the sibling
-    // comment in searchBatchSqAdaptive)
-    if (exactSets.isEmpty) {
-      val unique = adcProbedUnique(queries, qid, qvecCol, Some(allowCol),
-        attrs, nProbe, restricts, crowding, kCol, capCol, numCol,
-        numAttrs)
-      val tailed = if (kCol.isEmpty && capCol.isEmpty)
-        batchTail(unique, qid, k, crowding, metadata)
-      else batchTailDynamic(unique, qid, k, crowding, metadata,
-        hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-      return tailed.withColumnRenamed("score", "adc_score")
-    }
-
-    val cb = ProductQuantizer.loadCodebook(spark, path)
-    val rot = ProductQuantizer.loadRotation(spark, path)
-    val keyed = queries.withColumn("__mkey", mkey)
-    val exactKeys = exactSets.map(_._1)
-    val probedUnique = adcProbedUnique(
-      keyed.filter(!col("__mkey").isin(exactKeys: _*)).drop("__mkey"),
-      qid, qvecCol, Some(allowCol), attrs, nProbe, restricts, crowding,
-      kCol, capCol, numCol, numAttrs)
-
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    val probeLimit = (math.min(math.max(maxBroadcastQueries, 0L),
-      Int.MaxValue.toLong - 1) + 1).toInt
-    val small = keyed.filter(col("__mkey").isin(exactKeys: _*))
-      .select(col(qid)).limit(probeLimit)
-      .count() <= maxBroadcastQueries
-    val exactUniques = exactSets.map { case (key, m, n) =>
-      val qs = keyed.filter(col("__mkey") === key)
-        .select(Seq(col(qid).as("__qid"),
-          col(qvecCol).cast("array<double>").as("__qraw")) ++
-          perQueryCols: _*)
-        .withColumn("__qv", rot.map(r =>
-          ProductQuantizer.rotateExpr(col("__qraw"), r))
-          .getOrElse(col("__qraw")))
-        .drop("__qraw")
-      val side = (restricts ++ allowMapPredicates(m) ++
-        numSetPredicates(n)).foldLeft(data)(_.filter(_))
-      val paired = if (small) side.crossJoin(broadcast(qs))
-        else side.crossJoin(qs.hint("shuffle_replicate_nl"))
-      val scored = paired.select(Seq(col("__qid"), col(id),
-        ProductQuantizer.adcDirectExpr(col("pq_code"), col("__qv"), cb)
-          .as("score")) ++ carried.map(col): _*)
-      val aggs = Seq(max(col("score")).as("score")) ++
-        carried.map(a => first(col(a)).as(a))
-      scored.groupBy(col("__qid"), col(id))
-        .agg(aggs.head, aggs.tail: _*)
-    }
-    val unique = (probedUnique +: exactUniques).reduce(_ unionByName _)
-    val tailed = if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else batchTailDynamic(unique, qid, k, crowding, metadata,
-      hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-    tailed.withColumnRenamed("score", "adc_score")
+    val pq = PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol, capCol)
+    checkPerQuery("searchBatchAdcAdaptive", pq, crowding,
+      allowRequired = true)
+    adaptiveBatch(queries, qid, qvecCol, adcKernel, nProbe, k, restricts,
+      crowding, metadata, pq, maxExactFraction, maxDistinctMaps,
+      maxBroadcastQueries)
   }
 
-  /** Distributed BATCH search over the SQ8 TIER — the same
-    * routing/join/top-k as [[searchBatchAdc]] with the packed-byte
-    * kernel: each query row quantizes IN-PLAN (maxAbs → codes →
-    * pack, all codegen), so the batch needs no driver-side per-query
-    * work at all, and every (code, query) candidate scores as the
-    * exact integer dot rescaled by the two scales. Crowding and the
-    * metadata join ride the shared [[batchTail]], as on the raw
-    * path, and the full PER-QUERY surface of [[searchBatchPerQuery]]
-    * applies unchanged (`allowCol` + `attrs`, `kCol` / `capCol` as
-    * least(global, per-query), `numCol` / `numAttrs` for per-query
-    * numeric restriction sets — the tier changes the scan kernel,
-    * never the serving shape).
+  /** Distributed BATCH search over the SQ8 TIER — [[searchBatchAdc]]
+    * with the packed-byte kernel ([[sqKernel]]: each query quantizes
+    * in-plan, no driver-side per-query work; every pair scores as the
+    * exact integer dot rescaled by the two scales), the same shared
+    * tail and the same PER-QUERY surface.
     * Output: (`qid`, id[, metadata columns…], sq_score, rn).
     */
   def searchBatchSq(queries: DataFrame, qid: String, qvecCol: String,
@@ -2676,101 +1900,23 @@ final class Serving private[operators] (
       numAttrs: Seq[String] = Nil): DataFrame = {
     require(tier == "sq",
       s"searchBatchSq: layout at $path is a '$tier' tier, not SQ8")
-    require(allowCol.isEmpty == attrs.isEmpty,
-      "searchBatchSq: per-query restricts need BOTH the allow-map " +
-        "column (allowCol) and the constrained attributes (attrs)")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchSq: per-query numeric restricts need BOTH the " +
-        "restriction column (numCol) and the constrained attributes " +
-        "(numAttrs)")
-    require(capCol.isEmpty || crowding.nonEmpty,
-      "searchBatchSq: capCol needs the crowding attribute " +
-        "(crowding = Some((attr, globalCap)))")
-    val unique = sqProbedUnique(queries, qid, qvecCol, allowCol, attrs,
-      nProbe, restricts, crowding, kCol, capCol, numCol, numAttrs)
-    val tailed = if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else batchTailDynamic(unique, qid, k, crowding, metadata,
-      hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-    tailed.withColumnRenamed("score", "sq_score")
+    val pq = PerQuery(allowCol, attrs, numCol, numAttrs, kCol, capCol)
+    checkPerQuery("searchBatchSq", pq, crowding)
+    batch(queries, qid, qvecCol, sqKernel, nProbe, k, restricts, crowding,
+      metadata, pq)
   }
 
-  /** The probed candidate core of the SQ8 batch surface — in-plan
-    * query quantization, routing, In-list prune, candidate join,
-    * optional per-pair allow filter, spill collapse — shared by
-    * [[searchBatchSq]] and [[searchBatchSqAdaptive]]'s probed side.
-    * Returns ONE row per (query, id):
-    * (__qid, id, score[, crowdAttr][, __k][, __cap]).
-    */
-  private def sqProbedUnique(queries: DataFrame, qid: String,
-      qvecCol: String, allowCol: Option[String], attrs: Seq[String],
-      nProbe: Int, restricts: Seq[Column],
-      crowding: Option[(String, Int)], kCol: Option[String],
-      capCol: Option[String], numCol: Option[String] = None,
-      numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.quantize
-    val qv = col(qvecCol).cast("array<double>")
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    val probes = queries.select(Seq(col(qid).as("__qid"),
-        qv.as("__qraw")) ++
-        allowCol.map(c => checkedAllow(c, attrs).as("__allow")).toSeq ++
-        numCol.map(c => checkedNum(c, numAttrs).as("__numr")).toSeq ++
-        perQueryCols: _*)
-      .withColumn("__qma", quantize.maxAbs(col("__qraw")))
-      .withColumn("__qpk", quantize.packCodes(
-        quantize.codes(col("__qraw"), col("__qma"))))
-      .withColumn("leaf_id",
-        explode(IvfIndex.probeExprF32(model, col("__qraw"),
-          math.max(1, nProbe))))
-      .drop("__qraw")
-      .localCheckpoint(true)
-    val leaves = probes.select("leaf_id").distinct()
-      .limit(1025).collect().map(_.getInt(0))
-    val pruned = if (leaves.length <= 1024)
-      data.filter(col("leaf_id").isin(leaves.toSeq: _*)) else data
-    val side = restricts.foldLeft(pruned)(_.filter(_))
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val joined = side.join(probes, Seq("leaf_id"))
-    // an allow column with NO constrainable attrs (a numeric-only
-    // batch) only admits null/empty maps — same contract as the raw
-    // path's perQueryProbedUnique
-    val pairPreds = allowCol.map(_ =>
-      if (attrs.nonEmpty) allowPredicate(attrs)
-      else col("__allow").isNull ||
-        size(map_keys(col("__allow"))) === 0).toSeq ++
-      numCol.map(_ => numPredicate(numAttrs)).toSeq
-    val filtered = pairPreds.foldLeft(joined)(_.filter(_))
-    val scored = filtered
-      .select(Seq(col("__qid"), col(id), quantize.score(
-        quantize.packedDot(col("sq_code"), col("__qpk")),
-        col("ma"), col("__qma")).as("score")) ++ carried.map(col): _*)
-    val aggs = Seq(max(col("score")).as("score")) ++
-      carried.map(a => first(col(a)).as(a))
-    scored.groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** [[searchBatchPerQueryAdaptive]] on the SQ8 TIER — the recall
-    * escape for selective per-query allow-maps over a CODED layout:
-    * same per-distinct-map decision against the manifest's promoted
-    * file stats ([[ServingManifest.estimateAllow]]), selective maps
-    * leave the routed batch and run the EXACT plan — a full
-    * (stats-skipped) scan of the packed codes with the map's
-    * constraints pushed (exact string predicate + the implied typed
-    * equality-disjunction the stats can act on), every surviving
-    * (code row, query) pair scored by the integer-dot kernel —
-    * everything else rides the probed SQ plan; both sides meet in
-    * the shared tail. The storage tier changes the scan kernel,
-    * never the adaptive semantics. With `numCol` / `numAttrs` the
-    * split goes COMBINED (the `r_serve_sq_numr` gate): the distinct
-    * key spans both per-query columns ([[combinedKey]]) and each
-    * set's typed comparisons push alongside the allow predicates on
-    * the exact side. Output: identical contract to [[searchBatchSq]].
+  /** [[searchBatchPerQueryAdaptive]] on the SQ8 TIER — the same
+    * per-distinct-set decision against the manifest's promoted file
+    * stats; selective sets run the EXACT plan (a stats-skipped scan of
+    * the packed codes with the set's constraints pushed — the exact
+    * string predicate plus the implied typed equality-disjunction the
+    * stats can act on), everything else rides the probed SQ plan; one
+    * shared tail. With `numCol` / `numAttrs` the split goes COMBINED
+    * (the `r_serve_sq_numr` gate): the distinct key spans both
+    * per-query columns ([[combinedKey]]) and each set's typed
+    * comparisons push beside the allow predicates on the exact side.
+    * Output: identical contract to [[searchBatchSq]].
     */
   def searchBatchSqAdaptive(queries: DataFrame, qid: String,
       qvecCol: String, allowCol: String, attrs: Seq[String],
@@ -2784,100 +1930,331 @@ final class Serving private[operators] (
       maxBroadcastQueries: Long = 100000L,
       numCol: Option[String] = None,
       numAttrs: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.functions.quantize
     require(tier == "sq",
       s"searchBatchSqAdaptive: layout at $path is a '$tier' tier, not SQ8")
-    require(attrs.nonEmpty || numCol.nonEmpty,
-      "searchBatchSqAdaptive: pass the layout attributes the " +
-        "allow-maps may constrain (attrs)")
-    require(numCol.isEmpty == numAttrs.isEmpty,
-      "searchBatchSqAdaptive: per-query numeric restricts need BOTH " +
-        "the restriction column (numCol) and the constrained " +
-        "attributes (numAttrs)")
-    require(capCol.isEmpty || crowding.nonEmpty,
-      "searchBatchSqAdaptive: capCol needs the crowding attribute")
-    val (exactSets, mkey) = collectAdaptiveSets(queries, allowCol,
-      attrs, numCol, numAttrs, maxExactFraction, maxDistinctMaps)
-    // nothing proven selective → EVERYTHING probed, through the same
-    // core the split's probed side uses (not the public batch entry,
-    // whose allowCol⇔attrs contract rejects a numeric-only batch)
-    if (exactSets.isEmpty) {
-      val unique = sqProbedUnique(queries, qid, qvecCol, Some(allowCol),
-        attrs, nProbe, restricts, crowding, kCol, capCol, numCol,
-        numAttrs)
-      val tailed = if (kCol.isEmpty && capCol.isEmpty)
-        batchTail(unique, qid, k, crowding, metadata)
-      else batchTailDynamic(unique, qid, k, crowding, metadata,
-        hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-      return tailed.withColumnRenamed("score", "sq_score")
-    }
-
-    val keyed = queries.withColumn("__mkey", mkey)
-    val exactKeys = exactSets.map(_._1)
-    val probedUnique = sqProbedUnique(
-      keyed.filter(!col("__mkey").isin(exactKeys: _*)).drop("__mkey"),
-      qid, qvecCol, Some(allowCol), attrs, nProbe, restricts, crowding,
-      kCol, capCol, numCol, numAttrs)
-
-    val crowdAttr = crowding.map(_._1).toSeq
-    val carried = crowdAttr ++ kCol.map(_ => "__k").toSeq ++
-      capCol.map(_ => "__cap").toSeq
-    val perQueryCols =
-      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
-        capCol.map(c => checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
-    val probeLimit = (math.min(math.max(maxBroadcastQueries, 0L),
-      Int.MaxValue.toLong - 1) + 1).toInt
-    val small = keyed.filter(col("__mkey").isin(exactKeys: _*))
-      .select(col(qid)).limit(probeLimit)
-      .count() <= maxBroadcastQueries
-    val exactUniques = exactSets.map { case (key, m, n) =>
-      val qs = keyed.filter(col("__mkey") === key)
-        .select(Seq(col(qid).as("__qid"),
-          col(qvecCol).cast("array<double>").as("__qraw")) ++
-          perQueryCols: _*)
-        .withColumn("__qma", quantize.maxAbs(col("__qraw")))
-        .withColumn("__qpk", quantize.packCodes(
-          quantize.codes(col("__qraw"), col("__qma"))))
-        .drop("__qraw")
-      val side = (restricts ++ allowMapPredicates(m) ++
-        numSetPredicates(n)).foldLeft(data)(_.filter(_))
-      val paired = if (small) side.crossJoin(broadcast(qs))
-        else side.crossJoin(qs.hint("shuffle_replicate_nl"))
-      val scored = paired.select(Seq(col("__qid"), col(id),
-        quantize.score(quantize.packedDot(col("sq_code"), col("__qpk")),
-          col("ma"), col("__qma")).as("score")) ++ carried.map(col): _*)
-      val aggs = Seq(max(col("score")).as("score")) ++
-        carried.map(a => first(col(a)).as(a))
-      scored.groupBy(col("__qid"), col(id))
-        .agg(aggs.head, aggs.tail: _*)
-    }
-    val unique = (probedUnique +: exactUniques).reduce(_ unionByName _)
-    val tailed = if (kCol.isEmpty && capCol.isEmpty)
-      batchTail(unique, qid, k, crowding, metadata)
-    else batchTailDynamic(unique, qid, k, crowding, metadata,
-      hasK = kCol.nonEmpty, hasCap = capCol.nonEmpty)
-    tailed.withColumnRenamed("score", "sq_score")
+    val pq = PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol, capCol)
+    checkPerQuery("searchBatchSqAdaptive", pq, crowding,
+      allowRequired = true)
+    adaptiveBatch(queries, qid, qvecCol, sqKernel, nProbe, k, restricts,
+      crowding, metadata, pq, maxExactFraction, maxDistinctMaps,
+      maxBroadcastQueries)
   }
 
-  /** Crowding → per-query top-k → metadata attach, shared by the
-    * routed ([[searchBatch]]) and exact ([[searchBatchAdaptive]])
-    * batch plans: `unique` carries (__qid, id, score[, crowdAttr])
-    * with ONE row per (query, id).
+  // ---- the batch candidate core: every batched surface is its
+  // argument checks plus one call into the helpers below — route →
+  // prune → per-pair filter → score → spill collapse → tail
+
+  /** Raw tier: the float dot against the query vector. */
+  private def dotKernel: Serving.Kernel = Serving.Kernel(Nil,
+    graft.functions.vectors.dotProduct(col(vecCol), col("__qv")), "score")
+
+  /** SQ8 tier: each query quantizes IN-PLAN (maxAbs → codes → pack,
+    * all codegen — no driver-side per-query work) and every pair
+    * scores as the exact integer dot over packed 1 B/dim codes
+    * rescaled by the two scales. */
+  private def sqKernel: Serving.Kernel = Serving.Kernel(Seq(
+      "__qma" -> quantize.maxAbs(col("__qraw")),
+      "__qpk" -> quantize.packCodes(
+        quantize.codes(col("__qraw"), col("__qma")))),
+    quantize.score(quantize.packedDot(col("sq_code"), col("__qpk")),
+      col("ma"), col("__qma")), "sq_score")
+
+  /** PQ tier: each query rotates IN-PLAN through the OPQ sidecar when
+    * the layout carries one (routing stays on the ORIGINAL vector —
+    * rotation changes the coded space, never the router geometry) and
+    * every pair scores through [[ProductQuantizer.adcDirectExpr]]
+    * against the codebook — 4 B/row on the scan side, no per-query
+    * literal table. Reads the path's codebook/rotation sidecars. */
+  private def adcKernel: Serving.Kernel = {
+    val cb = ProductQuantizer.loadCodebook(spark, path)
+    val rot = ProductQuantizer.loadRotation(spark, path)
+    Serving.Kernel(Seq("__qv" -> rot.map(r =>
+        ProductQuantizer.rotateExpr(col("__qraw"), r))
+        .getOrElse(col("__qraw"))),
+      ProductQuantizer.adcDirectExpr(col("pq_code"), col("__qv"), cb),
+      "adc_score")
+  }
+
+  /** BQ shortlist rung (rides the raw tier): the asymmetric sign-dot
+    * of the 8 B/vector codes against the query — stage 1 of every
+    * shortlist-then-rescore surface. */
+  private def signKernel: Serving.Kernel = Serving.Kernel(Nil,
+    bquant.signDot(col("bq_code"), col("__qv")), "__bq")
+
+  /** The per-query columns a batch may carry — allow-map (+ the
+    * `attrs` it may constrain), numeric restriction set (+
+    * `numAttrs`), result count, crowding cap. */
+  private case class PerQuery(allowCol: Option[String] = None,
+      attrs: Seq[String] = Nil, numCol: Option[String] = None,
+      numAttrs: Seq[String] = Nil, kCol: Option[String] = None,
+      capCol: Option[String] = None) {
+    /** The per-query limits, validated in-plan ([[checkedLimit]]). */
+    def limits: Seq[Column] =
+      kCol.map(c => checkedLimit(c, "k").cast("int").as("__k")).toSeq ++
+        capCol.map(c =>
+          checkedLimit(c, "crowding cap").cast("int").as("__cap")).toSeq
+    /** Every per-query column as it enters the probe frame, validated
+      * in-plan ([[checkedAllow]], [[checkedNum]], [[checkedLimit]]). */
+    def columns: Seq[Column] =
+      allowCol.map(c => checkedAllow(c, attrs).as("__allow")).toSeq ++
+        numCol.map(c => checkedNum(c, numAttrs).as("__numr")).toSeq ++
+        limits
+    def restrictCols: Seq[String] =
+      allowCol.map(_ => "__allow").toSeq ++ numCol.map(_ => "__numr").toSeq
+    /** The limit columns the spill collapse carries to the tail. */
+    def carried: Seq[String] =
+      kCol.map(_ => "__k").toSeq ++ capCol.map(_ => "__cap").toSeq
+    /** The per-(candidate, query) pair filters. An allow column with
+      * NO constrainable attrs (a numeric-only batch) admits only
+      * null or empty maps. */
+    def preds: Seq[Column] =
+      allowCol.map(_ =>
+        if (attrs.nonEmpty) allowPredicate(attrs)
+        else col("__allow").isNull ||
+          size(map_keys(col("__allow"))) === 0).toSeq ++
+        numCol.map(_ => numPredicate(numAttrs)).toSeq
+  }
+
+  /** The argument contract of the per-query batch surfaces. Surfaces
+    * whose allow column is optional need it together with `attrs`;
+    * the per-query surfaces (allow column required) need `attrs`
+    * unless the batch is numeric-only. */
+  private def checkPerQuery(op: String, pq: PerQuery,
+      crowding: Option[(String, Int)], allowRequired: Boolean = false)
+      : Unit = {
+    if (allowRequired)
+      require(pq.attrs.nonEmpty || pq.numCol.nonEmpty,
+        s"$op: pass the layout attributes the allow-maps may constrain " +
+          "(attrs) — an empty set makes every map a no-op")
+    else
+      require(pq.allowCol.isEmpty == pq.attrs.isEmpty,
+        s"$op: per-query restricts need BOTH the allow-map column " +
+          "(allowCol) and the constrained attributes (attrs)")
+    require(pq.numCol.isEmpty == pq.numAttrs.isEmpty,
+      s"$op: per-query numeric restricts need BOTH the restriction " +
+        "column (numCol) and the constrained attributes (numAttrs)")
+    require(pq.capCol.isEmpty || crowding.nonEmpty,
+      s"$op: capCol needs the crowding attribute " +
+        "(crowding = Some((attr, globalCap)))")
+  }
+
+  /** The decorated query frame: `__qid`, the query vector as
+    * array<double> (named by the kernel), the `extra` columns, then
+    * the kernel's per-query columns. The raw vector `__qraw` of a
+    * coded kernel stays until routing. */
+  private def querySelect(queries: DataFrame, qid: String, qvecCol: String,
+      kernel: Serving.Kernel, extra: Seq[Column]): DataFrame =
+    decorateQueries(queries.select(Seq(col(qid).as("__qid"),
+      col(qvecCol).cast("array<double>").as(kernel.qv)) ++ extra: _*), kernel)
+
+  private def decorateQueries(base: DataFrame,
+      kernel: Serving.Kernel): DataFrame =
+    kernel.decorate.foldLeft(base) { case (df, (n, c)) =>
+      df.withColumn(n, c) }
+
+  /** The exact side's query frame: no routing, only the limits. */
+  private def queryFrame(queries: DataFrame, qid: String, qvecCol: String,
+      kernel: Serving.Kernel, pq: PerQuery = PerQuery()): DataFrame =
+    querySelect(queries, qid, qvecCol, kernel, pq.limits).drop("__qraw")
+
+  /** The routed PROBE FRAME every single-vector batch surface starts
+    * from: one row per (query, probed leaf), carrying the validated
+    * per-query columns and the kernel's columns. Routing runs as the
+    * broadcast-f32 probe expression ([[IvfIndex.probeExprF32]]) at the
+    * global bound, or, with `slice` (a per-query probe count), as
+    * ONE `slice` of that rank-ordered array. The frame is materialized
+    * (eager local checkpoint) before anything reads it, so the
+    * distinct-leaf collect and the candidate join read the same
+    * blocks — at a 10⁶-query batch the routing pass is the cost, and
+    * an unmaterialized plan would silently pay it twice.
     */
-  private def batchTail(unique: DataFrame, qid: String, k: Int,
+  private def probeFrame(queries: DataFrame, qid: String, qvecCol: String,
+      kernel: Serving.Kernel, nProbe: Int, perQuery: Seq[Column] = Nil,
+      slice: Option[Column] = None): DataFrame =
+    route(querySelect(queries, qid, qvecCol, kernel,
+      perQuery ++ slice.map(_.as("__np"))), kernel, nProbe, slice.nonEmpty)
+
+  /** MaxSim's probe frame: one row per (query, token vector `__qidx`,
+    * probed leaf), the per-query columns shared by a query's tokens. */
+  private def tokenFrame(queries: DataFrame, qid: String, qvecsCol: String,
+      kernel: Serving.Kernel, nProbe: Int,
+      perQuery: Seq[Column] = Nil): DataFrame =
+    route(decorateQueries(queries.select(Seq(col(qid).as("__qid")) ++
+        perQuery ++ Seq(posexplode(col(qvecsCol)
+          .cast("array<array<double>>"))): _*)
+      .withColumnRenamed("pos", "__qidx")
+      .withColumnRenamed("col", kernel.qv), kernel), kernel, nProbe,
+      sliced = false)
+
+  private def route(decorated: DataFrame, kernel: Serving.Kernel,
+      nProbe: Int, sliced: Boolean): DataFrame = {
+    val probe = IvfIndex.probeExprF32(model, col(kernel.qv),
+      math.max(1, nProbe))
+    decorated
+      .withColumn("leaf_id", explode(
+        if (sliced) slice(probe, lit(1), col("__np")) else probe))
+      .drop("__qraw", "__np")
+      .localCheckpoint(true)
+  }
+
+  /** The leaf-PRUNED layout scan with the batch-wide `restricts` on
+    * it. A probed-leaf set of ≤ 1024 leaves reaches the scan as a
+    * literal In-list, so partition pruning reads only those leaves
+    * (a broadcast-join equality alone would not prune); a larger set
+    * degrades to the full scan (extra candidates only cost work,
+    * never rows) instead of a huge plan. `restricts` are ANDed
+    * predicates over the layout's own columns, sitting directly on
+    * the pruned scan so parquet pushes them.
+    */
+  private def prune(leaves: Seq[Int], restricts: Seq[Column]): DataFrame =
+    restricts.foldLeft(
+      if (leaves.length <= MaxInList)
+        data.filter(col("leaf_id").isin(leaves: _*))
+      else data)(_ filter _)
+
+  /** [[prune]] to a probe frame's distinct leaves (a bounded collect). */
+  private def prune(probes: DataFrame, restricts: Seq[Column]): DataFrame =
+    prune(probes.select("leaf_id").distinct().limit(MaxInList + 1)
+      .collect().map(_.getInt(0)).toSeq, restricts)
+
+  private val MaxInList = 1024
+
+  /** Candidate PAIRS: the pruned `side` joined to the probe frame on
+    * `leaf_id`, then the per-(candidate, query) filters — codegen'd
+    * row-level work inside the join, no extra shuffle, no per-query
+    * loop. */
+  private def pairs(probes: DataFrame, side: DataFrame,
+      pq: PerQuery = PerQuery()): DataFrame =
+    pq.preds.foldLeft(side.join(probes, Seq("leaf_id")))(_ filter _)
+
+  /** SPILL COLLAPSE: score each pair as `name` and keep ONE row per
+    * (query, id) — a vector stored in two probed leaves is one
+    * candidate; `carried` columns are per-(query, id) constants. */
+  private def collapse(pairs: DataFrame, score: Column,
+      carried: Seq[String], name: String = "score",
+      qidCol: Column = col("__qid")): DataFrame = {
+    val aggs = max(col(name)).as(name) +: carried.map(a => first(col(a)).as(a))
+    pairs.select(Seq(qidCol, col(id), score.as(name)) ++ carried.map(col): _*)
+      .groupBy(col("__qid"), col(id))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The probed candidate core: route, prune, pair filter, score,
+    * collapse → (__qid, id, score[, crowdAttr][, __k][, __cap]). */
+  private def probedUnique(queries: DataFrame, qid: String, qvecCol: String,
+      kernel: Serving.Kernel, nProbe: Int, restricts: Seq[Column],
+      crowding: Option[(String, Int)], pq: PerQuery,
+      slice: Option[Column] = None): DataFrame = {
+    val probes = probeFrame(queries, qid, qvecCol, kernel, nProbe,
+      pq.columns, slice)
+    collapse(pairs(probes, prune(probes, restricts), pq), kernel.pairScore,
+      crowding.map(_._1).toSeq ++ pq.carried)
+  }
+
+  /** A whole probed batch: [[probedUnique]] → [[tail]]. */
+  private def batch(queries: DataFrame, qid: String, qvecCol: String,
+      kernel: Serving.Kernel, nProbe: Int, k: Int, restricts: Seq[Column],
       crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)]): DataFrame = {
-    import org.apache.spark.sql.functions._
+      metadata: Option[(DataFrame, String)], pq: PerQuery = PerQuery(),
+      slice: Option[Column] = None): DataFrame =
+    tail(probedUnique(queries, qid, qvecCol, kernel, nProbe, restricts,
+      crowding, pq, slice), qid, k, crowding, metadata, pq, kernel.scoreName)
+
+  /** The EXACT escape: every (row of the stats-skipped `restricts`
+    * scan, query) pair scores — full recall, no routing. The query
+    * frame broadcasts only while it provably fits (`small`, see
+    * [[fitsBroadcast]]); past that the pair generation degrades to the
+    * shuffled cartesian (SHUFFLE_REPLICATE_NL) — same pairs, same
+    * results, no driver-side collect of the query frame. */
+  private def exactUnique(qs: DataFrame, restricts: Seq[Column],
+      kernel: Serving.Kernel, carried: Seq[String],
+      small: Boolean): DataFrame = {
+    val side = restricts.foldLeft(data)(_ filter _)
+    val paired = if (small) side.crossJoin(broadcast(qs))
+      else side.crossJoin(qs.hint("shuffle_replicate_nl"))
+    collapse(paired, kernel.pairScore, carried)
+  }
+
+  /** Whether a query frame provably fits a broadcast — a bounded
+    * limit-probe, not a full count. Past the threshold a 10⁶-row
+    * batch would be a multi-GB broadcast that OOMs executors. The
+    * clamp comes BEFORE the increment: maxBroadcastQueries + 1
+    * overflows to Long.MinValue on Long.MaxValue ("always
+    * broadcast"), producing a negative limit() that throws. */
+  private def fitsBroadcast(qs: DataFrame, maxBroadcastQueries: Long)
+      : Boolean = {
+    val probeLimit = (math.min(math.max(maxBroadcastQueries, 0L),
+      Int.MaxValue.toLong - 1) + 1).toInt
+    qs.limit(probeLimit).count() <= maxBroadcastQueries
+  }
+
+  /** The per-query ADAPTIVE split, one for every tier: queries whose
+    * constraint set is proven selective ([[collectAdaptiveSets]])
+    * leave the routed batch and run the EXACT plan with the set's
+    * constraints as pushed scan predicates ([[allowMapPredicates]] ++
+    * [[numSetPredicates]] — what makes the escape an escape: the scan
+    * reads only the files the stats could not skip); everything else
+    * rides the probed plan. Both sides collapse to one row per
+    * (query, id) and meet in ONE tail. One broadcast-size probe
+    * governs every exact set. */
+  private def adaptiveBatch(queries: DataFrame, qid: String,
+      qvecCol: String, kernel: Serving.Kernel, nProbe: Int, k: Int,
+      restricts: Seq[Column], crowding: Option[(String, Int)],
+      metadata: Option[(DataFrame, String)], pq: PerQuery,
+      maxExactFraction: Double, maxDistinctMaps: Int,
+      maxBroadcastQueries: Long): DataFrame = {
+    val (exactSets, mkey) = collectAdaptiveSets(queries, pq.allowCol.get,
+      pq.attrs, pq.numCol, pq.numAttrs, maxExactFraction, maxDistinctMaps)
+    // nothing proven selective → everything probed
+    if (exactSets.isEmpty)
+      return batch(queries, qid, qvecCol, kernel, nProbe, k, restricts,
+        crowding, metadata, pq)
+    val keyed = queries.withColumn("__mkey", mkey)
+    val exactKeys = exactSets.map(_._1)
+    val probed = probedUnique(
+      keyed.filter(!col("__mkey").isin(exactKeys: _*)).drop("__mkey"),
+      qid, qvecCol, kernel, nProbe, restricts, crowding, pq)
+    val small = fitsBroadcast(keyed.filter(col("__mkey").isin(exactKeys: _*))
+      .select(col(qid)), maxBroadcastQueries)
+    val exact = exactSets.map { case (key, m, n) =>
+      exactUnique(queryFrame(keyed.filter(col("__mkey") === key), qid,
+          qvecCol, kernel, pq),
+        restricts ++ allowMapPredicates(m) ++ numSetPredicates(n), kernel,
+        crowding.map(_._1).toSeq ++ pq.carried, small)
+    }
+    tail((probed +: exact).reduce(_ unionByName _), qid, k, crowding,
+      metadata, pq, kernel.scoreName)
+  }
+
+  /** The ONE batch tail — crowding cap → per-query top-k → metadata
+    * join — shared by every routed, exact and single-query plan:
+    * `unique` carries (__qid, id, score[, crowdAttr][, __k][, __cap])
+    * with ONE row per (query, id). Ranking is (score desc, id); a
+    * per-query `__k` / `__cap` makes the limit least(global,
+    * per-query). Output: (`qid`, id[, metadata columns…],
+    * `scoreName`, rn), rn 1-based per query.
+    */
+  private def tail(unique: DataFrame, qid: String, k: Int,
+      crowding: Option[(String, Int)],
+      metadata: Option[(DataFrame, String)], pq: PerQuery = PerQuery(),
+      scoreName: String = "score"): DataFrame = {
+    def limit(global: Int, perQuery: Option[String], c: String): Column =
+      perQuery.fold(lit(global))(_ => least(lit(global), col(c)))
     val crowded = crowding match {
       case Some((attr, cap)) =>
-        Knn.crowd(unique, cap, "__qid", attr, id, Knn.Dot).drop(attr)
+        val w = Window.partitionBy(col("__qid"), col(attr))
+          .orderBy(col("score").desc, col(id))
+        unique.withColumn("crn", row_number().over(w))
+          .filter(col("crn") <= limit(cap, pq.capCol, "__cap"))
+          .drop("crn").drop(attr)
       case None => unique
     }
-    val ranked = Knn.topKPerQuery(
-      crowded.select(col("__qid"), col(id), col("score")),
-      k, "__qid", id, Knn.Dot)
-    metadata match {
+    val wq = Window.partitionBy("__qid").orderBy(col("score").desc, col(id))
+    val ranked = crowded.select(Seq(col("__qid"), col(id), col("score")) ++
+        pq.kCol.map(_ => col("__k")): _*)
+      .withColumn("rn", row_number().over(wq).cast("bigint"))
+      .filter(col("rn") <= limit(k, pq.kCol, "__k"))
+    val out = metadata match {
       case Some((meta, key)) =>
         val metaCols = meta.columns.filterNot(_ == key).toSeq
         ranked.as("__r").join(meta.as("__m"),
@@ -2890,12 +2267,32 @@ final class Serving private[operators] (
         ranked.withColumnRenamed("__qid", qid)
           .select(col(qid), col(id), col("score"), col("rn"))
     }
+    if (scoreName == "score") out
+    else out.withColumnRenamed("score", scoreName)
   }
 
   def numLeaves: Int = model.centroids.length
 }
 
 object Serving {
+
+  /** A tier's batch SCORING KERNEL — the one thing the storage tier
+    * changes in a batch plan (the reference provisions one
+    * find_neighbors shape whatever the tier,
+    * setup_vector_search.py:45-76): per-query columns computed ONCE
+    * per query in the probe frame (`decorate`, reading the raw query
+    * vector `__qraw`; none for the raw tier, which scores `__qv`
+    * directly), the (layout row, query) pair score over them, and the
+    * output score column's name.
+    */
+  private[operators] final case class Kernel(decorate: Seq[(String, Column)],
+      pairScore: Column, scoreName: String) {
+    /** The name the cast query vector enters the probe frame under. */
+    def qv: String = if (decorate.isEmpty) "__qv" else "__qraw"
+    /** The probe-frame columns the pair score reads. */
+    def scored: Seq[String] =
+      if (decorate.isEmpty) Seq("__qv") else decorate.map(_._1)
+  }
 
   /** One per-query numeric restriction — the row shape `numCol`
     * columns carry (`array<struct<attr, op, v>>`): compare the

@@ -278,30 +278,115 @@ class ServingApiSpec extends SparkTestBase {
     assert(boom.getMessage.contains("pct"))
   }
 
-  test("batched MaxSim plan shape: the corpus side joins by " +
-      "BROADCAST only — (qid, leaf) pairs and the token frame ship " +
-      "to the scan, the corpus is never exchanged for a join") {
-    import graft.operators.Serving
-    import spark.implicits._
+  // every batched surface (raw/SQ8/PQ/BQ, MaxSim, MMR, hybrid): routing
+  // runs once, in the checkpointed probe frame; the layout scan carries
+  // the leaf_id In-list; the layout side never shuffles for a join
+  test("batched plan shape: every surface routes once and scans only " +
+      "its probed leaves") {
+    import graft.functions.{bquant, quantize}
+    import graft.operators.{ManifestFileIndex, ProductQuantizer, Serving}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledJoin}
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
       col("label"), col("embedding").cast("array<double>").as("v"))
     val (indexed, model) = IvfIndex.build(emb, "vec_id", "v", 8)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_srvmsplan").toString + "/idx"
-    IvfIndex.write(indexed, dir, model)
-    val live = Serving.open(spark, dir, id = "vec_id", vecCol = "v")
-    val byId = emb.filter(col("vec_id") <= 3L)
-      .select(col("vec_id"), col("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val queries = Seq((0L, Seq(byId(0L), byId(1L))),
-      (1L, Seq(byId(2L), byId(3L)))).toDF("qid", "qvecs")
-    val plan = live.searchMaxSimBatch(queries, "qid", "qvecs",
-        nProbe = 3, k = 5, docCol = "label")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"expected broadcast joins in the batched MaxSim plan:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"the corpus must never shuffle for a MaxSim join:\n$plan")
+    def layout(df: DataFrame): String = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_srvplan").toString + "/idx"
+      IvfIndex.write(df, dir, model)
+      dir
+    }
+    val raw = Serving.open(spark, layout(
+      indexed.withColumn("bq_code", bquant.packSigns(col("v")))),
+      vecCol = "v")
+    raw.attachLexical(emb.select(col("vec_id"), concat(lit("t"),
+      (col("vec_id") % 5).cast("string")).as("text")), "vec_id", "text")
+    val sq = Serving.open(spark, layout(indexed
+      .withColumn("ma", quantize.maxAbs(col("v")))
+      .withColumn("sq_code",
+        quantize.packCodes(quantize.codes(col("v"), col("ma"))))
+      .drop("v")), vecCol = "v")
+    val cb = ProductQuantizer.trainCodebooks(emb, "vec_id", "v")
+    val pqDir = layout(indexed
+      .withColumn("pq_code", ProductQuantizer.encodeExpr(col("v"), cb))
+      .drop("v"))
+    ProductQuantizer.writeCodebook(spark, pqDir, cb)
+    val pq = Serving.open(spark, pqDir, vecCol = "v")
+
+    val qs = emb.filter(col("vec_id").isin(3L, 21L, 42L))
+      .select(col("vec_id").as("qid"), col("v").as("qv"))
+    val r = Seq(col("label") >= 0)
+    val crowd = Some(("label", 3))
+    val surfaces: Seq[(String, () => DataFrame)] = Seq(
+      "raw" -> (() => raw.searchBatch(qs, "qid", "qv", 3, 5, r, crowd,
+        None)),
+      "sq8" -> (() => sq.searchBatchSq(qs, "qid", "qv", 3, 5, r, crowd)),
+      "pq" -> (() => pq.searchBatchAdc(qs, "qid", "qv", 3, 5, r, crowd)),
+      "bq" -> (() => raw.searchBatchBqRerank(qs, "qid", "qv", 3, 20, 5, r,
+        crowd)),
+      "maxsim" -> (() => raw.searchMaxSimBatch(
+        qs.select(col("qid"), array(col("qv"), col("qv")).as("qvecs")),
+        "qid", "qvecs", nProbe = 3, k = 5, docCol = "label")),
+      "mmr" -> (() => raw.searchMmrBatch(qs, "qid", "qv", 3, 10, 5, 0.5,
+        r)),
+      "hybrid" -> (() => raw.searchHybridBatch(
+        qs.withColumn("terms", array(lit("t1"), lit("t2"))), "qid",
+        "terms", "qv", 3)))
+
+    // the executed plan's nodes, walking into the AQE query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def isLayout(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.isInstanceOf[ManifestFileIndex]
+      case _ => false
+    }
+    // a layout scan reaches p with no aggregation in between
+    def layoutFeeds(p: SparkPlan): Boolean = p match {
+      case _: BaseAggregateExec => false
+      case a: AdaptiveSparkPlanExec => layoutFeeds(a.executedPlan)
+      case s: QueryStageExec => layoutFeeds(s.plan)
+      case other => isLayout(other) || other.children.exists(layoutFeeds)
+    }
+    for ((name, surface) <- surfaces) {
+      val df = surface()
+      assert(df.collect().nonEmpty, s"$name: no rows")
+      val all = nodes(df.queryExecution.executedPlan)
+      val routed = all.flatMap(_.expressions).filter(_.find {
+        case _: graft.functions.NearestCentroids |
+             _: graft.functions.RoutedNearestCentroidsF32 => true
+        case _ => false
+      }.isDefined)
+      assert(routed.isEmpty,
+        s"$name: routing runs in the executed plan, not once in the " +
+          s"checkpointed probe frame: $routed")
+      val scans = all.collect { case f: FileSourceScanExec if isLayout(f) => f }
+      assert(scans.nonEmpty, s"$name: no layout scan in the plan")
+      scans.foreach(f => assert(f.partitionFilters.exists(_.find {
+          case i: In => i.value.references.exists(_.name == "leaf_id")
+          case i: InSet => i.child.references.exists(_.name == "leaf_id")
+          case _ => false
+        }.isDefined),
+        s"$name: layout scan without the leaf_id In-list: " +
+          f.partitionFilters.mkString(", ")))
+      assert(all.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        s"$name: the candidate join is not a broadcast join")
+      val shuffled = all.collect {
+        case j: ShuffledJoin if j.children.exists(layoutFeeds) => j
+      }
+      assert(shuffled.isEmpty,
+        s"$name: the layout side is shuffled for a join:\n" +
+          shuffled.mkString("\n"))
+    }
   }
 
   test("searchBatchPercent: uniform pct == searchBatch at the " +

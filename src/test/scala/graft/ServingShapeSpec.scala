@@ -928,7 +928,7 @@ class ServingShapeSpec extends SparkTestBase {
     ServingManifest.promote(spark, adcDir, Seq("version"))
 
     // version EQ 1.0 matches EVERY file — provably unselective, so
-    // collectExactSets returns nothing and the whole batch must ride
+    // collectAdaptiveSets returns nothing and the whole batch must ride
     // the probed plan (this used to throw IllegalArgumentException)
     val tenants = Seq((3L, Seq(("version", "EQ", 1.0))))
       .toDF("qid", "num")
@@ -1070,7 +1070,7 @@ class ServingShapeSpec extends SparkTestBase {
     assert(messages(badOp).exists(
       _.contains("numeric restriction outside numAttrs")),
       s"expected the op contract violation, got: $badOp")
-    // the ADAPTIVE path validates on the DRIVER (collectExactSets)
+    // the ADAPTIVE path validates on the DRIVER (collectAdaptiveSets)
     // before any plan runs
     val badAdaptive = intercept[Exception] {
       serving.searchBatchPerQueryAdaptive(

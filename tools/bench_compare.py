@@ -1,21 +1,46 @@
 #!/usr/bin/env python3
-"""Compare two bench JSON records row by row (round-18 record tooling).
+"""Compare two bench JSON records row by row.
 
 Usage: bench_compare.py <before.json> <after.json> [--md]
 Prints per-row before/after/ratio (sorted by name), geomeans, and the
-largest movers. --md emits the markdown appendix table.
+shared totals. --md emits the markdown appendix table.
+
+Reads both record shapes: a plain `graft.Bench` record (`queries` at the
+top level, as in BENCH_LOCAL.json) and a wrapped record (`queries` nested
+under `parsed`, as in BENCH_r18.json). A row
+value is seconds, or a {min, med, max} triplet whose `med` is used. Rows
+whose before value is 0 (or missing) have no ratio and are skipped.
 """
 import json
 import math
 import sys
 
 
+def load(path):
+    """{row name: seconds} of one record, either shape."""
+    rec = json.load(open(path))
+    queries = rec.get("queries")
+    if queries is None:
+        queries = (rec.get("parsed") or {}).get("queries")
+    if queries is None:
+        sys.exit(f"{path}: no 'queries' (top level or under 'parsed')")
+    return {k: v["med"] if isinstance(v, dict) else v
+            for k, v in queries.items()}
+
+
+def geomean(ratios):
+    if not ratios:
+        return "n/a"
+    return f"{math.exp(sum(math.log(r) for r in ratios) / len(ratios)):.3f}"
+
+
 def main() -> None:
-    before = json.load(open(sys.argv[1]))["queries"]
-    after = json.load(open(sys.argv[2]))["queries"]
+    before = load(sys.argv[1])
+    after = load(sys.argv[2])
     md = "--md" in sys.argv
     rows = [(k, before[k], after[k], after[k] / before[k])
-            for k in sorted(before) if k in after]
+            for k in sorted(before)
+            if k in after and before[k] and after[k] is not None]
     if md:
         print("| query | before s | after s | ratio |")
         print("|---|---|---|---|")
@@ -24,14 +49,14 @@ def main() -> None:
     else:
         for k, b, a, r in rows:
             print(f"{k:30s} {b:7.2f} {a:7.2f} {r:6.2f}")
-    g = math.exp(sum(math.log(r[3]) for r in rows) / len(rows))
-    big = [r for r in rows if r[1] >= 1.0]
-    gb = math.exp(sum(math.log(r[3]) for r in big) / len(big))
+    # a zero after-value has ratio 0, which has no log: geomeans skip it
+    big = [r[3] for r in rows if r[1] >= 1.0 and r[3] > 0]
     tb = sum(r[1] for r in rows)
     ta = sum(r[2] for r in rows)
+    total = f"({ta / tb:.3f}x)" if tb else "(n/a)"
     print(f"\nshared rows n={len(rows)} total {tb:.1f} -> {ta:.1f} "
-          f"({ta / tb:.3f}x)  geomean {g:.3f}  "
-          f"geomean(before>=1s, n={len(big)}) {gb:.3f}")
+          f"{total}  geomean {geomean([r[3] for r in rows if r[3] > 0])}  "
+          f"geomean(before>=1s, n={len(big)}) {geomean(big)}")
 
 
 if __name__ == "__main__":
