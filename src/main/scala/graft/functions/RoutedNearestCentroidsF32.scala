@@ -57,14 +57,16 @@ final class RouterData(val flatCents: Array[Float], val dim: Int,
   *     every task deserializes its own copy — at 10⁶ leaves the
   *     double matrix is a ~0.5 GB task binary whose 32-way
   *     deserialization OOMs an 8 GB executor outright (measured:
-  *     ScaleProbe `route 1000000` on the double expression dies in
-  *     task deserialization). A broadcast is fetched and cached ONCE
+  *     `route 1000000` on the double expression dies in task
+  *     deserialization; the `route` mode of
+  *     `git show 89d9bee:src/main/scala/graft/ScaleProbe.scala`,
+  *     numbers in PERF.md). A broadcast is fetched and cached ONCE
   *     per executor; tasks share it.
   *   - float32 + flat packing halves the resident bytes again.
   *
   * Same two-level walk, same selection order, same NaN rule as the
   * double expression; probe-list parity vs the double router is a
-  * measured quantity (≥0.99 — RoutedProbeSpec, ScaleProbe `route`),
+  * measured quantity (≥0.99 — RoutedProbeSpec),
   * so hash-gated paths keep using [[graft.operators.IvfIndex.probeExpr]]
   * and this is the opt-in scale path
   * ([[graft.operators.IvfIndex.probeExprF32]]).

@@ -40,18 +40,8 @@ object Dedup {
     * re-splitting the text per element.
     */
   def shingleSets(docs: DataFrame, id: String, textCol: String): DataFrame =
-    shingleSetsOfTokens(
-      docs.select(col(id), text.tokens(col(textCol)).as("__tk")),
-      id, "__tk")
-
-  /** [[shingleSets]] from PRE-TOKENIZED rows (id, tokens array) — the
-    * streaming dedup store persists tokens once per doc (a tokens
-    * SIDECAR, ≈ text-sized) so stored docs are never re-tokenized;
-    * downstream shapes are identical to the text form.
-    */
-  def shingleSetsOfTokens(toks: DataFrame, id: String,
-      tokCol: String): DataFrame =
-    toks.select(col(id), explode(text.shinglesOfTokens(col(tokCol))).as("s"))
+    docs.select(col(id), text.tokens(col(textCol)).as("__tk"))
+      .select(col(id), explode(text.shinglesOfTokens(col("__tk"))).as("s"))
       .distinct()
 
   /** Every shingle with document frequency above this is dropped from
@@ -100,16 +90,9 @@ object Dedup {
 
   /** MinHash signatures: min over shingle hashes of (aᵢ·h+bᵢ) mod P. */
   def minhashSignatures(docs: DataFrame, id: String,
-      textCol: String): DataFrame =
-    minhashSignaturesFromSets(shingleSets(docs, id, textCol), id)
-
-  /** [[minhashSignatures]] from PRE-MATERIALIZED (id, shingle) rows
-    * ([[shingleSets]] output) — lets a caller that also needs the
-    * sets themselves (the streaming dedup store keeps them as a
-    * verify sidecar) tokenize ONCE and derive both artifacts.
-    */
-  def minhashSignaturesFromSets(sets: DataFrame, id: String): DataFrame = {
-    val sh = sets.select(col(id), text.polyHash(col("s")).as("h"))
+      textCol: String): DataFrame = {
+    val sh = shingleSets(docs, id, textCol)
+      .select(col(id), text.polyHash(col("s")).as("h"))
     val aggs = MinhashA.zip(MinhashB).zipWithIndex.map {
       case ((a, b), i) =>
         min((col("h") * a + b) % P).as(s"m${i + 1}")
@@ -207,46 +190,6 @@ object Dedup {
             (col("na") + col("nb") - col("c")), lit(0.0)).as("jaccard"))
         .localCheckpoint()
     } finally { sh.unpersist(); () }
-  }
-
-  /** [[jaccardOfPairs]] for the streaming-store verify stage:
-    * the STORE side reads the (id, tokens) SIDECAR persisted when
-    * each doc entered the store (one tokenize per doc EVER — the
-    * per-batch plan carries no store-text tokenize), the fresh side
-    * takes the in-flight batch's already-built shingle sets, `pairs`
-    * carries (da = store id, db = fresh id). The store side is
-    * semi-join-pruned to the candidate ids BEFORE its explode, so
-    * the shingle blow-up stays ∝ candidates. Same arithmetic, same
-    * output as [[jaccardOfPairs]] over the same pairs: sizes are the
-    * full set sizes, a pair sharing no shingle verifies at 0.0.
-    */
-  def jaccardOfPairsStore(storeToks: DataFrame, id: String,
-      tokCol: String, freshSets: DataFrame, pairs: DataFrame): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val storeSh = shingleSetsOfTokens(
-      storeToks.join(pairs.select(col("da").as(id)).distinct(),
-        Seq(id), "left_semi"),
-      id, tokCol)
-      .persist(lvl)
-    val freshSh = freshSets
-      .join(pairs.select(col("db").as(id)).distinct(), Seq(id), "left_semi")
-      .persist(lvl)
-    try {
-      val sa = storeSh.groupBy(id).agg(count(lit(1)).as("na"))
-      val sb = freshSh.groupBy(id).agg(count(lit(1)).as("nb"))
-      val common = pairs
-        .join(storeSh.select(col(id).as("da"), col("s")), "da")
-        .join(freshSh.select(col(id).as("db"), col("s")), Seq("db", "s"))
-        .groupBy("da", "db").agg(count(lit(1)).as("c"))
-      pairs
-        .join(common, Seq("da", "db"), "left")
-        .join(sa.select(col(id).as("da"), col("na")), "da")
-        .join(sb.select(col(id).as("db"), col("nb")), "db")
-        .select(col("da"), col("db"),
-          coalesce(col("c").cast("double") /
-            (col("na") + col("nb") - col("c")), lit(0.0)).as("jaccard"))
-        .localCheckpoint()
-    } finally { storeSh.unpersist(); freshSh.unpersist(); () }
   }
 
   /** 60-bit SimHash over the shingle-hash multiset (Manku et al.

@@ -1038,7 +1038,7 @@ object IvfIndex {
     * task binary × task slots: measured OOM on an 8 GB executor at
     * 32 slots). Probe lists are NOT bit-identical to [[probeExpr]]:
     * float32 quantization can flip near-tied centroid rankings
-    * (parity ≥0.99 measured — RoutedProbeSpec, ScaleProbe `route`),
+    * (parity ≥0.99 — RoutedProbeSpec),
     * so hash-gated paths keep using [[probeExpr]]; this is the
     * serving path past ~10⁵ leaves. Falls back to the exact flat
     * expression when the router doesn't engage — below that size the

@@ -123,7 +123,8 @@ private[graft] object MetaIO {
           val row = new Array[Any](cols.length)
           var c = 0
           while (c < cols.length) {
-            row(c) = if (present(c) < 0) null else value(g, schema, present(c))
+            row(c) = if (present(c) < 0) null
+              else value(g, schema, present(c), file)
             c += 1
           }
           sink(row)
@@ -135,7 +136,8 @@ private[graft] object MetaIO {
     } finally reader.close()
   }
 
-  private def value(g: Group, schema: MessageType, fieldIdx: Int): Any = {
+  private def value(g: Group, schema: MessageType, fieldIdx: Int,
+      file: Path): Any = {
     if (g.getFieldRepetitionCount(fieldIdx) == 0) return null
     val t = schema.getType(fieldIdx)
     if (t.isPrimitive)
@@ -155,21 +157,26 @@ private[graft] object MetaIO {
       //   { optional double element } }
       val lg = g.getGroup(fieldIdx, 0)
       val inner = lg.getType.asGroupType()
-      require(inner.getFieldCount == 1,
-        s"MetaIO: unsupported nested type for '${t.getName}'")
-      val repName = inner.getType(0).getName // "list" (or legacy "array")
+      def fail(what: String): Nothing = throw new IllegalStateException(
+        s"MetaIO: column '${t.getName}' in $file $what")
+      if (inner.getFieldCount != 1) fail("is an unsupported nested type")
+      val rep = inner.getType(0) // "list" (or legacy "array")
+      val elemGroup = !rep.isPrimitive
+      val elem = if (elemGroup && rep.asGroupType().getFieldCount == 1)
+        rep.asGroupType().getType(0) else rep
+      if (!elem.isPrimitive || elem.asPrimitiveType().getPrimitiveTypeName !=
+          PrimitiveTypeName.DOUBLE) fail(s"is a list of $elem, not of double")
       val n = lg.getFieldRepetitionCount(0)
       val arr = new Array[Double](n)
-      val elemGroup = inner.getType(0).isInstanceOf[
-        org.apache.parquet.schema.GroupType]
       var i = 0
       while (i < n) {
         arr(i) =
-          if (elemGroup) lg.getGroup(0, i).getDouble(0, 0)
-          else lg.getDouble(0, i)
+          if (!elemGroup) lg.getDouble(0, i)
+          else if (lg.getGroup(0, i).getFieldRepetitionCount(0) == 0)
+            fail(s"holds a null list element at index $i")
+          else lg.getGroup(0, i).getDouble(0, 0)
         i += 1
       }
-      val _ = repName
       arr
     }
   }

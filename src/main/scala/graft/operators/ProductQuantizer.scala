@@ -281,8 +281,9 @@ object ProductQuantizer {
     * subspaces, held fixed). Deterministic: plain-PQ init, fixed
     * alternation count, driver-local like both trainers.
     *
-    * Measured next to plain and per-subspace training by
-    * `ScaleProbe pqaniso` — the encode used at serving time must
+    * Measured next to plain and per-subspace training by the
+    * `pqaniso` mode of `git show 89d9bee:src/main/scala/graft/ScaleProbe.scala`
+    * (numbers in PERF.md) — the encode used at serving time must
     * match the training-time assignment rule (coordinate descent,
     * exposed as [[encodeCdCodes]]) or the codebook's placement is
     * wasted.

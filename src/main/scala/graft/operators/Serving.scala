@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * [[search]] repeatedly against the HELD DataFrame. Per-query cost
   * is the router walk (driver, sub-millisecond past the router
   * threshold) plus a partition-pruned scan of the probed leaves —
-  * the open cost (sidecar + manifest) is paid once per process, the
-  * shape `ScaleProbe serveopen` measured at 12 270 leaves.
+  * the open cost (sidecar + manifest) is paid once per process (the
+  * serving benchmark's `manifest.open_ms` and `request_p50_ms`).
   *
   * The held frame is LWW-RESOLVED against the delta registry as of
   * open time ([[graft.streaming.IndexMaintenance.readServing]]):
@@ -1746,7 +1746,7 @@ final class Serving private[operators] (
       (r.getString(0), m, n)
     }
     // ONE manifest read estimates every distinct set (a per-set read
-    // would pay a Spark job each — ScaleProbe `padapt`)
+    // would pay a Spark job each, see estimateAllowBatch)
     val estimates =
       if (numCol.isEmpty)
         ServingManifest.estimateAllowBatch(spark, path, sets.map(_._2))

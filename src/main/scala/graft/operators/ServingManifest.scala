@@ -31,8 +31,10 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   * version (nearest checkpoint + ≤ [[CheckpointInterval]]−1 deltas).
   * The `_graft_manifest` directory persists as the most recent
   * CHECKPOINT (rewritten on full installs and every
-  * [[CheckpointInterval]]-th version), serving as the
-  * manifest-exists marker and the legacy-reader surface. Before
+  * [[CheckpointInterval]]-th version) and is the manifest-exists
+  * marker. It is only that checkpoint: it can lag the live fold by
+  * up to [[CheckpointInterval]]−1 versions, so a reader that opens
+  * the directory directly misses files appended since. Before
   * round 18 every reconcile rewrote the full manifest — O(manifest)
   * per append, the wrong asymptotic for a streaming index at 10⁶
   * entries.
@@ -599,6 +601,10 @@ object ServingManifest {
     * rewrote the full manifest per append). Every
     * [[CheckpointInterval]]-th version folds the live set and
     * installs a checkpoint instead, bounding later fold depth.
+    * After an unclean shutdown an operator runs [[verify]] first and
+    * then reconciles the leaves holding drifted files (or
+    * [[rebuild]]s): a lost delta rename leaves appended files on disk
+    * but outside the fold, and nothing re-adds them unprompted.
     */
   def reconcile(spark: SparkSession, path: String,
       leaves: Seq[Int]): Unit = {
@@ -831,7 +837,8 @@ object ServingManifest {
     * not on disk (would fail a scan loudly) and files on disk but not
     * in the fold (would be silently invisible — the dangerous
     * direction). Byte sizes must match too: a rewritten-in-place file
-    * is drift even when the name survives.
+    * is drift even when the name survives. The first step after an
+    * unclean shutdown; non-zero drift is repaired by [[reconcile]].
     *
     * @return (missingOnDisk, unlistedOnDisk) — (0, 0) is consistent
     */
@@ -1052,8 +1059,10 @@ object ServingManifest {
   /** [[estimateAllow]] for MANY maps in ONE metadata fold — the
     * adaptive per-query surfaces estimate every distinct allow-map of
     * a batch, and a per-map re-read would pay a Spark job each
-    * (measured ~95 ms/map at 1024 manifest rows, ScaleProbe
-    * `padapt`); one fold serves all maps in the same driver pass.
+    * (measured ~95 ms/map at 1024 manifest rows, `padapt` mode of
+    * `git show 89d9bee:src/main/scala/graft/ScaleProbe.scala`); one
+    * fold serves all maps in the same driver pass (pinned equal to
+    * per-map [[estimateAllow]] in `ServingManifestSpec`).
     * Per-map semantics identical to [[estimateAllow]].
     */
   def estimateAllowBatch(spark: SparkSession, path: String,

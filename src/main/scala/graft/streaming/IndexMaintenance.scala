@@ -41,6 +41,15 @@ object IndexMaintenance {
   private def deltaDir(servePath: String): String =
     servePath + "/_graft_delta"
 
+  /** `batch` with its id column checked in-plan (the `checkedLimit`
+    * convention of [[graft.operators.Serving]]): a null id raises
+    * inside the write the caller already runs, before it lands in the
+    * delta registry, where [[deltaWinners]] could not resolve it.
+    */
+  private def nonNullIds(batch: DataFrame, id: String, op: String): DataFrame =
+    batch.withColumn(id, when(col(id).isNull, raise_error(lit(
+      s"$op: null id in column '$id'"))).otherwise(col(id)))
+
   /** Upsert a batch into the SERVED index — no rebuild. The batch is
     * assigned to the index's EXISTING leaves with the model loaded
     * from the layout's own sidecar (top-`spill` ranked leaves, same
@@ -91,7 +100,8 @@ object IndexMaintenance {
         s"appendToServing: textCol given but $servePath carries no " +
           "lexical sidecar — run Lexical.attach (or Serving.attachLexical) first")
     }
-    val vecBatch = textCol.map(batch.drop(_)).getOrElse(batch)
+    val vecBatch = nonNullIds(textCol.map(batch.drop(_)).getOrElse(batch),
+      id, "appendToServing")
     val model = IvfIndex.load(spark, servePath)
     val layoutCols = graft.operators.ServingManifest
       .layoutColumns(spark, servePath).sorted
@@ -127,7 +137,8 @@ object IndexMaintenance {
     // ONE shuffle of the batch (∝ batch, never the layout) before the
     // partitioned write: unrepartitioned, every upstream task writes
     // one file per leaf it happens to hold — measured 7,729 files for
-    // a 10k-row append over 64 leaves (ScaleProbe `bqfull`, round 15),
+    // a 10k-row append over 64 leaves (round 15, the `bqfull` mode of
+    // `git show 89d9bee:src/main/scala/graft/ScaleProbe.scala`),
     // which bloats the manifest by thousands of entries PER APPEND and
     // makes every appendage-scoped probe pay thousands of footer
     // opens. Repartitioned, files ≈ touched leaves.
@@ -185,7 +196,8 @@ object IndexMaintenance {
     */
   def removeFromServing(spark: SparkSession, servePath: String,
       tombstones: DataFrame, id: String, versionCol: String): Unit = {
-    tombstones.select(col(id), col(versionCol).cast("long").as("version"),
+    nonNullIds(tombstones, id, "removeFromServing")
+      .select(col(id), col(versionCol).cast("long").as("version"),
         lit(true).as("tombstone"))
       .write.mode("append").parquet(deltaDir(servePath))
   }
@@ -221,7 +233,7 @@ object IndexMaintenance {
       .getOrElse(v)
     // persisted: the assignment+encode pass feeds both the write and
     // the touched-leaf reconcile (see appendToServing)
-    val assigned = batch
+    val assigned = nonNullIds(batch, id, "appendCodedToServing")
       .withColumn("leaf_id",
         explode(IvfIndex.probeExprF32(model, v, math.max(1, spill))))
       .withColumn("pq_code",
@@ -234,13 +246,7 @@ object IndexMaintenance {
         s"${batch.columns.sorted.mkString(",")} encoded to " +
         s"${assigned.columns.sorted.mkString(",")} do not match the " +
         s"coded layout's ${layoutCols.mkString(",")}")
-    // ONE shuffle of the batch (∝ batch, never the layout) before the
-    // partitioned write: unrepartitioned, every upstream task writes
-    // one file per leaf it happens to hold — measured 7,729 files for
-    // a 10k-row append over 64 leaves (ScaleProbe `bqfull`, round 15),
-    // which bloats the manifest by thousands of entries PER APPEND and
-    // makes every appendage-scoped probe pay thousands of footer
-    // opens. Repartitioned, files ≈ touched leaves.
+    // one shuffle before the partitioned write (see appendToServing)
     assigned.repartition(col("leaf_id"))
       .write.mode("append").partitionBy("leaf_id").parquet(servePath)
     batch.select(col(id), col(versionCol).cast("long").as("version"),
@@ -276,7 +282,7 @@ object IndexMaintenance {
     val v = col(vecCol).cast("array<double>")
     // persisted: the assignment+quantize pass feeds both the write
     // and the touched-leaf reconcile (see appendToServing)
-    val assigned = batch
+    val assigned = nonNullIds(batch, id, "appendSqToServing")
       .withColumn("leaf_id",
         explode(IvfIndex.probeExprF32(model, v, math.max(1, spill))))
       .withColumn("ma", graft.functions.quantize.maxAbs(v))
@@ -290,13 +296,7 @@ object IndexMaintenance {
         s"${batch.columns.sorted.mkString(",")} quantized to " +
         s"${assigned.columns.sorted.mkString(",")} do not match the " +
         s"SQ layout's ${layoutCols.mkString(",")}")
-    // ONE shuffle of the batch (∝ batch, never the layout) before the
-    // partitioned write: unrepartitioned, every upstream task writes
-    // one file per leaf it happens to hold — measured 7,729 files for
-    // a 10k-row append over 64 leaves (ScaleProbe `bqfull`, round 15),
-    // which bloats the manifest by thousands of entries PER APPEND and
-    // makes every appendage-scoped probe pay thousands of footer
-    // opens. Repartitioned, files ≈ touched leaves.
+    // one shuffle before the partitioned write (see appendToServing)
     assigned.repartition(col("leaf_id"))
       .write.mode("append").partitionBy("leaf_id").parquet(servePath)
     batch.select(col(id), col(versionCol).cast("long").as("version"),
@@ -392,6 +392,9 @@ object IndexMaintenance {
       var idIsLong = false
       rows.foreach { r =>
         val rawId = r(0)
+        if (rawId == null) throw new IllegalStateException(
+          s"delta registry at ${deltaDir(servePath)}: null id in column " +
+            s"'$idCol' — the registry cannot be LWW-resolved")
         if (rawId.isInstanceOf[Long]) idIsLong = true
         val v = r(1) match {
           case l: Long => l

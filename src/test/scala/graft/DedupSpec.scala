@@ -306,6 +306,16 @@ class DedupSpec extends SparkTestBase {
           Option(r.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L))).toMap
     assert(pd.view.mapValues(v => (v._1, v._2)).toMap == exact,
       s"bloom-gated output must equal the exact decision: $pd vs $exact")
+    // the same with broadcast joins off: the verify join shuffles every
+    // train window, the regime the pre-filter is built for
+    val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val shuffled = try Dedup.decontaminateWindows(train, evalDocs,
+        "doc_id", "text", 8).collect().map(r => r.getLong(0) ->
+        (r.getAs[Long]("n_windows"), r.getAs[Long]("contam_windows"))).toMap
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
+    assert(shuffled == exact,
+      s"shuffled bloom-gated output must equal the exact decision: $shuffled")
     // the Bloom stage must actually be IN the plan (pre-filtering the
     // train scan), not optimized away
     val plan = Dedup.decontaminateWindows(train, evalDocs,
@@ -385,50 +395,6 @@ class DedupSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getAs[Long](1)).toMap
     assert(got == Map(2L -> 2L),
       s"only doc 2's two new-window occurrences count: $got")
-  }
-
-  test("jaccardOfPairsStore over a tokens sidecar == jaccardOfPairs " +
-      "over the text (the streaming-store verify form)") {
-    import spark.implicits._
-    // the at-scale verify form: the store side reads pre-tokenized
-    // rows (one tokenize per stored doc EVER — no store-text regexp
-    // in the per-batch plan; see plans/r18/probe_sdedup_verify_*),
-    // the fresh side brings its own shingle sets. Must verify every
-    // pair to exactly the jaccardOfPairs value, including a
-    // no-shared-shingle pair at 0.0.
-    val store = docs.filter(col("doc_id") < 50)
-    val fresh = docs.filter(col("doc_id") >= 50 && col("doc_id") < 100)
-      .unionAll(store.limit(3)
-        .select((col("doc_id") + 5000).as("doc_id"), col("text"),
-          col("lang"), col("source"), col("n_chars"))) // planted dups
-    val pairs = store.select(col("doc_id").as("da"))
-      .crossJoin(fresh.select(col("doc_id").as("db")))
-      .filter(pmod(col("da") + col("db"), lit(7)) === 0) // a spread sample
-      .unionAll(store.limit(3).select(col("doc_id").as("da"),
-        (col("doc_id") + 5000).as("db"))) // the planted dup pairs
-      .distinct()
-      .localCheckpoint()
-    val expected = Dedup.jaccardOfPairs(
-        docs.unionAll(fresh.filter(col("doc_id") >= 5000)),
-        "doc_id", "text", pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
-    val tokPath = java.nio.file.Files
-      .createTempDirectory("graft_dedup_toks").toString + "/tokens"
-    store.select(col("doc_id"),
-        graft.functions.text.tokens(col("text")).as("tk"))
-      .write.mode("overwrite").parquet(tokPath)
-    val freshSets = Dedup.shingleSets(fresh, "doc_id", "text")
-    val got = Dedup.jaccardOfPairsStore(spark.read.parquet(tokPath),
-        "doc_id", "tk", freshSets, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-      .toMap
-    assert(got.keySet == expected.keySet)
-    assert(got.keys.forall(k => got(k) == expected(k)),
-      s"first mismatch: ${got.keys.find(k => got(k) != expected(k))
-        .map(k => s"$k got ${got(k)} expected ${expected(k)}")}")
-    assert(expected.values.exists(_ >= 0.99), "planted dups must verify ~1")
-    assert(expected.values.exists(_ == 0.0), "a no-overlap pair verifies 0.0")
   }
 
   test("identical texts get identical simhash, hamming 0") {

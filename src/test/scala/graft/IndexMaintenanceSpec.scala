@@ -96,6 +96,19 @@ class IndexMaintenanceSpec extends SparkTestBase {
       .filter(col("vec_id") === 1).select("version").distinct().collect()
     assert(v1Rows.map(_.getInt(0)).toSeq == Seq(2),
       "stale version 1 of an upserted id must never be served")
+    // a second overwrite of the same ids (versions strictly rising
+    // per id) plus a fresh one: across the whole served frame no id
+    // is ever served at two versions
+    IndexMaintenance.appendToServing(spark, serve,
+      Seq((1L, v0, 3), (99990L, v0, 3), (2L, v0, 2))
+        .toDF("vec_id", "v", "version"), "vec_id", "v", "version")
+    val served = IndexMaintenance.readServing(s2, serve, "vec_id", "version")
+    assert(served.groupBy("vec_id").agg(countDistinct("version").as("nv"))
+      .filter(col("nv") > 1).count() == 0,
+      "an id is served at more than one version")
+    assert(served.filter(col("vec_id").isin(1L, 99990L))
+      .select("version").distinct().collect().map(_.getInt(0)).toSeq
+      == Seq(3), "the twice-overwritten ids serve only their latest version")
   }
 
   test("appendToServing: leaf bound is observable — balanced appends " +
@@ -587,5 +600,102 @@ class IndexMaintenanceSpec extends SparkTestBase {
         "vec_id", "v", "version")
     }
     assert(ex.getMessage.contains("do not match the serving layout"))
+  }
+
+  /** Every message on `e`'s cause chain: an in-plan `raise_error`
+    * reaches the caller wrapped in the failed job's exception. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+
+  test("null ids fail loudly: appendToServing and removeFromServing " +
+      "raise in-plan before anything lands in the layout or registry") {
+    val serve = Files.createTempDirectory("ivf-srvnull").toString + "/serve"
+    val base = Tables.embeddings(spark, sf).select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"), lit(1).as("version"))
+    val (indexed, model) = graft.operators.IvfIndex.build(
+      base, "vec_id", "v", 4)
+    graft.operators.IvfIndex.write(indexed, serve, model)
+    val v0 = base.filter(col("vec_id") === 0)
+      .select("v").head().getSeq[Double](0)
+    val rows = IndexMaintenance.readServing(spark, serve, "vec_id",
+      "version").count()
+    val up = Seq((Option(99991L), v0, 2), (Option.empty[Long], v0, 2))
+      .toDF("vec_id", "v", "version")
+    val eu = intercept[Exception] {
+      IndexMaintenance.appendToServing(spark, serve, up,
+        "vec_id", "v", "version")
+    }
+    assert(messages(eu).contains("appendToServing: null id in column " +
+      "'vec_id'"), messages(eu))
+    val del = Seq((Option.empty[Long], 3)).toDF("vec_id", "version")
+    val ed = intercept[Exception] {
+      IndexMaintenance.removeFromServing(spark, serve, del,
+        "vec_id", "version")
+    }
+    assert(messages(ed).contains("removeFromServing: null id"), messages(ed))
+    // nothing landed: no registry, no stray data file, same served rows
+    assert(!new java.io.File(serve, "_graft_delta").exists())
+    assert(graft.operators.ServingManifest.verify(spark, serve) == ((0L, 0L)))
+    assert(IndexMaintenance.readServing(spark, serve, "vec_id", "version")
+      .count() == rows)
+  }
+
+  test("null ids fail loudly on the coded tiers: appendCodedToServing " +
+      "and appendSqToServing raise in-plan") {
+    import graft.operators.{IvfIndex, ProductQuantizer}
+    import graft.functions.quantize
+    val emb = Tables.embeddings(spark, sf)
+    val base = emb.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"), lit(1).as("version"))
+    val cb = ProductQuantizer.codebook(emb, "vec_id", "embedding",
+      (0 until 16).map(c => c * 31L + 5L))
+    val (indexed, model) = IvfIndex.build(base, "vec_id", "v", 4)
+    val pq = Files.createTempDirectory("ivf-pqnull").toString + "/serve"
+    IvfIndex.write(indexed.withColumn("pq_code",
+      ProductQuantizer.encodeExpr(col("v"), cb)).drop("v"), pq, model)
+    ProductQuantizer.writeCodebook(spark, pq, cb)
+    val sq = Files.createTempDirectory("ivf-sqnull").toString + "/serve"
+    IvfIndex.write(indexed.withColumn("ma", quantize.maxAbs(col("v")))
+      .withColumn("sq_code",
+        quantize.packCodes(quantize.codes(col("v"), col("ma"))))
+      .drop("v"), sq, model)
+    val v0 = base.filter(col("vec_id") === 0)
+      .select("v").head().getSeq[Double](0)
+    val up = Seq((Option.empty[Long], v0, 2)).toDF("vec_id", "v", "version")
+    val ep = intercept[Exception] {
+      IndexMaintenance.appendCodedToServing(spark, pq, up,
+        "vec_id", "v", "version")
+    }
+    assert(messages(ep).contains("appendCodedToServing: null id in " +
+      "column 'vec_id'"), messages(ep))
+    val es = intercept[Exception] {
+      IndexMaintenance.appendSqToServing(spark, sq, up,
+        "vec_id", "v", "version")
+    }
+    assert(messages(es).contains("appendSqToServing: null id"), messages(es))
+    for (dir <- Seq(pq, sq)) {
+      assert(!new java.io.File(dir, "_graft_delta").exists())
+      assert(graft.operators.ServingManifest.verify(spark, dir) == ((0L, 0L)))
+    }
+  }
+
+  test("a null id already in the delta registry fails every open with " +
+      "a labelled error naming the registry") {
+    val serve = Files.createTempDirectory("ivf-regnull").toString + "/serve"
+    val base = Tables.embeddings(spark, sf).select(col("vec_id"),
+      col("embedding").cast("array<double>").as("v"), lit(1).as("version"))
+    val (indexed, model) = graft.operators.IvfIndex.build(
+      base, "vec_id", "v", 4)
+    graft.operators.IvfIndex.write(indexed, serve, model)
+    // a registry row written around the append path's in-plan check
+    Seq((Option(5L), 2L, false), (Option.empty[Long], 2L, false))
+      .toDF("vec_id", "version", "tombstone")
+      .write.mode("append").parquet(serve + "/_graft_delta")
+    val e = intercept[IllegalStateException] {
+      IndexMaintenance.readServing(spark, serve, "vec_id", "version")
+    }
+    assert(e.getMessage.contains(serve + "/_graft_delta") &&
+      e.getMessage.contains("null id in column 'vec_id'"), e.getMessage)
   }
 }

@@ -132,4 +132,27 @@ class IvfPersistSpec extends SparkTestBase {
     IvfIndex.write(indexed, dir)
     intercept[Exception] { IvfIndex.load(spark, dir) }
   }
+
+  test("MetaIO: a null or non-double list element fails with a " +
+      "labelled error naming the column and file") {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    def readVec(vec: org.apache.spark.sql.Column): Throwable = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_metaio_list").toString + "/side"
+      spark.range(1).select(vec.as("vec")).coalesce(1).write.parquet(dir)
+      val p = new Path(dir)
+      intercept[IllegalStateException] {
+        graft.operators.MetaIO.read(conf, p.getFileSystem(conf), p, Seq("vec"))
+      }
+    }
+    val nullElem = readVec(array(lit(1.0), lit(null).cast("double")))
+    assert(nullElem.getMessage.contains("column 'vec'") &&
+      nullElem.getMessage.contains(".parquet") &&
+      nullElem.getMessage.contains("null list element at index 1"),
+      nullElem.getMessage)
+    val longs = readVec(array(lit(1L), lit(2L)))
+    assert(longs.getMessage.contains("column 'vec'") &&
+      longs.getMessage.contains("not of double"), longs.getMessage)
+  }
 }

@@ -52,6 +52,11 @@ class PqSpec extends SparkTestBase {
     assert(trained.zip(again).forall {
       case (a, b) => java.util.Arrays.equals(a, b)
     })
+    // vectors that do not split into NumSub × SubDim are refused
+    intercept[IllegalArgumentException] {
+      ProductQuantizer.trainCodebooks(emb.select(col("vec_id"),
+        slice(col("embedding"), 1, 32).as("embedding")), "vec_id", "embedding")
+    }
     // drop-in: same representation → encode, ADC search, and the
     // sidecar round-trip all work unchanged
     val query = emb.filter(col("vec_id") === 7)

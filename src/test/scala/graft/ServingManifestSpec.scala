@@ -690,6 +690,13 @@ class ServingManifestSpec extends SparkTestBase {
     // unpromoted attribute, or a map constraining nothing
     assert(est(Map("vec_id" -> Seq("5"))).isEmpty)
     assert(est(Map.empty).isEmpty)
+    // many maps in ONE fold (what the adaptive batch surfaces call)
+    // give each map's own estimate
+    val maps = Seq(Map("label" -> Seq("102")), Map("label" -> Seq("999")),
+      Map("label" -> Seq("2", "301")), Map("vec_id" -> Seq("5")),
+      Map("label" -> Seq("102"), "grp" -> Seq("1")))
+    assert(ServingManifest.estimateAllowBatch(spark, dir, maps) ==
+      maps.map(est))
     // the estimate matches what the scan actually reads: a TYPED
     // equality-disjunction (the implied conjunct the adaptive exact
     // side pushes) file-skips through the In-aware statsKeep —
