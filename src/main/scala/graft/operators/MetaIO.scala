@@ -12,6 +12,7 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
 /** Driver-side parquet I/O for the SMALL metadata sidecars (file
   * manifest, snapshot log versions, delta registry, model/radii
@@ -65,6 +66,39 @@ private[graft] object MetaIO {
         .toArray.map(_.asInstanceOf[org.apache.parquet.schema.Type].getName)
         .toSeq
       finally r.close()
+    }
+  }
+
+  /** Spark type of column `name` across the dir's data files, from
+    * their FOOTERS (no data pages read, so files holding no rows type
+    * alike): INT32 → int, INT64 → long, BINARY → string, and a column
+    * that is INT32 in some files and INT64 in others (widened mid-
+    * stream) → long. None when no data file has the column. Any other
+    * physical type, or files disagreeing otherwise, fails with an
+    * error naming the column, the type(s) and the dir.
+    */
+  def columnType(conf: Configuration, fs: FileSystem, dir: Path,
+      name: String): Option[DataType] = {
+    val kinds: Seq[String] = dataFiles(fs, dir).flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val schema = try r.getFooter.getFileMetaData.getSchema
+        finally r.close()
+      if (!schema.containsField(name)) None
+      else {
+        val t = schema.getType(schema.getFieldIndex(name))
+        Some(if (t.isPrimitive) t.asPrimitiveType().getPrimitiveTypeName.name
+          else s"group ${t.getName}")
+      }
+    }
+    kinds.distinct.sorted match {
+      case Seq() => None
+      case Seq("INT32") => Some(IntegerType)
+      case Seq("INT64") | Seq("INT32", "INT64") => Some(LongType)
+      case Seq("BINARY") => Some(StringType)
+      case other => throw new IllegalStateException(
+        s"MetaIO: column '$name' in $dir has physical type " +
+          s"${other.mkString(" + ")} — supported are INT32, INT64 " +
+          "and BINARY (one of them, or INT32 widened to INT64)")
     }
   }
 

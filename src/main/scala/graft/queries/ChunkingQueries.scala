@@ -1096,7 +1096,10 @@ object ChunkingQueries {
       .mkString("array(", ",", ")")
     val termsIn = QueryTerms.map(t => s"'$t'").mkString(", ")
     // bucket literals via the engine's own xxhash64 (the
-    // Lexical.resolvedStats convention — never re-implement the hash)
+    // Lexical.resolvedStats convention — never re-implement the hash).
+    // The hash buckets alone suffice: ServeHybridCache is attach-only,
+    // so this sidecar has no append run (Lexical.AppendRun), which a
+    // reader of an appended sidecar would have to add to the In-list.
     val buckets = QueryTerms.toDF("t")
       .select(pmod(xxhash64(col("t")), lit(graft.operators.Lexical.Buckets)))
       .collect().map(_.getLong(0)).distinct.mkString(", ")

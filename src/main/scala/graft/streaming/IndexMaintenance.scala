@@ -383,59 +383,40 @@ object IndexMaintenance {
           n
         case None => cols.filterNot(Set("version", "tombstone")).head
       }
+      // the id type comes from the registry files' footers, not from
+      // the folded values: an empty registry keeps its declared type,
+      // and a registry that mixes int and long id files (widened mid-
+      // stream) types as long, with int values widened so the same id
+      // never splits across two keys
+      val idType = MetaIO.columnType(conf, fs, delta, idCol)
+        .getOrElse(org.apache.spark.sql.types.LongType)
+      val widen = idType == org.apache.spark.sql.types.LongType
       val rows = MetaIO.read(conf, fs, delta,
         Seq(idCol, "version", "tombstone"))
       // winner per id = max (version, tombstone): highest version
       // wins; on a tie the tombstone (true > false) — identical to
       // the old max(struct(version, tombstone)) aggregate
       val m = scala.collection.mutable.HashMap.empty[Any, (Long, Boolean)]
-      var idIsLong = false
       rows.foreach { r =>
-        val rawId = r(0)
-        if (rawId == null) throw new IllegalStateException(
-          s"delta registry at ${deltaDir(servePath)}: null id in column " +
-            s"'$idCol' — the registry cannot be LWW-resolved")
-        if (rawId.isInstanceOf[Long]) idIsLong = true
+        val k: Any = r(0) match {
+          case null => throw new IllegalStateException(
+            s"delta registry at ${deltaDir(servePath)}: null id in column " +
+              s"'$idCol' — the registry cannot be LWW-resolved")
+          case i: Int if widen => i.toLong
+          case other => other
+        }
         val v = r(1) match {
           case l: Long => l
           case i: Int => i.toLong
           case other => other.toString.toLong
         }
         val t = r(2) == true
-        val k = rawId
         m.get(k) match {
           case Some((pv, pt)) if pv > v || (pv == v && (pt || !t)) => ()
           case _ => m(k) = (v, t)
         }
       }
-      // a registry that mixes int and long id files (widened mid-
-      // stream) folds per physical value; normalize ints up to long
-      // so the same id never splits across two keys
-      val folded: Seq[(Any, Long, Boolean)] =
-        if (idIsLong) {
-          val n = scala.collection.mutable.HashMap.empty[Any, (Long, Boolean)]
-          m.foreach { case (k, (v, t)) =>
-            val nk: Any = k match {
-              case i: Int => i.toLong
-              case other => other
-            }
-            n.get(nk) match {
-              case Some((pv, pt)) if pv > v || (pv == v && (pt || !t)) => ()
-              case _ => n(nk) = (v, t)
-            }
-          }
-          n.toSeq.map { case (k, (v, t)) => (k, v, t) }
-        } else m.toSeq.map { case (k, (v, t)) => (k, v, t) }
-      val idType: org.apache.spark.sql.types.DataType =
-        if (idIsLong) org.apache.spark.sql.types.LongType
-        else folded.headOption.map(_._1) match {
-          case Some(_: Int) => org.apache.spark.sql.types.IntegerType
-          case Some(_: String) => org.apache.spark.sql.types.StringType
-          case Some(other) => throw new IllegalStateException(
-            s"delta registry at ${deltaDir(servePath)}: unsupported id " +
-              s"type ${other.getClass.getName}")
-          case None => org.apache.spark.sql.types.LongType // empty registry
-        }
+      val folded = m.toSeq.map { case (k, (v, t)) => (k, v, t) }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("__id", idType),
         org.apache.spark.sql.types.StructField("__latest",

@@ -698,4 +698,28 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(e.getMessage.contains(serve + "/_graft_delta") &&
       e.getMessage.contains("null id in column 'vec_id'"), e.getMessage)
   }
+
+  test("the registry id type comes from the files' footers: an empty " +
+      "string-id registry types as string, and an unsupported physical " +
+      "type fails naming the column and the type") {
+    import org.apache.spark.sql.types._
+    val empty = Files.createTempDirectory("ivf-regtype").toString + "/serve"
+    val schema = StructType(Seq(StructField("doc_key", StringType),
+      StructField("version", LongType), StructField("tombstone", BooleanType)))
+    spark.createDataFrame(java.util.Collections.emptyList[
+        org.apache.spark.sql.Row](), schema)
+      .write.parquet(empty + "/_graft_delta")
+    val w = IndexMaintenance.deltaWinners(spark, empty, Some("doc_key")).get
+    assert(w.schema("__id").dataType == StringType)
+    assert(w.collect().isEmpty)
+    val odd = Files.createTempDirectory("ivf-regtype").toString + "/serve"
+    Seq((1.5, 2L, false)).toDF("doc_key", "version", "tombstone")
+      .write.parquet(odd + "/_graft_delta")
+    val e = intercept[IllegalStateException] {
+      IndexMaintenance.deltaWinners(spark, odd, Some("doc_key"))
+    }
+    assert(e.getMessage.contains("'doc_key'") &&
+      e.getMessage.contains("DOUBLE") &&
+      e.getMessage.contains(odd + "/_graft_delta"), e.getMessage)
+  }
 }

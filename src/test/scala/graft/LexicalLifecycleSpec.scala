@@ -448,4 +448,116 @@ class LexicalLifecycleSpec extends SparkTestBase {
     assert(Lexical.hasStats(spark, "file:" + path))
     assert(Lexical.stampedVersion(spark, "file:" + path).contains(1))
   }
+
+  /** Eight base docs plus 120 docs over 300 generated terms: the
+    * attach fills more than 32 of the 64 term buckets, past Spark's
+    * parallel partition-discovery threshold. */
+  private val wideDocs = baseDocs ++ (10 until 130).map { i =>
+    (i.toLong, s"w${i % 300} w${(i * 7) % 300} w${(i * 13 + 5) % 300} " +
+      (if (i % 3 == 0) "alpha" else "beta"))
+  }
+  private val wideBatch = Seq((200L, "alpha omega omega w11", 2L),
+    (201L, "beta beta omega w12 w13", 2L))
+
+  private def postingsDir(path: String) = s"$path/${Lexical.Dir}/postings"
+
+  private def bucketDirs(path: String): Seq[String] =
+    new java.io.File(postingsDir(path)).listFiles().toSeq
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("bucket="))
+
+  private def postingsFiles(path: String): Set[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(postingsDir(path)))
+      .filter(_.getName.endsWith(".parquet")).toSet
+  }
+
+  test("an upsert writes its postings as ONE append run (bucket=-1, at " +
+      "most one file per batch partition), scores like a one-shot " +
+      "attach, and compaction folds the run into the hash buckets") {
+    val path = mkLayout(wideDocs)
+    assert(bucketDirs(path).size > 32, bucketDirs(path))
+    val before = postingsFiles(path)
+    IndexMaintenance.appendToServing(spark, path, upBatch(wideBatch),
+      "doc_id", "v", "version", spill = 1, textCol = Some("text"))
+    val added = postingsFiles(path) -- before
+    assert(added.nonEmpty &&
+      added.forall(_.getParentFile.getName == s"bucket=${Lexical.AppendRun}"),
+      s"appended postings files outside the append run: $added")
+    val batchPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(added.size <= batchPartitions,
+      s"${added.size} files for one append of $batchPartitions partitions")
+    val q = Seq("alpha", "beta", "omega", "w11", "w13")
+    def scoresOf(p: String) =
+      Serving.open(spark, p, id = "doc_id", vecCol = "v").lexicalScores(q)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val oneShot = scoresOf(mkLayout(wideDocs ++ wideBatch.map(r => (r._1, r._2))))
+    assert(scoresOf(path) == oneShot)
+    IndexMaintenance.compactServing(spark, path, "doc_id", "version")
+    assert(!bucketDirs(path).contains(s"bucket=${Lexical.AppendRun}"),
+      "compaction left the append run behind")
+    val misplaced = spark.read.parquet(postingsDir(path))
+      .filter(col("bucket") =!= pmod(xxhash64(col("t")), lit(Lexical.Buckets)))
+      .count()
+    assert(misplaced == 0, s"$misplaced compacted rows outside their hash bucket")
+    assert(scoresOf(path) == oneShot, "compaction changed BM25 scores")
+  }
+
+  test("a hybrid read lists only its term buckets and the append run: " +
+      "no partition-discovery job, and those directories are the " +
+      "postings scan's only roots") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val path = mkLayout(wideDocs)
+    IndexMaintenance.appendToServing(spark, path, upBatch(wideBatch),
+      "doc_id", "v", "version", spill = 1, textCol = Some("text"))
+    val sc = spark.sparkContext
+    val tag = "lexical-read-listing"
+    val marker = "lexical-read-listing-end"
+    val wide = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty[String])
+        if (tags(marker)) done.countDown()
+        else if (tags(tag)) e.stageInfos.filter(_.numTasks >= 33)
+          .foreach(si => wide.add(s"job ${e.jobId}: ${si.numTasks} tasks"))
+      }
+    }
+    sc.addSparkListener(listener)
+    val serving = Serving.open(spark, path, id = "doc_id", vecCol = "v")
+    val (hybrid, lexical) = try {
+      sc.addJobTag(tag)
+      val h = serving.searchHybrid(terms, qv, nProbe = 1)
+      val l = serving.lexicalScores(terms)
+      h.collect(); l.collect()
+      sc.removeJobTag(tag)
+      // listener events arrive in order: once the marker job is seen,
+      // every job before it has been seen too
+      sc.addJobTag(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.removeJobTag(marker)
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (h, l)
+    } finally {
+      sc.clearJobTags()
+      sc.removeSparkListener(listener)
+    }
+    assert(wide.isEmpty, s"partition-discovery job(s) on the hybrid read: $wide")
+    import spark.implicits._
+    val want = terms.toDF("t")
+      .select(pmod(xxhash64(col("t")), lit(Lexical.Buckets)))
+      .collect().map(r => s"bucket=${r.getLong(0)}").toSet +
+      s"bucket=${Lexical.AppendRun}"
+    for (df <- Seq(hybrid, lexical)) {
+      val roots = df.queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec => f.relation.location.rootPaths
+      }.flatten.filter(_.toString.contains(postingsDir(path)))
+      assert(roots.nonEmpty && roots.map(_.getName).toSet ==
+        want.intersect(bucketDirs(path).toSet),
+        s"postings scan roots ${roots.mkString(", ")}, want $want")
+    }
+  }
 }
