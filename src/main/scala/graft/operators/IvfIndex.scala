@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType}
 
 /** IVF (inverted-file) ANN index — the Spark analog of the reference's
   * Tree-AH index (/root/reference/vector_store/utils/index_manager.py:36-68;
@@ -1069,18 +1072,10 @@ object IvfIndex {
     * (min leaf_id, deterministic).
     */
   def searchDf(indexed: DataFrame, model: Model, query: Array[Double],
-      nProbe: Int, k: Int, id: String, vecCol: String): DataFrame = {
-    val leaves = model.topLeaves(query, nProbe)
-    val qCol = typedLit(query.toSeq)
-    indexed
-      .filter(col("leaf_id").isin(leaves: _*))
-      .select(col(id), col("leaf_id"),
-        graft.functions.vectors.dotProduct(col(vecCol), qCol).as("score"))
-      .groupBy(col(id))
-      .agg(min(col("leaf_id")).as("leaf_id"), first(col("score")).as("score"))
-      .orderBy(col("score").desc, col(id))
-      .limit(k)
-  }
+      nProbe: Int, k: Int, id: String, vecCol: String): DataFrame =
+    bareTail(indexed.filter(
+        col("leaf_id").isin(model.topLeaves(query, nProbe): _*)),
+      dot(vecCol, query), k, id)
 
   /** The FULL serving shape as a Scala API — everything the SQL E2E
     * gate (`v_ann_sql_e2e`) expresses in text, row-for-row
@@ -1093,71 +1088,87 @@ object IvfIndex {
     * top-k → metadata join (the Firestore-lookup analog,
     * firestore_ops.py:69).
     *
+    * Plan ([[servingTail]]): the probed scan scores in parallel; the
+    * scored candidates take ONE exchange into a single partition,
+    * where every later step runs; the metadata table is broadcast when
+    * Spark's size estimate fits `spark.sql.autoBroadcastJoinThreshold`.
+    * A probe wider than [[MaxInList]] leaves keeps a parallel tail,
+    * as does the exact pre-filter plan of [[Serving.searchAdaptive]].
+    *
     * @param restricts predicates over the index table's own columns;
     *        ANDed. Keep them on top-level columns so they reach
     *        `PushedFilters`.
     * @param crowding (attribute column, max results per value).
     * @param metadata (metadata table, join key) — appended columns.
     * Output: (id, metadata columns…, score, rank), rank 1-based by
-    * (score desc, id). Integral ids rank through the heap aggregate
-    * (k rows per partition reach the final reduce); other id types
-    * use the row-identical window form.
+    * (score desc, id). Integral ids rank through the heap aggregate;
+    * other id types use the row-identical window form.
     */
   def searchDf(indexed: DataFrame, model: Model, query: Array[Double],
       nProbe: Int, k: Int, id: String, vecCol: String,
       restricts: Seq[Column], crowding: Option[(String, Int)],
       metadata: Option[(DataFrame, String)]): DataFrame = {
     val leaves = model.topLeaves(query, nProbe)
-    searchExactDf(indexed.filter(col("leaf_id").isin(leaves: _*)),
-      query, k, id, vecCol, restricts, crowding, metadata)
+    servingTail(restricts.foldLeft(
+        indexed.filter(col("leaf_id").isin(leaves: _*)))(_ filter _),
+      dot(vecCol, query), k, id, crowding, metadata,
+      single = leaves.length <= MaxInList)
   }
 
-  /** The 10-arg serving pipeline WITHOUT the probe: exact filtered
-    * search over every row of `indexed` — restricts → spill-copy
-    * collapse → crowding → top-k → metadata join, same output schema
-    * and ordering as [[searchDf]]. This is the PRE-FILTER plan of
-    * adaptive filtered search ([[Serving.searchAdaptive]]): when the
-    * restricts are selective enough that the manifest's file stats
-    * skip most of the layout, scanning the few surviving files
-    * exactly is both cheaper and fully-recalled — probing `nProbe`
-    * leaves under a selective restrict can return FEWER than the
-    * matching top-k (the qualifying rows may all live in unprobed
-    * leaves), which is the classic filtered-ANN recall failure.
+  private def dot(vecCol: String, query: Array[Double]): Column =
+    graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq))
+
+  /** The widest probe that reaches the scan as a literal leaf_id
+    * In-list: partition pruning then reads only those leaves, so the
+    * candidate set is bounded by their rows. */
+  private[operators] val MaxInList = 1024
+
+  private[operators] def integral(t: DataType): Boolean =
+    Seq(LongType, IntegerType, ShortType, ByteType).contains(t)
+
+  /** The BARE single-query tail: spill collapse (lowest leaf kept),
+    * top-k by (score desc, id) → (id, leaf_id, `scoreName`). */
+  private[operators] def bareTail(candidates: DataFrame, score: Column,
+      k: Int, id: String, scoreName: String = "score",
+      shortlist: Option[(Column, Int)] = None): DataFrame =
+    collapse(candidates.select(Seq(col(id), col("leaf_id"),
+        score.as(scoreName)) ++ shortlist.map(_._1.as("__sl")): _*), id,
+      Seq(min(col("leaf_id")).as("leaf_id"),
+        first(col(scoreName)).as(scoreName)), shortlist)
+      .orderBy(col(scoreName).desc, col(id))
+      .limit(k)
+
+  /** The ONE full single-query tail of the raw and coded surfaces
+    * (the tier only changes `score`): spill collapse → `shortlist` cut
+    * (stage-1 score, m: the m best ids, ties to the smaller id) →
+    * crowding cap → top-k → metadata join → rank order. `single` (a
+    * bounded In-list probe): ONE exchange into a single partition,
+    * which satisfies every later step. A metadata side that
+    * [[fitsBroadcast]] keeps that partitioning through the join, so
+    * the rank order is a local sort. Output as the 10-arg [[searchDf]].
     */
-  def searchExactDf(indexed: DataFrame, query: Array[Double],
-      k: Int, id: String, vecCol: String,
-      restricts: Seq[Column], crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)]): DataFrame = {
-    val qCol = typedLit(query.toSeq)
-    val idType = indexed.schema(id).dataType
-    val candidates = restricts.foldLeft(indexed)(_.filter(_))
+  private[operators] def servingTail(candidates: DataFrame, score: Column,
+      k: Int, id: String, crowding: Option[(String, Int)],
+      metadata: Option[(DataFrame, String)], single: Boolean,
+      scoreName: String = "score",
+      shortlist: Option[(Column, Int)] = None): DataFrame = {
+    val idType = candidates.schema(id).dataType
     val crowdAttr = crowding.map(_._1).toSeq
-    val scored = candidates.select(
-      Seq(col(id), col("leaf_id"),
-        graft.functions.vectors.dotProduct(col(vecCol), qCol).as("score")) ++
-        crowdAttr.map(col): _*)
-    // collapse spill copies before crowding — a vector stored in two
-    // probed leaves is ONE candidate (same convention as the 7-arg form)
-    val aggs = Seq(first(col("score")).as("score")) ++
-      crowdAttr.map(a => first(col(a)).as(a))
-    val unique = scored.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
+    val scored = candidates.select(Seq(col(id), score.as("score")) ++
+      shortlist.map(_._1.as("__sl")) ++ crowdAttr.map(col): _*)
+    val unique = collapse(if (single) scored.repartition(1) else scored, id,
+      first(col("score")).as("score") +:
+        crowdAttr.map(a => first(col(a)).as(a)), shortlist)
     val crowded = crowding match {
       case Some((attr, cap)) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(attr)).orderBy(col("score").desc, col(id))
+        val w = Window.partitionBy(col(attr))
+          .orderBy(col("score").desc, col(id))
         unique.withColumn("__crn", row_number().over(w))
           .filter(col("__crn") <= cap).drop("__crn")
       case None => unique
     }
-    val integral = idType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
     val ranked =
-      if (integral)
+      if (integral(idType))
         crowded.agg(graft.functions.TopKByScore.column(col("score"),
             col(id).cast("long"), k).as("__topk"))
           .select(posexplode(col("__topk")).as(Seq("__pos", "__t")))
@@ -1165,21 +1176,42 @@ object IvfIndex {
             col("__t.score").as("score"),
             (col("__pos") + 1).cast("bigint").as("rank"))
       else {
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col(id))
+        val w = Window.orderBy(col("score").desc, col(id))
         crowded.withColumn("rank", row_number().over(w).cast("bigint"))
           .filter(col("rank") <= k)
           .select(col(id), col("score"), col("rank"))
       }
-    metadata match {
+    (metadata match {
       case Some((meta, key)) =>
         val metaCols = meta.columns.filterNot(_ == key).toSeq
-        ranked.as("__r").join(meta.as("__m"),
+        ranked.as("__r").join(
+            (if (fitsBroadcast(meta)) broadcast(meta) else meta).as("__m"),
             col(s"__r.$id") === col(s"__m.$key"))
           .select(col(s"__r.$id") +: metaCols.map(c => col(s"__m.$c")) ++:
-            Seq(col("__r.score"), col("__r.rank")): _*)
-          .orderBy("rank")
-      case None => ranked.orderBy("rank")
+            Seq(col("__r.score").as(scoreName), col("__r.rank")): _*)
+      case None =>
+        ranked.select(col(id), col("score").as(scoreName), col("rank"))
+    }).orderBy("rank")
+  }
+
+  /** SPILL COLLAPSE — a vector stored in two probed leaves is ONE
+    * candidate — then the optional shortlist cut over `__sl`. */
+  private def collapse(scored: DataFrame, id: String, aggs: Seq[Column],
+      shortlist: Option[(Column, Int)]): DataFrame = {
+    val all = aggs ++ shortlist.map(_ => max(col("__sl")).as("__sl"))
+    val unique = scored.groupBy(col(id)).agg(all.head, all.tail: _*)
+    shortlist.fold(unique) { case (_, m) =>
+      unique.orderBy(col("__sl").desc, col(id)).limit(m).drop("__sl")
     }
+  }
+
+  /** Spark's own broadcast-by-size rule for a join side: a size
+    * estimate within `spark.sql.autoBroadcastJoinThreshold` (−1: off).
+    */
+  private def fitsBroadcast(df: DataFrame): Boolean = {
+    val qe = df.queryExecution
+    val size = qe.optimizedPlan.stats.sizeInBytes
+    size >= 0 &&
+      size <= qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
   }
 }

@@ -151,14 +151,7 @@ object Knn {
     // cast to null and be silently DROPPED by the aggregate (zero
     // rows out, no error) — dispatch those callers to the
     // row-identical window form instead
-    val idIntegral = idType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    if (!idIntegral) {
+    if (!IvfIndex.integral(idType)) {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"knnJoinPerLeaf: id column '$id' is ${idType.simpleString}, not " +
           "integral — using the window-ranked form (row-identical, but " +

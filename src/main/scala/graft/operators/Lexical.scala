@@ -103,8 +103,13 @@ object Lexical {
     out.close()
   }
 
-  private def stampTokens(spark: SparkSession,
-      path: String): Option[Array[String]] = {
+  /** A parsed `VERSION` stamp ([[stamp]]). */
+  private final case class Stamp(base: Int, current: Int,
+      totals: Option[(Long, Long)])
+
+  /** The sidecar's stamp — None without a stamp file; 1 (legacy:
+    * base = current), 2 or 4 integers, anything else fails loudly. */
+  private def readStamp(spark: SparkSession, path: String): Option[Stamp] = {
     val fs = fsFor(spark, path)
     val p = stampPath(path)
     if (!fs.exists(p)) None
@@ -112,7 +117,19 @@ object Lexical {
       val in = fs.open(p)
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-      Some(s.trim.split("\\s+"))
+      val t = s.trim.split("\\s+")
+      try Some(t match {
+        case Array(c) => Stamp(c.toInt, c.toInt, None)
+        case Array(b, c) => Stamp(b.toInt, c.toInt, None)
+        case Array(b, c, tt, nn) =>
+          Stamp(b.toInt, c.toInt, Some((tt.toLong, nn.toLong)))
+        case _ => throw new NumberFormatException
+      }) catch {
+        case _: NumberFormatException => throw new IllegalStateException(
+          s"malformed lexical stamp at $p: '$s' — expected 1, 2 or 4 " +
+            "integers (base, current[, token total, doc count]); re-run " +
+            "attachLexical")
+      }
     }
   }
 
@@ -120,11 +137,7 @@ object Lexical {
     * or pre-versioning sidecar.
     */
   def versionRange(spark: SparkSession, path: String): Option[(Int, Int)] =
-    stampTokens(spark, path).flatMap {
-      case Array(c) => Some((c.toInt, c.toInt))
-      case arr if arr.length >= 2 => Some((arr(0).toInt, arr(1).toInt))
-      case _ => None
-    }
+    readStamp(spark, path).map(st => (st.base, st.current))
 
   /** The stamped (token total, doc count) over the sidecar's per-doc
     * self-LWW winners — the BM25 length-norm denominators, maintained
@@ -138,9 +151,7 @@ object Lexical {
     * aggregate until the next maintenance write re-stamps).
     */
   def totalsFor(spark: SparkSession, path: String): Option[(Long, Long)] =
-    stampTokens(spark, path).flatMap { arr =>
-      if (arr.length >= 4) Some((arr(2).toLong, arr(3).toLong)) else None
-    }
+    readStamp(spark, path).flatMap(_.totals)
 
   /** The manifest version of the last sidecar write (attach or
     * incremental append) — [[Serving.searchHybrid]]'s freshness
@@ -233,7 +244,8 @@ object Lexical {
       stampVersion: Int): Unit = {
     require(hasStats(spark, path),
       s"appendStats: no lexical sidecar at $path/$Dir — run Lexical.attach first")
-    val base = versionRange(spark, path).map(_._1).getOrElse(0)
+    val prior = readStamp(spark, path)
+    val base = prior.map(_.base).getOrElse(0)
     val keyed = docs.select(col(idCol).as("doc_id"),
       col(textCol).as("__text"),
       col(versionCol).cast("long").as("ver"))
@@ -245,7 +257,7 @@ object Lexical {
     // dls (doc_id-sorted files → row-group skip), computed EAGERLY
     // before the append below writes new files. Exact integers, so
     // the stamped totals equal a full self-LWW recompute.
-    val nextTotals: (Long, Long) = totalsFor(spark, path) match {
+    val nextTotals: (Long, Long) = prior.flatMap(_.totals) match {
       case Some((tt, nn)) =>
         val existing = withLineage(spark.read.parquet(s"$path/$Dir/dls"))
         val batchIds = newDls.select("doc_id").distinct()
@@ -378,7 +390,8 @@ object Lexical {
       layoutId: Option[String]): (DataFrame, DataFrame, Option[(Long, Long)]) = {
     require(hasStats(spark, path),
       s"no lexical sidecar at $path/$Dir — run Lexical.attach first")
-    val range = versionRange(spark, path)
+    val stamped = readStamp(spark, path)
+    val range = stamped.map(st => (st.base, st.current))
     // a direct pinned read outside the stamp range must fail loudly —
     // the pristine shortcut below (and the mv filter) would otherwise
     // silently serve newer statistics than the pinned version
@@ -408,7 +421,7 @@ object Lexical {
     val pristine = range.exists(r => r._1 == r._2) && winners.isEmpty
     if (pristine)
       return (pruned.select("doc_id", "t", "tf"), dls0.select("doc_id", "dl"),
-        totalsFor(spark, path))
+        stamped.flatMap(_.totals))
     pinnedAt match {
       case Some(v) =>
         // snapshot read: mv-filtered, self-resolved; the registry is
@@ -424,7 +437,7 @@ object Lexical {
           .select("doc_id", "t", "tf")
         (live, dlsW.select("doc_id", "dl"), None)
       case None =>
-        totalsFor(spark, path) match {
+        stamped.flatMap(_.totals) match {
           case Some((tt, nn)) =>
             // CANDIDATE-BOUNDED live resolution: the self-LWW winner
             // is only needed for docs that can score — those in the
@@ -627,13 +640,13 @@ object Lexical {
     // fresh stamp, a pinned clone needs the stamp range to span the
     // pinned version; otherwise the clone lands sidecar-less (loud)
     // instead of fresh-stamped-but-partial (quiet wrong)
-    val range = versionRange(spark, srcPath)
+    val src = readStamp(spark, srcPath)
     val srcServable = version match {
       case None =>
         val live = ServingManifest.versions(spark, srcPath)
           .lastOption.getOrElse(0)
-        range.exists(_._2 == live)
-      case Some(v) => range.exists(r => r._1 <= v && v <= r._2)
+        src.exists(_.current == live)
+      case Some(v) => src.exists(st => st.base <= v && v <= st.current)
     }
     if (!srcServable) return
     val postings = withLineage(
@@ -668,7 +681,7 @@ object Lexical {
     // live clone: rows copied verbatim → the source's self-LWW winner
     // totals carry over; pinned (or a totals-less legacy source):
     // re-derive from the written copy (single-generation for pinned)
-    val totals = (version, totalsFor(spark, srcPath)) match {
+    val totals = (version, src.flatMap(_.totals)) match {
       case (None, Some(t)) => t
       case _ =>
         val all = withLineage(spark.read.parquet(s"$dstPath/$Dir/dls"))

@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * is the router walk (driver, sub-millisecond past the router
   * threshold) plus a partition-pruned scan of the probed leaves —
   * the open cost (sidecar + manifest) is paid once per process (the
-  * serving benchmark's `manifest.open_ms` and `request_p50_ms`).
+  * serving benchmark's `manifest.open_ms` and `request_p50_ms`). A
+  * full-shape single request on any tier plans ONE exchange and
+  * broadcasts a metadata table that fits the broadcast threshold:
+  * three Spark jobs — scan, broadcast, result ([[IvfIndex.servingTail]]).
   *
   * The held frame is LWW-RESOLVED against the delta registry as of
   * open time ([[graft.streaming.IndexMaintenance.readServing]]):
@@ -44,13 +47,9 @@ final class Serving private[operators] (
   private def requireIntegralId(op: String, frame: DataFrame = data,
       c: String = id, what: String = "id column")
       : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
     val idType = frame.schema(c).dataType
-    val integral = idType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    require(integral, s"$op: $what '$c' must be integral (is $idType)")
+    require(IvfIndex.integral(idType),
+      s"$op: $what '$c' must be integral (is $idType)")
     idType
   }
 
@@ -233,6 +232,12 @@ final class Serving private[operators] (
     */
   def lexicalScores(terms: Seq[String]): DataFrame = {
     requireLexicalCurrent("lexicalScores")
+    bm25(terms)
+  }
+
+  /** [[lexicalScores]] past the staleness gate, for a surface that
+    * ran it already. */
+  private def bm25(terms: Seq[String]): DataFrame = {
     val scores = Lexical.bm25FromStats(spark, path, terms, pinnedAt,
       Some(id))
     // the sidecar keys by "doc_id" regardless of the layout's id
@@ -293,10 +298,10 @@ final class Serving private[operators] (
     // corpus-sized restricted-id frame — one corpus-keyed shuffle
     // per query (r16 verdict What's wrong #4).
     val lex =
-      if (restricts.isEmpty) lexicalScores(terms)
+      if (restricts.isEmpty) bm25(terms)
       else restricts.foldLeft(data)(_.filter(_))
         .select(col(id))
-        .join(broadcast(lexicalScores(terms)), Seq(id))
+        .join(broadcast(bm25(terms)), Seq(id))
         .groupBy(col(id)).agg(max(col("score")).as("score"))
     // both rank lists are bounded (≤ kLex / kDense rows), so the
     // single-partition row_number windows are constant-size
@@ -511,13 +516,14 @@ final class Serving private[operators] (
     * driven by the manifest's file stats:
     *
     *  - restricts proven SELECTIVE (the stats-skipped scan reads
-    *    ≤ `maxExactFraction` of layout bytes): run the EXACT plan
-    *    ([[IvfIndex.searchExactDf]]) over the few surviving files —
-    *    full recall, no probe. Under a selective restrict the probed
-    *    plan is both slower per useful row AND wrong-ish: the
-    *    qualifying rows may all live outside the `nProbe` probed
-    *    leaves, returning fewer (or worse) than the true filtered
-    *    top-k.
+    *    ≤ `maxExactFraction` of layout bytes): run the EXACT plan —
+    *    every restricted row of the few surviving files scored, the
+    *    unbounded candidates through the parallel serving tail
+    *    ([[IvfIndex.servingTail]]) — full recall, no probe. Under a
+    *    selective restrict the probed plan is both slower per useful
+    *    row AND wrong-ish: the qualifying rows may all live outside
+    *    the `nProbe` probed leaves, returning fewer (or worse) than
+    *    the true filtered top-k.
     *  - otherwise: the standard probed plan ([[search]]) — scanning
     *    everything that satisfies an unselective restrict would read
     *    the whole layout.
@@ -532,8 +538,9 @@ final class Serving private[operators] (
       metadata: Option[(DataFrame, String)] = None,
       maxExactFraction: Double = 0.05): DataFrame =
     if (searchAdaptivePlan(restricts, maxExactFraction))
-      IvfIndex.searchExactDf(data, query, k, id, vecCol, restricts,
-        crowding, metadata)
+      IvfIndex.servingTail(restricts.foldLeft(data)(_ filter _),
+        graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq)),
+        k, id, crowding, metadata, single = false)
     else
       search(query, nProbe, k, restricts, crowding, metadata)
 
@@ -650,12 +657,7 @@ final class Serving private[operators] (
     * as the raw path's filtered search — keep them on top-level
     * columns so they reach `PushedFilters`).
     *
-    * Output — two shapes, like the raw path's [[IvfIndex.searchDf]]:
-    * bare (no crowding, no metadata) = (id, leaf_id, sq_score) top-k
-    * by score desc; with `crowding` and/or `metadata` the full
-    * serving tail applies ([[singleTail]]) and the shape is
-    * (id, metadata columns…, sq_score, rank) ordered by rank —
-    * leaf_id is not carried through the tail.
+    * Output: the two [[singleTail]] shapes, score named `sq_score`.
     */
   def searchSq(query: Array[Double], nProbe: Int, k: Int,
       restricts: Seq[Column] = Nil,
@@ -665,12 +667,11 @@ final class Serving private[operators] (
       s"searchSq: layout at $path is a '$tier' tier, not SQ8 " +
         "(no sq_code column)")
     val (qMa, qPacked) = quantize.packLocal(query)
-    val candidates = prune(model.topLeaves(query, nProbe), restricts)
     val scoreCol = quantize.score(
       quantize.packedDot(col("sq_code"), lit(qPacked)),
       col("ma"), lit(qMa))
-    singleTail(candidates, scoreCol, "sq_score", k, crowding,
-      metadata)
+    singleTail(model.topLeaves(query, nProbe), restricts, scoreCol,
+      "sq_score", k, crowding, metadata)
   }
 
   /** PQ-tier ADC search — the resident-handle form of the
@@ -683,12 +684,7 @@ final class Serving private[operators] (
     * on the write side, so the two stay in the same space.
     * `restricts` as in [[searchSq]].
     *
-    * Output — two shapes, like the raw path's [[IvfIndex.searchDf]]:
-    * bare (no crowding, no metadata) = (id, leaf_id, adc_score)
-    * top-k by score desc; with `crowding` and/or `metadata` the full
-    * serving tail applies ([[singleTail]]) and the shape is
-    * (id, metadata columns…, adc_score, rank) ordered by rank —
-    * leaf_id is not carried through the tail.
+    * Output: the two [[singleTail]] shapes, score named `adc_score`.
     */
   def searchAdc(query: Array[Double], nProbe: Int, k: Int,
       restricts: Seq[Column] = Nil,
@@ -700,29 +696,23 @@ final class Serving private[operators] (
     val cb = ProductQuantizer.loadCodebook(spark, path)
     val q = ProductQuantizer.loadRotation(spark, path)
       .map(r => ProductQuantizer.rotate(query, r)).getOrElse(query)
-    val candidates = prune(model.topLeaves(query, nProbe), restricts)
     val scoreCol = ProductQuantizer.adcScoreExpr(col("pq_code"),
       ProductQuantizer.adcTable(q, cb))
-    singleTail(candidates, scoreCol, "adc_score", k, crowding,
-      metadata)
+    singleTail(model.topLeaves(query, nProbe), restricts, scoreCol,
+      "adc_score", k, crowding, metadata)
   }
 
   /** BQ SHORTLIST-THEN-RESCORE search on the resident handle — the
     * `v_bq_rerank` shape served live: stage 1 scans the probed
     * leaves' 8 B/vector sign codes ([[graft.functions.BqDot]]
-    * asymmetric sign-dot — a 32× scan-byte cut vs the raw floats)
-    * and keeps the top-`m` ids; stage 2 broadcast-joins the tiny id
-    * shortlist back to the same pruned candidates and ranks the
-    * survivors by the EXACT float dot — final ordering is exact over
-    * the shortlist, approximation enters only through which ids
-    * survive stage 1 (and, as in all probed serving, which leaves
-    * were probed). `restricts` sit on the pruned scan BEFORE the
-    * shortlist, so both stages see the same filtered candidate set.
+    * asymmetric sign-dot) and keeps the top-`m` ids; stage 2 ranks
+    * the survivors by the EXACT float dot. Both score on the one
+    * pruned scan; the shortlist cut runs in the tail, after the spill
+    * collapse. Approximation enters only through which ids survive
+    * stage 1 (and which leaves were probed). `restricts` sit on the
+    * scan, so both stages see the same filtered candidates.
     *
-    * Output — two shapes, like [[searchSq]]: bare = (id, leaf_id,
-    * score) top-k by exact score desc; with `crowding`/`metadata`
-    * the shared serving tail applies ([[singleTail]]) and the
-    * shape is (id, metadata columns…, score, rank) ordered by rank.
+    * Output: the two [[singleTail]] shapes, ranked by the exact score.
     */
   def searchBqRerank(query: Array[Double], nProbe: Int, m: Int, k: Int,
       restricts: Seq[Column] = Nil,
@@ -735,23 +725,13 @@ final class Serving private[operators] (
     require(hasBq,
       s"searchBqRerank: layout at $path has no bq_code companion " +
         "column — build it with graft.functions.bquant.packSigns")
-    val candidates = prune(model.topLeaves(query, nProbe), restricts)
-    // stage 1: sign-dot shortlist over the 8 B codes; spill copies of
-    // one id collapse (identical codes → identical score, max is a
-    // formality), ties broken by id so the survivor set is
-    // deterministic
-    val shortlist = candidates
-      .select(col(id), bquant.signDot(col("bq_code"),
-        typedLit(query.toSeq)).as("__bq"))
-      .groupBy(col(id)).agg(max(col("__bq")).as("__bq"))
-      .orderBy(col("__bq").desc, col(id))
-      .limit(m)
-      .select(col(id))
-    // stage 2: exact rescore of the m survivors only
-    val rescored = candidates.join(broadcast(shortlist), Seq(id))
-    val scoreCol = graft.functions.vectors.dotProduct(
-      col(vecCol).cast("array<double>"), typedLit(query.toSeq))
-    singleTail(rescored, scoreCol, "score", k, crowding, metadata)
+    // both stages score on the scan: the sign-dot picks the shortlist
+    // (ties to the smaller id), the exact float dot ranks it
+    singleTail(model.topLeaves(query, nProbe), restricts,
+      graft.functions.vectors.dotProduct(
+        col(vecCol).cast("array<double>"), typedLit(query.toSeq)),
+      "score", k, crowding, metadata,
+      Some((bquant.signDot(col("bq_code"), typedLit(query.toSeq)), m)))
   }
 
   /** BATCHED [[searchBqRerank]] — the two-stage shortlist-rescore
@@ -823,37 +803,24 @@ final class Serving private[operators] (
       crowding, metadata)
   }
 
-  /** The SINGLE-query serving tail. Bare (no crowding, no metadata):
-    * spill copies collapse per id (lowest leaf kept), top-k by score
-    * desc = (id, leaf_id, `scoreName`). Otherwise the full tail (spill
-    * collapse → crowding cap → top-k → metadata join) with identical
-    * semantics to the raw path's [[IvfIndex.searchExactDf]] tail (one
-    * candidate per id, crowding by attribute value, rank 1-based by
-    * score desc then id), reusing the batch [[tail]] with a constant
-    * query id so the two tails can never drift. The reference
-    * provisions crowding and restricts per datapoint regardless of how
-    * the deployed index stores vectors (setup_vector_search.py:45-76)
-    * — the storage tier changes the scan kernel, never the serving
-    * shape. Output: (id, metadata columns…, `scoreName`, rank).
+  /** The SINGLE-query coded tail over the probed `leaves` ([[prune]]):
+    * bare (no crowding, no metadata) = (id, leaf_id, `scoreName`) top-k
+    * ([[IvfIndex.bareTail]]); otherwise (id, metadata columns…,
+    * `scoreName`, rank) ordered by rank — the one full serving tail
+    * of the raw path too ([[IvfIndex.servingTail]]).
     */
-  private def singleTail(candidates: DataFrame, score: Column,
-      scoreName: String, k: Int, crowding: Option[(String, Int)] = None,
-      metadata: Option[(DataFrame, String)] = None): DataFrame = {
+  private def singleTail(leaves: Seq[Int], restricts: Seq[Column],
+      score: Column, scoreName: String, k: Int,
+      crowding: Option[(String, Int)],
+      metadata: Option[(DataFrame, String)],
+      shortlist: Option[(Column, Int)] = None): DataFrame = {
+    val candidates = prune(leaves, restricts)
     if (crowding.isEmpty && metadata.isEmpty)
-      candidates
-        .select(col(id), col("leaf_id"), score.as(scoreName))
-        .groupBy(col(id))
-        .agg(min(col("leaf_id")).as("leaf_id"),
-          first(col(scoreName)).as(scoreName))
-        .orderBy(col(scoreName).desc, col(id))
-        .limit(k)
+      IvfIndex.bareTail(candidates, score, k, id, scoreName, shortlist)
     else
-      tail(collapse(candidates, score, crowding.map(_._1).toSeq,
-          qidCol = lit(0).as("__qid")), "__q", k, crowding, metadata)
-        .drop("__q")
-        .withColumnRenamed("rn", "rank")
-        .withColumnRenamed("score", scoreName)
-        .orderBy("rank")
+      IvfIndex.servingTail(candidates, score, k, id, crowding, metadata,
+        single = leaves.length <= IvfIndex.MaxInList, scoreName = scoreName,
+        shortlist = shortlist)
   }
 
   /** Multi-vector LATE-INTERACTION search against the held layout —
@@ -1256,20 +1223,16 @@ final class Serving private[operators] (
     val radii = CertifiedSearch.loadRadii(spark, path)
     val ubs = CertifiedSearch.upperBounds(model, radii, query)
     val total = ubs.length
-    val qCol = typedLit(query.toSeq)
     val source = restricts.foldLeft(data)(_.filter(_))
-    def topScores(leaves: Seq[Int]): Array[Double] =
-      source.filter(col("leaf_id").isin(leaves: _*))
-        .select(col(id),
-          graft.functions.vectors.dotProduct(col(vecCol), qCol)
-            .as("score"))
-        .groupBy(col(id)).agg(max(col("score")).as("score"))
-        .orderBy(col("score").desc).limit(k)
-        .collect().map(_.getDouble(1))
+    def topK(leaves: Seq[Int]): DataFrame = IvfIndex.bareTail(
+      source.filter(col("leaf_id").isin(leaves: _*)),
+      graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq)),
+      k, id)
     var m = math.min(math.max(initialProbe, 1), total)
     var closed = false
     while (!closed) {
-      val scores = topScores(ubs.take(m).map(_._1).toSeq)
+      val scores = topK(ubs.take(m).map(_._1).toSeq).collect()
+        .map(_.getDouble(2))
       val kth =
         if (scores.length >= k) scores.last else Double.NegativeInfinity
       // leaves whose bound reaches the running kth can still hold a
@@ -1283,9 +1246,7 @@ final class Serving private[operators] (
       if (needed <= m) closed = true
       else m = math.min(total, math.max(needed, m + 1))
     }
-    val certified = ubs.take(m).map(_._1).toSeq
-    (singleTail(source.filter(col("leaf_id").isin(certified: _*)),
-      graft.functions.vectors.dotProduct(col(vecCol), qCol), "score", k), m)
+    (topK(ubs.take(m).map(_._1).toSeq), m)
   }
 
   /** [[searchBatch]] with the SAME selectivity-adaptive pre-filter
@@ -2108,16 +2069,14 @@ final class Serving private[operators] (
     */
   private def prune(leaves: Seq[Int], restricts: Seq[Column]): DataFrame =
     restricts.foldLeft(
-      if (leaves.length <= MaxInList)
+      if (leaves.length <= IvfIndex.MaxInList)
         data.filter(col("leaf_id").isin(leaves: _*))
       else data)(_ filter _)
 
   /** [[prune]] to a probe frame's distinct leaves (a bounded collect). */
   private def prune(probes: DataFrame, restricts: Seq[Column]): DataFrame =
-    prune(probes.select("leaf_id").distinct().limit(MaxInList + 1)
+    prune(probes.select("leaf_id").distinct().limit(IvfIndex.MaxInList + 1)
       .collect().map(_.getInt(0)).toSeq, restricts)
-
-  private val MaxInList = 1024
 
   /** Candidate PAIRS: the pruned `side` joined to the probe frame on
     * `leaf_id`, then the per-(candidate, query) filters — codegen'd
@@ -2131,10 +2090,10 @@ final class Serving private[operators] (
     * (query, id) — a vector stored in two probed leaves is one
     * candidate; `carried` columns are per-(query, id) constants. */
   private def collapse(pairs: DataFrame, score: Column,
-      carried: Seq[String], name: String = "score",
-      qidCol: Column = col("__qid")): DataFrame = {
+      carried: Seq[String], name: String = "score"): DataFrame = {
     val aggs = max(col(name)).as(name) +: carried.map(a => first(col(a)).as(a))
-    pairs.select(Seq(qidCol, col(id), score.as(name)) ++ carried.map(col): _*)
+    pairs.select(Seq(col("__qid"), col(id), score.as(name)) ++
+        carried.map(col): _*)
       .groupBy(col("__qid"), col(id))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -2227,7 +2186,7 @@ final class Serving private[operators] (
   }
 
   /** The ONE batch tail — crowding cap → per-query top-k → metadata
-    * join — shared by every routed, exact and single-query plan:
+    * join — shared by every routed and exact batch plan:
     * `unique` carries (__qid, id, score[, crowdAttr][, __k][, __cap])
     * with ONE row per (query, id). Ranking is (score desc, id); a
     * per-query `__k` / `__cap` makes the limit least(global,

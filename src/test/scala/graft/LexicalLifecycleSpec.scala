@@ -65,8 +65,8 @@ class LexicalLifecycleSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException] {
       serving.searchHybrid(terms, qv, nProbe = 1)
     }
-    assert(e.getMessage.contains("without lexical maintenance"),
-      e.getMessage)
+    assert(e.getMessage.contains("without lexical maintenance") &&
+      e.getMessage.contains("searchHybrid:"), e.getMessage)
     // lexicalScores is guarded by the same gate
     val e2 = intercept[IllegalArgumentException] {
       serving.lexicalScores(terms)
@@ -558,6 +558,28 @@ class LexicalLifecycleSpec extends SparkTestBase {
       assert(roots.nonEmpty && roots.map(_.getName).toSet ==
         want.intersect(bucketDirs(path).toSet),
         s"postings scan roots ${roots.mkString(", ")}, want $want")
+    }
+  }
+
+  test("a malformed lexical stamp fails loudly, naming the stamp file " +
+      "and its content") {
+    val path = mkLayout(baseDocs)
+    val stamp = new org.apache.hadoop.fs.Path(s"$path/${Lexical.Dir}/VERSION")
+    val fs = stamp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(Lexical.versionRange(spark, path).contains((1, 1)))
+    for (body <- Seq("", " \n", "1 x", "1 2 3", "1 99999999999")) {
+      val out = fs.create(stamp, true)
+      out.write(body.getBytes("UTF-8"))
+      out.close()
+      val e = intercept[IllegalStateException] {
+        Lexical.versionRange(spark, path)
+      }
+      assert(e.getMessage.contains(stamp.toString) &&
+        e.getMessage.contains(s"'$body'"), e.getMessage)
+      intercept[IllegalStateException] {
+        Serving.open(spark, path, id = "doc_id", vecCol = "v")
+          .searchHybrid(terms, qv, nProbe = 1)
+      }
     }
   }
 }

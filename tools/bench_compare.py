@@ -10,22 +10,30 @@ top level, as in BENCH_LOCAL.json) and a wrapped record (`queries` nested
 under `parsed`, as in BENCH_r18.json). A row
 value is seconds, or a {min, med, max} triplet whose `med` is used. Rows
 whose before value is 0 (or missing) have no ratio and are skipped.
+
+Each record's run conditions (`loadavg_start`, `cpus`, `heap_mb`, `env`,
+`contended`) print first; a row listed in either record's
+`contended_rows` is starred, since its ratio may be load, not code.
 """
 import json
 import math
 import sys
 
 
+CONDITIONS = ("loadavg_start", "cpus", "heap_mb", "env", "contended")
+
+
 def load(path):
-    """{row name: seconds} of one record, either shape."""
+    """({row name: seconds}, the record's fields) of one record, either
+    shape."""
     rec = json.load(open(path))
+    if rec.get("queries") is None:
+        rec = rec.get("parsed") or {}
     queries = rec.get("queries")
     if queries is None:
-        queries = (rec.get("parsed") or {}).get("queries")
-    if queries is None:
         sys.exit(f"{path}: no 'queries' (top level or under 'parsed')")
-    return {k: v["med"] if isinstance(v, dict) else v
-            for k, v in queries.items()}
+    return ({k: v["med"] if isinstance(v, dict) else v
+             for k, v in queries.items()}, rec)
 
 
 def geomean(ratios):
@@ -35,10 +43,17 @@ def geomean(ratios):
 
 
 def main() -> None:
-    before = load(sys.argv[1])
-    after = load(sys.argv[2])
+    (before, brec), (after, arec) = load(sys.argv[1]), load(sys.argv[2])
     md = "--md" in sys.argv
-    rows = [(k, before[k], after[k], after[k] / before[k])
+    for side, path, rec in (("before", sys.argv[1], brec),
+                            ("after", sys.argv[2], arec)):
+        cond = " ".join(f"{c}={rec.get(c, 'n/a')}" for c in CONDITIONS)
+        print(f"{side:6s} {path}: {cond}")
+    contended = (set(brec.get("contended_rows") or ())
+                 | set(arec.get("contended_rows") or ()))
+    print(f"* = contended in either record ({len(contended)} rows)\n")
+    rows = [(k + ("*" if k in contended else ""), before[k], after[k],
+             after[k] / before[k])
             for k in sorted(before)
             if k in after and before[k] and after[k] is not None]
     if md:
@@ -48,7 +63,7 @@ def main() -> None:
             print(f"| {k} | {b:.2f} | {a:.2f} | {r:.2f} |")
     else:
         for k, b, a, r in rows:
-            print(f"{k:30s} {b:7.2f} {a:7.2f} {r:6.2f}")
+            print(f"{k:31s} {b:7.2f} {a:7.2f} {r:6.2f}")
     # a zero after-value has ratio 0, which has no log: geomeans skip it
     big = [r[3] for r in rows if r[1] >= 1.0 and r[3] > 0]
     tb = sum(r[1] for r in rows)
