@@ -3,6 +3,13 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+  Expression, In, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project,
+  SubqueryAlias}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
@@ -1088,12 +1095,16 @@ object IvfIndex {
     * top-k → metadata join (the Firestore-lookup analog,
     * firestore_ops.py:69).
     *
-    * Plan ([[servingTail]]): the probed scan scores in parallel; the
-    * scored candidates take ONE exchange into a single partition,
-    * where every later step runs; the metadata table is broadcast when
-    * Spark's size estimate fits `spark.sql.autoBroadcastJoinThreshold`.
-    * A probe wider than [[MaxInList]] leaves keeps a parallel tail,
-    * as does the exact pre-filter plan of [[Serving.searchAdaptive]].
+    * Plan ([[servingTail]]): the probed scan scores in parallel. A
+    * [[smallProbe]] (its files count at most [[MaxSingleRows]] rows)
+    * sends the scored candidates through ONE exchange into a single
+    * partition, where the collapse, crowding cap and top-k run; a
+    * larger probe keeps a parallel tail, as does the exact pre-filter
+    * plan of [[Serving.searchAdaptive]]. A metadata table that is a
+    * [[smallTable]] is broadcast, so the rank order is a local sort.
+    * A larger one is never collected or shuffled: the ≤ k ranked rows
+    * are broadcast into its scan, and the joined rows take one more
+    * exchange into a single partition for the rank sort.
     *
     * @param restricts predicates over the index table's own columns;
     *        ANDed. Keep them on top-level columns so they reach
@@ -1112,16 +1123,77 @@ object IvfIndex {
     servingTail(restricts.foldLeft(
         indexed.filter(col("leaf_id").isin(leaves: _*)))(_ filter _),
       dot(vecCol, query), k, id, crowding, metadata,
-      single = leaves.length <= MaxInList)
+      single = smallProbe(indexed, leaves))
   }
 
-  private def dot(vecCol: String, query: Array[Double]): Column =
+  private[operators] def dot(vecCol: String, query: Array[Double]): Column =
     graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq))
 
   /** The widest probe that reaches the scan as a literal leaf_id
-    * In-list: partition pruning then reads only those leaves, so the
-    * candidate set is bounded by their rows. */
+    * In-list: partition pruning then reads only those leaves. */
   private[operators] val MaxInList = 1024
+
+  /** A single request moves at most this many rows through ONE
+    * place: the single-partition ranking task ([[smallProbe]], rows
+    * counted before restricts) or the driver-built broadcast of a
+    * metadata table ([[smallTable]]), from at most [[MaxSingleFiles]]
+    * files. At 65,536 rows each measured no slower than its parallel
+    * form (4 cpus). */
+  private[operators] val MaxSingleRows = 65536L
+  private[operators] val MaxSingleFiles = 64
+
+  /** Footer row counts by (path, length, modification time). Data
+    * files are written once, so each footer is read once per process
+    * (a cold read measured ~9 ms per file). */
+  private val footerRows = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), java.lang.Long]()
+
+  /** `df`'s parquet scan when `df` is that scan under projections and
+    * filters only, so it reads no more rows than the scan's files. */
+  private def plainScan(df: DataFrame): Option[HadoopFsRelation] = {
+    val plan = df.queryExecution.analyzed
+    val plain = plan.find {
+      case _: Project | _: Filter | _: SubqueryAlias | _: LogicalRelation =>
+        false
+      case _ => true
+    }.isEmpty
+    plan.collectFirst { case lr: LogicalRelation if plain => lr.relation }
+      .collect {
+        case r: HadoopFsRelation
+            if r.fileFormat.isInstanceOf[ParquetFileFormat] => r
+      }
+  }
+
+  /** Whether the files of `r` that `partitionFilters` keep fit
+    * [[MaxSingleFiles]] and, by their footers, [[MaxSingleRows]]. */
+  private def fewRows(r: HadoopFsRelation,
+      partitionFilters: Seq[Expression]): Boolean = {
+    val files = r.location.listFiles(partitionFilters, Nil).flatMap(_.files)
+    val conf = r.sparkSession.sparkContext.hadoopConfiguration
+    if (footerRows.size > (1 << 16)) footerRows.clear()
+    files.length <= MaxSingleFiles && files.iterator
+      .scanLeft(0L)((sum, f) => sum + footerRows.computeIfAbsent(
+        (f.getPath.toString, f.getLen, f.getModificationTime),
+        _ => MetaIO.fileRowCount(conf, f.getPath)))
+      .forall(_ <= MaxSingleRows)
+  }
+
+  /** Whether the single-partition tail may rank the probed `leaves`:
+    * `indexed` is a plain scan of a layout partitioned by `leaf_id`
+    * (not a frame built in memory, not a layout read through its
+    * delta registry) and the leaves' files are [[fewRows]]. */
+  private[operators] def smallProbe(indexed: DataFrame,
+      leaves: Seq[Int]): Boolean =
+    leaves.length <= MaxInList && plainScan(indexed).exists(r =>
+      r.partitionSchema.exists(f =>
+        f.name == "leaf_id" && f.dataType == IntegerType) &&
+      fewRows(r, Seq(In(AttributeReference("leaf_id", IntegerType)(),
+        leaves.map(l => Literal(l))))))
+
+  /** Whether a request may broadcast the metadata table itself: a
+    * plain scan of [[fewRows]]. */
+  private def smallTable(meta: DataFrame): Boolean =
+    plainScan(meta).exists(fewRows(_, Nil))
 
   private[operators] def integral(t: DataType): Boolean =
     Seq(LongType, IntegerType, ShortType, ByteType).contains(t)
@@ -1142,10 +1214,10 @@ object IvfIndex {
     * (the tier only changes `score`): spill collapse → `shortlist` cut
     * (stage-1 score, m: the m best ids, ties to the smaller id) →
     * crowding cap → top-k → metadata join → rank order. `single` (a
-    * bounded In-list probe): ONE exchange into a single partition,
-    * which satisfies every later step. A metadata side that
-    * [[fitsBroadcast]] keeps that partitioning through the join, so
-    * the rank order is a local sort. Output as the 10-arg [[searchDf]].
+    * [[smallProbe]]): ONE exchange into a single partition, which
+    * satisfies every later step. The metadata join keeps the ranked
+    * rows in one partition either way, so the rank order is a local
+    * sort. Output as the 10-arg [[searchDf]].
     */
   private[operators] def servingTail(candidates: DataFrame, score: Column,
       k: Int, id: String, crowding: Option[(String, Int)],
@@ -1183,12 +1255,20 @@ object IvfIndex {
       }
     (metadata match {
       case Some((meta, key)) =>
-        val metaCols = meta.columns.filterNot(_ == key).toSeq
-        ranked.as("__r").join(
-            (if (fitsBroadcast(meta)) broadcast(meta) else meta).as("__m"),
-            col(s"__r.$id") === col(s"__m.$key"))
-          .select(col(s"__r.$id") +: metaCols.map(c => col(s"__m.$c")) ++:
-            Seq(col("__r.score").as(scoreName), col("__r.rank")): _*)
+        val on = col(s"__r.$id") === col(s"__m.$key")
+        val out = col(s"__r.$id") +: meta.columns.filterNot(_ == key)
+          .map(c => col(s"__m.$c")) ++:
+          Seq(col("__r.score").as(scoreName), col("__r.rank"))
+        // a small table is broadcast: its scan runs beside the
+        // candidate scan and the join keeps the ranked partition. A
+        // larger one is scanned where it lives, with the ≤ k ranked
+        // rows broadcast into it; only the joined rows move.
+        if (smallTable(meta))
+          ranked.as("__r").join(broadcast(meta.as("__m")), on)
+            .select(out: _*)
+        else
+          meta.as("__m").join(broadcast(ranked.as("__r")), on)
+            .select(out: _*).repartition(1)
       case None =>
         ranked.select(col(id), col("score").as(scoreName), col("rank"))
     }).orderBy("rank")
@@ -1203,15 +1283,5 @@ object IvfIndex {
     shortlist.fold(unique) { case (_, m) =>
       unique.orderBy(col("__sl").desc, col(id)).limit(m).drop("__sl")
     }
-  }
-
-  /** Spark's own broadcast-by-size rule for a join side: a size
-    * estimate within `spark.sql.autoBroadcastJoinThreshold` (−1: off).
-    */
-  private def fitsBroadcast(df: DataFrame): Boolean = {
-    val qe = df.queryExecution
-    val size = qe.optimizedPlan.stats.sizeInBytes
-    size >= 0 &&
-      size <= qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
   }
 }

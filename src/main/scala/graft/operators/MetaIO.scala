@@ -106,10 +106,13 @@ private[graft] object MetaIO {
     * no data pages read (the `count()` of a metadata dir).
     */
   def rowCount(conf: Configuration, fs: FileSystem, dir: Path): Long =
-    dataFiles(fs, dir).map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+    dataFiles(fs, dir).map(fileRowCount(conf, _)).sum
+
+  /** One parquet file's row count, from its footer. */
+  def fileRowCount(conf: Configuration, f: Path): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try r.getRecordCount finally r.close()
+  }
 
   /** Read every row of the directory on the driver. `cols` names the
     * wanted columns in output order; a column absent from a file (or

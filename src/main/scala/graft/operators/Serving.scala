@@ -16,9 +16,12 @@ import org.apache.spark.sql.functions._
   * threshold) plus a partition-pruned scan of the probed leaves —
   * the open cost (sidecar + manifest) is paid once per process (the
   * serving benchmark's `manifest.open_ms` and `request_p50_ms`). A
-  * full-shape single request on any tier plans ONE exchange and
-  * broadcasts a metadata table that fits the broadcast threshold:
-  * three Spark jobs — scan, broadcast, result ([[IvfIndex.servingTail]]).
+  * full-shape single request on any tier whose probed files count at
+  * most [[IvfIndex.MaxSingleRows]] rows ranks its candidates behind
+  * ONE exchange. A metadata table of at most that many rows is
+  * broadcast: three Spark jobs — scan, broadcast, result. A larger
+  * one gets the ≤ k ranked rows broadcast into its scan: four jobs
+  * ([[IvfIndex.servingTail]]).
   *
   * The held frame is LWW-RESOLVED against the delta registry as of
   * open time ([[graft.streaming.IndexMaintenance.readServing]]):
@@ -539,7 +542,7 @@ final class Serving private[operators] (
       maxExactFraction: Double = 0.05): DataFrame =
     if (searchAdaptivePlan(restricts, maxExactFraction))
       IvfIndex.servingTail(restricts.foldLeft(data)(_ filter _),
-        graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq)),
+        IvfIndex.dot(vecCol, query),
         k, id, crowding, metadata, single = false)
     else
       search(query, nProbe, k, restricts, crowding, metadata)
@@ -819,7 +822,7 @@ final class Serving private[operators] (
       IvfIndex.bareTail(candidates, score, k, id, scoreName, shortlist)
     else
       IvfIndex.servingTail(candidates, score, k, id, crowding, metadata,
-        single = leaves.length <= IvfIndex.MaxInList, scoreName = scoreName,
+        single = IvfIndex.smallProbe(data, leaves), scoreName = scoreName,
         shortlist = shortlist)
   }
 
@@ -1226,7 +1229,7 @@ final class Serving private[operators] (
     val source = restricts.foldLeft(data)(_.filter(_))
     def topK(leaves: Seq[Int]): DataFrame = IvfIndex.bareTail(
       source.filter(col("leaf_id").isin(leaves: _*)),
-      graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq)),
+      IvfIndex.dot(vecCol, query),
       k, id)
     var m = math.min(math.max(initialProbe, 1), total)
     var closed = false

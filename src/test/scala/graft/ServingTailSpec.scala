@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
 /** The one single-request serving tail (`IvfIndex.servingTail`) behind
   * the full-shape `Serving.search` / 10-arg `IvfIndex.searchDf` and the
   * crowding/metadata forms of `searchSq`, `searchAdc` and
-  * `searchBqRerank`: its plan takes one exchange and broadcasts the
-  * metadata side, and its rows equal the serving formula — spill
-  * collapse → crowding cap per attribute value (score desc, id) →
-  * top-k (score desc, id) → inner metadata join — computed here on the
-  * driver.
+  * `searchBqRerank`: a small probe ranks its candidates in one
+  * partition and a probe past `IvfIndex.MaxSingleRows` keeps the
+  * parallel tail; a small parquet metadata table is broadcast, any
+  * other has the ranked rows broadcast into its scan; and the rows
+  * equal the serving formula — spill collapse → crowding cap per
+  * attribute value (score desc, id) → top-k (score desc, id) → inner
+  * metadata join — computed here on the driver.
   */
 class ServingTailSpec extends SparkTestBase {
   import spark.implicits._
@@ -101,8 +103,28 @@ class ServingTailSpec extends SparkTestBase {
       .distinct
   }
 
+  private def shuffles(df: DataFrame): Seq[ShuffleExchangeLike] =
+    nodes(df.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeLike => e }
+
+  /** The broadcast side of the metadata join: the metadata table
+    * (holds `title`) or the ranked rows (hold `rank`). */
+  private def broadcasts(df: DataFrame, column: String): Boolean =
+    nodes(df.queryExecution.executedPlan).exists {
+      case j: BroadcastHashJoinExec =>
+        j.buildSide == BuildRight && j.right.output.exists(_.name == column)
+      case _ => false
+    }
+
+  private def metaFile(n: Long): DataFrame = {
+    val dir = tmpDir("graft_tail_meta")
+    spark.range(n).select(col("id").as("vec_id"),
+      concat(lit("doc-"), col("id")).as("title")).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   test("plan: the full-shape single request on every tier takes ONE " +
-      "exchange, no range sort, and broadcasts the metadata side") {
+      "exchange, no range sort, and broadcasts a small metadata table") {
     import graft.functions.{bquant, quantize}
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
       col("label"), col("embedding").cast("array<double>").as("v"))
@@ -147,23 +169,72 @@ class ServingTailSpec extends SparkTestBase {
       assert(rows.forall(r => r.getString(1) == s"doc-${r.getLong(0)}"),
         s"$name: metadata missing or wrong")
       val all = nodes(df.queryExecution.executedPlan)
-      val shuffles = all.collect { case e: ShuffleExchangeLike => e }
-      assert(shuffles.length == 1,
-        s"$name: want one exchange, got ${shuffles.length}:\n" +
-          shuffles.map(_.outputPartitioning).mkString("\n"))
+      val ex = shuffles(df)
+      assert(ex.length == 1,
+        s"$name: want one exchange, got ${ex.length}:\n" +
+          ex.map(_.outputPartitioning).mkString("\n"))
       assert(!all.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
         s"$name: the rank order plans a range exchange")
-      assert(all.exists {
-          case j: BroadcastHashJoinExec =>
-            j.buildSide == BuildRight &&
-              j.right.output.exists(_.name == "title")
-          case _ => false
-        }, s"$name: the metadata side is not broadcast")
+      assert(broadcasts(df, "title"), s"$name: the metadata side is not broadcast")
+    }
+  }
+
+  test("plan: a metadata table past MaxSingleRows, or not a plain " +
+      "parquet scan, is never broadcast: the ranked rows are") {
+    val serving = handLayout(stringIds = false)
+    // 70,000 rows: past IvfIndex.MaxSingleRows (65,536)
+    val big = metaFile(70000)
+    val inMemory = (0L until 36L).map(i => (i, s"doc-$i")).toDF("vec_id", "title")
+    for ((name, meta) <- Seq("large file" -> big, "in memory" -> inMemory)) {
+      val df = serving.search(q, 2, 4, Nil, Some(("label", 2)),
+        Some((meta, "vec_id")))
+      val got = df.collect()
+      assert(got.map(_.getLong(3)).toSeq == (1L to 4L), name)
+      assert(got.forall(r => r.getString(1) == s"doc-${r.getLong(0)}"), name)
+      val ex = shuffles(df)
+      // candidates → one partition, joined rows → one partition
+      assert(ex.length == 2 && ex.forall(_.outputPartitioning.numPartitions == 1),
+        s"$name: want two single-partition exchanges, got:\n" +
+          ex.map(_.outputPartitioning).mkString("\n"))
+      assert(!nodes(df.queryExecution.executedPlan)
+        .exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), name)
+      assert(broadcasts(df, "rank") && !broadcasts(df, "title"),
+        s"$name: want the ranked rows broadcast, not the metadata")
+    }
+  }
+
+  test("plan: a probe whose files hold more than MaxSingleRows rows, or " +
+      "a frame built in memory, keeps the parallel tail") {
+    // 2 leaves × 36,000 rows: past IvfIndex.MaxSingleRows (65,536)
+    val n = 72000
+    val rows = spark.range(n).select(col("id").as("vec_id"),
+      (col("id") % 5).cast("int").as("label"),
+      (col("id") % 2).cast("int").as("leaf_id"),
+      array(lit(1.0), (col("id") % 97).cast("double") / 97.0, lit(0.0),
+        lit(0.0)).as("v"))
+    val dir = tmpDir("graft_tail_wide")
+    val wideModel = IvfIndex.Model(Array(Array(1.0, 0.0, 0.0, 0.0),
+      Array(0.9, 0.1, 0.0, 0.0)))
+    IvfIndex.write(rows, dir, wideModel)
+    val wide = Serving.open(spark, dir, vecCol = "v")
+    val meta = Some((metaFile(n), "vec_id"))
+    val crowd = Some(("label", 2))
+    for ((name, df) <- Seq(
+        "wide layout" -> wide.search(q, 2, 5, Nil, crowd, meta),
+        "in memory" -> IvfIndex.searchDf(rows, wideModel, q, 2, 5,
+          "vec_id", "v", Nil, crowd, meta))) {
+      val got = df.collect()
+      assert(got.map(_.getLong(3)).toSeq == (1L to 5L), name)
+      val ex = shuffles(df)
+      assert(ex.exists(_.outputPartitioning.numPartitions > 1),
+        s"$name: the collapse ran in one partition:\n" +
+          ex.map(_.outputPartitioning).mkString("\n"))
+      assert(broadcasts(df, "rank"), s"$name: the ranked rows are not broadcast")
     }
   }
 
   test("rows: spill copies collapse and a score tie at the k boundary " +
-      "breaks by id, integral and string ids, with or without broadcast") {
+      "breaks by id, integral and string ids, either metadata join") {
     val k = 4
     val cap = 2
     for (stringIds <- Seq(false, true)) {
@@ -189,16 +260,17 @@ class ServingTailSpec extends SparkTestBase {
       assert(crowdedOut.headOption.exists(_._3 == kth),
         s"no tie at the k boundary: $want / $crowdedOut")
       assert(want.count(_._1 == idOf(2L)) == 2)
-      for (threshold <- Seq("10MB", "-1")) {
-        val key = "spark.sql.autoBroadcastJoinThreshold"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, threshold)
-        try {
-          val got = served(serving.search(q, 2, k, Nil,
-            Some(("label", cap)), Some((metaDf, "vec_id"))))
-          assert(sorted(got) == sorted(want),
-            s"stringIds=$stringIds threshold=$threshold")
-        } finally spark.conf.set(key, prev)
+      // in memory: the ranked rows are broadcast; a small parquet
+      // file: the metadata table is
+      val metaDir = tmpDir("graft_tail_meta")
+      metaDf.write.parquet(metaDir)
+      for ((how, m) <- Seq("in memory" -> metaDf,
+          "parquet" -> spark.read.parquet(metaDir))) {
+        val df = serving.search(q, 2, k, Nil, Some(("label", cap)),
+          Some((m, "vec_id")))
+        assert(broadcasts(df, "title") == (how == "parquet"))
+        assert(sorted(served(df)) == sorted(want),
+          s"stringIds=$stringIds metadata $how")
       }
     }
   }
