@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
@@ -148,4 +148,234 @@ object TopKByScore {
   def column(score: Column, id: Column, k: Int): Column =
     Shims.column(TopKByScore(Shims.expression(score),
       Shims.expression(id), k).toAggregateExpression())
+}
+
+/** Per-query serving top-k as ONE partial aggregate: the batch tail's
+  * spill collapse, crowding cap and rank cut folded into a heap, so
+  * each partition sends at most k rows per group across the exchange
+  * instead of every scored (query, candidate) pair.
+  *
+  * Children: `score` (double), `id` (any atomic type), an optional
+  * crowding attribute, and the limits `k` and `cap` — per-row int
+  * expressions (`least(lit, col)` on a batch with per-query limits),
+  * read from a group's first row; null means unbounded. Output: the
+  * kept (score, id) structs, best first, at most k.
+  *
+  * Ordering is Spark's: score descending by
+  * [[SQLOrderingUtil.compareDoubles]] (NaN highest, −0.0 == 0.0),
+  * null scores last and kept; then id ascending by the id type's own
+  * ordering; then attribute ascending (a tie-break only copies that
+  * disagree on it can reach). Null attribute values form one
+  * crowding group.
+  *
+  * Every buffer holds PRUNE of the copies it has seen, and the merge
+  * and the final list are PRUNE again: walk the copies best first and
+  * keep one when its id is not kept yet, fewer than `cap` kept copies
+  * share its attribute value, and fewer than k are kept. When all
+  * copies of an id share one attribute value — spill copies of a
+  * layout row, and every last-write-wins resolved handle — PRUNE of
+  * the union equals PRUNE of the partial PRUNEs, so the result is
+  * exactly max-score collapse → crowding cap → top k under any
+  * partitioning.
+  *
+  * Copies of one id that DISAGREE on the attribute (a pinned
+  * [[graft.operators.Serving$.openAt]] handle can hold two versions
+  * of an id under different labels) follow the same walk: the id is
+  * served by its best copy that its own value's cap admits, counted
+  * under that copy's value; a copy crowded out blocks nothing, so a
+  * weaker copy under another value may be served in its place. Each
+  * buffer applies this to the copies it holds, so for such an id the
+  * outcome can depend on which copies share a partition; it is
+  * deterministic when they share one.
+  */
+case class TopKCrowded(score: Expression, id: Expression,
+    attr: Option[Expression], k: Expression, cap: Expression,
+    override val mutableAggBufferOffset: Int = 0,
+    override val inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[TopKCrowded.Buf] {
+  import TopKCrowded.{Buf, Entry}
+
+  override def children: Seq[Expression] =
+    Seq(score, id) ++ attr.toSeq ++ Seq(k, cap)
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("score", DoubleType),
+    StructField("id", id.dataType))), containsNull = false)
+  override def prettyName: String = "graft_top_k_crowded"
+
+  private def attrType: DataType = attr.fold[DataType](NullType)(_.dataType)
+  @transient private lazy val idOrd = TypeUtils.getInterpretedOrdering(id.dataType)
+  @transient private lazy val attrOrd =
+    attr.map(a => TypeUtils.getInterpretedOrdering(a.dataType))
+  @transient private lazy val toUnsafe =
+    UnsafeProjection.create(Array[DataType](DoubleType, id.dataType, attrType))
+
+  private def nullsFirst(o: Ordering[Any], x: Any, y: Any): Int =
+    if (x == null) { if (y == null) 0 else -1 }
+    else if (y == null) 1
+    else o.compare(x, y)
+
+  /** Score against score only: < 0 when `a` ranks first. */
+  private def byScore(a: Entry, b: Entry): Int =
+    if (a.nullScore) { if (b.nullScore) 0 else 1 }
+    else if (b.nullScore) -1
+    else SQLOrderingUtil.compareDoubles(b.score, a.score)
+
+  /** The keep-order: < 0 when `a` ranks first. */
+  private def cmp(a: Entry, b: Entry): Int = {
+    val s = byScore(a, b)
+    if (s != 0) s
+    else {
+      val i = nullsFirst(idOrd, a.id, b.id)
+      if (i != 0) i else attrOrd.fold(0)(nullsFirst(_, a.attr, b.attr))
+    }
+  }
+  private def sameId(a: Entry, b: Entry): Boolean = nullsFirst(idOrd, a.id, b.id) == 0
+  private def sameAttr(a: Entry, b: Entry): Boolean =
+    attrOrd.forall(nullsFirst(_, a.attr, b.attr) == 0)
+
+  override def createAggregationBuffer(): Buf = new Buf
+
+  /** PRUNE(buffer ∪ {e}) in place; the buffer is kept best first. */
+  private def insert(buf: Buf, e: Entry): Unit = {
+    val rows = buf.rows
+    val n = rows.length
+    if (buf.k <= 0 || (n >= buf.k && cmp(e, rows(n - 1)) >= 0)) return
+    var lo = 0
+    var hi = n
+    while (lo < hi) {
+      val m = (lo + hi) >>> 1
+      if (cmp(rows(m), e) <= 0) lo = m + 1 else hi = m
+    }
+    val p = lo
+    // a better copy of the id, or `cap` better rows of its value, win
+    var same = 0
+    var i = 0
+    while (i < p) {
+      val r = rows(i)
+      if (sameId(r, e)) return
+      if (sameAttr(r, e)) same += 1
+      i += 1
+    }
+    if (same >= buf.cap) return
+    i = p
+    while (i < rows.length && !sameId(rows(i), e)) i += 1
+    if (i < rows.length) rows.remove(i)
+    rows.insert(p, e)
+    // the value may now hold cap + 1 rows: its weakest leaves
+    if (attr.nonEmpty && buf.cap < Int.MaxValue) {
+      same += 1
+      i = p + 1
+      while (i < rows.length && same <= buf.cap) {
+        if (sameAttr(rows(i), e)) {
+          same += 1
+          if (same > buf.cap) rows.remove(i)
+        }
+        i += 1
+      }
+    }
+    if (rows.length > buf.k) rows.remove(buf.k, rows.length - buf.k)
+  }
+
+  private def limit(e: Expression, input: InternalRow): Int = {
+    val v = e.eval(input)
+    if (v == null) Int.MaxValue else v.asInstanceOf[Int]
+  }
+
+  override def update(buf: Buf, input: InternalRow): Buf = {
+    if (buf.k < 0) { buf.k = limit(k, input); buf.cap = limit(cap, input) }
+    if (buf.k <= 0) return buf
+    val s = score.eval(input)
+    val rows = buf.rows
+    // the common case: a full buffer whose weakest row strictly beats
+    // this score rejects it before the id is read
+    if (rows.length >= buf.k) {
+      val w = rows(rows.length - 1)
+      if (!w.nullScore && (s == null ||
+          SQLOrderingUtil.compareDoubles(s.asInstanceOf[Double], w.score) < 0))
+        return buf
+    }
+    insert(buf, new Entry(if (s == null) 0.0 else s.asInstanceOf[Double],
+      s == null, InternalRow.copyValue(id.eval(input)),
+      attr.map(a => InternalRow.copyValue(a.eval(input))).orNull))
+    buf
+  }
+
+  override def merge(buf: Buf, other: Buf): Buf = {
+    if (buf.k < 0) { buf.k = other.k; buf.cap = other.cap }
+    other.rows.foreach(insert(buf, _))
+    buf
+  }
+
+  override def eval(buf: Buf): Any =
+    new GenericArrayData(buf.rows.map { e =>
+      InternalRow(if (e.nullScore) null else e.score, e.id)
+    }.toArray[Any])
+
+  override def serialize(buf: Buf): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    out.writeInt(buf.k)
+    out.writeInt(buf.cap)
+    out.writeInt(buf.rows.length)
+    buf.rows.foreach { e =>
+      val row = toUnsafe(new GenericInternalRow(Array[Any](
+        if (e.nullScore) null else e.score, e.id, e.attr)))
+      out.writeInt(row.getSizeInBytes)
+      out.write(row.getBytes)
+    }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Buf = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+    val buf = new Buf
+    buf.k = in.readInt()
+    buf.cap = in.readInt()
+    val n = in.readInt()
+    var i = 0
+    while (i < n) {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      val row = new UnsafeRow(3)
+      row.pointTo(b, b.length)
+      // a serialized buffer is already PRUNEd and best first
+      buf.rows += new Entry(if (row.isNullAt(0)) 0.0 else row.getDouble(0),
+        row.isNullAt(0), InternalRow.copyValue(row.get(1, id.dataType)),
+        InternalRow.copyValue(row.get(2, attrType)))
+      i += 1
+    }
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): TopKCrowded =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): TopKCrowded =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): TopKCrowded =
+    if (attr.isEmpty) copy(score = c(0), id = c(1), k = c(2), cap = c(3))
+    else copy(score = c(0), id = c(1), attr = Some(c(2)), k = c(3), cap = c(4))
+}
+
+object TopKCrowded {
+  final class Entry(val score: Double, val nullScore: Boolean, val id: Any,
+      val attr: Any)
+
+  /** The group's limits (-1 until its first row) and kept copies. */
+  final class Buf {
+    var k: Int = -1
+    var cap: Int = Int.MaxValue
+    val rows = new scala.collection.mutable.ArrayBuffer[Entry]()
+  }
+
+  /** array<struct<score, id>> of the group's kept copies, best first;
+    * `attr` = the crowding attribute, capped at `cap` per value. */
+  def column(score: Column, id: Column, attr: Option[Column], k: Column,
+      cap: Column): Column =
+    Shims.column(TopKCrowded(Shims.expression(score.cast("double")),
+      Shims.expression(id), attr.map(Shims.expression),
+      Shims.expression(k.cast("int")), Shims.expression(cap.cast("int")))
+      .toAggregateExpression())
 }

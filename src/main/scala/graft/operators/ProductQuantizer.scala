@@ -958,19 +958,25 @@ object ProductQuantizer {
   def loadRotation(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Array[Array[Double]]] = {
     val dir = new org.apache.hadoop.fs.Path(rotationDir(path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) None
-    else {
-      val rows = spark.read.parquet(dir.toString)
-        .collect().sortBy(_.getInt(0))
-      val basis = rows.map(_.getSeq[Double](1).toArray)
+    sidecarRows(spark, dir, Seq("row", "vec")).map { rows =>
+      val basis = rows.map(_(1).asInstanceOf[Array[Double]]).toArray
       require(basis.nonEmpty && basis.zipWithIndex.forall {
-          case (r, i) => rows(i).getInt(0) == i && r.length == basis.length
+          case (r, i) => rows(i)(0) == i && r != null && r.length == basis.length
         },
         s"OPQ rotation sidecar at $dir is malformed " +
           s"(${basis.length} rows)")
-      Some(basis)
+      basis
     }
+  }
+
+  /** A sidecar's rows by their first (int) column, read on the driver
+    * ([[MetaIO]], as [[IvfIndex.load]]; no Spark job). None: no `dir`. */
+  private def sidecarRows(spark: org.apache.spark.sql.SparkSession,
+      dir: org.apache.hadoop.fs.Path, cols: Seq[String]): Option[Seq[Array[Any]]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) None
+    else Some(MetaIO.read(conf, fs, dir, cols).sortBy(_(0).asInstanceOf[Int]))
   }
 
   def writeCodebook(spark: org.apache.spark.sql.SparkSession,
@@ -989,20 +995,22 @@ object ProductQuantizer {
   def loadCodebook(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Array[Double]] = {
     val dir = new org.apache.hadoop.fs.Path(codebookDir(path))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(dir),
+    val found = sidecarRows(spark, dir, Seq("code", "vec", "format_version"))
+    require(found.isDefined,
       s"no codebook sidecar at $dir — this layout's codes cannot be " +
         "decoded or extended; write one with writeCodebook at build time")
-    val rows = spark.read.parquet(dir.toString).collect().sortBy(_.getInt(0))
-    val version = rows.head.getInt(2)
+    val rows = found.get
+    if (rows.isEmpty) throw new IllegalStateException(
+      s"codebook sidecar at $dir has no rows — rewrite it with writeCodebook")
+    val version = rows.head(2)
     require(version == CodebookFormatVersion,
       s"codebook sidecar format v$version at $dir; " +
         s"this build reads v$CodebookFormatVersion")
     require(rows.length == NumCodes &&
-        rows.zipWithIndex.forall { case (r, i) => r.getInt(0) == i },
+        rows.zipWithIndex.forall { case (r, i) => r(0) == i && r(1) != null },
       s"codebook sidecar at $dir is malformed: expected codes 0 until " +
-        s"$NumCodes, got ${rows.map(_.getInt(0)).mkString(",")}")
-    rows.map(_.getSeq[Double](1).toArray).toSeq
+        s"$NumCodes, got ${rows.map(_(0)).mkString(",")}")
+    rows.map(_(1).asInstanceOf[Array[Double]])
   }
 }
 

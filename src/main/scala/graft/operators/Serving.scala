@@ -1,7 +1,9 @@
 package graft.operators
 
-import graft.functions.{bquant, quantize}
+import graft.functions.{bquant, quantize, TopKCrowded}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +23,8 @@ import org.apache.spark.sql.functions._
   * ONE exchange. A metadata table of at most that many rows is
   * broadcast: three Spark jobs — scan, broadcast, result. A larger
   * one gets the ≤ k ranked rows broadcast into its scan: four jobs
-  * ([[IvfIndex.servingTail]]).
+  * ([[IvfIndex.servingTail]]). A BATCH ranks each query in ONE
+  * partial top-k below one exchange ([[top]]).
   *
   * The held frame is LWW-RESOLVED against the delta registry as of
   * open time ([[graft.streaming.IndexMaintenance.readServing]]):
@@ -169,10 +172,12 @@ final class Serving private[operators] (
     // before the pool cut — the single-surface convention); the
     // vectors ride through the spill collapse into the pool
     val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe)
-    val scored = collapse(pairs(probes, prune(probes, restricts))
+    val unique = scored(pairs(probes, prune(probes, restricts))
         .withColumn("__v", col(vecCol).cast("array<double>")),
       dotKernel.pairScore, Seq("__v"))
-    val pool = Knn.topKPerQuery(scored, kPool, "__qid", id, Knn.Dot)
+      .groupBy(col("__qid"), col(id))
+      .agg(max(col("score")).as("score"), first(col("__v")).as("__v"))
+    val pool = Knn.topKPerQuery(unique, kPool, "__qid", id, Knn.Dot)
     val cand = pool.select(col("__qid").cast("bigint").as("query_id"),
       col(id).cast("bigint").as("vec_id"), col("__v").as("v"),
       col("score").cast("double").as("sq"))
@@ -388,8 +393,9 @@ final class Serving private[operators] (
     * shared arithmetic site ([[Lexical.bm25TermScores]]); the dense
     * leg routes per query (f32 expression, exact below the router
     * threshold) over one In-list-pruned scan of the probed-leaf
-    * union; RRF, the per-query pool cuts, and the MMR recurrences
-    * are per-query windows/groups over ≤ kLex+kDense rows each.
+    * union, cut per query by [[top]]; RRF, the per-query pool cuts,
+    * and the MMR recurrences are per-query windows/groups over ≤
+    * kLex+kDense rows each.
     * Freshness/pinning semantics are [[searchHybrid]]'s (same
     * version-stamp gate, same delta-registry LWW, same `openAt`
     * file-set behavior).
@@ -459,12 +465,9 @@ final class Serving private[operators] (
     // the dense leg: the shared routed candidate pairs, restricts on
     // the pruned scan beside the leaf In-list
     val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe)
-    val dscored = collapse(pairs(probes, prune(probes, restricts)),
-      dotKernel.pairScore, Nil)
-    val drank = dscored.withColumn("rd", row_number().over(
-        Window.partitionBy("__qid").orderBy(col("score").desc, col(id))))
-      .filter(col("rd") <= kDense)
-      .select(col("__qid").as(qid), col(id), col("rd"))
+    val drank = top(pairs(probes, prune(probes, restricts)),
+        dotKernel.pairScore, lit(kDense))
+      .select(col("__qid").as(qid), col(id), col("rn").as("rd"))
     val fused = brank.join(drank, Seq(qid, id), "full_outer")
       .select(col(qid), col(id), rrf)
     val pool = fused.withColumn("rank", row_number().over(
@@ -738,23 +741,16 @@ final class Serving private[operators] (
   }
 
   /** BATCHED [[searchBqRerank]] — the two-stage shortlist-rescore
-    * for a query FRAME in one plan: the batch routes through the
-    * broadcast-f32 expression and In-list prunes exactly like
-    * [[searchBatch]], stage 1 scores every (candidate, query) pair's
-    * sign-dot over the 8 B codes and keeps each query's top-`m` ids
-    * (a per-query window limit — only m rows per query survive the
-    * rank), and stage 2 BROADCASTS the |Q|·m survivor pairs back
-    * onto the same pruned scan for the exact float rescore — the
-    * corpus is never shuffled; the only wide exchange is the
-    * window's per-query partitioning of candidate scores, the same
-    * shape every batch tail already pays. Crowding / metadata ride
-    * the shared [[tail]]; the PER-QUERY surface
-    * (`allowCol`/`attrs` allow-maps, `numCol`/`numAttrs` numeric
-    * restriction sets — the shared validated contracts) filters each
-    * (candidate, query) pair BEFORE the shortlist window, so every
-    * tenant's m slots hold rows that tenant may see. Output:
-    * identical contract to [[searchBatch]] —
-    * (qid, id[, metadata columns…], score, rn).
+    * for a query FRAME in one plan, routed and pruned like
+    * [[searchBatch]]: stage 1 keeps each query's top-`m` ids by the
+    * sign-dot over the 8 B codes (the partial top-k of [[top]], no
+    * window), stage 2 BROADCASTS the |Q|·m survivor pairs back onto
+    * the same pruned scan for the exact float rescore and ranks them
+    * in the shared [[tail]] — the corpus is never shuffled. The
+    * PER-QUERY surface (`allowCol`/`attrs`, `numCol`/`numAttrs`)
+    * filters each (candidate, query) pair BEFORE the shortlist cut, so
+    * every tenant's m slots hold rows that tenant may see. Output:
+    * identical contract to [[searchBatch]].
     */
   def searchBatchBqRerank(queries: DataFrame, qid: String,
       qvecCol: String, nProbe: Int, m: Int, k: Int,
@@ -777,24 +773,14 @@ final class Serving private[operators] (
     val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe,
       pq.columns)
     val side = prune(probes, restricts)
-    // stage 1: sign-dot per (candidate, query) pair over the codes
-    // only — the per-query filters sit BEFORE the shortlist window,
-    // so each tenant's m slots go to rows that tenant may see; spill
-    // copies collapse before the per-query window limit. Stage 2
-    // needs no re-filter: a surviving (qid, id) pair already passed.
-    val sl = collapse(pairs(probes, side, pq), signKernel.pairScore, Nil,
-        signKernel.scoreName)
-      .withColumn("__rn", row_number().over(Window
-        .partitionBy(col("__qid"))
-        .orderBy(col("__bq").desc, col(id))))
-      .filter(col("__rn") <= m)
+    // stage 1 over the codes only; stage 2 needs no re-filter: a
+    // surviving (qid, id) pair already passed the per-query filters
+    val sl = top(pairs(probes, side, pq), signKernel.pairScore, lit(m))
       .select(col("__qid"), col(id))
-    // stage 2: exact rescore of the |Q|·m survivors — the pair list
-    // broadcasts, the pruned scan is probed once more, corpus never
-    // shuffles. Rescore against the CHECKPOINTED query vectors, not a
-    // second evaluation of the caller's frame — a non-deterministic
-    // upstream plan would otherwise shortlist one set of vectors and
-    // rescore different ones
+    // stage 2: exact rescore of the |Q|·m survivors against the probe
+    // frame's MATERIALIZED query vectors, not a second evaluation of a
+    // non-deterministic caller's frame (which could shortlist one set
+    // of vectors and rescore different ones)
     val crowdAttr = crowding.map(_._1).toSeq
     val qframe = probes.select(col("__qid"), col("__qv"))
       .dropDuplicates("__qid")
@@ -802,7 +788,7 @@ final class Serving private[operators] (
       .select(Seq(col(id), col(vecCol)) ++ crowdAttr.map(col): _*)
       .join(broadcast(sl), Seq(id))
       .join(broadcast(qframe), Seq("__qid"))
-    tail(collapse(rescored, dotKernel.pairScore, crowdAttr), qid, k,
+    tail(scored(rescored, dotKernel.pairScore, crowdAttr), qid, k,
       crowding, metadata)
   }
 
@@ -1271,7 +1257,7 @@ final class Serving private[operators] (
       searchBatch(queries, qid, qvecCol, nProbe, k, restricts, crowding,
         metadata)
     else
-      tail(exactUnique(queryFrame(queries, qid, qvecCol, dotKernel),
+      tail(exactPairs(queryFrame(queries, qid, qvecCol, dotKernel),
           restricts, dotKernel, crowding.map(_._1).toSeq,
           fitsBroadcast(queries.select(col(qid)), maxBroadcastQueries)),
         qid, k, crowding, metadata)
@@ -1281,20 +1267,11 @@ final class Serving private[operators] (
     * find_neighbors: top-k for EVERY query row in one plan. Routing
     * runs as the broadcast-f32 probe expression over the query frame
     * (sublinear in leaf count past the router threshold, executor-
-    * resident matrix), candidates come from joining the held layout
-    * on `leaf_id`, spill copies collapse per (query, id), and
-    * per-query ranking is the window top-k. When the batch's probed
-    * leaf set is small (≤ 1024 distinct leaves) the layout side is
-    * additionally pre-filtered with a literal In-list so partition
-    * pruning reaches the scan — a small batch reads only its leaves,
-    * a huge batch degrades gracefully to the full shuffle join it
-    * genuinely needs.
-    *
-    * The routing pass runs ONCE: the probed frame is materialized
-    * (eager local checkpoint) before the distinct-leaf collect, and
-    * the candidate join reads the same blocks — at a 10⁶-query batch
-    * the routing pass is the cost, and an unmaterialized plan would
-    * silently pay it twice.
+    * resident matrix; once, on the driver for a small in-memory frame
+    * — [[probeFrame]]), candidates come from joining the held layout
+    * on `leaf_id` (≤ 1024 probed leaves reach the scan as an In-list),
+    * and per-query ranking is ONE partial top-k below one exchange
+    * ([[top]]: each partition sends at most k rows per query).
     *
     * ROUTING PARITY CAVEAT: this path routes with the float32
     * broadcast matrix ([[IvfIndex.probeExprF32]]); [[search]] routes
@@ -1322,7 +1299,8 @@ final class Serving private[operators] (
     * row-group granularity), a per-(query, attribute-value) crowding
     * cap, and the metadata join appended to the ranked rows — the
     * batched mirror of the 10-arg [[IvfIndex.searchDf]], same
-    * conventions per query.
+    * conventions per query; the cap and top-k run in the one partial
+    * aggregate of [[top]], no window.
     *
     * Output: (`qid`, id, metadata columns…, score, rn), rn 1-based
     * per query by (score desc, id), rows ordered (`qid`, rn).
@@ -1350,7 +1328,7 @@ final class Serving private[operators] (
     * override is ONE `slice` of the already-computed array — routing
     * cost is paid once at the global bound, the override costs
     * nothing extra. Everything downstream (In-list pruning, candidate
-    * join, spill collapse, tail) is [[searchBatch]] verbatim.
+    * join, tail) is [[searchBatch]] verbatim.
     *
     * Output: identical contract to the 8-arg [[searchBatch]].
     */
@@ -1403,7 +1381,7 @@ final class Serving private[operators] (
     * plan here too. `k` (and the crowding tuple's cap) stay the
     * GLOBAL upper bounds: the effective per-query limit is
     * least(global, per-query), so a hostile row can never widen the
-    * window the plan sizes for.
+    * heap the plan sizes for.
     *
     * `numCol` / `numAttrs` (optional) add the reference's PER-QUERY
     * NUMERIC restrictions (`numeric_restricts` — name + value +
@@ -1965,7 +1943,7 @@ final class Serving private[operators] (
         limits
     def restrictCols: Seq[String] =
       allowCol.map(_ => "__allow").toSeq ++ numCol.map(_ => "__numr").toSeq
-    /** The limit columns the spill collapse carries to the tail. */
+    /** The limit columns the scored pairs carry to the tail. */
     def carried: Seq[String] =
       kCol.map(_ => "__k").toSeq ++ capCol.map(_ => "__cap").toSeq
     /** The per-(candidate, query) pair filters. An allow column with
@@ -2026,11 +2004,12 @@ final class Serving private[operators] (
     * per-query columns and the kernel's columns. Routing runs as the
     * broadcast-f32 probe expression ([[IvfIndex.probeExprF32]]) at the
     * global bound, or, with `slice` (a per-query probe count), as
-    * ONE `slice` of that rank-ordered array. The frame is materialized
-    * (eager local checkpoint) before anything reads it, so the
-    * distinct-leaf collect and the candidate join read the same
-    * blocks — at a 10⁶-query batch the routing pass is the cost, and
-    * an unmaterialized plan would silently pay it twice.
+    * ONE `slice` of that rank-ordered array. An in-memory frame of at
+    * most [[IvfIndex.MaxSingleRows]] (query, leaf) rows routes on the
+    * driver ([[Shims.explodeLocal]]: no Spark job); any other is
+    * materialized (eager local checkpoint) before the distinct-leaf
+    * collect and the candidate join read it, so the routing pass — the
+    * cost of a 10⁶-query batch — runs once.
     */
   private def probeFrame(queries: DataFrame, qid: String, qvecCol: String,
       kernel: Serving.Kernel, nProbe: Int, perQuery: Seq[Column] = Nil,
@@ -2052,13 +2031,15 @@ final class Serving private[operators] (
 
   private def route(decorated: DataFrame, kernel: Serving.Kernel,
       nProbe: Int, sliced: Boolean): DataFrame = {
-    val probe = IvfIndex.probeExprF32(model, col(kernel.qv),
-      math.max(1, nProbe))
-    decorated
-      .withColumn("leaf_id", explode(
-        if (sliced) slice(probe, lit(1), col("__np")) else probe))
-      .drop("__qraw", "__np")
-      .localCheckpoint(true)
+    val np = math.max(1, nProbe)
+    val probe = IvfIndex.probeExprF32(model, col(kernel.qv), np)
+    val routed = decorated.select(decorated.columns
+        .filterNot(Set("__qraw", "__np")).map(col).toSeq :+
+      (if (sliced) slice(probe, lit(1), col("__np")) else probe)
+        .as("leaf_id"): _*)
+    Shims.explodeLocal(routed, IvfIndex.MaxSingleRows / np).getOrElse(
+      routed.withColumn("leaf_id", explode(col("leaf_id")))
+        .localCheckpoint(true))
   }
 
   /** The leaf-PRUNED layout scan with the batch-wide `restricts` on
@@ -2076,10 +2057,14 @@ final class Serving private[operators] (
         data.filter(col("leaf_id").isin(leaves: _*))
       else data)(_ filter _)
 
-  /** [[prune]] to a probe frame's distinct leaves (a bounded collect). */
+  /** [[prune]] to a probe frame's distinct leaves: read off a local
+    * frame, else a bounded collect. */
   private def prune(probes: DataFrame, restricts: Seq[Column]): DataFrame =
-    prune(probes.select("leaf_id").distinct().limit(IvfIndex.MaxInList + 1)
-      .collect().map(_.getInt(0)).toSeq, restricts)
+    prune(probes.queryExecution.logical match {
+      case l: LocalRelation => l.data.map(_.getInt(l.output.length - 1)).distinct
+      case _ => probes.select("leaf_id").distinct()
+        .limit(IvfIndex.MaxInList + 1).collect().map(_.getInt(0)).toSeq
+    }, restricts)
 
   /** Candidate PAIRS: the pruned `side` joined to the probe frame on
     * `leaf_id`, then the per-(candidate, query) filters — codegen'd
@@ -2089,37 +2074,32 @@ final class Serving private[operators] (
       pq: PerQuery = PerQuery()): DataFrame =
     pq.preds.foldLeft(side.join(probes, Seq("leaf_id")))(_ filter _)
 
-  /** SPILL COLLAPSE: score each pair as `name` and keep ONE row per
-    * (query, id) — a vector stored in two probed leaves is one
-    * candidate; `carried` columns are per-(query, id) constants. */
-  private def collapse(pairs: DataFrame, score: Column,
-      carried: Seq[String], name: String = "score"): DataFrame = {
-    val aggs = max(col(name)).as(name) +: carried.map(a => first(col(a)).as(a))
-    pairs.select(Seq(col("__qid"), col(id), score.as(name)) ++
-        carried.map(col): _*)
-      .groupBy(col("__qid"), col(id))
-      .agg(aggs.head, aggs.tail: _*)
-  }
+  /** Each pair scored as "score": (__qid, id, score, `carried`…), one
+    * row per (query, stored copy) — spill copies collapse in [[top]]. */
+  private def scored(pairs: DataFrame, score: Column,
+      carried: Seq[String]): DataFrame =
+    pairs.select(Seq(col("__qid"), col(id), score.as("score")) ++
+      carried.map(col): _*)
 
-  /** The probed candidate core: route, prune, pair filter, score,
-    * collapse → (__qid, id, score[, crowdAttr][, __k][, __cap]). */
-  private def probedUnique(queries: DataFrame, qid: String, qvecCol: String,
+  /** The probed candidate core: route, prune, pair filter, score →
+    * (__qid, id, score[, crowdAttr][, __k][, __cap]). */
+  private def probedPairs(queries: DataFrame, qid: String, qvecCol: String,
       kernel: Serving.Kernel, nProbe: Int, restricts: Seq[Column],
       crowding: Option[(String, Int)], pq: PerQuery,
       slice: Option[Column] = None): DataFrame = {
     val probes = probeFrame(queries, qid, qvecCol, kernel, nProbe,
       pq.columns, slice)
-    collapse(pairs(probes, prune(probes, restricts), pq), kernel.pairScore,
+    scored(pairs(probes, prune(probes, restricts), pq), kernel.pairScore,
       crowding.map(_._1).toSeq ++ pq.carried)
   }
 
-  /** A whole probed batch: [[probedUnique]] → [[tail]]. */
+  /** A whole probed batch: [[probedPairs]] → [[tail]]. */
   private def batch(queries: DataFrame, qid: String, qvecCol: String,
       kernel: Serving.Kernel, nProbe: Int, k: Int, restricts: Seq[Column],
       crowding: Option[(String, Int)],
       metadata: Option[(DataFrame, String)], pq: PerQuery = PerQuery(),
       slice: Option[Column] = None): DataFrame =
-    tail(probedUnique(queries, qid, qvecCol, kernel, nProbe, restricts,
+    tail(probedPairs(queries, qid, qvecCol, kernel, nProbe, restricts,
       crowding, pq, slice), qid, k, crowding, metadata, pq, kernel.scoreName)
 
   /** The EXACT escape: every (row of the stats-skipped `restricts`
@@ -2128,13 +2108,13 @@ final class Serving private[operators] (
     * [[fitsBroadcast]]); past that the pair generation degrades to the
     * shuffled cartesian (SHUFFLE_REPLICATE_NL) — same pairs, same
     * results, no driver-side collect of the query frame. */
-  private def exactUnique(qs: DataFrame, restricts: Seq[Column],
+  private def exactPairs(qs: DataFrame, restricts: Seq[Column],
       kernel: Serving.Kernel, carried: Seq[String],
       small: Boolean): DataFrame = {
     val side = restricts.foldLeft(data)(_ filter _)
     val paired = if (small) side.crossJoin(broadcast(qs))
       else side.crossJoin(qs.hint("shuffle_replicate_nl"))
-    collapse(paired, kernel.pairScore, carried)
+    scored(paired, kernel.pairScore, carried)
   }
 
   /** Whether a query frame provably fits a broadcast — a bounded
@@ -2156,9 +2136,8 @@ final class Serving private[operators] (
     * constraints as pushed scan predicates ([[allowMapPredicates]] ++
     * [[numSetPredicates]] — what makes the escape an escape: the scan
     * reads only the files the stats could not skip); everything else
-    * rides the probed plan. Both sides collapse to one row per
-    * (query, id) and meet in ONE tail. One broadcast-size probe
-    * governs every exact set. */
+    * rides the probed plan. Both sides' scored pairs meet in ONE
+    * tail. One broadcast-size probe governs every exact set. */
   private def adaptiveBatch(queries: DataFrame, qid: String,
       qvecCol: String, kernel: Serving.Kernel, nProbe: Int, k: Int,
       restricts: Seq[Column], crowding: Option[(String, Int)],
@@ -2173,13 +2152,13 @@ final class Serving private[operators] (
         crowding, metadata, pq)
     val keyed = queries.withColumn("__mkey", mkey)
     val exactKeys = exactSets.map(_._1)
-    val probed = probedUnique(
+    val probed = probedPairs(
       keyed.filter(!col("__mkey").isin(exactKeys: _*)).drop("__mkey"),
       qid, qvecCol, kernel, nProbe, restricts, crowding, pq)
     val small = fitsBroadcast(keyed.filter(col("__mkey").isin(exactKeys: _*))
       .select(col(qid)), maxBroadcastQueries)
     val exact = exactSets.map { case (key, m, n) =>
-      exactUnique(queryFrame(keyed.filter(col("__mkey") === key), qid,
+      exactPairs(queryFrame(keyed.filter(col("__mkey") === key), qid,
           qvecCol, kernel, pq),
         restricts ++ allowMapPredicates(m) ++ numSetPredicates(n), kernel,
         crowding.map(_._1).toSeq ++ pq.carried, small)
@@ -2188,34 +2167,20 @@ final class Serving private[operators] (
       metadata, pq, kernel.scoreName)
   }
 
-  /** The ONE batch tail — crowding cap → per-query top-k → metadata
-    * join — shared by every routed and exact batch plan:
-    * `unique` carries (__qid, id, score[, crowdAttr][, __k][, __cap])
-    * with ONE row per (query, id). Ranking is (score desc, id); a
-    * per-query `__k` / `__cap` makes the limit least(global,
-    * per-query). Output: (`qid`, id[, metadata columns…],
-    * `scoreName`, rn), rn 1-based per query.
-    */
-  private def tail(unique: DataFrame, qid: String, k: Int,
+  /** The ONE batch tail — [[top]] → metadata join — of every routed
+    * and exact batch plan over `scored` (__qid, id, score[, crowdAttr]
+    * [, __k][, __cap]); a per-query `__k` / `__cap` makes the limit
+    * least(global, per-query). Output: (`qid`, id[, metadata
+    * columns…], `scoreName`, rn), rn 1-based per query. */
+  private def tail(scored: DataFrame, qid: String, k: Int,
       crowding: Option[(String, Int)],
       metadata: Option[(DataFrame, String)], pq: PerQuery = PerQuery(),
       scoreName: String = "score"): DataFrame = {
     def limit(global: Int, perQuery: Option[String], c: String): Column =
       perQuery.fold(lit(global))(_ => least(lit(global), col(c)))
-    val crowded = crowding match {
-      case Some((attr, cap)) =>
-        val w = Window.partitionBy(col("__qid"), col(attr))
-          .orderBy(col("score").desc, col(id))
-        unique.withColumn("crn", row_number().over(w))
-          .filter(col("crn") <= limit(cap, pq.capCol, "__cap"))
-          .drop("crn").drop(attr)
-      case None => unique
-    }
-    val wq = Window.partitionBy("__qid").orderBy(col("score").desc, col(id))
-    val ranked = crowded.select(Seq(col("__qid"), col(id), col("score")) ++
-        pq.kCol.map(_ => col("__k")): _*)
-      .withColumn("rn", row_number().over(wq).cast("bigint"))
-      .filter(col("rn") <= limit(k, pq.kCol, "__k"))
+    val ranked = top(scored, col("score"), limit(k, pq.kCol, "__k"),
+      crowding.map { case (attr, cap) =>
+        (col(attr), limit(cap, pq.capCol, "__cap")) })
     val out = metadata match {
       case Some((meta, key)) =>
         val metaCols = meta.columns.filterNot(_ == key).toSeq
@@ -2225,13 +2190,23 @@ final class Serving private[operators] (
             metaCols.map(c => col(s"__m.$c")) ++:
             Seq(col("__r.score"), col("__r.rn")): _*)
           .orderBy(col(qid), col("rn"))
-      case None =>
-        ranked.withColumnRenamed("__qid", qid)
-          .select(col(qid), col(id), col("score"), col("rn"))
+      case None => ranked.withColumnRenamed("__qid", qid)
     }
-    if (scoreName == "score") out
-    else out.withColumnRenamed("score", scoreName)
+    out.withColumnRenamed("score", scoreName)
   }
+
+  /** Each query's (__qid, id, score, rn) by (score desc, id): ONE
+    * partial [[TopKCrowded]] per `__qid` (spill copies one id, ≤ cap per
+    * value, ≤ k rows), so ≤ k rows per query leave each partition. */
+  private def top(pairs: DataFrame, score: Column, k: Column,
+      crowd: Option[(Column, Column)] = None): DataFrame =
+    // scored in a (codegen) projection, not per row inside the heap
+    pairs.withColumn("__s", score).groupBy(col("__qid"))
+      .agg(TopKCrowded.column(col("__s"), col(id), crowd.map(_._1), k,
+        crowd.fold(lit(Int.MaxValue))(_._2)).as("__top"))
+      .select(col("__qid"), posexplode(col("__top")))
+      .select(col("__qid"), col("col.id").as(id),
+        col("col.score").as("score"), (col("pos") + 1).cast("bigint").as("rn"))
 
   def numLeaves: Int = model.centroids.length
 }

@@ -1,9 +1,10 @@
 package org.apache.spark.sql
 package graftshim
 
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, Literal, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BloomFilterMightContain, Expression, GenericInternalRow, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{BinaryType, IntegerType}
 
 /** Bridge into `private[sql]` Column↔Expression converters — the same
   * pattern public Spark extension libraries use to expose custom
@@ -36,4 +37,20 @@ object Shims {
   def bloomMightContain(bloom: Array[Byte], c: Column): Column =
     column(BloomFilterMightContain(Literal(bloom, BinaryType),
       new XxHash64(Seq(expression(c)))))
+
+  /** `df` with its last column (array<int>) exploded into a
+    * LocalRelation when `df` optimizes to one of at most `maxRows` rows
+    * (Spark folds a projection over local rows on the driver): no job. */
+  def explodeLocal(df: DataFrame, maxRows: Long): Option[DataFrame] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.length <= maxRows =>
+        val at = l.output.length - 1
+        val rows = for (r <- l.data if !r.isNullAt(at); a = r.getArray(at);
+            j <- 0 until a.numElements()) yield
+          new GenericInternalRow((r.toSeq(l.schema).init :+ a.getInt(j)).toArray)
+        Some(classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+          LocalRelation(l.output.init.map(_.newInstance()) :+ AttributeReference(
+            l.output(at).name, IntegerType, nullable = false)(), rows)))
+      case _ => None
+    }
 }

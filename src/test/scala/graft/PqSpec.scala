@@ -308,4 +308,57 @@ class PqSpec extends SparkTestBase {
           s"batch=${batch(qid)}\nper=$per")
     }
   }
+
+  test("codebook and rotation sidecars load on the driver, and an empty " +
+      "codebook fails loudly naming its dir") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val emb = Tables.embeddings(spark, sf)
+    val cb = ProductQuantizer.trainCodebooks(emb, "vec_id", "embedding")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pq_sidecar").toString + "/idx"
+    ProductQuantizer.writeCodebook(spark, dir, cb)
+    val basis = Array.tabulate(4, 4)((i, j) => if (i == j) 1.0 else 0.0)
+    ProductQuantizer.writeRotation(spark, dir, basis)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            Option(p.getProperty("spark.job.tags")).exists(
+              _.split(",").contains("pq-sidecar-end")))) marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val (loaded, rot) = try {
+      val out = (ProductQuantizer.loadCodebook(spark, dir),
+        ProductQuantizer.loadRotation(spark, dir))
+      // listener events arrive in order: the marker flushes the bus
+      sc.addJobTag("pq-sidecar-end")
+      sc.parallelize(Seq(1), 1).count()
+      sc.removeJobTag("pq-sidecar-end")
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"sidecar loads ran ${jobs.get} Spark jobs")
+    assert(loaded.zip(cb).forall { case (a, b) => java.util.Arrays.equals(a, b) })
+    assert(rot.get.zip(basis).forall { case (a, b) => java.util.Arrays.equals(a, b) })
+
+    // a codebook sidecar with no rows: loud, and the message names it
+    val empty = java.nio.file.Files
+      .createTempDirectory("graft_pq_empty").toString + "/idx"
+    ProductQuantizer.writeCodebook(spark, empty, cb)
+    spark.read.parquet(ProductQuantizer.codebookDir(empty)).limit(0)
+      .write.mode("overwrite").parquet(empty + "/_tmp_cb")
+    val fs = new org.apache.hadoop.fs.Path(empty)
+      .getFileSystem(sc.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(ProductQuantizer.codebookDir(empty)), true)
+    fs.rename(new org.apache.hadoop.fs.Path(empty + "/_tmp_cb"),
+      new org.apache.hadoop.fs.Path(ProductQuantizer.codebookDir(empty)))
+    val e = intercept[IllegalStateException] {
+      ProductQuantizer.loadCodebook(spark, empty)
+    }
+    assert(e.getMessage.contains(ProductQuantizer.codebookDir(empty)) &&
+      e.getMessage.contains("no rows"), e.getMessage)
+  }
 }
