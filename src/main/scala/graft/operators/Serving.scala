@@ -2006,10 +2006,14 @@ final class Serving private[operators] (
     * global bound, or, with `slice` (a per-query probe count), as
     * ONE `slice` of that rank-ordered array. An in-memory frame of at
     * most [[IvfIndex.MaxSingleRows]] (query, leaf) rows routes on the
-    * driver ([[Shims.explodeLocal]]: no Spark job); any other is
-    * materialized (eager local checkpoint) before the distinct-leaf
-    * collect and the candidate join read it, so the routing pass — the
-    * cost of a 10⁶-query batch — runs once.
+    * driver ([[Shims.explodeLocal]]: no Spark job); the probe column
+    * is added only after that bound is checked, because Spark folds a
+    * projection over local rows on one driver thread. Any other frame
+    * routes on the executors and is materialized (eager local
+    * checkpoint) before the distinct-leaf collect and the candidate
+    * join read it, so the routing pass — the cost of a 10⁶-query
+    * batch — runs once. Whole in-memory batches favoured the driver
+    * at 1k and 8k (query, leaf) rows and split at 64k (4 cpus).
     */
   private def probeFrame(queries: DataFrame, qid: String, qvecCol: String,
       kernel: Serving.Kernel, nProbe: Int, perQuery: Seq[Column] = Nil,
@@ -2033,13 +2037,15 @@ final class Serving private[operators] (
       nProbe: Int, sliced: Boolean): DataFrame = {
     val np = math.max(1, nProbe)
     val probe = IvfIndex.probeExprF32(model, col(kernel.qv), np)
-    val routed = decorated.select(decorated.columns
-        .filterNot(Set("__qraw", "__np")).map(col).toSeq :+
-      (if (sliced) slice(probe, lit(1), col("__np")) else probe)
-        .as("leaf_id"): _*)
-    Shims.explodeLocal(routed, IvfIndex.MaxSingleRows / np).getOrElse(
-      routed.withColumn("leaf_id", explode(col("leaf_id")))
-        .localCheckpoint(true))
+    val leaves = if (sliced) slice(probe, lit(1), col("__np")) else probe
+    val keep = decorated.columns.filterNot(Set("__qraw", "__np")).map(col).toSeq
+    Shims.localRows(decorated) match {
+      case Some((local, n)) if n.toLong * np <= IvfIndex.MaxSingleRows =>
+        Shims.explodeLocal(local.select(keep :+ leaves.as("leaf_id"): _*))
+      case local => local.fold(decorated)(_._1)
+        .select(keep :+ explode(leaves).as("leaf_id"): _*)
+        .localCheckpoint(true)
+    }
   }
 
   /** The leaf-PRUNED layout scan with the batch-wide `restricts` on

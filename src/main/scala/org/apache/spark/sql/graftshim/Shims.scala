@@ -38,19 +38,30 @@ object Shims {
     column(BloomFilterMightContain(Literal(bloom, BinaryType),
       new XxHash64(Seq(expression(c)))))
 
-  /** `df` with its last column (array<int>) exploded into a
-    * LocalRelation when `df` optimizes to one of at most `maxRows` rows
-    * (Spark folds a projection over local rows on the driver): no job. */
-  def explodeLocal(df: DataFrame, maxRows: Long): Option[DataFrame] =
+  /** `df` on (a fresh instance of) the LocalRelation it optimizes to,
+    * with its row count, or None when it reads anything else. Spark
+    * folds a projection over local rows on the driver. */
+  def localRows(df: DataFrame): Option[(DataFrame, Int)] =
     df.queryExecution.optimizedPlan match {
-      case l: LocalRelation if l.data.length <= maxRows =>
+      case l: LocalRelation => Some((classic.Dataset.ofRows(
+        df.sparkSession.asInstanceOf[classic.SparkSession], l.newInstance()),
+        l.data.length))
+      case _ => None
+    }
+
+  /** `df`, a projection over local rows, with its last column
+    * (array<int>) exploded into a LocalRelation on the driver: no job. */
+  def explodeLocal(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
         val at = l.output.length - 1
         val rows = for (r <- l.data if !r.isNullAt(at); a = r.getArray(at);
             j <- 0 until a.numElements()) yield
           new GenericInternalRow((r.toSeq(l.schema).init :+ a.getInt(j)).toArray)
-        Some(classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+        classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
           LocalRelation(l.output.init.map(_.newInstance()) :+ AttributeReference(
-            l.output(at).name, IntegerType, nullable = false)(), rows)))
-      case _ => None
+            l.output(at).name, IntegerType, nullable = false)(), rows))
+      case p => throw new IllegalArgumentException(
+        s"explodeLocal: the frame does not fold to local rows:\n$p")
     }
 }

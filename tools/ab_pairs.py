@@ -19,7 +19,9 @@ the run's end-to-end metrics (those BENCHMARK.json lists), so every pair
 can be recorded.
 
 Exits 2 on an empty seed range, on a run that prints no result line,
-and on a result that reads `correct: false`.
+and on a result that reads `correct: false`; before a failed run exits,
+the lines of every run completed so far are printed and the failed run
+is named.
 """
 import argparse
 import json
@@ -32,6 +34,10 @@ import sys
 def fail(msg):
     print(f"ab_pairs: {msg}", file=sys.stderr)
     sys.exit(2)
+
+
+class RunFailed(Exception):
+    """A run with no result line or with `correct: false`."""
 
 
 def seeds_of(spec):
@@ -57,11 +63,11 @@ def run_once(checkout, workload, seed, seconds, trace):
                           stdin=subprocess.DEVNULL, text=True)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
     if not lines or not lines[-1].startswith('{"correct"'):
-        fail(f"{checkout} seed {seed}: no result line (exit {proc.returncode})")
+        raise RunFailed(f"no result line (exit {proc.returncode})")
     result = json.loads(lines[-1])
     if not result.get("correct", False):
-        fail(f"{checkout} seed {seed}: correct: false ({result.get('failed')} "
-             f"of {result.get('attempted')} operations failed)")
+        raise RunFailed(f"correct: false ({result.get('failed')} of "
+                        f"{result.get('attempted')} operations failed)")
     load = None
     for l in lines:
         if l.startswith('{"env"'):
@@ -105,17 +111,22 @@ def main():
         if not os.path.exists(os.path.join(path, "perfbench", "run.py")):
             fail(f"{name} checkout {path} has no perfbench/run.py")
 
+    better, e2e = benchmark_spec(sides["change"])
     runs = []  # (seed, side, order, {metric: value}, loadavg)
     for seed in seeds:
         order = ["parent", "change"] if seed % 2 == 0 else ["change", "parent"]
         for i, side in enumerate(order):
-            result, load = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
+            try:
+                result, load = run_once(sides[side], a.workload, seed,
+                                        a.seconds, a.trace)
+            except RunFailed as e:
+                print_runs(runs, e2e)
+                fail(f"seed {seed} {side} ({i + 1} of 2, {sides[side]}): {e}")
             values = {k: v["value"] for k, v in result["metrics"].items()}
             runs.append((seed, side, i + 1, values, load))
             print(f"ab_pairs: seed {seed} {side} ({i + 1} of 2) loadavg_start "
                   f"{load}", file=sys.stderr)
 
-    better, e2e = benchmark_spec(sides["change"])
     by = {(s, side): m for s, side, _, m, _ in runs}
     names = sorted({k for _, _, _, m, _ in runs for k in m})
     print(f"{a.workload}: {len(seeds)} pairs, seeds {seeds[0]}-{seeds[-1]}, "
@@ -140,6 +151,11 @@ def main():
             won, verdict = "n/a", "n/a"
         print(f"{name:34} {f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':>30} "
               f"{f'{cm:.4g} [{c1:.4g}, {c3:.4g}]':>30} {won:>6} {verdict:>8}")
+    print_runs(runs, e2e)
+
+
+def print_runs(runs, e2e):
+    """One line per run: seed, side, order, loadavg_start, end-to-end values."""
     print(f"runs (seed side order loadavg_start {' '.join(e2e)}):")
     for seed, side, order, m, load in runs:
         vals = " ".join(f"{m[n]:.4g}" if n in m else "-" for n in e2e)
