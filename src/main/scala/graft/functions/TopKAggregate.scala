@@ -158,8 +158,9 @@ object TopKByScore {
   * Children: `score` (double), `id` (any atomic type), an optional
   * crowding attribute, and the limits `k` and `cap` — per-row int
   * expressions (`least(lit, col)` on a batch with per-query limits),
-  * read from a group's first row; null means unbounded. Output: the
-  * kept (score, id) structs, best first, at most k.
+  * read from a group's first row; null means unbounded; and an
+  * optional shortlist (see below). Output: the kept (score, id)
+  * structs, best first, at most k.
   *
   * Ordering is Spark's: score descending by
   * [[SQLOrderingUtil.compareDoubles]] (NaN highest, −0.0 == 0.0),
@@ -187,16 +188,26 @@ object TopKByScore {
   * buffer applies this to the copies it holds, so for such an id the
   * outcome can depend on which copies share a partition; it is
   * deterministic when they share one.
+  *
+  * SHORTLIST mode (`shortlist` = (shortlist score s, m)): buffers and
+  * the merge PRUNE by (s desc, id, score desc, attribute) with k = m
+  * and no cap — each group's m best ids by s, one copy each, carrying
+  * its own score and attribute — and the final list re-ranks those
+  * survivors by score under the walk above with the group's k and cap.
+  * The order is total, so copies that disagree (a pinned handle's two
+  * versions of an id) resolve the same under any partitioning: the
+  * copy with the best s is served, not the one with the best score.
   */
 case class TopKCrowded(score: Expression, id: Expression,
     attr: Option[Expression], k: Expression, cap: Expression,
+    shortlist: Option[(Expression, Int)] = None,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[TopKCrowded.Buf] {
   import TopKCrowded.{Buf, Entry}
 
   override def children: Seq[Expression] =
-    Seq(score, id) ++ attr.toSeq ++ Seq(k, cap)
+    Seq(score, id) ++ attr.toSeq ++ Seq(k, cap) ++ shortlist.map(_._1)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType),
@@ -207,28 +218,27 @@ case class TopKCrowded(score: Expression, id: Expression,
   @transient private lazy val idOrd = TypeUtils.getInterpretedOrdering(id.dataType)
   @transient private lazy val attrOrd =
     attr.map(a => TypeUtils.getInterpretedOrdering(a.dataType))
-  @transient private lazy val toUnsafe =
-    UnsafeProjection.create(Array[DataType](DoubleType, id.dataType, attrType))
+  @transient private lazy val toUnsafe = UnsafeProjection.create(
+    Array[DataType](DoubleType, id.dataType, attrType) ++ shortlist.map(_ => DoubleType))
 
   private def nullsFirst(o: Ordering[Any], x: Any, y: Any): Int =
     if (x == null) { if (y == null) 0 else -1 }
     else if (y == null) 1
     else o.compare(x, y)
 
-  /** Score against score only: < 0 when `a` ranks first. */
-  private def byScore(a: Entry, b: Entry): Int =
-    if (a.nullScore) { if (b.nullScore) 0 else 1 }
-    else if (b.nullScore) -1
-    else SQLOrderingUtil.compareDoubles(b.score, a.score)
+  /** Score against score, nulls last: < 0 when `a` ranks first. */
+  private def desc(aNull: Boolean, a: Double, bNull: Boolean, b: Double): Int =
+    if (aNull) { if (bNull) 0 else 1 }
+    else if (bNull) -1
+    else SQLOrderingUtil.compareDoubles(b, a)
 
   /** The keep-order: < 0 when `a` ranks first. */
   private def cmp(a: Entry, b: Entry): Int = {
-    val s = byScore(a, b)
-    if (s != 0) s
-    else {
-      val i = nullsFirst(idOrd, a.id, b.id)
-      if (i != 0) i else attrOrd.fold(0)(nullsFirst(_, a.attr, b.attr))
-    }
+    var c = desc(a.nullScore, a.score, b.nullScore, b.score)
+    if (c == 0) c = nullsFirst(idOrd, a.id, b.id)
+    if (c == 0 && shortlist.nonEmpty)
+      c = desc(a.nullExact, a.exact, b.nullExact, b.exact)
+    if (c == 0) attrOrd.fold(0)(nullsFirst(_, a.attr, b.attr)) else c
   }
   private def sameId(a: Entry, b: Entry): Boolean = nullsFirst(idOrd, a.id, b.id) == 0
   private def sameAttr(a: Entry, b: Entry): Boolean =
@@ -236,11 +246,16 @@ case class TopKCrowded(score: Expression, id: Expression,
 
   override def createAggregationBuffer(): Buf = new Buf
 
-  /** PRUNE(buffer ∪ {e}) in place; the buffer is kept best first. */
-  private def insert(buf: Buf, e: Entry): Unit = {
+  /** The limits a buffer PRUNEs under: the group's, or (m, no cap). */
+  private def keepK(buf: Buf): Int = shortlist.fold(buf.k)(_._2)
+  private def keepCap(buf: Buf): Int = if (shortlist.isEmpty) buf.cap else Int.MaxValue
+
+  /** PRUNE(buffer ∪ {e}) under (k, cap) in place; the buffer is kept
+    * best first. */
+  private def insert(buf: Buf, e: Entry, k: Int, cap: Int): Unit = {
     val rows = buf.rows
     val n = rows.length
-    if (buf.k <= 0 || (n >= buf.k && cmp(e, rows(n - 1)) >= 0)) return
+    if (k <= 0 || (n >= k && cmp(e, rows(n - 1)) >= 0)) return
     var lo = 0
     var hi = n
     while (lo < hi) {
@@ -257,24 +272,24 @@ case class TopKCrowded(score: Expression, id: Expression,
       if (sameAttr(r, e)) same += 1
       i += 1
     }
-    if (same >= buf.cap) return
+    if (same >= cap) return
     i = p
     while (i < rows.length && !sameId(rows(i), e)) i += 1
     if (i < rows.length) rows.remove(i)
     rows.insert(p, e)
     // the value may now hold cap + 1 rows: its weakest leaves
-    if (attr.nonEmpty && buf.cap < Int.MaxValue) {
+    if (attr.nonEmpty && cap < Int.MaxValue) {
       same += 1
       i = p + 1
-      while (i < rows.length && same <= buf.cap) {
+      while (i < rows.length && same <= cap) {
         if (sameAttr(rows(i), e)) {
           same += 1
-          if (same > buf.cap) rows.remove(i)
+          if (same > cap) rows.remove(i)
         }
         i += 1
       }
     }
-    if (rows.length > buf.k) rows.remove(buf.k, rows.length - buf.k)
+    if (rows.length > k) rows.remove(k, rows.length - k)
   }
 
   private def limit(e: Expression, input: InternalRow): Int = {
@@ -285,32 +300,43 @@ case class TopKCrowded(score: Expression, id: Expression,
   override def update(buf: Buf, input: InternalRow): Buf = {
     if (buf.k < 0) { buf.k = limit(k, input); buf.cap = limit(cap, input) }
     if (buf.k <= 0) return buf
-    val s = score.eval(input)
+    val s = shortlist.fold(score)(_._1).eval(input)
     val rows = buf.rows
     // the common case: a full buffer whose weakest row strictly beats
     // this score rejects it before the id is read
-    if (rows.length >= buf.k) {
+    if (rows.length >= keepK(buf)) {
       val w = rows(rows.length - 1)
       if (!w.nullScore && (s == null ||
           SQLOrderingUtil.compareDoubles(s.asInstanceOf[Double], w.score) < 0))
         return buf
     }
+    val x = if (shortlist.isEmpty) null else score.eval(input)
     insert(buf, new Entry(if (s == null) 0.0 else s.asInstanceOf[Double],
       s == null, InternalRow.copyValue(id.eval(input)),
-      attr.map(a => InternalRow.copyValue(a.eval(input))).orNull))
+      attr.map(a => InternalRow.copyValue(a.eval(input))).orNull,
+      if (x == null) 0.0 else x.asInstanceOf[Double], x == null),
+      keepK(buf), keepCap(buf))
     buf
   }
 
   override def merge(buf: Buf, other: Buf): Buf = {
     if (buf.k < 0) { buf.k = other.k; buf.cap = other.cap }
-    other.rows.foreach(insert(buf, _))
+    other.rows.foreach(insert(buf, _, keepK(buf), keepCap(buf)))
     buf
   }
 
-  override def eval(buf: Buf): Any =
-    new GenericArrayData(buf.rows.map { e =>
+  override def eval(buf: Buf): Any = {
+    // a shortlist's ≤ m survivors (one copy per id) re-rank by score
+    val ranked = if (shortlist.isEmpty) buf else {
+      val r = new Buf
+      buf.rows.foreach(e => insert(r, new Entry(e.exact, e.nullExact, e.id,
+        e.attr, e.exact, e.nullExact), buf.k, buf.cap))
+      r
+    }
+    new GenericArrayData(ranked.rows.map { e =>
       InternalRow(if (e.nullScore) null else e.score, e.id)
     }.toArray[Any])
+  }
 
   override def serialize(buf: Buf): Array[Byte] = {
     val bytes = new java.io.ByteArrayOutputStream()
@@ -320,7 +346,8 @@ case class TopKCrowded(score: Expression, id: Expression,
     out.writeInt(buf.rows.length)
     buf.rows.foreach { e =>
       val row = toUnsafe(new GenericInternalRow(Array[Any](
-        if (e.nullScore) null else e.score, e.id, e.attr)))
+        if (e.nullScore) null else e.score, e.id, e.attr) ++
+        shortlist.map(_ => if (e.nullExact) null else e.exact)))
       out.writeInt(row.getSizeInBytes)
       out.write(row.getBytes)
     }
@@ -338,12 +365,14 @@ case class TopKCrowded(score: Expression, id: Expression,
     while (i < n) {
       val b = new Array[Byte](in.readInt())
       in.readFully(b)
-      val row = new UnsafeRow(3)
+      val row = new UnsafeRow(3 + shortlist.size)
       row.pointTo(b, b.length)
+      val noExact = shortlist.isEmpty || row.isNullAt(3)
       // a serialized buffer is already PRUNEd and best first
       buf.rows += new Entry(if (row.isNullAt(0)) 0.0 else row.getDouble(0),
         row.isNullAt(0), InternalRow.copyValue(row.get(1, id.dataType)),
-        InternalRow.copyValue(row.get(2, attrType)))
+        InternalRow.copyValue(row.get(2, attrType)),
+        if (noExact) 0.0 else row.getDouble(3), noExact)
       i += 1
     }
     buf
@@ -354,14 +383,17 @@ case class TopKCrowded(score: Expression, id: Expression,
   override def withNewInputAggBufferOffset(o: Int): TopKCrowded =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): TopKCrowded =
-    if (attr.isEmpty) copy(score = c(0), id = c(1), k = c(2), cap = c(3))
-    else copy(score = c(0), id = c(1), attr = Some(c(2)), k = c(3), cap = c(4))
+      c: IndexedSeq[Expression]): TopKCrowded = {
+    val a = attr.size
+    copy(score = c(0), id = c(1), attr = attr.map(_ => c(2)), k = c(2 + a),
+      cap = c(3 + a), shortlist = shortlist.map { case (_, m) => (c(4 + a), m) })
+  }
 }
 
 object TopKCrowded {
+  /** One kept copy: in shortlist mode `score` is the shortlist score. */
   final class Entry(val score: Double, val nullScore: Boolean, val id: Any,
-      val attr: Any)
+      val attr: Any, val exact: Double = 0.0, val nullExact: Boolean = true)
 
   /** The group's limits (-1 until its first row) and kept copies. */
   final class Buf {
@@ -371,11 +403,14 @@ object TopKCrowded {
   }
 
   /** array<struct<score, id>> of the group's kept copies, best first;
-    * `attr` = the crowding attribute, capped at `cap` per value. */
+    * `attr` = the crowding attribute, capped at `cap` per value;
+    * `shortlist` = (shortlist score, m): rank only each group's m best
+    * ids by that score. */
   def column(score: Column, id: Column, attr: Option[Column], k: Column,
-      cap: Column): Column =
+      cap: Column, shortlist: Option[(Column, Int)] = None): Column =
     Shims.column(TopKCrowded(Shims.expression(score.cast("double")),
       Shims.expression(id), attr.map(Shims.expression),
-      Shims.expression(k.cast("int")), Shims.expression(cap.cast("int")))
+      Shims.expression(k.cast("int")), Shims.expression(cap.cast("int")),
+      shortlist.map { case (s, m) => (Shims.expression(s.cast("double")), m) })
       .toAggregateExpression())
 }

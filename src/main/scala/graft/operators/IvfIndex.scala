@@ -1205,8 +1205,7 @@ object IvfIndex {
       shortlist: Option[(Column, Int)] = None): DataFrame =
     collapse(candidates.select(Seq(col(id), col("leaf_id"),
         score.as(scoreName)) ++ shortlist.map(_._1.as("__sl")): _*), id,
-      Seq(min(col("leaf_id")).as("leaf_id"),
-        first(col(scoreName)).as(scoreName)), shortlist)
+      scoreName, Nil, shortlist, min(col("leaf_id")).as("leaf_id"))
       .orderBy(col(scoreName).desc, col(id))
       .limit(k)
 
@@ -1229,8 +1228,7 @@ object IvfIndex {
     val scored = candidates.select(Seq(col(id), score.as("score")) ++
       shortlist.map(_._1.as("__sl")) ++ crowdAttr.map(col): _*)
     val unique = collapse(if (single) scored.repartition(1) else scored, id,
-      first(col("score")).as("score") +:
-        crowdAttr.map(a => first(col(a)).as(a)), shortlist)
+      "score", crowdAttr, shortlist)
     val crowded = crowding match {
       case Some((attr, cap)) =>
         val w = Window.partitionBy(col(attr))
@@ -1275,10 +1273,15 @@ object IvfIndex {
   }
 
   /** SPILL COLLAPSE — a vector stored in two probed leaves is ONE
-    * candidate — then the optional shortlist cut over `__sl`. */
-  private def collapse(scored: DataFrame, id: String, aggs: Seq[Column],
-      shortlist: Option[(Column, Int)]): DataFrame = {
-    val all = aggs ++ shortlist.map(_ => max(col("__sl")).as("__sl"))
+    * candidate, with its best copy's `score` and `carried` columns (by
+    * score, or by `__sl` then score, as [[graft.functions.TopKCrowded]]
+    * picks) — then the optional shortlist cut over `__sl`. */
+  private def collapse(scored: DataFrame, id: String, score: String,
+      carried: Seq[String], shortlist: Option[(Column, Int)],
+      extra: Column*): DataFrame = {
+    val best = struct(shortlist.map(_ => col("__sl")).toSeq :+ col(score): _*)
+    val all = extra ++ (score +: carried).map(c => max_by(col(c), best).as(c)) ++
+      shortlist.map(_ => max(col("__sl")).as("__sl"))
     val unique = scored.groupBy(col(id)).agg(all.head, all.tail: _*)
     shortlist.fold(unique) { case (_, m) =>
       unique.orderBy(col("__sl").desc, col(id)).limit(m).drop("__sl")

@@ -716,7 +716,8 @@ final class Serving private[operators] (
     * pruned scan; the shortlist cut runs in the tail, after the spill
     * collapse. Approximation enters only through which ids survive
     * stage 1 (and which leaves were probed). `restricts` sit on the
-    * scan, so both stages see the same filtered candidates.
+    * scan, so both stages see the same filtered candidates. An id is
+    * served by its copy with the best sign-dot, as in the batch.
     *
     * Output: the two [[singleTail]] shapes, ranked by the exact score.
     */
@@ -740,17 +741,19 @@ final class Serving private[operators] (
       Some((bquant.signDot(col("bq_code"), typedLit(query.toSeq)), m)))
   }
 
-  /** BATCHED [[searchBqRerank]] — the two-stage shortlist-rescore
-    * for a query FRAME in one plan, routed and pruned like
-    * [[searchBatch]]: stage 1 keeps each query's top-`m` ids by the
-    * sign-dot over the 8 B codes (the partial top-k of [[top]], no
-    * window), stage 2 BROADCASTS the |Q|·m survivor pairs back onto
-    * the same pruned scan for the exact float rescore and ranks them
-    * in the shared [[tail]] — the corpus is never shuffled. The
-    * PER-QUERY surface (`allowCol`/`attrs`, `numCol`/`numAttrs`)
-    * filters each (candidate, query) pair BEFORE the shortlist cut, so
-    * every tenant's m slots hold rows that tenant may see. Output:
-    * identical contract to [[searchBatch]].
+  /** BATCHED [[searchBqRerank]] — the shortlist-rescore for a query
+    * FRAME in one plan, routed and pruned like [[searchBatch]]: ONE
+    * pruned scan scores every (candidate, query) pair twice, the
+    * sign-dot over the 8 B codes and the exact float dot, and ONE
+    * partial [[TopKCrowded]] per query in shortlist mode keeps each
+    * query's top-`m` ids by the sign-dot, then ranks them by the exact
+    * score in the shared [[tail]] — one exchange, as on every other
+    * tier. The PER-QUERY surface (`allowCol`/`attrs`,
+    * `numCol`/`numAttrs`) filters each pair BEFORE the shortlist cut,
+    * so every tenant's m slots hold rows that tenant may see. An id
+    * is served by its copy with the best sign-dot (ties to the better
+    * exact score), with that copy's exact score. Output: identical
+    * contract to [[searchBatch]].
     */
   def searchBatchBqRerank(queries: DataFrame, qid: String,
       qvecCol: String, nProbe: Int, m: Int, k: Int,
@@ -772,24 +775,13 @@ final class Serving private[operators] (
     checkPerQuery("searchBatchBqRerank", pq, crowding)
     val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe,
       pq.columns)
-    val side = prune(probes, restricts)
-    // stage 1 over the codes only; stage 2 needs no re-filter: a
-    // surviving (qid, id) pair already passed the per-query filters
-    val sl = top(pairs(probes, side, pq), signKernel.pairScore, lit(m))
-      .select(col("__qid"), col(id))
-    // stage 2: exact rescore of the |Q|·m survivors against the probe
-    // frame's MATERIALIZED query vectors, not a second evaluation of a
-    // non-deterministic caller's frame (which could shortlist one set
-    // of vectors and rescore different ones)
-    val crowdAttr = crowding.map(_._1).toSeq
-    val qframe = probes.select(col("__qid"), col("__qv"))
-      .dropDuplicates("__qid")
-    val rescored = side
-      .select(Seq(col(id), col(vecCol)) ++ crowdAttr.map(col): _*)
-      .join(broadcast(sl), Seq(id))
-      .join(broadcast(qframe), Seq("__qid"))
-    tail(scored(rescored, dotKernel.pairScore, crowdAttr), qid, k,
-      crowding, metadata)
+    // one scan scores both: the sign-dot picks the shortlist (ties to
+    // the smaller id), the exact float dot ranks it
+    val both = pairs(probes, prune(probes, restricts), pq)
+      .withColumn("__sl", signKernel.pairScore)
+    tail(scored(both, dotKernel.pairScore,
+        "__sl" +: crowding.map(_._1).toSeq), qid, k, crowding, metadata,
+      shortlist = Some(m))
   }
 
   /** The SINGLE-query coded tail over the probed `leaves` ([[prune]]):
@@ -2174,19 +2166,21 @@ final class Serving private[operators] (
   }
 
   /** The ONE batch tail — [[top]] → metadata join — of every routed
-    * and exact batch plan over `scored` (__qid, id, score[, crowdAttr]
-    * [, __k][, __cap]); a per-query `__k` / `__cap` makes the limit
-    * least(global, per-query). Output: (`qid`, id[, metadata
+    * and exact batch plan over `scored` (__qid, id, score[, __sl]
+    * [, crowdAttr][, __k][, __cap]); a per-query `__k` / `__cap` makes
+    * the limit least(global, per-query); `shortlist` = m ranks only
+    * each query's m best ids by `__sl`. Output: (`qid`, id[, metadata
     * columns…], `scoreName`, rn), rn 1-based per query. */
   private def tail(scored: DataFrame, qid: String, k: Int,
       crowding: Option[(String, Int)],
       metadata: Option[(DataFrame, String)], pq: PerQuery = PerQuery(),
-      scoreName: String = "score"): DataFrame = {
+      scoreName: String = "score", shortlist: Option[Int] = None): DataFrame = {
     def limit(global: Int, perQuery: Option[String], c: String): Column =
       perQuery.fold(lit(global))(_ => least(lit(global), col(c)))
     val ranked = top(scored, col("score"), limit(k, pq.kCol, "__k"),
       crowding.map { case (attr, cap) =>
-        (col(attr), limit(cap, pq.capCol, "__cap")) })
+        (col(attr), limit(cap, pq.capCol, "__cap")) },
+      shortlist.map(m => (col("__sl"), m)))
     val out = metadata match {
       case Some((meta, key)) =>
         val metaCols = meta.columns.filterNot(_ == key).toSeq
@@ -2203,13 +2197,15 @@ final class Serving private[operators] (
 
   /** Each query's (__qid, id, score, rn) by (score desc, id): ONE
     * partial [[TopKCrowded]] per `__qid` (spill copies one id, ≤ cap per
-    * value, ≤ k rows), so ≤ k rows per query leave each partition. */
+    * value, ≤ k rows; with a `shortlist`, ≤ m ids by its score), so ≤ k
+    * (≤ m) rows per query leave each partition. */
   private def top(pairs: DataFrame, score: Column, k: Column,
-      crowd: Option[(Column, Column)] = None): DataFrame =
+      crowd: Option[(Column, Column)] = None,
+      shortlist: Option[(Column, Int)] = None): DataFrame =
     // scored in a (codegen) projection, not per row inside the heap
     pairs.withColumn("__s", score).groupBy(col("__qid"))
       .agg(TopKCrowded.column(col("__s"), col(id), crowd.map(_._1), k,
-        crowd.fold(lit(Int.MaxValue))(_._2)).as("__top"))
+        crowd.fold(lit(Int.MaxValue))(_._2), shortlist).as("__top"))
       .select(col("__qid"), posexplode(col("__top")))
       .select(col("__qid"), col("col.id").as(id),
         col("col.score").as("score"), (col("pos") + 1).cast("bigint").as("rn"))

@@ -26,9 +26,10 @@ import org.apache.spark.sql.types._
 class BatchTailSpec extends SparkTestBase {
   import spark.implicits._
 
-  /** One scored copy of a candidate; `score` may be null. */
+  /** One scored copy of a candidate; `score` may be null; `sl` is its
+    * shortlist (sign-dot) score. */
   private case class Copy(qid: Long, id: Long, score: java.lang.Double,
-      attr: Option[Int])
+      attr: Option[Int], sl: java.lang.Double = null)
 
   /** Spark's order: score desc (NaN highest, −0.0 == 0.0, null last). */
   private def scoreCmp(a: java.lang.Double, b: java.lang.Double): Int =
@@ -54,19 +55,39 @@ class BatchTailSpec extends SparkTestBase {
     }.toSet
   }
 
+  /** The shortlist mode's formula: per query, each id's copy with the
+    * best `sl` (ties to the better score), the m best of those by (sl
+    * desc, id), then [[formula]] over them by score. */
+  private def shortlistFormula(copies: Seq[Copy], m: Int, k: Long => Int,
+      cap: Long => Int, idOrd: Ordering[Long], showId: Long => Any)
+      : Set[(Long, Any, String, Long)] = {
+    val bySl: Ordering[Copy] = (a: Copy, b: Copy) => {
+      val s = scoreCmp(a.sl, b.sl)
+      if (s != 0) s else {
+        val i = idOrd.compare(a.id, b.id)
+        if (i != 0) i else scoreCmp(a.score, b.score)
+      }
+    }
+    formula(copies.groupBy(_.qid).values.toSeq.flatMap(cs =>
+        cs.groupBy(_.id).values.map(_.sorted(bySl).head).toSeq
+          .sorted(bySl).take(m)),
+      k, cap, idOrd, showId)
+  }
+
   /** The aggregate over `parts`, one Spark partition per element, as
     * the batch tail runs it: grouped by query, posexploded. */
   private def aggregate(parts: Seq[Seq[Copy]], k: Int, cap: Option[Int],
-      stringIds: Boolean): Set[(Long, Any, String, Long)] = {
+      stringIds: Boolean, shortlist: Option[Int] = None)
+      : Set[(Long, Any, String, Long)] = {
     val idType = if (stringIds) StringType else LongType
     val schema = StructType(Seq(StructField("qid", LongType),
       StructField("id", idType), StructField("score", DoubleType),
       StructField("attr", IntegerType), StructField("kq", IntegerType),
-      StructField("capq", IntegerType)))
+      StructField("capq", IntegerType), StructField("sl", DoubleType)))
     def rowOf(c: Copy): Row = Row(c.qid,
       if (stringIds) f"d${c.id}%03d" else c.id, c.score,
       c.attr.map(Int.box).orNull, perQueryK.get(c.qid).map(Int.box).orNull,
-      perQueryCap.get(c.qid).map(Int.box).orNull)
+      perQueryCap.get(c.qid).map(Int.box).orNull, c.sl)
     val rows = parts.map(_.map(rowOf))
     val rdd = spark.sparkContext.parallelize(rows, rows.length).flatMap(identity)
     val df = spark.createDataFrame(rdd, schema)
@@ -74,16 +95,17 @@ class BatchTailSpec extends SparkTestBase {
     df.groupBy(col("qid"))
       .agg(TopKCrowded.column(col("score"), col("id"),
         cap.map(_ => col("attr")), least(lit(k), col("kq")),
-        cap.fold(lit(Int.MaxValue))(c => least(lit(c), col("capq"))))
+        cap.fold(lit(Int.MaxValue))(c => least(lit(c), col("capq"))),
+        shortlist.map(m => (col("sl"), m)))
         .as("t"))
       .select(col("qid"), posexplode(col("t")))
       .collect().map(r => (r.getLong(0), r.getStruct(2).get(1),
         String.valueOf(r.getStruct(2).get(0)), r.getInt(1) + 1L)).toSet
   }
 
-  // query 4 carries per-query limits below the global ones
-  private val perQueryK = Map(4L -> 2)
-  private val perQueryCap = Map(4L -> 1)
+  // queries 4 and 14 carry per-query limits below the global ones
+  private val perQueryK = Map(4L -> 2, 14L -> 2)
+  private val perQueryCap = Map(4L -> 1, 14L -> 1)
   private val K = 4
   private val Cap = 2
 
@@ -193,6 +215,83 @@ class BatchTailSpec extends SparkTestBase {
     }
   }
 
+  private def s(q: Long, id: Long, sl: java.lang.Double, x: java.lang.Double,
+      a: Option[Int]) = Copy(q, id, x, a, sl)
+
+  /** Shortlist-mode copies (sl, exact score), two partitions. */
+  private lazy val slParts: Seq[Seq[Copy]] = {
+    val p0 = Seq(
+      // 11: sign-dot ties straddle the m boundary (ids 2..7 tie at 5.0);
+      //     the exact order is the reverse of the id order
+      s(11, 1, 9.0, 1.0, A), s(11, 2, 5.0, 2.0, B), s(11, 4, 5.0, 4.0, Some(3)),
+      s(11, 6, 5.0, 6.0, Some(4)),
+      // 12: spill copies of id 5 in both partitions
+      s(12, 5, 3.0, 0.5, A), s(12, 6, 2.0, 3.0, A), s(12, 7, 1.0, 4.0, B),
+      // 14: per-query k = 2 and cap = 1
+      s(14, 1, 9.0, 1.0, A), s(14, 2, 8.0, 5.0, A), s(14, 3, 7.0, 2.0, B),
+      // 15: null crowding values form one group
+      s(15, 1, 4.0, 3.0, None), s(15, 2, 3.0, 2.0, None), s(15, 3, 2.0, 1.0, None),
+      // 16: fewer candidates than m
+      s(16, 9, 1.0, 1.0, A),
+      // 17: copies of one id that disagree (a pinned handle): id 1's
+      //     best sign-dot copy has the WORSE exact score and is served;
+      //     id 2's copies tie on the sign-dot, the better exact wins;
+      //     id 4's best sign-dot copy sits under value B
+      s(17, 1, 8.0, 1.0, A), s(17, 2, 7.0, 2.0, A), s(17, 4, 9.0, 0.5, B))
+    val p1 = Seq(
+      s(11, 3, 5.0, 3.0, Some(5)), s(11, 5, 5.0, 5.0, Some(6)),
+      s(11, 7, 5.0, 9.0, Some(7)), s(11, 8, 1.0, 8.0, Some(8)),
+      s(12, 5, 3.0, 0.5, A), s(12, 8, 0.5, 9.0, B),
+      s(14, 4, 6.0, 4.0, B), s(14, 5, 5.0, 3.0, Some(3)),
+      s(15, 4, 1.0, 0.5, A),
+      s(16, 8, 2.0, 0.25, B),
+      s(17, 1, 6.0, 9.0, A), s(17, 2, 7.0, 3.0, A), s(17, 3, 5.0, 5.0, Some(9)),
+      s(17, 4, 1.0, 7.0, A))
+    Seq(p0, p1)
+  }
+
+  test("TopKCrowded shortlist mode rows == best sign-dot copy per id → " +
+      "top m by (sign-dot, id) → crowding cap and top k by exact score") {
+    val all = slParts.flatten
+    val kOf = (q: Long) => math.min(K, perQueryK.getOrElse(q, K))
+    val capOf = (q: Long) => math.min(Cap, perQueryCap.getOrElse(q, Cap))
+    val strOrd = Ordering.by[Long, String](i => f"d$i%03d")
+    val sortedRows = (r: Set[(Long, Any, String, Long)]) =>
+      r.toSeq.sortBy(x => (x._1, x._4)).mkString("\n")
+    for (m <- Seq(K, 5, 8); stringIds <- Seq(false, true);
+         crowd <- Seq(true, false)) {
+      val want = shortlistFormula(
+        if (crowd) all else all.map(_.copy(attr = None)), m, kOf,
+        if (crowd) capOf else (_ => Int.MaxValue),
+        if (stringIds) strOrd else Ordering.Long,
+        i => if (stringIds) f"d$i%03d" else i)
+      val capOpt = if (crowd) Some(Cap) else None
+      for (split <- Seq(slParts, Seq(all), Seq(all.reverse.take(13),
+          all.reverse.drop(13)))) {
+        val got = aggregate(split, K, capOpt, stringIds, Some(m))
+        assert(got == want, s"m=$m stringIds=$stringIds crowd=$crowd " +
+          s"split=${split.map(_.length)}\ngot:\n${sortedRows(got)}\n" +
+          s"want:\n${sortedRows(want)}")
+      }
+    }
+    // the cases the data is built for, spelled out (m = k = 4, crowded)
+    val got = aggregate(slParts, K, Some(Cap), stringIds = false, Some(K))
+    def rows(q: Long) = got.filter(_._1 == q).toSeq.sortBy(_._4)
+      .map(r => (r._2, r._3))
+    assert(rows(11) == Seq((4L, "4.0"), (3L, "3.0"), (2L, "2.0"), (1L, "1.0")),
+      "sign-dot ties at m keep the smaller ids, ranked by exact score")
+    assert(rows(12) == Seq((8L, "9.0"), (7L, "4.0"), (6L, "3.0"), (5L, "0.5")),
+      "spill copies of 5 are one id")
+    assert(rows(14) == Seq((2L, "5.0"), (4L, "4.0")), "per-query k=2, cap=1")
+    assert(rows(15).map(_._1) == Seq(1L, 2L, 4L), "null values share one cap")
+    assert(rows(16) == Seq((9L, "1.0"), (8L, "0.25")), "fewer than m")
+    assert(rows(17) == Seq((3L, "5.0"), (2L, "3.0"), (1L, "1.0"), (4L, "0.5")),
+      "the best sign-dot copy is served, with its own exact score")
+    // m = 5 admits id 5 on query 11 and drops nothing else
+    assert(aggregate(slParts, K, Some(Cap), stringIds = false, Some(5))
+      .filter(_._1 == 11L).toSeq.sortBy(_._4).map(_._2) == Seq(5L, 4L, 3L, 2L))
+  }
+
   private def tmpDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
 
@@ -216,18 +315,22 @@ class BatchTailSpec extends SparkTestBase {
     df.collect().map(r => (r.getLong(0), r.get(1),
       String.valueOf(r.getDouble(2)), r.getLong(3))).toSet
 
-  test("a pinned openAt handle holding two versions of one id: the " +
-      "batch serves each id once, with its better version's score") {
+  /** A pinned [[Serving.openAt]] handle holding two versions of every
+    * 7th id (same label, version 2's vector = `shift` of version 1's),
+    * with sign codes, and 6 of those ids' version-1 vectors as queries. */
+  private def pinnedHandle(tag: String,
+      shift: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
+      : (Serving, Seq[(Long, Seq[Double])]) = {
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), col("label"),
       lit(1L).as("version"))
     val (indexed, model) = IvfIndex.build(emb, "vec_id", "v", 8)
-    val dir = tmpDir("graft_batchtail_pinned")
-    IvfIndex.write(indexed, dir, model)
-    // version 2 of every 7th id: same label, a shifted vector
+    val dir = tmpDir(tag)
+    IvfIndex.write(indexed.withColumn("bq_code",
+      graft.functions.bquant.packSigns(col("v"))), dir, model)
     IndexMaintenance.appendToServing(spark, dir,
       emb.filter(col("vec_id") % 7 === 0)
-        .withColumn("v", transform(col("v"), x => x * 0.5 + 0.01))
+        .withColumn("v", transform(col("v"), shift))
         .withColumn("version", lit(2L)), "vec_id", "v", "version")
     val pinned = (1 to 8).flatMap(v => Serving.openAt(spark, dir, v,
         vecCol = "v")).filter(_.data.filter(col("version") === 2L)
@@ -238,9 +341,43 @@ class BatchTailSpec extends SparkTestBase {
     val qs = emb.filter(col("vec_id") % 7 === 0).limit(6)
       .select("vec_id", "v").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    (pinned, qs)
+  }
+
+  test("a pinned openAt handle holding two versions of one id: the " +
+      "batch serves each id once, with its better version's score") {
+    val (pinned, qs) = pinnedHandle("graft_batchtail_pinned", x => x * 0.5 + 0.01)
     val got = rowsOf(pinned.searchBatch(qs.toDF("qid", "qv"), "qid", "qv",
       3, 10, Nil, Some(("label", 2)), None))
     assert(got == servedByFormula(pinned, qs, 3, 10, 2))
+  }
+
+  test("a pinned openAt handle holding x and 2x of one id: single " +
+      "requests serve the same copy as the batch, raw and BQ") {
+    val (pinned, qs) = pinnedHandle("graft_batchtail_pinned2x", x => x * 2.0)
+    val crowd = Some(("label", 2))
+    def perQuery(df: DataFrame): Map[Long, Seq[(Long, Double, Long)]] =
+      df.collect().groupBy(_.getLong(0)).map { case (q, rs) =>
+        q -> rs.toSeq.map(r => (r.getLong(1), r.getDouble(2), r.getLong(3)))
+          .sortBy(_._3) }
+    val batch = perQuery(pinned.searchBatch(qs.toDF("qid", "qv"), "qid", "qv",
+      3, 10, Nil, crowd, None))
+    val bqBatch = perQuery(pinned.searchBatchBqRerank(qs.toDF("qid", "qv"),
+      "qid", "qv", 3, 25, 10, Nil, crowd))
+    assert(batch.keySet == qs.map(_._1).toSet && bqBatch.keySet == batch.keySet)
+    for ((q, v) <- qs) {
+      val single = pinned.search(v.toArray, 3, 10, Nil, crowd, None).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+      assert(single == batch(q), s"qid $q: search vs searchBatch\n" +
+        s"single=$single\nbatch=${batch(q)}")
+      val bq = pinned.searchBqRerank(v.toArray, 3, 25, 10, Nil, crowd)
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+      assert(bq == bqBatch(q), s"qid $q: searchBqRerank vs " +
+        s"searchBatchBqRerank\nsingle=$bq\nbatch=${bqBatch(q)}")
+      // the query's own id is served once, by its 2x copy
+      assert(single.count(_._1 == q) == 1 &&
+        single.find(_._1 == q).exists(_._2 > 1.5), s"qid $q: $single")
+    }
   }
 
   test("a query left with no candidates after restricts has no rows") {
@@ -359,8 +496,8 @@ class BatchTailSpec extends SparkTestBase {
         crowd)))
   }
 
-  test("plan: a crowded raw, SQ8 or PQ batch takes ONE exchange with " +
-      "the partial top-k below it and no Window; BQ has no Window") {
+  test("plan: a crowded raw, SQ8, PQ or BQ batch takes ONE exchange " +
+      "with the partial top-k below it and no Window") {
     val qs = localQueries(64)
     for ((name, surface) <- surfaces(3, Seq(col("label") >= 0))) {
       val df = surface(qs)
@@ -368,12 +505,10 @@ class BatchTailSpec extends SparkTestBase {
       val plan = df.queryExecution.executedPlan
       val all = nodes(plan)
       assert(!all.exists(_.isInstanceOf[WindowExec]), s"$name: a Window node")
-      if (name != "bq") {
-        val ex = all.collect { case e: ShuffleExchangeLike => e }
-        assert(ex.length == 1, s"$name: want one exchange, got ${ex.length}")
-        assert(partialTopK(ex.head.asInstanceOf[SparkPlan]),
-          s"$name: no partial TopKCrowded below the exchange:\n$plan")
-      }
+      val ex = all.collect { case e: ShuffleExchangeLike => e }
+      assert(ex.length == 1, s"$name: want one exchange, got ${ex.length}")
+      assert(partialTopK(ex.head.asInstanceOf[SparkPlan]),
+        s"$name: no partial TopKCrowded below the exchange:\n$plan")
     }
   }
 

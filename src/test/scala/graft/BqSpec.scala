@@ -250,21 +250,37 @@ class BqSpec extends SparkTestBase {
     assert(batch.values.map(_.map(_._1).toSet).toSet.size == 3)
   }
 
-  test("searchBatchBqRerank plan shape: the rescore stage joins the " +
-      "shortlist by BROADCAST — the corpus side is never exchanged " +
-      "for the join") {
+  test("searchBatchBqRerank plan shape: ONE layout scan scores both " +
+      "the shortlist and the rescore — no join against it but the " +
+      "probe frame's") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BaseJoinExec}
     val (serving, _) = buildBqLayout()
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     val queries = emb.filter(col("vec_id").isin(3L, 21L))
       .select(col("vec_id").as("qid"), col("v"))
-    val plan = serving.searchBatchBqRerank(queries, "qid", "v",
+    val df = serving.searchBatchBqRerank(queries, "qid", "v",
         nProbe = 3, m = 25, k = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"expected broadcast joins in the rescore stage:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"the corpus must never shuffle for the shortlist join:\n$plan")
+    assert(df.collect().length == 16)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = df.queryExecution.executedPlan
+    val all = nodes(plan)
+    val scans = all.collect { case f: FileSourceScanExec => f }
+    assert(scans.length == 1, s"want ONE layout scan:\n$plan")
+    // the one join pairs the scan with the routed probe frame on leaf_id
+    val joins = all.collect { case j: BaseJoinExec => j }
+    assert(joins.length == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec],
+      s"want only the probe-frame broadcast join:\n$plan")
+    assert(joins.head.leftKeys.flatMap(_.references.map(_.name)) == Seq("leaf_id"),
+      s"the one join must be the probe frame's, on leaf_id:\n$plan")
   }
 
   test("searchBqRerank guards: wrong tier and missing companion " +

@@ -14,7 +14,7 @@ side, how many pairs the change won (the `better` direction comes from
 the change checkout's BENCHMARK.json), and whether the gap between the
 medians exceeds the parent's inter-quartile range: `yes` when the change
 is better by more than it, `WORSE` when it is worse by more, `no`
-otherwise. Then one line per run: seed, side, order, loadavg_start and
+otherwise; `n/a` with fewer than 4 pairs, whose quartiles are no spread. Then one line per run: seed, side, order, loadavg_start and
 the run's end-to-end metrics (those BENCHMARK.json lists), so every pair
 can be recorded.
 
@@ -29,6 +29,10 @@ import os
 import statistics
 import subprocess
 import sys
+
+
+# quartiles of fewer runs than this are no measure of spread
+MIN_SPREAD_PAIRS = 4
 
 
 def fail(msg):
@@ -146,7 +150,10 @@ def main():
             sign = -1 if d == "lower" else 1
             won = f"{sum(1 for p, c in pairs if sign * (c - p) > 0)}/{len(pairs)}"
             gap = sign * (cm - pm)
-            verdict = "yes" if gap > p3 - p1 else ("WORSE" if -gap > p3 - p1 else "no")
+            if len(pairs) < MIN_SPREAD_PAIRS:
+                verdict = "n/a"
+            else:
+                verdict = "yes" if gap > p3 - p1 else ("WORSE" if -gap > p3 - p1 else "no")
         else:
             won, verdict = "n/a", "n/a"
         print(f"{name:34} {f'{pm:.4g} [{p1:.4g}, {p3:.4g}]':>30} "
