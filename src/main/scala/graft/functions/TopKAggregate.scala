@@ -4,163 +4,25 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil, TypeUtils}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
-/** Bounded top-k heap aggregate (`TypedImperativeAggregate`) — the
-  * single-pass per-group top-k: each partition keeps a k-element
-  * min-heap, partial heaps merge, and only k rows per group per
-  * partition ever move. The window form
-  * (`row_number() ≤ k` → WindowGroupLimit) must still SORT each
-  * partition's group rows before limiting; the heap replaces that
-  * sort with O(n log k) updates — the §7 performance option for very
-  * hot groups.
-  *
-  * Ordering is total — (score DESC, id ASC) — so the aggregated set
-  * and its output order are deterministic under any partitioning,
-  * which keeps the operator oracle-checkable (the SQL replica is a
-  * rank-filtered window with the identical tie-break).
-  */
-case class TopKByScore(score: Expression, id: Expression, k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[(Double, Long)]] {
-
-  require(k > 0, s"k must be positive, got $k")
-
-  private type Buf = scala.collection.mutable.ArrayBuffer[(Double, Long)]
-
-  override def children: Seq[Expression] = Seq(score, id)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("score", DoubleType, nullable = false),
-    StructField("id", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_top_k"
-
-  /** (a beats b) in the keep-order: higher score, then lower id. */
-  private def beats(a: (Double, Long), b: (Double, Long)): Boolean =
-    a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-  /** a strictly weaker than b (loses the keep-order). */
-  private def weaker(a: (Double, Long), b: (Double, Long)): Boolean =
-    beats(b, a)
-
-  override def createAggregationBuffer(): Buf =
-    new scala.collection.mutable.ArrayBuffer[(Double, Long)](k + 1)
-
-  // The buffer is maintained as a binary min-heap with the WEAKEST
-  // kept element at index 0: the eviction test on a full buffer is
-  // O(1) and a replacement O(log k), so a group costs O(n log k) —
-  // not the O(n·k) of a linear weakest-scan — which is what makes
-  // k=1000 per-group shortlists viable, not just the k=3 gate query.
-
-  private def swap(buf: Buf, i: Int, j: Int): Unit = {
-    val t = buf(i); buf(i) = buf(j); buf(j) = t
-  }
-
-  private def siftUp(buf: Buf, start: Int): Unit = {
-    var i = start
-    var continue = i > 0
-    while (continue) {
-      val p = (i - 1) >> 1
-      if (weaker(buf(i), buf(p))) { swap(buf, i, p); i = p }
-      else continue = false
-      if (i == 0) continue = false
-    }
-  }
-
-  private def siftDown(buf: Buf, start: Int): Unit = {
-    val n = buf.length
-    var i = start
-    var continue = true
-    while (continue) {
-      val l = 2 * i + 1
-      var m = i
-      if (l < n && weaker(buf(l), buf(m))) m = l
-      if (l + 1 < n && weaker(buf(l + 1), buf(m))) m = l + 1
-      if (m == i) continue = false
-      else { swap(buf, i, m); i = m }
-    }
-  }
-
-  /** Restore the heap invariant over an arbitrarily-ordered buffer. */
-  private def heapify(buf: Buf): Buf = {
-    var i = (buf.length >> 1) - 1
-    while (i >= 0) { siftDown(buf, i); i -= 1 }
-    buf
-  }
-
-  private def insert(buf: Buf, item: (Double, Long)): Buf = {
-    if (buf.length < k) { buf += item; siftUp(buf, buf.length - 1) }
-    else if (beats(item, buf(0))) { buf(0) = item; siftDown(buf, 0) }
-    buf
-  }
-
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val s = score.eval(input)
-    val i = id.eval(input)
-    if (s == null || i == null) buf
-    else insert(buf, (s.asInstanceOf[Double], i.asInstanceOf[Long]))
-  }
-
-  override def merge(buf: Buf, other: Buf): Buf = {
-    other.foreach(insert(buf, _))
-    buf
-  }
-
-  override def eval(buf: Buf): Any = {
-    val sorted = buf.sortWith(beats)
-    new GenericArrayData(sorted.map { case (s, i) =>
-      InternalRow(s, i)
-    }.toArray[Any])
-  }
-
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + buf.length * 16)
-    bb.putInt(buf.length)
-    buf.foreach { case (s, i) => bb.putDouble(s); bb.putLong(i); () }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf += ((bb.getDouble, bb.getLong)); i += 1 }
-    // a deserialized buffer may become a merge TARGET — restore the
-    // heap invariant the serialized byte order doesn't carry
-    heapify(buf)
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): TopKByScore =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKByScore =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): TopKByScore =
-    copy(score = c(0), id = c(1))
-}
-
-object TopKByScore {
-  /** array<struct<score, id>> of the group's top k, (score desc, id). */
-  def column(score: Column, id: Column, k: Int): Column =
-    Shims.column(TopKByScore(Shims.expression(score),
-      Shims.expression(id), k).toAggregateExpression())
-}
-
-/** Per-query serving top-k as ONE partial aggregate: the batch tail's
-  * spill collapse, crowding cap and rank cut folded into a heap, so
-  * each partition sends at most k rows per group across the exchange
-  * instead of every scored (query, candidate) pair.
+/** The ONE per-group top-k of the engine, as a partial aggregate
+  * (`TypedImperativeAggregate`): every serving tail (single requests,
+  * batches), the kNN self-join and SQL `graft_top_k` rank through it.
+  * Spill collapse, crowding cap and rank cut fold into one bounded
+  * buffer, so each partition sends at most k rows per group across the
+  * exchange instead of every scored (group, candidate) row.
   *
   * Children: `score` (double), `id` (any atomic type), an optional
   * crowding attribute, and the limits `k` and `cap` — per-row int
   * expressions (`least(lit, col)` on a batch with per-query limits),
   * read from a group's first row; null means unbounded; and an
-  * optional shortlist (see below). Output: the kept (score, id)
-  * structs, best first, at most k.
+  * optional shortlist (see below). Output: the kept (score, id[,
+  * attr]) structs, best first, at most k — the attribute is the served
+  * copy's, so an uncapped attribute can carry a per-copy value such as
+  * a spill copy's `leaf_id` (the lowest of equal-score copies).
   *
   * Ordering is Spark's: score descending by
   * [[SQLOrderingUtil.compareDoubles]] (NaN highest, −0.0 == 0.0),
@@ -187,7 +49,13 @@ object TopKByScore {
   * weaker copy under another value may be served in its place. Each
   * buffer applies this to the copies it holds, so for such an id the
   * outcome can depend on which copies share a partition; it is
-  * deterministic when they share one.
+  * deterministic when they share one. A single request is one group,
+  * so its copies always meet in the final PRUNE: it serves what the
+  * batch's walk serves for that query, by construction.
+  *
+  * So on every surface, SQL included: a null score is KEPT and ranked
+  * last; `graft_top_k` returns each id at most once, by its best copy;
+  * and a pinned handle's single requests follow the copy rule above.
   *
   * SHORTLIST mode (`shortlist` = (shortlist score s, m)): buffers and
   * the merge PRUNE by (s desc, id, score desc, attribute) with k = m
@@ -211,7 +79,8 @@ case class TopKCrowded(score: Expression, id: Expression,
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType),
-    StructField("id", id.dataType))), containsNull = false)
+    StructField("id", id.dataType)) ++
+    attr.map(a => StructField("attr", a.dataType))), containsNull = false)
   override def prettyName: String = "graft_top_k_crowded"
 
   private def attrType: DataType = attr.fold[DataType](NullType)(_.dataType)
@@ -334,7 +203,8 @@ case class TopKCrowded(score: Expression, id: Expression,
       r
     }
     new GenericArrayData(ranked.rows.map { e =>
-      InternalRow(if (e.nullScore) null else e.score, e.id)
+      val s = if (e.nullScore) null else e.score
+      if (attr.isEmpty) InternalRow(s, e.id) else InternalRow(s, e.id, e.attr)
     }.toArray[Any])
   }
 
@@ -402,8 +272,8 @@ object TopKCrowded {
     val rows = new scala.collection.mutable.ArrayBuffer[Entry]()
   }
 
-  /** array<struct<score, id>> of the group's kept copies, best first;
-    * `attr` = the crowding attribute, capped at `cap` per value;
+  /** array<struct<score, id[, attr]>> of the group's kept copies, best
+    * first; `attr` = the crowding attribute, capped at `cap` per value;
     * `shortlist` = (shortlist score, m): rank only each group's m best
     * ids by that score. */
   def column(score: Column, id: Column, attr: Option[Column], k: Column,

@@ -3,17 +3,13 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
-  Expression, In, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project,
   SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
-  ShortType}
 
 /** IVF (inverted-file) ANN index — the Spark analog of the reference's
   * Tree-AH index (/root/reference/vector_store/utils/index_manager.py:36-68;
@@ -1076,7 +1072,7 @@ object IvfIndex {
 
   /** In-memory variant (no round-trip) for tests/benchmarks. Spill
     * duplicates inside the probed set collapse to one candidate per id
-    * (min leaf_id, deterministic).
+    * (the lowest leaf_id among its equal-score copies).
     */
   def searchDf(indexed: DataFrame, model: Model, query: Array[Double],
       nProbe: Int, k: Int, id: String, vecCol: String): DataFrame =
@@ -1091,20 +1087,19 @@ object IvfIndex {
     * setup_vector_search.py:45-62 — plain `Column` predicates here,
     * sitting directly on the scan so parquet pushes them to
     * row-group granularity) → crowding cap per attribute value
-    * (CrowdingTag, setup_vector_search.py:65-67) → bounded-heap
+    * (CrowdingTag, setup_vector_search.py:65-67) → partial-aggregate
     * top-k → metadata join (the Firestore-lookup analog,
     * firestore_ops.py:69).
     *
-    * Plan ([[servingTail]]): the probed scan scores in parallel. A
-    * [[smallProbe]] (its files count at most [[MaxSingleRows]] rows)
-    * sends the scored candidates through ONE exchange into a single
-    * partition, where the collapse, crowding cap and top-k run; a
-    * larger probe keeps a parallel tail, as does the exact pre-filter
-    * plan of [[Serving.searchAdaptive]]. A metadata table that is a
-    * [[smallTable]] is broadcast, so the rank order is a local sort.
-    * A larger one is never collected or shuffled: the ≤ k ranked rows
-    * are broadcast into its scan, and the joined rows take one more
-    * exchange into a single partition for the rank sort.
+    * Plan ([[servingTail]]): the probed scan scores in parallel and
+    * each scan task keeps its own top-k (one partial
+    * [[graft.functions.TopKCrowded]]), so at most k rows per task cross
+    * ONE exchange into a single partition, where the final top-k runs.
+    * A metadata table that is a [[smallTable]] is broadcast, so the
+    * rank order is a local sort. A larger one is never collected or
+    * shuffled: the ≤ k ranked rows are broadcast into its scan, and the
+    * joined rows take one more exchange into a single partition for the
+    * rank sort.
     *
     * @param restricts predicates over the index table's own columns;
     *        ANDed. Keep them on top-level columns so they reach
@@ -1112,19 +1107,15 @@ object IvfIndex {
     * @param crowding (attribute column, max results per value).
     * @param metadata (metadata table, join key) — appended columns.
     * Output: (id, metadata columns…, score, rank), rank 1-based by
-    * (score desc, id). Integral ids rank through the heap aggregate;
-    * other id types use the row-identical window form.
+    * (score desc, id); a null score ranks last.
     */
   def searchDf(indexed: DataFrame, model: Model, query: Array[Double],
       nProbe: Int, k: Int, id: String, vecCol: String,
       restricts: Seq[Column], crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)]): DataFrame = {
-    val leaves = model.topLeaves(query, nProbe)
-    servingTail(restricts.foldLeft(
-        indexed.filter(col("leaf_id").isin(leaves: _*)))(_ filter _),
-      dot(vecCol, query), k, id, crowding, metadata,
-      single = smallProbe(indexed, leaves))
-  }
+      metadata: Option[(DataFrame, String)]): DataFrame =
+    servingTail(restricts.foldLeft(indexed.filter(
+        col("leaf_id").isin(model.topLeaves(query, nProbe): _*)))(_ filter _),
+      dot(vecCol, query), k, id, crowding, metadata)
 
   private[operators] def dot(vecCol: String, query: Array[Double]): Column =
     graft.functions.vectors.dotProduct(col(vecCol), typedLit(query.toSeq))
@@ -1133,12 +1124,12 @@ object IvfIndex {
     * In-list: partition pruning then reads only those leaves. */
   private[operators] val MaxInList = 1024
 
-  /** A single request moves at most this many rows through ONE
-    * place: the single-partition ranking task ([[smallProbe]], rows
-    * counted before restricts) or the driver-built broadcast of a
-    * metadata table ([[smallTable]]), from at most [[MaxSingleFiles]]
-    * files. At 65,536 rows each measured no slower than its parallel
-    * form (4 cpus). */
+  /** A single request broadcasts a metadata table built on the
+    * driver ([[smallTable]]) only when its at most [[MaxSingleFiles]]
+    * files hold at most this many rows; at 65,536 rows that measured no
+    * slower than broadcasting the ranked rows into the table's scan
+    * (4 cpus). An in-memory batch of at most this many (query, leaf)
+    * rows routes on the driver ([[Serving]]'s probe frame). */
   private[operators] val MaxSingleRows = 65536L
   private[operators] val MaxSingleFiles = 64
 
@@ -1178,79 +1169,63 @@ object IvfIndex {
       .forall(_ <= MaxSingleRows)
   }
 
-  /** Whether the single-partition tail may rank the probed `leaves`:
-    * `indexed` is a plain scan of a layout partitioned by `leaf_id`
-    * (not a frame built in memory, not a layout read through its
-    * delta registry) and the leaves' files are [[fewRows]]. */
-  private[operators] def smallProbe(indexed: DataFrame,
-      leaves: Seq[Int]): Boolean =
-    leaves.length <= MaxInList && plainScan(indexed).exists(r =>
-      r.partitionSchema.exists(f =>
-        f.name == "leaf_id" && f.dataType == IntegerType) &&
-      fewRows(r, Seq(In(AttributeReference("leaf_id", IntegerType)(),
-        leaves.map(l => Literal(l))))))
-
   /** Whether a request may broadcast the metadata table itself: a
     * plain scan of [[fewRows]]. */
   private def smallTable(meta: DataFrame): Boolean =
     plainScan(meta).exists(fewRows(_, Nil))
 
-  private[operators] def integral(t: DataType): Boolean =
-    Seq(LongType, IntegerType, ShortType, ByteType).contains(t)
+  /** The ONE ranking step of every serving tail and of the kNN join:
+    * per group of `groups` (none: one global group, a single request),
+    * ONE partial [[graft.functions.TopKCrowded]] keeps the top `k` by
+    * (score desc, id) — spill copies one id, at most `cap` per value of
+    * `crowd`'s attribute; with a `shortlist` (score, m), only the m
+    * best ids by that score — so at most k (m) rows per group leave
+    * each scan task. Output: groups…, id, score[, `__attr`: the served
+    * copy's attribute], rn (1-based).
+    */
+  private[operators] def top(pairs: DataFrame, groups: Seq[String],
+      id: String, score: Column, k: Column,
+      crowd: Option[(Column, Column)] = None,
+      shortlist: Option[(Column, Int)] = None): DataFrame = {
+    val g = groups.map(col)
+    // scored in a (codegen) projection, not per row inside the aggregate
+    pairs.withColumn("__s", score).groupBy(g: _*)
+      .agg(graft.functions.TopKCrowded.column(col("__s"), col(id),
+        crowd.map(_._1), k, crowd.fold(lit(Int.MaxValue))(_._2), shortlist)
+        .as("__top"))
+      .select(g :+ posexplode(col("__top")).as(Seq("__pos", "__t")): _*)
+      .select(g ++ Seq(col("__t.id").as(id), col("__t.score").as("score")) ++
+        crowd.map(_ => col("__t.attr").as("__attr")) :+
+        (col("__pos") + 1).cast("bigint").as("rn"): _*)
+  }
 
-  /** The BARE single-query tail: spill collapse (lowest leaf kept),
-    * top-k by (score desc, id) → (id, leaf_id, `scoreName`). */
+  /** The BARE single-request tail: [[top]] as one global group, with
+    * `leaf_id` an uncapped attribute so each id keeps its served copy's
+    * leaf (the lowest of equal-score spill copies) → (id, leaf_id,
+    * `scoreName`) by (score desc, id). */
   private[operators] def bareTail(candidates: DataFrame, score: Column,
       k: Int, id: String, scoreName: String = "score",
       shortlist: Option[(Column, Int)] = None): DataFrame =
-    collapse(candidates.select(Seq(col(id), col("leaf_id"),
-        score.as(scoreName)) ++ shortlist.map(_._1.as("__sl")): _*), id,
-      scoreName, Nil, shortlist, min(col("leaf_id")).as("leaf_id"))
-      .orderBy(col(scoreName).desc, col(id))
-      .limit(k)
+    top(candidates, Nil, id, score, lit(k),
+        Some((col("leaf_id"), lit(Int.MaxValue))), shortlist)
+      .orderBy("rn")
+      .select(col(id), col("__attr").as("leaf_id"), col("score").as(scoreName))
 
-  /** The ONE full single-query tail of the raw and coded surfaces
-    * (the tier only changes `score`): spill collapse → `shortlist` cut
-    * (stage-1 score, m: the m best ids, ties to the smaller id) →
-    * crowding cap → top-k → metadata join → rank order. `single` (a
-    * [[smallProbe]]): ONE exchange into a single partition, which
-    * satisfies every later step. The metadata join keeps the ranked
+  /** The ONE full single-request tail of the raw and coded surfaces
+    * (the tier only changes `score`): [[top]] as one global group (spill
+    * collapse, `shortlist` cut, crowding cap and top-k; ≤ k rows per
+    * scan task through ONE exchange into a single partition) →
+    * metadata join → rank order. The metadata join keeps the ranked
     * rows in one partition either way, so the rank order is a local
     * sort. Output as the 10-arg [[searchDf]].
     */
   private[operators] def servingTail(candidates: DataFrame, score: Column,
       k: Int, id: String, crowding: Option[(String, Int)],
-      metadata: Option[(DataFrame, String)], single: Boolean,
-      scoreName: String = "score",
+      metadata: Option[(DataFrame, String)], scoreName: String = "score",
       shortlist: Option[(Column, Int)] = None): DataFrame = {
-    val idType = candidates.schema(id).dataType
-    val crowdAttr = crowding.map(_._1).toSeq
-    val scored = candidates.select(Seq(col(id), score.as("score")) ++
-      shortlist.map(_._1.as("__sl")) ++ crowdAttr.map(col): _*)
-    val unique = collapse(if (single) scored.repartition(1) else scored, id,
-      "score", crowdAttr, shortlist)
-    val crowded = crowding match {
-      case Some((attr, cap)) =>
-        val w = Window.partitionBy(col(attr))
-          .orderBy(col("score").desc, col(id))
-        unique.withColumn("__crn", row_number().over(w))
-          .filter(col("__crn") <= cap).drop("__crn")
-      case None => unique
-    }
-    val ranked =
-      if (integral(idType))
-        crowded.agg(graft.functions.TopKByScore.column(col("score"),
-            col(id).cast("long"), k).as("__topk"))
-          .select(posexplode(col("__topk")).as(Seq("__pos", "__t")))
-          .select(col("__t.id").cast(idType).as(id),
-            col("__t.score").as("score"),
-            (col("__pos") + 1).cast("bigint").as("rank"))
-      else {
-        val w = Window.orderBy(col("score").desc, col(id))
-        crowded.withColumn("rank", row_number().over(w).cast("bigint"))
-          .filter(col("rank") <= k)
-          .select(col(id), col("score"), col("rank"))
-      }
+    val ranked = top(candidates, Nil, id, score, lit(k),
+        crowding.map { case (attr, cap) => (col(attr), lit(cap)) }, shortlist)
+      .withColumnRenamed("rn", "rank")
     (metadata match {
       case Some((meta, key)) =>
         val on = col(s"__r.$id") === col(s"__m.$key")
@@ -1270,21 +1245,5 @@ object IvfIndex {
       case None =>
         ranked.select(col(id), col("score").as(scoreName), col("rank"))
     }).orderBy("rank")
-  }
-
-  /** SPILL COLLAPSE — a vector stored in two probed leaves is ONE
-    * candidate, with its best copy's `score` and `carried` columns (by
-    * score, or by `__sl` then score, as [[graft.functions.TopKCrowded]]
-    * picks) — then the optional shortlist cut over `__sl`. */
-  private def collapse(scored: DataFrame, id: String, score: String,
-      carried: Seq[String], shortlist: Option[(Column, Int)],
-      extra: Column*): DataFrame = {
-    val best = struct(shortlist.map(_ => col("__sl")).toSeq :+ col(score): _*)
-    val all = extra ++ (score +: carried).map(c => max_by(col(c), best).as(c)) ++
-      shortlist.map(_ => max(col("__sl")).as("__sl"))
-    val unique = scored.groupBy(col(id)).agg(all.head, all.tail: _*)
-    shortlist.fold(unique) { case (_, m) =>
-      unique.orderBy(col("__sl").desc, col(id)).limit(m).drop("__sl")
-    }
   }
 }

@@ -129,57 +129,33 @@ object Knn {
       col("qid").as("nid"), col("score")))
   }
 
-  /** Production form: ranking via the bounded top-k HEAP aggregate
-    * ([[graft.functions.TopKByScore]], `graft_top_k` in SQL). Per-qid
-    * shortlists build in O(n log k) heaps with MAP-SIDE partial
-    * aggregation — only k rows per (qid, partition) reach the
-    * shuffle, where the window form must move every candidate row and
-    * sort each qid's full list. Measured on the 50k bench layout
-    * (median of 3, two separate JVMs): heap 6.8-7.3 s vs window
-    * 16.4-18.0 s, rows identical — see PERF.md (round 6).
+  /** Production form: ranking via the one partial top-k aggregate
+    * ([[IvfIndex.top]] grouped by `qid`, a
+    * [[graft.functions.TopKCrowded]] with no crowding attribute).
+    * MAP-SIDE partial aggregation keeps only k rows per (qid,
+    * partition) for the shuffle, where the window form must move every
+    * candidate row and sort each qid's full list. On the 50k bench
+    * layout (`v_scale_sf1_knn_join`) the map-side form measured
+    * 6.8-7.3 s against the window's 16.4-18.0 s, rows identical —
+    * PERF.md (round 6).
     *
-    * Schema contract (both dispatch branches): `(qid, nid)` keep the
-    * source id column's type, `score` double, `rn` bigint. Ids must
-    * be integral for the heap path; other id types dispatch to the
-    * row-identical window form — correct, but window-shuffle
-    * economics, so the dispatch is logged.
+    * Schema contract, any id type: `(qid, nid)` keep the source id
+    * column's type, `score` double, `rn` bigint — the same schema and
+    * rows as [[knnJoinPerLeafWindow]].
     */
   def knnJoinPerLeaf(indexed: DataFrame, id: String, vecCol: String,
       k: Int, metric: Metric): DataFrame = {
-    val idType = indexed.schema(id).dataType
-    // the heap aggregate's id slot is a long: a non-integral id would
-    // cast to null and be silently DROPPED by the aggregate (zero
-    // rows out, no error) — dispatch those callers to the
-    // row-identical window form instead
-    if (!IvfIndex.integral(idType)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"knnJoinPerLeaf: id column '$id' is ${idType.simpleString}, not " +
-          "integral — using the window-ranked form (row-identical, but " +
-          "every candidate row reaches the shuffle; the heap form ships " +
-          "only k rows per (qid, partition))")
-      return knnJoinPerLeafWindow(indexed, id, vecCol, k, metric)
-    }
-    val scored = leafPairScores(indexed, id, vecCol, metric)
-    // the heap keeps (score desc, id asc) — for ascending metrics the
-    // score is negated into the heap and restored on the way out
-    val heapScore = if (metric.descending) col("score") else -col("score")
-    scored
-      .groupBy("qid")
-      .agg(graft.functions.TopKByScore.column(heapScore,
-        col("nid").cast("long"), k).as("__topk"))
-      .select(col("qid"), posexplode(col("__topk")).as(Seq("__pos", "__t")))
-      // cast the aggregate's long id slot back to the SOURCE id type:
-      // both branches then share one output schema (values are
-      // unchanged — they came from this column)
-      .select(col("qid"), col("__t.id").cast(idType).as("nid"),
-        (if (metric.descending) col("__t.score")
-         else -col("__t.score")).as("score"),
-        (col("__pos") + 1).cast("bigint").as("rn"))
+    // the aggregate keeps (score desc, id asc) — for ascending metrics
+    // the score is negated into it and restored on the way out
+    def signed(c: Column): Column = if (metric.descending) c else -c
+    IvfIndex.top(leafPairScores(indexed, id, vecCol, metric), Seq("qid"),
+        "nid", signed(col("score")), lit(k))
+      .select(col("qid"), col("nid"), signed(col("score")).as("score"),
+        col("rn"))
   }
 
-  /** Window-rank form of [[knnJoinPerLeaf]] (row-identical output):
-    * kept as the measured-against baseline and for callers whose ids
-    * are not integral.
+  /** Window-rank form of [[knnJoinPerLeaf]] (row-identical output),
+    * kept as the measured-against baseline.
     */
   def knnJoinPerLeafWindow(indexed: DataFrame, id: String, vecCol: String,
       k: Int, metric: Metric): DataFrame =

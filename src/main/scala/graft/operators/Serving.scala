@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{bquant, quantize, TopKCrowded}
+import graft.functions.{bquant, quantize}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graftshim.Shims
@@ -18,13 +18,13 @@ import org.apache.spark.sql.functions._
   * threshold) plus a partition-pruned scan of the probed leaves —
   * the open cost (sidecar + manifest) is paid once per process (the
   * serving benchmark's `manifest.open_ms` and `request_p50_ms`). A
-  * full-shape single request on any tier whose probed files count at
-  * most [[IvfIndex.MaxSingleRows]] rows ranks its candidates behind
-  * ONE exchange. A metadata table of at most that many rows is
-  * broadcast: three Spark jobs — scan, broadcast, result. A larger
-  * one gets the ≤ k ranked rows broadcast into its scan: four jobs
-  * ([[IvfIndex.servingTail]]). A BATCH ranks each query in ONE
-  * partial top-k below one exchange ([[top]]).
+  * single request on any tier, plain or registry-backed, ranks its
+  * candidates in ONE partial top-k below ONE exchange
+  * ([[IvfIndex.top]]). A metadata table of at most
+  * [[IvfIndex.MaxSingleRows]] rows is broadcast: three Spark jobs —
+  * scan, broadcast, result. A larger one gets the ≤ k ranked rows
+  * broadcast into its scan: four jobs ([[IvfIndex.servingTail]]). A
+  * BATCH ranks each query the same way, grouped by query.
   *
   * The held frame is LWW-RESOLVED against the delta registry as of
   * open time ([[graft.streaming.IndexMaintenance.readServing]]):
@@ -53,8 +53,9 @@ final class Serving private[operators] (
   private def requireIntegralId(op: String, frame: DataFrame = data,
       c: String = id, what: String = "id column")
       : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
     val idType = frame.schema(c).dataType
-    require(IvfIndex.integral(idType),
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
       s"$op: $what '$c' must be integral (is $idType)")
     idType
   }
@@ -393,7 +394,7 @@ final class Serving private[operators] (
     * shared arithmetic site ([[Lexical.bm25TermScores]]); the dense
     * leg routes per query (f32 expression, exact below the router
     * threshold) over one In-list-pruned scan of the probed-leaf
-    * union, cut per query by [[top]]; RRF, the per-query pool cuts,
+    * union, cut per query by [[IvfIndex.top]]; RRF, the per-query pool cuts,
     * and the MMR recurrences are per-query windows/groups over ≤
     * kLex+kDense rows each.
     * Freshness/pinning semantics are [[searchHybrid]]'s (same
@@ -465,8 +466,8 @@ final class Serving private[operators] (
     // the dense leg: the shared routed candidate pairs, restricts on
     // the pruned scan beside the leaf In-list
     val probes = probeFrame(queries, qid, qvecCol, dotKernel, nProbe)
-    val drank = top(pairs(probes, prune(probes, restricts)),
-        dotKernel.pairScore, lit(kDense))
+    val drank = IvfIndex.top(pairs(probes, prune(probes, restricts)),
+        Seq("__qid"), id, dotKernel.pairScore, lit(kDense))
       .select(col("__qid").as(qid), col(id), col("rn").as("rd"))
     val fused = brank.join(drank, Seq(qid, id), "full_outer")
       .select(col(qid), col(id), rrf)
@@ -524,7 +525,7 @@ final class Serving private[operators] (
     *  - restricts proven SELECTIVE (the stats-skipped scan reads
     *    ≤ `maxExactFraction` of layout bytes): run the EXACT plan —
     *    every restricted row of the few surviving files scored, the
-    *    unbounded candidates through the parallel serving tail
+    *    unbounded candidates through the one serving tail
     *    ([[IvfIndex.servingTail]]) — full recall, no probe. Under a
     *    selective restrict the probed plan is both slower per useful
     *    row AND wrong-ish: the qualifying rows may all live outside
@@ -545,8 +546,7 @@ final class Serving private[operators] (
       maxExactFraction: Double = 0.05): DataFrame =
     if (searchAdaptivePlan(restricts, maxExactFraction))
       IvfIndex.servingTail(restricts.foldLeft(data)(_ filter _),
-        IvfIndex.dot(vecCol, query),
-        k, id, crowding, metadata, single = false)
+        IvfIndex.dot(vecCol, query), k, id, crowding, metadata)
     else
       search(query, nProbe, k, restricts, crowding, metadata)
 
@@ -745,10 +745,10 @@ final class Serving private[operators] (
     * FRAME in one plan, routed and pruned like [[searchBatch]]: ONE
     * pruned scan scores every (candidate, query) pair twice, the
     * sign-dot over the 8 B codes and the exact float dot, and ONE
-    * partial [[TopKCrowded]] per query in shortlist mode keeps each
-    * query's top-`m` ids by the sign-dot, then ranks them by the exact
-    * score in the shared [[tail]] — one exchange, as on every other
-    * tier. The PER-QUERY surface (`allowCol`/`attrs`,
+    * partial [[graft.functions.TopKCrowded]] per query in shortlist
+    * mode keeps each query's top-`m` ids by the sign-dot, then ranks
+    * them by the exact score in the shared [[tail]] — one exchange, as
+    * on every other tier. The PER-QUERY surface (`allowCol`/`attrs`,
     * `numCol`/`numAttrs`) filters each pair BEFORE the shortlist cut,
     * so every tenant's m slots hold rows that tenant may see. An id
     * is served by its copy with the best sign-dot (ties to the better
@@ -800,8 +800,7 @@ final class Serving private[operators] (
       IvfIndex.bareTail(candidates, score, k, id, scoreName, shortlist)
     else
       IvfIndex.servingTail(candidates, score, k, id, crowding, metadata,
-        single = IvfIndex.smallProbe(data, leaves), scoreName = scoreName,
-        shortlist = shortlist)
+        scoreName, shortlist)
   }
 
   /** Multi-vector LATE-INTERACTION search against the held layout —
@@ -1263,7 +1262,7 @@ final class Serving private[operators] (
     * — [[probeFrame]]), candidates come from joining the held layout
     * on `leaf_id` (≤ 1024 probed leaves reach the scan as an In-list),
     * and per-query ranking is ONE partial top-k below one exchange
-    * ([[top]]: each partition sends at most k rows per query).
+    * ([[IvfIndex.top]]: each partition sends at most k rows per query).
     *
     * ROUTING PARITY CAVEAT: this path routes with the float32
     * broadcast matrix ([[IvfIndex.probeExprF32]]); [[search]] routes
@@ -1292,7 +1291,7 @@ final class Serving private[operators] (
     * cap, and the metadata join appended to the ranked rows — the
     * batched mirror of the 10-arg [[IvfIndex.searchDf]], same
     * conventions per query; the cap and top-k run in the one partial
-    * aggregate of [[top]], no window.
+    * aggregate of [[IvfIndex.top]], no window.
     *
     * Output: (`qid`, id, metadata columns…, score, rn), rn 1-based
     * per query by (score desc, id), rows ordered (`qid`, rn).
@@ -2073,7 +2072,7 @@ final class Serving private[operators] (
     pq.preds.foldLeft(side.join(probes, Seq("leaf_id")))(_ filter _)
 
   /** Each pair scored as "score": (__qid, id, score, `carried`…), one
-    * row per (query, stored copy) — spill copies collapse in [[top]]. */
+    * row per (query, stored copy) — spill copies collapse in [[IvfIndex.top]]. */
   private def scored(pairs: DataFrame, score: Column,
       carried: Seq[String]): DataFrame =
     pairs.select(Seq(col("__qid"), col(id), score.as("score")) ++
@@ -2165,8 +2164,8 @@ final class Serving private[operators] (
       metadata, pq, kernel.scoreName)
   }
 
-  /** The ONE batch tail — [[top]] → metadata join — of every routed
-    * and exact batch plan over `scored` (__qid, id, score[, __sl]
+  /** The ONE batch tail — [[IvfIndex.top]] → metadata join — of every
+    * routed and exact batch plan over `scored` (__qid, id, score[, __sl]
     * [, crowdAttr][, __k][, __cap]); a per-query `__k` / `__cap` makes
     * the limit least(global, per-query); `shortlist` = m ranks only
     * each query's m best ids by `__sl`. Output: (`qid`, id[, metadata
@@ -2177,7 +2176,8 @@ final class Serving private[operators] (
       scoreName: String = "score", shortlist: Option[Int] = None): DataFrame = {
     def limit(global: Int, perQuery: Option[String], c: String): Column =
       perQuery.fold(lit(global))(_ => least(lit(global), col(c)))
-    val ranked = top(scored, col("score"), limit(k, pq.kCol, "__k"),
+    val ranked = IvfIndex.top(scored, Seq("__qid"), id, col("score"),
+      limit(k, pq.kCol, "__k"),
       crowding.map { case (attr, cap) =>
         (col(attr), limit(cap, pq.capCol, "__cap")) },
       shortlist.map(m => (col("__sl"), m)))
@@ -2190,25 +2190,10 @@ final class Serving private[operators] (
             metaCols.map(c => col(s"__m.$c")) ++:
             Seq(col("__r.score"), col("__r.rn")): _*)
           .orderBy(col(qid), col("rn"))
-      case None => ranked.withColumnRenamed("__qid", qid)
+      case None => ranked.drop("__attr").withColumnRenamed("__qid", qid)
     }
     out.withColumnRenamed("score", scoreName)
   }
-
-  /** Each query's (__qid, id, score, rn) by (score desc, id): ONE
-    * partial [[TopKCrowded]] per `__qid` (spill copies one id, ≤ cap per
-    * value, ≤ k rows; with a `shortlist`, ≤ m ids by its score), so ≤ k
-    * (≤ m) rows per query leave each partition. */
-  private def top(pairs: DataFrame, score: Column, k: Column,
-      crowd: Option[(Column, Column)] = None,
-      shortlist: Option[(Column, Int)] = None): DataFrame =
-    // scored in a (codegen) projection, not per row inside the heap
-    pairs.withColumn("__s", score).groupBy(col("__qid"))
-      .agg(TopKCrowded.column(col("__s"), col(id), crowd.map(_._1), k,
-        crowd.fold(lit(Int.MaxValue))(_._2), shortlist).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")))
-      .select(col("__qid"), col("col.id").as(id),
-        col("col.score").as("score"), (col("pos") + 1).cast("bigint").as("rn"))
 
   def numLeaves: Int = model.centroids.length
 }

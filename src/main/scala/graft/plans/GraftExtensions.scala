@@ -3,7 +3,8 @@ package graft.plans
 import graft.functions._
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo,
+  Literal}
 
 /** SparkSessionExtensions module: registers the graft expressions as
   * SQL functions, so the engine's surface is reachable from plain
@@ -38,8 +39,8 @@ object GraftExtensions {
       t: org.apache.spark.sql.types.DataType): Expression =
     org.apache.spark.sql.catalyst.expressions.Cast(c, t)
 
-  /** k for graft_top_k must be a foldable integer — it sizes the
-    * aggregation buffer, so it cannot vary per row.
+  /** k for graft_top_k must be a foldable integer — one k per query
+    * text, not a per-row limit.
     */
   private def literalK(e: Expression): Int = e match {
     case l if l.foldable => l.eval() match {
@@ -73,13 +74,13 @@ object GraftExtensions {
       new ExpressionInfo(classOf[BpeTokenCount].getName, "graft_bpe_count"),
       (args: Seq[Expression]) => BpeTokenCount(args(0))),
     // bare AggregateFunction: the analyzer wraps it in an
-    // AggregateExpression exactly as for built-in aggregates
+    // AggregateExpression exactly as for built-in aggregates; no
+    // crowding attribute, no cap — each id once, by its best copy
     ("graft_top_k",
-      new ExpressionInfo(classOf[TopKByScore].getName, "graft_top_k"),
-      (args: Seq[Expression]) => TopKByScore(
-        cast(args(0), org.apache.spark.sql.types.DoubleType),
-        cast(args(1), org.apache.spark.sql.types.LongType),
-        literalK(args(2)))),
+      new ExpressionInfo(classOf[TopKCrowded].getName, "graft_top_k"),
+      (args: Seq[Expression]) => TopKCrowded(
+        cast(args(0), org.apache.spark.sql.types.DoubleType), args(1), None,
+        Literal(literalK(args(2))), Literal(Int.MaxValue))),
     ("graft_ann_probe",
       new ExpressionInfo(classOf[AnnProbe].getName, "graft_ann_probe"),
       (args: Seq[Expression]) => AnnProbe(args(0), args(1), d(args(2)),

@@ -598,7 +598,7 @@ object ReferencePipeline {
     * (/root/reference/vector_store/setup_vector_search.py:45-76
     * restricts + crowding; common/config.py:32-33 top-k + dot
     * product): `graft_ann_probe` leaf pruning → restrict filters →
-    * crowding window (≤2 per label) → `graft_top_k` bounded-heap
+    * crowding window (≤2 per label) → `graft_top_k` partial-aggregate
     * shortlist → metadata join — every graft extension point
     * (optimizer rule + SQL aggregate + codegen scalar fn) exercised
     * together from plain SQL, full-hash-checked. Fixed data-derived

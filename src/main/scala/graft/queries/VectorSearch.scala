@@ -165,9 +165,10 @@ object VectorSearch {
       .limit(20)
   }
 
-  /** Per-group top-k via the bounded-heap UDAF (TopKByScore,
-    * TypedImperativeAggregate): one aggregation pass with k-element
-    * partial heaps instead of a per-partition sort + rank filter —
+  /** Per-group top-k via the engine's one top-k aggregate
+    * (TopKCrowded, a TypedImperativeAggregate, with no crowding
+    * attribute and no cap): one aggregation pass with k-row partial
+    * buffers instead of a per-partition sort + rank filter —
     * hash-checked against the identically tie-broken window form.
     */
   private val vTopkAgg = QueryDef.sqlChecked("v_topk_agg")(
@@ -180,8 +181,8 @@ object VectorSearch {
     val e = Tables.embeddings(s, d).select(col("label"), col("vec_id"),
       graft.functions.vectors.l2Norm(col("embedding")).as("nrm"))
     e.groupBy("label")
-      .agg(graft.functions.TopKByScore
-        .column(col("nrm"), col("vec_id"), 3).as("top"))
+      .agg(graft.functions.TopKCrowded
+        .column(col("nrm"), col("vec_id"), None, lit(3), lit(null)).as("top"))
       .select(col("label"), explode(col("top")).as("t"))
       .select(col("label"), col("t.id").as("vec_id"), col("t.score").as("nrm"))
       .orderBy("label", "vec_id")

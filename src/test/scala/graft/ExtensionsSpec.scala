@@ -94,8 +94,8 @@ class ExtensionsSpec extends SparkTestBase {
     // a layout that forces different partial-buffer merge shapes
     val byCol = { (frame: org.apache.spark.sql.DataFrame) =>
       frame.groupBy("g")
-        .agg(graft.functions.TopKByScore.column(col("score"), col("id"), 1000)
-          .as("top"))
+        .agg(graft.functions.TopKCrowded.column(col("score"), col("id"), None,
+          lit(1000), lit(null)).as("top"))
         .select(col("g"), col("top")).orderBy("g").collect().toSeq
     }
     assert(byCol(df) == byCol(df.repartition(17)))

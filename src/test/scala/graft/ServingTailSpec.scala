@@ -1,12 +1,17 @@
 package graft
 
+import graft.functions.TopKCrowded
 import graft.operators.{IvfIndex, ProductQuantizer, Serving}
+import graft.streaming.IndexMaintenance
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
@@ -14,13 +19,14 @@ import org.apache.spark.sql.functions._
 /** The one single-request serving tail (`IvfIndex.servingTail`) behind
   * the full-shape `Serving.search` / 10-arg `IvfIndex.searchDf` and the
   * crowding/metadata forms of `searchSq`, `searchAdc` and
-  * `searchBqRerank`: a small probe ranks its candidates in one
-  * partition and a probe past `IvfIndex.MaxSingleRows` keeps the
-  * parallel tail; a small parquet metadata table is broadcast, any
-  * other has the ranked rows broadcast into its scan; and the rows
-  * equal the serving formula — spill collapse → crowding cap per
-  * attribute value (score desc, id) → top-k (score desc, id) → inner
-  * metadata join — computed here on the driver.
+  * `searchBqRerank`: every probe — small, past `IvfIndex.MaxSingleRows`,
+  * in memory or read through the delta registry — ranks in a partial
+  * top-k in the scan tasks below ONE single-partition exchange; a small
+  * parquet metadata table is broadcast, any other has the ranked rows
+  * broadcast into its scan; and the rows equal the serving formula —
+  * spill collapse → crowding cap per attribute value (score desc, id) →
+  * top-k (score desc, id, a null score last) → inner metadata join —
+  * computed here on the driver.
   */
 class ServingTailSpec extends SparkTestBase {
   import spark.implicits._
@@ -104,8 +110,16 @@ class ServingTailSpec extends SparkTestBase {
   }
 
   private def shuffles(df: DataFrame): Seq[ShuffleExchangeLike] =
-    nodes(df.queryExecution.executedPlan)
-      .collect { case e: ShuffleExchangeLike => e }
+    shuffles(df.queryExecution.executedPlan)
+
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] =
+    nodes(p).collect { case e: ShuffleExchangeLike => e }
+
+  private def partialTopK(p: SparkPlan): Boolean = nodes(p).exists {
+    case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+      e.mode == Partial && e.aggregateFunction.isInstanceOf[TopKCrowded])
+    case _ => false
+  }
 
   /** The broadcast side of the metadata join: the metadata table
     * (holds `title`) or the ranked rows (hold `rank`). */
@@ -203,15 +217,16 @@ class ServingTailSpec extends SparkTestBase {
     }
   }
 
-  test("plan: a probe whose files hold more than MaxSingleRows rows, or " +
-      "a frame built in memory, keeps the parallel tail") {
+  test("plan: a probe past MaxSingleRows, a frame built in memory and a " +
+      "registry-backed handle rank in a partial top-k below ONE " +
+      "single-partition exchange") {
     // 2 leaves × 36,000 rows: past IvfIndex.MaxSingleRows (65,536)
     val n = 72000
     val rows = spark.range(n).select(col("id").as("vec_id"),
       (col("id") % 5).cast("int").as("label"),
       (col("id") % 2).cast("int").as("leaf_id"),
       array(lit(1.0), (col("id") % 97).cast("double") / 97.0, lit(0.0),
-        lit(0.0)).as("v"))
+        lit(0.0)).as("v"), lit(1L).as("version"))
     val dir = tmpDir("graft_tail_wide")
     val wideModel = IvfIndex.Model(Array(Array(1.0, 0.0, 0.0, 0.0),
       Array(0.9, 0.1, 0.0, 0.0)))
@@ -219,18 +234,61 @@ class ServingTailSpec extends SparkTestBase {
     val wide = Serving.open(spark, dir, vecCol = "v")
     val meta = Some((metaFile(n), "vec_id"))
     val crowd = Some(("label", 2))
-    for ((name, df) <- Seq(
-        "wide layout" -> wide.search(q, 2, 5, Nil, crowd, meta),
-        "in memory" -> IvfIndex.searchDf(rows, wideModel, q, 2, 5,
-          "vec_id", "v", Nil, crowd, meta))) {
+    val k = 5
+    // the registry-backed handle reads through its winners join
+    def registry(): DataFrame = {
+      IndexMaintenance.appendToServing(spark, dir,
+        rows.filter(col("vec_id") < 100L).drop("leaf_id")
+          .withColumn("version", lit(2L)), "vec_id", "v", "version")
+      val reg = Serving.open(spark, dir, vecCol = "v")
+      assert(reg.data.queryExecution.analyzed.exists(_.isInstanceOf[Join]),
+        "construction: the handle does not read through its registry")
+      reg.search(q, 2, k, Nil, crowd, meta)
+    }
+    for ((name, input) <- Seq[(String, () => DataFrame)](
+        "wide layout" -> (() => wide.search(q, 2, k, Nil, crowd, meta)),
+        "in memory" -> (() => IvfIndex.searchDf(rows, wideModel, q, 2, k,
+          "vec_id", "v", Nil, crowd, meta)),
+        "delta registry" -> (() => registry()))) {
+      val df = input()
       val got = df.collect()
-      assert(got.map(_.getLong(3)).toSeq == (1L to 5L), name)
-      val ex = shuffles(df)
-      assert(ex.exists(_.outputPartitioning.numPartitions > 1),
-        s"$name: the collapse ran in one partition:\n" +
-          ex.map(_.outputPartitioning).mkString("\n"))
+      assert(got.map(_.getLong(3)).toSeq == (1L to k.toLong), name)
+      // the first exchange: the one fed by the scan, no exchange below
+      val first = shuffles(df).filter(e => shuffles(e.child).isEmpty)
+      assert(first.length == 1 &&
+        first.head.outputPartitioning.numPartitions == 1,
+        s"$name: want one single-partition first exchange, got:\n" +
+          first.map(_.outputPartitioning).mkString("\n"))
+      assert(partialTopK(first.head.child),
+        s"$name: no partial TopKCrowded below the first exchange")
+      val written = first.head.metrics("shuffleRecordsWritten").value
+      assert(written <= k.toLong * first.head.numMappers,
+        s"$name: $written records crossed from ${first.head.numMappers} tasks")
       assert(broadcasts(df, "rank"), s"$name: the ranked rows are not broadcast")
     }
+  }
+
+  test("rows: a null-score candidate ranks last, in the single request " +
+      "and the batch alike") {
+    // the probed leaves 0 and 1 hold 30 ids plus id 99, whose vector is
+    // null; k exceeds the 31 candidates and label 0's cap admits all 7
+    val withNull = handRows.map(r => (r._1, r._2, r._3, Option(r._4))) :+
+      ((99L, 0, 0, Option.empty[Seq[Double]]))
+    val dir = tmpDir("graft_tail_null")
+    IvfIndex.write(withNull.toDF("vec_id", "label", "leaf_id", "v"), dir,
+      model)
+    val serving = Serving.open(spark, dir, vecCol = "v")
+    val metaDf = (0L until 36L).:+(99L).map(i => (i, s"t$i"))
+      .toDF("vec_id", "title")
+    val (k, crowd, meta) = (40, Some(("label", 7)), Some((metaDf, "vec_id")))
+    val single = serving.search(q, 2, k, Nil, crowd, meta).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.get(2), r.getLong(3)))
+    val batch = serving.searchBatch(Seq((1L, q.toSeq)).toDF("qid", "qv"),
+        "qid", "qv", 2, k, Nil, crowd, meta).collect().toSeq
+      .map(r => (r.getLong(1), r.getString(2), r.get(3), r.getLong(4)))
+    assert(single.length == 31 && single.last == ((99L, "t99", null, 31L)),
+      s"the null-score row is not served last: ${single.takeRight(2)}")
+    assert(single == batch.sortBy(_._4))
   }
 
   test("rows: spill copies collapse and a score tie at the k boundary " +

@@ -65,26 +65,32 @@ class VectorSpec extends SparkTestBase {
   }
 
   test("knnJoinPerLeaf: heap and window branches share one schema and rows") {
-    // the heap path ranks through a long id slot; its output must
-    // still surface (qid, nid) in the SOURCE id type, identical to
-    // the window branch a non-integral id dispatches to
+    // the aggregate ranks any id type: its output must surface
+    // (qid, nid) in the SOURCE id type, with the window form's rows —
+    // int and string ids, a descending and an ascending metric
     val (indexed, _) = graft.operators.IvfIndex.build(
       emb.filter(col("vec_id") < 300), "vec_id", "embedding", 4)
     val intIdx = indexed.withColumn("vec_id", col("vec_id").cast("int"))
-    val heap = graft.operators.Knn.knnJoinPerLeaf(
-      intIdx, "vec_id", "embedding", 3, graft.operators.Knn.Dot)
-    val window = graft.operators.Knn.knnJoinPerLeafWindow(
-      intIdx, "vec_id", "embedding", 3, graft.operators.Knn.Dot)
-    assert(heap.schema("qid").dataType == window.schema("qid").dataType)
-    assert(heap.schema("nid").dataType == window.schema("nid").dataType)
-    assert(heap.schema("nid").dataType ==
-      org.apache.spark.sql.types.IntegerType,
-      "nid must keep the source id type, not the heap's long slot")
-    assert(heap.schema("rn").dataType == window.schema("rn").dataType)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("qid", "nid", "score", "rn")
-        .orderBy("qid", "rn", "nid").collect().toSeq
-    assert(rows(heap) == rows(window))
+    val strIdx = indexed.withColumn("vec_id",
+      format_string("v%04d", col("vec_id")))
+    for ((name, idx, metric) <- Seq(
+        ("int ids, dot", intIdx, graft.operators.Knn.Dot),
+        ("string ids, dot", strIdx, graft.operators.Knn.Dot),
+        ("int ids, L2", intIdx, graft.operators.Knn.L2))) {
+      val heap = graft.operators.Knn.knnJoinPerLeaf(
+        idx, "vec_id", "embedding", 3, metric)
+      val window = graft.operators.Knn.knnJoinPerLeafWindow(
+        idx, "vec_id", "embedding", 3, metric)
+      assert(heap.schema("qid").dataType == window.schema("qid").dataType, name)
+      assert(heap.schema("nid").dataType == window.schema("nid").dataType, name)
+      assert(heap.schema("nid").dataType == idx.schema("vec_id").dataType,
+        s"$name: nid must keep the source id type")
+      assert(heap.schema("rn").dataType == window.schema("rn").dataType, name)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("qid", "nid", "score", "rn")
+          .orderBy("qid", "rn", "nid").collect().toSeq
+      assert(rows(heap) == rows(window), name)
+    }
   }
 
   test("top-k heap aggregate is partition-independent") {
@@ -94,8 +100,8 @@ class VectorSpec extends SparkTestBase {
       graft.functions.vectors.l2Norm(col("embedding")).as("nrm"))
     def run(df: org.apache.spark.sql.DataFrame) =
       df.groupBy("label")
-        .agg(graft.functions.TopKByScore
-          .column(col("nrm"), col("vec_id"), 3).as("top"))
+        .agg(graft.functions.TopKCrowded
+          .column(col("nrm"), col("vec_id"), None, lit(3), lit(null)).as("top"))
         .select(col("label"), explode(col("top")).as("t"))
         .select(col("label"), col("t.id"), col("t.score"))
         .orderBy("label", "t.id").collect().toSeq
