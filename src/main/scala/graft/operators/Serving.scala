@@ -24,7 +24,11 @@ import org.apache.spark.sql.functions._
   * [[IvfIndex.MaxSingleRows]] rows is broadcast: three Spark jobs —
   * scan, broadcast, result. A larger one gets the ≤ k ranked rows
   * broadcast into its scan: four jobs ([[IvfIndex.servingTail]]). A
-  * BATCH ranks each query the same way, grouped by query.
+  * BATCH ranks each query the same way, grouped by query. Multi-vector
+  * late interaction (MaxSim: [[searchMaxSim]], [[searchMaxSimBq]],
+  * [[searchMaxSimBatch]], [[searchMaxSimBatchPerQuery]]) scores with
+  * the layout's own tier kernel and ranks through the same top-k:
+  * one global group for a request, one group per query in a batch.
   *
   * The held frame is LWW-RESOLVED against the delta registry as of
   * open time ([[graft.streaming.IndexMaintenance.readServing]]):
@@ -63,18 +67,6 @@ final class Serving private[operators] (
   /** Leaf-pruned exact top-k: (id, leaf_id, score) by score desc. */
   def search(query: Array[Double], nProbe: Int, k: Int): DataFrame =
     IvfIndex.searchDf(data, model, query, nProbe, k, id, vecCol)
-
-  /** The reference's `leaf_nodes_to_search_percent` knob
-    * (/root/reference/common/config.py:37, README "Tree-AH leaves
-    * searched: 10%") as a convenience: probe ⌈pct% of leaves⌉,
-    * clamped to [1, numLeaves]. The percent form is how an operator
-    * carries a recall target across layouts whose leaf counts differ.
-    */
-  def searchPercent(query: Array[Double], pct: Double, k: Int): DataFrame = {
-    require(pct > 0 && pct <= 100, s"pct must be in (0, 100], got $pct")
-    search(query, math.min(numLeaves, math.max(1,
-      math.ceil(numLeaves * pct / 100.0).toInt)), k)
-  }
 
   /** The full serving shape — restricts, crowding cap, metadata
     * join — over the held frame; see the 10-arg
@@ -804,140 +796,36 @@ final class Serving private[operators] (
   }
 
   /** Multi-vector LATE-INTERACTION search against the held layout —
-    * the serving-side MaxSim (`v_maxsim` is the exact batch form):
-    * one query = a SET of vectors, one document = the layout rows
-    * sharing `docCol`, score(doc) = Σ_q max over the doc's rows of
-    * ⟨q, row⟩. IVF-pruned: the scan covers the UNION of every query
-    * vector's `nProbe` probed leaves (one pruned pass — each query
-    * vector then scores all union rows, which only ADDS candidates
-    * vs per-vector probing and keeps the plan a single scan).
-    * Per-(doc, qvec) partial MAX collapses map-side; the per-doc sum
-    * is exact-decimal. Approximate like all probed serving: a doc
-    * vector outside every probed leaf contributes nothing.
+    * the serving-side MaxSim of ColBERT (Khattab & Zaharia, SIGIR
+    * 2020; `v_maxsim` is the exact batch form): one query = a SET of
+    * vectors, one document = the layout rows sharing `docCol`,
+    * score(doc) = Σ_q max over the doc's rows of the layout's own tier
+    * kernel ([[tier]]: float dot, SQ8 packed dot, or PQ ADC with the
+    * OPQ rotation). IVF-pruned: the scan covers the UNION of every
+    * query vector's `nProbe` probed leaves, routed on the driver (each
+    * vector scores all union rows: only MORE candidates, one scan).
+    * `restricts` sit on the pruned scan. Approximate like all probed
+    * serving: a doc vector outside every probed leaf contributes
+    * nothing.
     *
     * Output: (docCol, score) top-k by score desc, docCol asc.
     */
   def searchMaxSim(queryVecs: Seq[Array[Double]], nProbe: Int, k: Int,
-      docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    require(queryVecs.nonEmpty, "searchMaxSim needs ≥ 1 query vector")
-    val qdf = spark.createDataFrame(
-      queryVecs.zipWithIndex.map { case (q, i) => (i, q.toSeq) })
-      .toDF("__qidx", "__qv")
-    maxSimTop(maxSimScan(queryVecs, nProbe, restricts), qdf,
-      dotKernel.pairScore, docCol, k)
-  }
-
-  /** The single-query MaxSim candidate scan: the UNION of every query
-    * vector's probed leaves under the shared 1024-leaf In-list bound
-    * ([[prune]] — a large queryVecs × nProbe product degrades to the
-    * full scan, extra candidates only cost work, never rows), with
-    * the per-datapoint restricts on the pruned scan (the same contract
-    * as the single-vector paths — keep them on top-level columns so
-    * they reach PushedFilters).
-    */
-  private def maxSimScan(queryVecs: Seq[Array[Double]], nProbe: Int,
-      restricts: Seq[Column]): DataFrame =
-    prune(queryVecs.flatMap(q => model.topLeaves(q, nProbe)).distinct,
-      restricts)
-
-  /** Late-interaction scores: `cand` × the broadcast token frame
-    * `qdf` (`__qidx` + the kernel's columns), per-(key…, token) MAX of
-    * `pairScore`, exact-decimal sum per key → `name`. Keys are
-    * (docCol) for a single query, (__qid, docCol) for a batch. */
-  private def maxSim(paired: DataFrame, keys: Seq[String],
-      pairScore: Column, name: String): DataFrame =
-    paired.groupBy((keys :+ "__qidx").map(col): _*)
-      .agg(max(pairScore).as("__best"))
-      .groupBy(keys.map(col): _*)
-      .agg(graft.Exact.dsum(col("__best"), 12).as(name))
-
-  /** Single-query MaxSim top-`k` (`name` desc, docCol asc). */
-  private def maxSimTop(cand: DataFrame, qdf: DataFrame, pairScore: Column,
-      docCol: String, k: Int, name: String = "score"): DataFrame =
-    maxSim(cand.crossJoin(broadcast(qdf)), Seq(docCol), pairScore, name)
-      .orderBy(col(name).desc, col(docCol))
-      .limit(k)
-
-  /** [[searchMaxSim]] over the SQ8 TIER — late-interaction serving at
-    * the 1/4 memory footprint: the per-(row, qvec) inner loop is the
-    * exact integer dot over packed byte codes rescaled by the two
-    * scales ([[graft.functions.quantize]] — no trained artifact, the
-    * query set quantizes once on the driver), the per-(doc, qvec)
-    * MAX collapses map-side exactly like the raw path, and the
-    * per-doc sum stays exact-decimal (order-independent). Same
-    * IVF-pruned union-of-probed-leaves scan, same output contract:
-    * (docCol, score) top-k by score desc, docCol asc. Scores are
-    * bit-deterministic (integer dot + one float rescale), so the
-    * whole operator hash-gates against a SQL replica.
-    */
-  def searchMaxSimSq(queryVecs: Seq[Array[Double]], nProbe: Int, k: Int,
-      docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    require(tier == "sq",
-      s"searchMaxSimSq: layout at $path is a '$tier' tier, not SQ8")
-    require(queryVecs.nonEmpty, "searchMaxSimSq needs ≥ 1 query vector")
-    val qdf = spark.createDataFrame(
-      queryVecs.zipWithIndex.map { case (q, i) =>
-        val (ma, pk) = quantize.packLocal(q)
-        (i, ma, pk)
-      })
-      .toDF("__qidx", "__qma", "__qpk")
-    maxSimTop(maxSimScan(queryVecs, nProbe, restricts), qdf,
-      sqKernel.pairScore, docCol, k)
-  }
-
-  /** [[searchMaxSim]] over the PQ TIER — late interaction at the
-    * 64× footprint, completing the MaxSim × tier matrix
-    * (raw / SQ8 / ADC): the per-(row, qvec) inner loop is the
-    * asymmetric ADC score of the stored 4 B code against the query
-    * vector ([[ProductQuantizer.adcDirectExpr]] — 8 forward sub-dots
-    * against the codebook reference object, subspaces accumulated in
-    * ascending order so the doubles are SQL-replicable), the
-    * per-(doc, qvec) MAX collapses map-side, and the per-doc sum
-    * stays exact-decimal. Codebook and the OPQ rotation (when the
-    * layout carries one) reload from the path's own sidecars; each
-    * query vector rotates ONCE on the driver — the write side
-    * ([[graft.streaming.IndexMaintenance.appendCodedToServing]])
-    * rotates identically, so query and codes stay in one space.
-    * Leaf probing uses the ORIGINAL (unrotated) query against the
-    * model sidecar, exactly like [[searchAdc]]. Same IVF-pruned
-    * union-of-probed-leaves scan and output contract as the other
-    * tiers: (docCol, score) top-k by score desc, docCol asc.
-    */
-  def searchMaxSimAdc(queryVecs: Seq[Array[Double]], nProbe: Int, k: Int,
-      docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    require(tier == "pq",
-      s"searchMaxSimAdc: layout at $path is a '$tier' tier, not PQ")
-    require(queryVecs.nonEmpty, "searchMaxSimAdc needs ≥ 1 query vector")
-    val cb = ProductQuantizer.loadCodebook(spark, path)
-    val rot = ProductQuantizer.loadRotation(spark, path)
-    val qdf = spark.createDataFrame(
-      queryVecs.zipWithIndex.map { case (q, i) =>
-        val rq = rot.map(r => ProductQuantizer.rotate(q, r)).getOrElse(q)
-        (i, rq.toSeq)
-      })
-      .toDF("__qidx", "__qv")
-    maxSimTop(maxSimScan(queryVecs, nProbe, restricts), qdf,
-      ProductQuantizer.adcDirectExpr(col("pq_code"), col("__qv"), cb),
-      docCol, k)
-  }
+      docCol: String, restricts: Seq[Column] = Nil): DataFrame =
+    maxSimSingle("searchMaxSim", queryVecs, nProbe, k, docCol, restricts,
+      tierKernel)
 
   /** [[searchMaxSim]] over the BQ SHORTLIST rung — late interaction
-    * with the two-stage economics of [[searchBqRerank]], the fourth
-    * cell of the MaxSim × tier matrix (raw / SQ8 / ADC / BQ): stage 1
-    * scores every (row, qvec) pair's asymmetric sign-dot over the
-    * 8 B/vector codes ([[graft.functions.BqDot]] — 32× fewer scan
-    * bytes than the raw floats), collapses the per-(doc, qvec) MAX
-    * map-side, sums per doc exact-decimal, and keeps the top-`m`
-    * DOCS deterministically (sign-score desc, doc asc); stage 2
-    * re-runs the EXACT raw-float MaxSim over the m surviving docs
-    * only — a broadcast semi-join of the tiny doc shortlist back
-    * onto the same pruned scan — so final scores and ordering are
-    * exact over the shortlist; approximation enters only through
-    * which docs survive stage 1 (and, as in all probed serving,
-    * which leaves were probed). Same IVF-pruned
-    * union-of-probed-leaves scan ([[searchMaxSim]], same 1024-leaf
-    * In-list bound) and output contract as the other tiers:
-    * (docCol, score) top-k by score desc, docCol asc.
+    * with the economics of [[searchBqRerank]], in ONE pass: every
+    * (row, query vector) pair scores twice on the one pruned scan, the
+    * asymmetric sign-dot over the 8 B/vector codes
+    * ([[graft.functions.BqDot]]) and the exact float dot; both take
+    * the per-(doc, vector) MAX and the exact-decimal per-doc sum, and
+    * the shortlist-mode [[IvfIndex.top]] keeps the `m` best DOCS by
+    * the sign-dot sum (ties to the smaller doc), then ranks them by
+    * the exact sum. Approximation enters only through which docs
+    * survive the shortlist (and which leaves were probed). Raw layouts
+    * with a `bq_code` column only. Output as [[searchMaxSim]].
     */
   def searchMaxSimBq(queryVecs: Seq[Array[Double]], nProbe: Int,
       m: Int, k: Int, docCol: String,
@@ -949,37 +837,45 @@ final class Serving private[operators] (
     require(hasBq,
       s"searchMaxSimBq: layout at $path has no bq_code companion " +
         "column — build it with graft.functions.bquant.packSigns")
-    require(queryVecs.nonEmpty, "searchMaxSimBq needs ≥ 1 query vector")
-    val pruned = maxSimScan(queryVecs, nProbe, restricts)
-    val qdf = spark.createDataFrame(
-      queryVecs.zipWithIndex.map { case (q, i) => (i, q.toSeq) })
-      .toDF("__qidx", "__qv")
-    // stage 1: doc shortlist from the 8 B codes only — the raw
-    // vector column never loads for docs the signs rule out
-    val shortlist = maxSimTop(pruned, qdf, signKernel.pairScore, docCol,
-        m, signKernel.scoreName)
-      .select(col(docCol))
-    // stage 2: exact float MaxSim over the m surviving docs only
-    maxSimTop(pruned.join(broadcast(shortlist), Seq(docCol)), qdf,
-      dotKernel.pairScore, docCol, k)
+    maxSimSingle("searchMaxSimBq", queryVecs, nProbe, k, docCol, restricts,
+      dotKernel, Some(m))
+  }
+
+  /** The single MaxSim request: the driver-routed union of the query
+    * vectors' probed leaves, the kernel-decorated local token frame
+    * broadcast across the pruned scan, [[maxSimTop]] as one global
+    * group → (docCol, score) in rank order. */
+  private def maxSimSingle(op: String, queryVecs: Seq[Array[Double]],
+      nProbe: Int, k: Int, docCol: String, restricts: Seq[Column],
+      kernel: Serving.Kernel, shortlist: Option[Int] = None): DataFrame = {
+    require(queryVecs.nonEmpty, s"$op needs ≥ 1 query vector")
+    val tokens = decorateQueries(spark.createDataFrame(
+        queryVecs.zipWithIndex.map { case (q, i) => (i, q.toSeq) })
+      .toDF("__qidx", kernel.qv), kernel)
+      .select(("__qidx" +: kernel.scored).map(col): _*)
+    val cand = prune(queryVecs.flatMap(q => model.topLeaves(q, nProbe))
+      .distinct, restricts)
+    maxSimTop(cand.crossJoin(broadcast(tokens)), Nil, docCol, kernel,
+        lit(k), shortlist)
+      .orderBy("rn")
+      .select(col(docCol), col("score"))
   }
 
   /** BATCHED multi-vector late interaction — a FRAME of MaxSim
     * queries (one row per query: `qid`, `qvecsCol` =
     * array<array<double>> of the query's token vectors) served in
-    * ONE plan, the late-interaction sibling of [[searchBatch]]:
-    * every (qid, token vector) routes through the broadcast-f32
-    * probe expression, each qid's candidate set is the union of ITS
-    * OWN token vectors' probed leaves (identical semantics to
-    * [[searchMaxSim]] per qid), per-(qid, doc, qvec) MAX collapses
-    * map-side, the per-(qid, doc) sum is exact-decimal, and one
-    * per-qid window limit ranks the top-k. The corpus never
-    * shuffles: the (qid, leaf) pairs and the token-vector frame both
-    * BROADCAST onto the pruned scan; the only wide exchange is the
-    * per-(qid, doc) aggregation every batch tail already pays —
-    * |docs|·|Q| rows, not |rows|·|qvecs|. Same 1024-leaf In-list
-    * bound as all batch paths (the global union past it degrades to
-    * a full scan, which only ADDS candidates per qid).
+    * ONE plan, the late-interaction sibling of [[searchBatch]], on
+    * the layout's own tier kernel like [[searchMaxSim]]: every (qid,
+    * token vector) routes through the broadcast-f32 probe expression
+    * ([[tokenFrame]]), each qid's candidate set is the union of ITS
+    * OWN token vectors' probed leaves (the semantics of
+    * [[searchMaxSim]] per qid), and [[maxSimTop]] ranks each qid in a
+    * partial top-k below one exchange. The corpus never shuffles: the
+    * (qid, leaf) pairs and the token frame both BROADCAST onto the
+    * pruned scan; the exchanges carry per-(qid, doc, token) maxima and
+    * per-(qid, doc) sums, |docs|·|Q| rows, not |rows|·|qvecs|. Same
+    * 1024-leaf In-list bound as all batch paths (the global union past
+    * it degrades to a full scan, which only ADDS candidates per qid).
     *
     * Output: (qid, docCol, score, rn) ordered by qid, rn — one
     * ranked top-k per multi-vector query. A query whose token array
@@ -991,8 +887,7 @@ final class Serving private[operators] (
   def searchMaxSimBatch(queries: DataFrame, qid: String,
       qvecsCol: String, nProbe: Int, k: Int, docCol: String,
       restricts: Seq[Column] = Nil): DataFrame =
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, dotKernel,
-      restricts)
+    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, restricts)
 
   /** [[searchMaxSimBatch]] with PER-QUERY allow-maps — the
     * late-interaction cell of the per-query restrict surface
@@ -1002,7 +897,8 @@ final class Serving private[operators] (
     * pair inside the candidate join (codegen, no per-qid loop),
     * validated in-plan (an attr outside `attrs` raises on the
     * offending row), NULL/absent key = unconstrained. Batch-wide
-    * `restricts` compose (scan-level AND).
+    * `restricts` compose (scan-level AND). A per-query `kCol` limits
+    * its query to least(k, per-query k); NULL falls back to `k`.
     */
   def searchMaxSimBatchPerQuery(queries: DataFrame, qid: String,
       qvecsCol: String, allowCol: String, attrs: Seq[String],
@@ -1019,159 +915,62 @@ final class Serving private[operators] (
       "searchMaxSimBatchPerQuery: per-query numeric restricts need " +
         "BOTH the restriction column (numCol) and the constrained " +
         "attributes (numAttrs)")
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, dotKernel,
-      restricts, PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol))
+    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, restricts,
+      PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol))
   }
 
-  /** [[searchMaxSimBatch]] on the SQ8 TIER — the batched form of
-    * [[searchMaxSimSq]]: every token vector quantizes IN-PLAN
-    * (maxAbs → codes → pack, all codegen — zero driver-side
-    * per-token work, the [[searchBatchSq]] convention), the
-    * per-(row, token) inner loop is the exact integer dot over
-    * packed byte codes rescaled by the two scales, and the MAX /
-    * exact-decimal-sum / per-qid window tail is the shared batched
-    * core. Bit-deterministic like the whole SQ8 tier.
-    */
-  def searchMaxSimBatchSq(queries: DataFrame, qid: String,
-      qvecsCol: String, nProbe: Int, k: Int, docCol: String,
-      restricts: Seq[Column] = Nil,
-      allow: Option[(String, Seq[String])] = None,
-      kCol: Option[String] = None): DataFrame = {
-    require(tier == "sq",
-      s"searchMaxSimBatchSq: layout at $path is a '$tier' tier, not SQ8")
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, sqKernel,
-      restricts, PerQuery(allow.map(_._1), allow.toSeq.flatMap(_._2),
-        kCol = kCol))
-  }
-
-  /** [[searchMaxSimBatch]] on the PQ TIER — the batched form of
-    * [[searchMaxSimAdc]]: each token vector rotates IN-PLAN through
-    * the OPQ sidecar when the layout carries one (the
-    * [[searchBatchAdc]] convention — probing stays on the ORIGINAL
-    * vectors, rotation changes the coded space, never the router
-    * geometry), the per-(row, token) inner loop is the asymmetric
-    * ADC score against the codebook reference object, and the
-    * MAX / exact-decimal-sum / per-qid window tail is the shared
-    * batched core.
-    */
-  def searchMaxSimBatchAdc(queries: DataFrame, qid: String,
-      qvecsCol: String, nProbe: Int, k: Int, docCol: String,
-      restricts: Seq[Column] = Nil,
-      allow: Option[(String, Seq[String])] = None,
-      kCol: Option[String] = None): DataFrame = {
-    require(tier == "pq",
-      s"searchMaxSimBatchAdc: layout at $path is a '$tier' tier, not PQ")
-    maxSimBatchCore(queries, qid, qvecsCol, nProbe, k, docCol, adcKernel,
-      restricts, PerQuery(allow.map(_._1), allow.toSeq.flatMap(_._2),
-        kCol = kCol))
-  }
-
-  /** [[searchMaxSimBatch]] on the BQ SHORTLIST rung — the batched
-    * form of [[searchMaxSimBq]], completing the batched-MaxSim ×
-    * tier matrix (raw / SQ8 / ADC / BQ): stage 1 runs the batched
-    * sign-dot MaxSim over the 8 B/vector codes and keeps each qid's
-    * top-`m` DOCS deterministically (one per-qid window over
-    * per-doc exact-decimal sums); stage 2 re-runs the EXACT float
-    * MaxSim over only each qid's surviving docs — the (qid, doc)
-    * shortlist BROADCASTS back onto the same pruned candidates, so
-    * the float vectors load for m docs per qid instead of every
-    * probed row. Spec'd equal to its two gated siblings (admit-all ≡
-    * [[searchMaxSimBatch]]; per-qid ≡ [[searchMaxSimBq]]). Output:
-    * the [[searchMaxSimBatch]] contract — (qid, docCol, score, rn).
-    */
-  def searchMaxSimBatchBq(queries: DataFrame, qid: String,
-      qvecsCol: String, nProbe: Int, m: Int, k: Int,
-      docCol: String, restricts: Seq[Column] = Nil): DataFrame = {
-    require(m >= k, s"shortlist m=$m must be ≥ k=$k")
-    require(tier == "raw",
-      s"searchMaxSimBatchBq: layout at $path is a '$tier' tier — the " +
-        "BQ shortlist rides on raw vectors (exact rescore needs them)")
-    require(hasBq,
-      s"searchMaxSimBatchBq: layout at $path has no bq_code companion " +
-        "column — build it with graft.functions.bquant.packSigns")
-    val probes = tokenFrame(queries, qid, qvecsCol, dotKernel, nProbe)
-    val cand = maxSimCandidates(probes, restricts)
-    val qframe = probes.select(col("__qid"), col("__qidx"), col("__qv"))
-      .dropDuplicates("__qid", "__qidx")
-    // stage 1: per-qid doc shortlist from the 8 B codes only
-    val sl = maxSim(cand.join(broadcast(qframe), Seq("__qid")),
-        Seq("__qid", docCol), signKernel.pairScore, signKernel.scoreName)
-      .withColumn("__rn", row_number().over(Window
-        .partitionBy(col("__qid"))
-        .orderBy(col("__bq").desc, col(docCol))))
-      .filter(col("__rn") <= m)
-      .select(col("__qid"), col(docCol))
-    // stage 2: exact float MaxSim over each qid's m surviving docs
-    maxSimRank(maxSim(cand.join(broadcast(sl), Seq("__qid", docCol))
-        .join(broadcast(qframe), Seq("__qid")), Seq("__qid", docCol),
-        dotKernel.pairScore, "score"), docCol)
-      .filter(col("rn") <= k)
-      .withColumnRenamed("__qid", qid)
-      .select(col(qid), col(docCol), col("score"), col("rn"))
-      .orderBy(col(qid), col("rn"))
-  }
-
-  /** The shared batched-MaxSim core — the shared token frame
-    * ([[tokenFrame]]: routing at the global bound, the kernel's
-    * per-token columns computed ONCE per token, eager checkpoint),
-    * the shared 1024-leaf [[prune]], per-qid candidate union,
-    * broadcast of the token frame, per-pair filters, per-(qid, doc,
-    * token) MAX, exact-decimal per-(qid, doc) sum, per-qid window
-    * top-k.
-    */
+  /** The batched-MaxSim core: the token frame ([[tokenFrame]]: routing
+    * at the global bound, the tier kernel's per-token columns and the
+    * validated per-query columns computed ONCE per token, eager
+    * checkpoint), the shared 1024-leaf [[prune]] joined to the
+    * BROADCAST (qid, leaf) pairs and token frame (spill copies landing
+    * in two probed leaves collapse in the MAX), the per-pair filters,
+    * then [[maxSimTop]] grouped by qid. A per-query k (`__k`, a
+    * function of the qid) rides as a second grouping key. */
   private def maxSimBatchCore(queries: DataFrame, qid: String,
       qvecsCol: String, nProbe: Int, k: Int, docCol: String,
-      kernel: Serving.Kernel, restricts: Seq[Column],
-      pq: PerQuery = PerQuery()): DataFrame = {
-    // per-qid allow-maps and NUMERIC restriction sets ride the query
-    // row (one contract per qid, shared by all its token vectors) —
-    // validated in-plan like every per-query surface
+      restricts: Seq[Column], pq: PerQuery = PerQuery()): DataFrame = {
+    val kernel = tierKernel
     val probes = tokenFrame(queries, qid, qvecsCol, kernel, nProbe,
-      pq.copy(kCol = None).columns)
-    val qframe = probes.select((Seq("__qid", "__qidx") ++ kernel.scored ++
-        pq.restrictCols).map(col): _*)
+      pq.columns)
+    val tokens = probes.select((Seq("__qid", "__qidx") ++ kernel.scored ++
+        pq.restrictCols ++ pq.carried).map(col): _*)
       .dropDuplicates("__qid", "__qidx")
-    val paired = maxSimCandidates(probes, restricts)
-      .join(broadcast(qframe), Seq("__qid"))
-    val ranked = maxSimRank(maxSim(pq.preds.foldLeft(paired)(_ filter _),
-      Seq("__qid", docCol), kernel.pairScore, "score"), docCol)
-    // per-query k rides a tiny broadcast frame joined AFTER the
-    // aggregation (never threaded through it); the effective depth
-    // is least(global, per-query) — the contract of every per-query
-    // knob — with a NULL per-query k falling back to the global and
-    // anything else non-positive raising in-plan ([[checkedLimit]],
-    // the same loud-failure convention as the allow/NUMERIC columns)
-    val limited = pq.kCol match {
-      case Some(c) =>
-        val kf = queries.select(col(qid).as("__qid"),
-          coalesce(checkedLimit(c, "k"), lit(k.toLong)).as("__pk"))
-        ranked.join(broadcast(kf), Seq("__qid"))
-          .filter(col("rn") <= least(lit(k.toLong), col("__pk")))
-          .drop("__pk")
-      case None => ranked.filter(col("rn") <= k)
-    }
-    limited
+    val paired = prune(probes, restricts)
+      .join(broadcast(probes.select(col("__qid"), col("leaf_id")).distinct()),
+        Seq("leaf_id"))
+      .join(broadcast(tokens), Seq("__qid"))
+    maxSimTop(pq.preds.foldLeft(paired)(_ filter _), "__qid" +: pq.carried,
+        docCol, kernel, pq.kCol.fold(lit(k))(_ => least(lit(k), col("__k"))))
       .withColumnRenamed("__qid", qid)
       .select(col(qid), col(docCol), col("score"), col("rn"))
       .orderBy(col(qid), col("rn"))
   }
 
-  /** Batched-MaxSim candidates: the pruned scan joined to the
-    * BROADCAST (qid, leaf) pairs — each qid scans the union of its own
-    * token vectors' leaves; spill copies landing in two probed leaves
-    * collapse in the MAX. */
-  private def maxSimCandidates(probes: DataFrame,
-      restricts: Seq[Column]): DataFrame =
-    prune(probes, restricts).join(
-      broadcast(probes.select(col("__qid"), col("leaf_id")).distinct()),
-      Seq("leaf_id"))
-
-  /** The per-qid rank `rn` (bigint, 1-based, score desc, docCol asc)
-    * of the batched MaxSim surfaces. */
-  private def maxSimRank(scored: DataFrame, docCol: String): DataFrame =
-    scored.withColumn("rn", row_number().over(Window
-      .partitionBy(col("__qid"))
-      .orderBy(col("score").desc, col(docCol))).cast("bigint"))
+  /** Late-interaction scores and ranks over `paired` (candidate rows ×
+    * their query's tokens `__qidx`): per-(group…, doc, token) MAX of
+    * the kernel's pair score, exact-decimal per-(group…, doc) sum →
+    * "score", then ONE [[IvfIndex.top]] per group by (score desc,
+    * docCol asc). A global group (a single request) sums in ONE
+    * partition, which spares its top-k an exchange and a Spark job.
+    * With a BQ `shortlist` m the sign-dot takes the same MAX and sum
+    * beside it and the top-k runs in shortlist mode.
+    * Output: (group…, docCol, score, rn). */
+  private def maxSimTop(paired: DataFrame, groups: Seq[String],
+      docCol: String, kernel: Serving.Kernel, k: Column,
+      shortlist: Option[Int] = None): DataFrame = {
+    val keys = (groups :+ docCol).map(col)
+    val best = max(kernel.pairScore).as("__best") +:
+      shortlist.map(_ => max(signKernel.pairScore).as("__slbest")).toSeq
+    val sums = graft.Exact.dsum(col("__best"), 12).as("score") +:
+      shortlist.map(_ => graft.Exact.dsum(col("__slbest"), 12).as("__sl")).toSeq
+    val perToken = paired.groupBy(keys :+ col("__qidx"): _*)
+      .agg(best.head, best.tail: _*)
+    val perDoc = (if (groups.isEmpty) perToken.repartition(1) else perToken)
+      .groupBy(keys: _*).agg(sums.head, sums.tail: _*)
+    IvfIndex.top(perDoc, groups, docCol, col("score"), k, None,
+      shortlist.map(m => (col("__sl"), m)))
+  }
 
   /** CERTIFIED exact top-k — leaf pruning with a PROOF instead of a
     * recall target (see [[CertifiedSearch]] for the ball bound).
@@ -1229,31 +1028,6 @@ final class Serving private[operators] (
     (topK(ubs.take(m).map(_._1).toSeq), m)
   }
 
-  /** [[searchBatch]] with the SAME selectivity-adaptive pre-filter
-    * decision as [[searchAdaptive]] — the restricts are shared by the
-    * whole batch, so one manifest-stats estimate governs every query:
-    * when they are proven selective, the candidate side is the
-    * stats-skipped restricted scan joined to EVERY query (no routing
-    * pass at all — full recall per query, and the scan is the few
-    * surviving files), otherwise the standard routed batch. Same
-    * output schema/ordering either way.
-    */
-  def searchBatchAdaptive(queries: DataFrame, qid: String,
-      qvecCol: String, nProbe: Int, k: Int, restricts: Seq[Column],
-      crowding: Option[(String, Int)] = None,
-      metadata: Option[(DataFrame, String)] = None,
-      maxExactFraction: Double = 0.05,
-      maxBroadcastQueries: Long = 100000L): DataFrame = {
-    if (!searchAdaptivePlan(restricts, maxExactFraction))
-      searchBatch(queries, qid, qvecCol, nProbe, k, restricts, crowding,
-        metadata)
-    else
-      tail(exactPairs(queryFrame(queries, qid, qvecCol, dotKernel),
-          restricts, dotKernel, crowding.map(_._1).toSeq,
-          fitsBroadcast(queries.select(col(qid)), maxBroadcastQueries)),
-        qid, k, crowding, metadata)
-  }
-
   /** Distributed BATCH search — the reference's batched
     * find_neighbors: top-k for EVERY query row in one plan. Routing
     * runs as the broadcast-f32 probe expression over the query frame
@@ -1303,10 +1077,10 @@ final class Serving private[operators] (
     batch(queries, qid, qvecCol, dotKernel, nProbe, k, restricts, crowding,
       metadata)
 
-  /** [[searchBatch]] with a PER-QUERY leaf-percent override — the
-    * batched form of [[searchPercent]]: the reference deploys with a
-    * `leaf_nodes_to_search_percent` recall knob (config.py:37) and
-    * production find-neighbors APIs let each request OVERRIDE the
+  /** [[searchBatch]] with a PER-QUERY leaf-percent override: the
+    * reference deploys with a `leaf_nodes_to_search_percent` recall
+    * knob (config.py:37) and production find-neighbors APIs let each
+    * request OVERRIDE the
     * fraction of leaves searched, so a mixed batch (one latency-bound
     * tenant at 5%, one recall-bound tenant at 50%) must ride one
     * plan. `pctCol` names a DOUBLE column in (0, 100]; each query
@@ -1435,12 +1209,11 @@ final class Serving private[operators] (
         allowMapPredicates(allow) ++ numSetPredicates(num))
         .map(_.byteFraction).exists(_ <= maxExactFraction)
 
-  /** [[searchBatchPerQuery]] with the SELECTIVITY-ADAPTIVE escape the
-    * batch-wide surface already has ([[searchBatchAdaptive]]) — the
-    * one recall hole of the plain per-query path closed: routing
-    * deliberately ignores restricts, so a query whose allow-map is
-    * ultra-selective hits the classic filtered-ANN failure (its
-    * qualifying rows may ALL live in unprobed leaves). Here the
+  /** [[searchBatchPerQuery]] with the SELECTIVITY-ADAPTIVE escape of
+    * [[searchAdaptive]] — the one recall hole of the plain per-query
+    * path closed: routing deliberately ignores restricts, so a query
+    * whose allow-map is ultra-selective hits the classic filtered-ANN
+    * failure (its qualifying rows may ALL live in unprobed leaves). Here the
     * decision runs PER DISTINCT ALLOW-MAP against the manifest's
     * promoted file stats ([[ServingManifest.estimateAllow]]):
     *
@@ -1464,8 +1237,8 @@ final class Serving private[operators] (
     * plan like an unselective map — every exact map adds a scan
     * branch to the plan), and the exact side's query frame
     * broadcasts only while it provably fits
-    * (`maxBroadcastQueries`, same bounded limit-probe + degrade to
-    * SHUFFLE_REPLICATE_NL as [[searchBatchAdaptive]]). Allow-map
+    * (`maxBroadcastQueries`: a bounded limit-probe, past it the pairs
+    * degrade to SHUFFLE_REPLICATE_NL — [[fitsBroadcast]]). Allow-map
     * keys outside `attrs` fail loudly on the driver (same contract
     * as the in-plan validation).
     */
@@ -1785,35 +1558,6 @@ final class Serving private[operators] (
       metadata, pq)
   }
 
-  /** [[searchBatchPerQueryAdaptive]] on the PQ TIER — selective
-    * constraint sets run the EXACT plan (a stats-skipped scan of the
-    * code table, every surviving pair ADC-scored with the query
-    * rotated in-plan), the rest ride the probed ADC plan; shared tail,
-    * identical output contract to [[searchBatchAdc]]. With `numCol` /
-    * `numAttrs` the split goes COMBINED, as on the SQ8 tier.
-    */
-  def searchBatchAdcAdaptive(queries: DataFrame, qid: String,
-      qvecCol: String, allowCol: String, attrs: Seq[String],
-      nProbe: Int, k: Int, restricts: Seq[Column] = Nil,
-      crowding: Option[(String, Int)] = None,
-      metadata: Option[(DataFrame, String)] = None,
-      kCol: Option[String] = None,
-      capCol: Option[String] = None,
-      maxExactFraction: Double = 0.05,
-      maxDistinctMaps: Int = 1024,
-      maxBroadcastQueries: Long = 100000L,
-      numCol: Option[String] = None,
-      numAttrs: Seq[String] = Nil): DataFrame = {
-    require(tier == "pq",
-      s"searchBatchAdcAdaptive: layout at $path is a '$tier' tier, not PQ")
-    val pq = PerQuery(Some(allowCol), attrs, numCol, numAttrs, kCol, capCol)
-    checkPerQuery("searchBatchAdcAdaptive", pq, crowding,
-      allowRequired = true)
-    adaptiveBatch(queries, qid, qvecCol, adcKernel, nProbe, k, restricts,
-      crowding, metadata, pq, maxExactFraction, maxDistinctMaps,
-      maxBroadcastQueries)
-  }
-
   /** Distributed BATCH search over the SQ8 TIER — [[searchBatchAdc]]
     * with the packed-byte kernel ([[sqKernel]]: each query quantizes
     * in-plan, no driver-side per-query work; every pair scores as the
@@ -1908,6 +1652,13 @@ final class Serving private[operators] (
       "adc_score")
   }
 
+  /** The held layout's own kernel, by [[tier]]. */
+  private def tierKernel: Serving.Kernel = tier match {
+    case "sq" => sqKernel
+    case "pq" => adcKernel
+    case _ => dotKernel
+  }
+
   /** BQ shortlist rung (rides the raw tier): the asymmetric sign-dot
     * of the 8 B/vector codes against the query — stage 1 of every
     * shortlist-then-rescore surface. */
@@ -1984,11 +1735,6 @@ final class Serving private[operators] (
       kernel: Serving.Kernel): DataFrame =
     kernel.decorate.foldLeft(base) { case (df, (n, c)) =>
       df.withColumn(n, c) }
-
-  /** The exact side's query frame: no routing, only the limits. */
-  private def queryFrame(queries: DataFrame, qid: String, qvecCol: String,
-      kernel: Serving.Kernel, pq: PerQuery = PerQuery()): DataFrame =
-    querySelect(queries, qid, qvecCol, kernel, pq.limits).drop("__qraw")
 
   /** The routed PROBE FRAME every single-vector batch surface starts
     * from: one row per (query, probed leaf), carrying the validated
@@ -2155,8 +1901,9 @@ final class Serving private[operators] (
     val small = fitsBroadcast(keyed.filter(col("__mkey").isin(exactKeys: _*))
       .select(col(qid)), maxBroadcastQueries)
     val exact = exactSets.map { case (key, m, n) =>
-      exactPairs(queryFrame(keyed.filter(col("__mkey") === key), qid,
-          qvecCol, kernel, pq),
+      // the exact side's query frame: no routing, only the limits
+      exactPairs(querySelect(keyed.filter(col("__mkey") === key), qid,
+          qvecCol, kernel, pq.limits).drop("__qraw"),
         restricts ++ allowMapPredicates(m) ++ numSetPredicates(n), kernel,
         crowding.map(_._1).toSeq ++ pq.carried, small)
     }

@@ -795,7 +795,8 @@ object QuantizeQueries {
   }
 
   /** MaxSim LATE INTERACTION on the SQ8 TIER
-    * ([[graft.operators.Serving.searchMaxSimSq]]) — the ColBERT
+    * ([[graft.operators.Serving.searchMaxSim]] on an SQ8 layout, which
+    * scores with the tier's own kernel) — the ColBERT
     * operator served from packed byte codes at the 1/4 footprint:
     * score(doc) = Σ_q max over the doc's rows of the QUANTIZED dot
     * (exact integer arithmetic rescaled by the two scales), over the
@@ -853,7 +854,7 @@ object QuantizeQueries {
       .collect().sortBy(_.getLong(0))
       .map(_.getSeq[Double](1).toArray).toSeq
     graft.operators.Serving.open(s, path)
-      .searchMaxSimSq(qvecs, nProbe = 2, k = 5, docCol = "label")
+      .searchMaxSim(qvecs, nProbe = 2, k = 5, docCol = "label")
   }
 
   /** SELECTIVITY-ADAPTIVE PER-QUERY restricts on the SQ8 TIER
@@ -1337,7 +1338,8 @@ object QuantizeQueries {
   }
 
   /** MaxSim LATE INTERACTION on the PQ TIER
-    * ([[graft.operators.Serving.searchMaxSimAdc]]) — the last cell of
+    * ([[graft.operators.Serving.searchMaxSim]] on a PQ layout, which
+    * scores with the tier's own ADC kernel) — the last cell of
     * the MaxSim × tier matrix (raw `v_maxsim`, SQ8 `v_maxsim_sq`,
     * and now ADC at the 64× footprint), WITH the OPQ rotation in the
     * loop: the layout is built in the reversal-rotated space (an
@@ -1345,7 +1347,7 @@ object QuantizeQueries {
     * `v_pq_rotated` trick, so the LEARNED-rotation plumbing is
     * hash-checkable), codebook and rotation persist as sidecars, and
     * the serving call reloads both and rotates each query vector
-    * once on the driver. score(doc) = Σ_q max over the doc's rows of
+    * once, in the token frame. score(doc) = Σ_q max over the doc's rows of
     * the ADC score, over the IVF-pruned union of the probed leaves
     * (probing on the ORIGINAL vectors — rotation changes the coded
     * space, never the router geometry). Every term is
@@ -1435,7 +1437,7 @@ object QuantizeQueries {
       .collect().sortBy(_.getLong(0))
       .map(_.getSeq[Double](1).toArray).toSeq
     graft.operators.Serving.open(s, servePath.toString)
-      .searchMaxSimAdc(qvecs, nProbe = 2, k = 5, docCol = "label")
+      .searchMaxSim(qvecs, nProbe = 2, k = 5, docCol = "label")
   }
 
   /** BATCHED BQ shortlist-then-rescore on the resident handle
@@ -1518,8 +1520,9 @@ object QuantizeQueries {
     * ADC `v_maxsim_adc`, and now the 8 B sign-bit shortlist): stage 1
     * ranks DOCS by the sign-dot MaxSim over the packed codes (per-
     * (doc, qvec) max of ⟨sign(x), q⟩, exact-decimal doc sum) and
-    * keeps the top-5 of the 10 labels; stage 2 re-runs the EXACT
-    * float MaxSim over the 5 survivors only — final scores exact,
+    * keeps the top-5 of the 10 labels; stage 2 ranks the 5 survivors
+    * by the EXACT float MaxSim (both scored on the one scan, ranked
+    * in one shortlist-mode top-k) — final scores exact,
     * the shortlist the only approximation. The oracle replays
     * assignment, the 3 queries' probed-leaf union, both MaxSim
     * stages over ±1 and raw inner products, and both deterministic

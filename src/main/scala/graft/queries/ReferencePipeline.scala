@@ -1706,7 +1706,7 @@ object ReferencePipeline {
     * union of ITS probed leaves (per-qid identical semantics to
     * `v_maxsim_pruned`), collapses the per-(qid, doc, qvec) MAX
     * map-side, sums exact-decimal per (qid, doc), and ranks top-4
-    * per qid in one window. The oracle replays per-(qid, qvec)
+    * per qid in one partial top-k. The oracle replays per-(qid, qvec)
     * probing, the per-qid candidate unions, and both aggregation
     * stages. FULL hash oracle.
     */

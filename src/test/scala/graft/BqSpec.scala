@@ -570,51 +570,4 @@ class BqSpec extends SparkTestBase {
         checkBqCodes = true))
     assert(bare.bqDriftRows == -1L)
   }
-
-  test("searchMaxSimBatchBq: admit-all m == searchMaxSimBatch; " +
-      "tight m matches per-qid searchMaxSimBq — the batched-MaxSim " +
-      "x tier matrix closes at the BQ rung") {
-    import graft.operators.{IvfIndex, Serving}
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
-      col("label"), col("embedding").cast("array<double>").as("v"))
-    val (indexed0, model) = IvfIndex.build(emb, "vec_id", "v", 8)
-    val indexed = indexed0.withColumn("bq_code", bquant.packSigns(col("v")))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bq_maxsimbatch").toString + "/idx"
-    IvfIndex.write(indexed, dir, model)
-    val live = Serving.open(spark, dir, id = "vec_id", vecCol = "v")
-    val byId = emb.filter(col("vec_id") <= 5L)
-      .select(col("vec_id"), col("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val groups = Map(
-      0L -> Seq(byId(0L), byId(1L)),
-      1L -> Seq(byId(2L), byId(3L), byId(4L)),
-      2L -> Seq(byId(5L)))
-    val queries = groups.toSeq.sortBy(_._1).toDF("qid", "qvecs")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(1),
-        r.getDouble(2), r.getLong(3))).toSeq
-    val admitAll = rows(live.searchMaxSimBatchBq(queries, "qid",
-      "qvecs", nProbe = 3, m = 100000, k = 5, docCol = "label"))
-    val rawBatch = rows(live.searchMaxSimBatch(queries, "qid",
-      "qvecs", nProbe = 3, k = 5, docCol = "label"))
-    assert(admitAll == rawBatch,
-      s"admit-all batched BQ MaxSim must reduce to the raw batch:\n" +
-        s"$admitAll\n$rawBatch")
-    // tight m: every qid's rows equal its single-handle BQ MaxSim
-    val tight = live.searchMaxSimBatchBq(queries, "qid", "qvecs",
-        nProbe = 3, m = 4, k = 3, docCol = "label")
-      .collect().groupBy(_.getLong(0))
-      .view.mapValues(_.sortBy(_.getLong(3))
-        .map(r => (r.getInt(1), r.get(2).toString)).toSeq).toMap
-    for ((qid, vs) <- groups) {
-      val per = live.searchMaxSimBq(vs.map(_.toArray), nProbe = 3,
-          m = 4, k = 3, docCol = "label")
-        .collect().map(r => (r.getInt(0), r.get(1).toString)).toSeq
-      assert(tight(qid) == per,
-        s"batched and per-qid BQ MaxSim diverge for $qid:\n" +
-          s"batch=${tight(qid)}\nper=$per")
-    }
-  }
 }

@@ -260,9 +260,9 @@ class PqSpec extends SparkTestBase {
       "batched ADC must equal the per-query ADC path")
   }
 
-  test("searchMaxSimBatchAdc matches per-qid searchMaxSimAdc, query " +
-      "by query, WITH the OPQ rotation in the loop (in-plan rotateExpr " +
-      "== driver-side rotate)") {
+  test("PQ MaxSim batch isolation and routing parity, WITH the OPQ " +
+      "rotation in the loop: each qid of searchMaxSimBatch == " +
+      "searchMaxSim over its own tokens") {
     import graft.operators.{IvfIndex, Serving}
     val emb = Tables.embeddings(spark, sf)
     val base = emb.select(col("vec_id"), col("label"),
@@ -293,14 +293,14 @@ class PqSpec extends SparkTestBase {
       1L -> Seq(byId(2L), byId(3L), byId(4L)),
       2L -> Seq(byId(5L)))
     val queries = groups.toSeq.sortBy(_._1).toDF("qid", "qvecs")
-    val batch = handle.searchMaxSimBatchAdc(queries, "qid", "qvecs",
+    val batch = handle.searchMaxSimBatch(queries, "qid", "qvecs",
         nProbe = 3, k = 5, docCol = "label")
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getLong(3))
         .map(r => (r.getInt(1), r.getDouble(2))).toSeq).toMap
     assert(batch.keySet == groups.keySet)
     for ((qid, vs) <- groups) {
-      val per = handle.searchMaxSimAdc(vs.map(_.toArray), nProbe = 3,
+      val per = handle.searchMaxSim(vs.map(_.toArray), nProbe = 3,
           k = 5, docCol = "label")
         .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
       assert(batch(qid) == per,

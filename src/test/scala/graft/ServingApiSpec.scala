@@ -251,33 +251,6 @@ class ServingApiSpec extends SparkTestBase {
       "MMR picks must come from the fused pool")
   }
 
-  test("searchPercent mirrors the reference's percent knob: pct maps " +
-      "to ceil(pct% of leaves), clamped and loud out of range") {
-    import graft.operators.Serving
-    val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"), lit(1L).as("version"))
-    val (indexed, model) = IvfIndex.build(emb, "vec_id", "v", 8)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_srvpct").toString + "/idx"
-    IvfIndex.write(indexed, dir, model)
-    val handle = Serving.open(spark, dir, vecCol = "v")
-    val q = emb.filter(col("vec_id") === 7)
-      .select("v").head().getSeq[Double](0).toArray
-    // 8 leaves: 25% -> ceil(2) probes; identical to nProbe = 2
-    val viaPct = handle.searchPercent(q, 25.0, 5).collect()
-    val viaN = handle.search(q, 2, 5).collect()
-    assert(viaPct.sameElements(viaN))
-    // 100% == full scan; tiny pct clamps up to 1 probe
-    assert(handle.searchPercent(q, 100.0, 5).collect()
-      .sameElements(handle.search(q, 8, 5).collect()))
-    assert(handle.searchPercent(q, 0.001, 5).collect()
-      .sameElements(handle.search(q, 1, 5).collect()))
-    val boom = intercept[IllegalArgumentException] {
-      handle.searchPercent(q, 0.0, 5)
-    }
-    assert(boom.getMessage.contains("pct"))
-  }
-
   // every batched surface (raw/SQ8/PQ/BQ, MaxSim, MMR, hybrid): routing
   // runs once, in the checkpointed probe frame; the layout scan carries
   // the leaf_id In-list; the layout side never shuffles for a join
@@ -815,32 +788,6 @@ class ServingApiSpec extends SparkTestBase {
     assert(missed.nonEmpty,
       s"construction check: the probed plan should miss filtered rows " +
         s"(probed found ${probed.size} of ${truth.size})")
-
-    // batch surface: one shared decision, each query identical to the
-    // single-query exact plan
-    val qdf = emb.filter(col("vec_id").isin(0L, 5L))
-      .select(col("vec_id").as("qid"), col("v"))
-    val batch = serving.searchBatchAdaptive(qdf, "qid", "v",
-        nProbe = 2, k = 10, restricts = sel, maxExactFraction = 0.5)
-      .collect().groupBy(_.getLong(0))
-    for (q <- Seq(0L, 5L)) {
-      val qv = emb.filter(col("vec_id") === q)
-        .select(col("v")).head().getSeq[Double](0).toArray
-      val single = serving.searchAdaptive(qv, 2, 10, sel,
-          maxExactFraction = 0.5)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val got = batch(q).sortBy(_.getLong(3))
-        .map(r => (r.getLong(1), r.getDouble(2))).toSeq
-      assert(got == single,
-        s"batch-adaptive must equal single-query exact for query $q")
-    }
-    // unselective: the batch decision degrades to the routed plan
-    val loose = Seq(col("version") >= 1)
-    val viaAdaptive = serving.searchBatchAdaptive(qdf, "qid", "v",
-      2, 10, loose, maxExactFraction = 0.5).collect().toSeq
-    val viaRouted = serving.searchBatch(qdf, "qid", "v",
-      2, 10, loose, None, None).collect().toSeq
-    assert(viaAdaptive == viaRouted)
   }
 
   test("searchBatch parity bound on a ROUTER-ENGAGED model") {

@@ -262,8 +262,8 @@ class ServingShapeSpec extends SparkTestBase {
     }
   }
 
-  test("searchBatchAdaptive exact path: past the query threshold the " +
-      "query frame is NOT broadcast (shuffled cartesian), results equal") {
+  test("searchBatchPerQueryAdaptive exact path: past the query threshold " +
+      "the query frame is NOT broadcast (shuffled cartesian), results equal") {
     import graft.operators.ServingManifest
     import graft.streaming.IndexMaintenance
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
@@ -286,20 +286,29 @@ class ServingShapeSpec extends SparkTestBase {
     IndexMaintenance.appendToServing(spark, dir, b1, "vec_id", "v",
       "version", spill = 1)
     val serving = Serving.open(spark, dir, id = "vec_id", vecCol = "v")
-    val sel = Seq(col("version") >= 2)
-    assert(serving.searchAdaptivePlan(sel, 0.5), "setup: selective")
+    // every query carries the same numeric restriction: one selective
+    // set, so the whole batch takes the exact path
+    val sel = Seq(("version", "GE", 2.0))
+    assert(serving.perQueryAdaptivePlanNum(Map.empty, sel, 0.5),
+      "setup: selective")
 
     val qdf = emb.filter(col("vec_id").isin(0L, 5L, 9L, 13L, 17L, 21L))
       .select(col("vec_id").as("qid"), col("v"))
-    val small = serving.searchBatchAdaptive(qdf, "qid", "v", 2, 10, sel,
-      maxExactFraction = 0.5)
+      .withColumn("num", typedLit(sel).cast(
+        "array<struct<attr:string,op:string,v:double>>"))
+      .withColumn("allow", lit(null).cast("map<string,array<string>>"))
+    def adaptive(maxBroadcastQueries: Long) =
+      serving.searchBatchPerQueryAdaptive(qdf, "qid", "v", "allow",
+        Seq.empty, nProbe = 2, k = 10, maxExactFraction = 0.5,
+        maxBroadcastQueries = maxBroadcastQueries, numCol = Some("num"),
+        numAttrs = Seq("version"))
+    val small = adaptive(100000L)
     val smallRows = small.collect().toSeq
     val smallPlan = small.queryExecution.executedPlan.toString
     assert(smallPlan.contains("BroadcastNestedLoopJoin"),
       s"below the threshold the query frame broadcasts:\n$smallPlan")
 
-    val guarded = serving.searchBatchAdaptive(qdf, "qid", "v", 2, 10,
-      sel, maxExactFraction = 0.5, maxBroadcastQueries = 3L)
+    val guarded = adaptive(3L)
     val guardedRows = guarded.collect().toSeq
     val guardedPlan = guarded.queryExecution.executedPlan.toString
     assert(!guardedPlan.contains("BroadcastNestedLoopJoin"),
@@ -311,9 +320,7 @@ class ServingShapeSpec extends SparkTestBase {
 
     // "always broadcast": Long.MaxValue must not overflow the probe
     // limit into a negative limit() that throws at plan time
-    val always = serving.searchBatchAdaptive(qdf, "qid", "v", 2, 10,
-      sel, maxExactFraction = 0.5, maxBroadcastQueries = Long.MaxValue)
-    assert(always.collect().toSet == smallRows.toSet)
+    assert(adaptive(Long.MaxValue).collect().toSet == smallRows.toSet)
   }
 
   test("SQ batch per-query allow/k/cap == per-query searchSq with the " +
@@ -541,75 +548,6 @@ class ServingShapeSpec extends SparkTestBase {
       "the unrestricted query's probed SQ results must be unchanged")
   }
 
-  test("searchBatchAdcAdaptive: the adaptive escape on the PQ tier — " +
-      "exact ADC recall for the selective tenant, probed unchanged") {
-    import graft.operators.ServingManifest
-    import graft.streaming.IndexMaintenance
-    val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"), lit(1L).as("version"))
-    val pqIds = (0 until 16).map(c => c * 31L + 5L)
-    val cb = ProductQuantizer.codebook(
-      Tables.embeddings(spark, sf), "vec_id", "embedding", pqIds)
-    val centIds = Seq(0L, 64L, 128L, 192L, 256L, 320L, 384L, 448L)
-    val cents = emb.filter(col("vec_id").isin(centIds: _*))
-      .select(col("vec_id"), col("v")).collect().sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).toArray)
-    val model = IvfIndex.Model(cents)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_shape_adcadapt").toString + "/idx"
-    val coded = emb
-      .withColumn("leaf_id", explode(IvfIndex.probeExpr(model, col("v"), 1)))
-      .withColumn("pq_code", ProductQuantizer.encodeExpr(col("v"), cb))
-      .drop("v")
-    IvfIndex.write(coded, dir, model)
-    ProductQuantizer.writeCodebook(spark, dir, cb)
-    ServingManifest.promote(spark, dir, Seq("version"))
-    val planted = emb.filter(col("vec_id") % 30 === 7)
-      .withColumn("vec_id", col("vec_id") + 200000)
-      .withColumn("v", transform(col("v"), x => -x))
-      .withColumn("version", lit(2L))
-    IndexMaintenance.appendCodedToServing(spark, dir, planted,
-      "vec_id", "v", "version")
-    val serving = Serving.open(spark, dir)
-    assert(serving.tier == "pq")
-    val selective = Map("version" -> Seq("2"))
-    assert(serving.perQueryAdaptivePlan(selective, 0.45))
-    assert(!serving.perQueryAdaptivePlan(Map("version" -> Seq("1")), 0.45))
-
-    val q0 = emb.filter(col("vec_id") === 0L)
-      .select("v").head().getSeq[Double](0).toArray
-    val allows = Seq(
-      (0L, Some(selective)),
-      (21L, None: Option[Map[String, Seq[String]]])).toDF("qid", "allow")
-    val queries = emb.filter(col("vec_id").isin(0L, 21L))
-      .select(col("vec_id").as("qid"), col("v")).join(allows, "qid")
-
-    def ids(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val adaptive = ids(serving.searchBatchAdcAdaptive(queries, "qid", "v",
-      "allow", Seq("version"), nProbe = 2, k = 10,
-      maxExactFraction = 0.45))
-    val plain = ids(serving.searchBatchAdc(queries, "qid", "v",
-      nProbe = 2, k = 10, allowCol = Some("allow"),
-      attrs = Seq("version")))
-
-    // exact filtered top-10 under the ADC kernel
-    val expected = serving.data.filter(col("version") === 2L)
-      .select(col("vec_id"), ProductQuantizer.adcDirectExpr(
-        col("pq_code"), typedLit(q0.toSeq), cb).as("s"))
-      .groupBy("vec_id").agg(max("s").as("s"))
-      .orderBy(col("s").desc, col("vec_id")).limit(10)
-      .collect().map(_.getLong(0)).toSet
-    assert(adaptive(0L) == expected,
-      s"ADC adaptive must return the exact filtered top-k:\n" +
-        s"got=${adaptive(0L)}\nexact=$expected")
-    assert(plain.getOrElse(0L, Set.empty) != expected,
-      "setup: the probed ADC plan must actually miss planted rows")
-    assert(adaptive(21L) == plain(21L),
-      "the unrestricted query's probed ADC results must be unchanged")
-  }
-
   test("searchBatchPerQuery with numeric restricts == per-query " +
       "searchBatch with the equivalent column comparisons") {
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
@@ -827,88 +765,12 @@ class ServingShapeSpec extends SparkTestBase {
     }
   }
 
-  test("searchBatchAdcAdaptive with numeric restricts: a selective " +
-      "range set escapes to exact ADC recall, probed side unchanged") {
-    import graft.operators.ServingManifest
-    import graft.streaming.IndexMaintenance
-    val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
-      col("embedding").cast("array<double>").as("v"), lit(1L).as("version"))
-    val pqIds = (0 until 16).map(c => c * 31L + 5L)
-    val cb = ProductQuantizer.codebook(
-      Tables.embeddings(spark, sf), "vec_id", "embedding", pqIds)
-    val centIds = Seq(0L, 64L, 128L, 192L, 256L, 320L, 384L, 448L)
-    val cents = emb.filter(col("vec_id").isin(centIds: _*))
-      .select(col("vec_id"), col("v")).collect().sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).toArray)
-    val model = IvfIndex.Model(cents)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_shape_adcnumadapt").toString + "/idx"
-    val coded = emb
-      .withColumn("leaf_id", explode(IvfIndex.probeExpr(model, col("v"), 1)))
-      .withColumn("pq_code", ProductQuantizer.encodeExpr(col("v"), cb))
-      .drop("v")
-    IvfIndex.write(coded, dir, model)
-    ProductQuantizer.writeCodebook(spark, dir, cb)
-    ServingManifest.promote(spark, dir, Seq("version"))
-    val planted = emb.filter(col("vec_id") % 30 === 7)
-      .withColumn("vec_id", col("vec_id") + 200000)
-      .withColumn("v", transform(col("v"), x => -x))
-      .withColumn("version", lit(2L))
-    IndexMaintenance.appendCodedToServing(spark, dir, planted,
-      "vec_id", "v", "version")
-    val serving = Serving.open(spark, dir)
-    assert(serving.tier == "pq")
-    val sel = Seq(("version", "GE", 2.0))
-    assert(serving.perQueryAdaptivePlanNum(Map.empty, sel, 0.45))
-    assert(!serving.perQueryAdaptivePlanNum(Map.empty,
-      Seq(("version", "EQ", 1.0)), 0.45))
-
-    val q0 = emb.filter(col("vec_id") === 0L)
-      .select("v").head().getSeq[Double](0).toArray
-    val tenants = Seq(
-      (0L, Seq(("version", "GE", 2.0))),
-      (21L, Seq.empty[(String, String, Double)])).toDF("qid", "num")
-      .withColumn("num", when(size(col("num")) > 0, expr(
-        "transform(num, r -> " +
-          "named_struct('attr', r._1, 'op', r._2, 'v', r._3))")))
-      .withColumn("allow", lit(null).cast("map<string,array<string>>"))
-    val queries = emb.filter(col("vec_id").isin(0L, 21L))
-      .select(col("vec_id").as("qid"), col("v")).join(tenants, "qid")
-
-    def ids(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
-      df.collect().groupBy(_.getLong(0))
-        .view.mapValues(_.map(_.getLong(1)).toSet).toMap
-    val adaptive = ids(serving.searchBatchAdcAdaptive(queries, "qid", "v",
-      "allow", Seq.empty, nProbe = 2, k = 10, maxExactFraction = 0.45,
-      numCol = Some("num"), numAttrs = Seq("version")))
-    val plain = ids(serving.searchBatchAdc(queries, "qid", "v",
-      nProbe = 2, k = 10, numCol = Some("num"),
-      numAttrs = Seq("version")))
-
-    val expected = serving.data.filter(col("version").cast("double") >= 2.0)
-      .select(col("vec_id"), ProductQuantizer.adcDirectExpr(
-        col("pq_code"), typedLit(q0.toSeq), cb).as("s"))
-      .groupBy("vec_id").agg(max("s").as("s"))
-      .orderBy(col("s").desc, col("vec_id")).limit(10)
-      .collect().map(_.getLong(0)).toSet
-    assert(adaptive(0L) == expected,
-      s"ADC numeric adaptive must return the exact filtered top-k:\n" +
-        s"got=${adaptive(0L)}\nexact=$expected")
-    assert(plain.getOrElse(0L, Set.empty) != expected,
-      "setup: the probed ADC plan must actually miss planted rows")
-    assert(adaptive(21L) == plain(21L),
-      "the unrestricted query's probed ADC results must be unchanged")
-  }
-
   test("numeric-only adaptive batches with NO provably-selective set " +
       "fall back to the probed plan on both coded tiers (regression: " +
       "the fallback crashed on the public entry's allowCol contract)") {
     import graft.operators.ServingManifest
     val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"), lit(1L).as("version"))
-    val pqIds = (0 until 16).map(c => c * 31L + 5L)
-    val cb = ProductQuantizer.codebook(
-      Tables.embeddings(spark, sf), "vec_id", "embedding", pqIds)
     val (indexed, model) = IvfIndex.build(emb, "vec_id", "v", 8)
     import graft.functions.quantize
     val sqDir = java.nio.file.Files
@@ -918,14 +780,7 @@ class ServingShapeSpec extends SparkTestBase {
       .withColumn("sq_code",
         quantize.packCodes(quantize.codes(col("v"), col("ma"))))
       .drop("v"), sqDir, model)
-    val adcDir = java.nio.file.Files
-      .createTempDirectory("graft_shape_numfall_adc").toString + "/idx"
-    IvfIndex.write(indexed
-      .withColumn("pq_code", ProductQuantizer.encodeExpr(col("v"), cb))
-      .drop("v"), adcDir, model)
-    ProductQuantizer.writeCodebook(spark, adcDir, cb)
     ServingManifest.promote(spark, sqDir, Seq("version"))
-    ServingManifest.promote(spark, adcDir, Seq("version"))
 
     // version EQ 1.0 matches EVERY file — provably unselective, so
     // collectAdaptiveSets returns nothing and the whole batch must ride
@@ -941,27 +796,20 @@ class ServingShapeSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
-    for ((dir, name) <- Seq((sqDir, "sq"), (adcDir, "pq"))) {
-      val serving = Serving.open(spark, dir)
-      assert(!serving.perQueryAdaptivePlanNum(Map.empty,
-        Seq(("version", "EQ", 1.0)), 0.45), s"setup ($name): the EQ-1 " +
-        "set must be unselective or this spec proves nothing")
-      val (adaptive, probed) = if (name == "sq") (
-        rows(serving.searchBatchSqAdaptive(queries, "qid", "v", "allow",
-          Seq.empty, nProbe = 3, k = 5, maxExactFraction = 0.45,
-          numCol = Some("num"), numAttrs = Seq("version"))),
-        rows(serving.searchBatchSq(queries, "qid", "v", nProbe = 3,
-          k = 5, numCol = Some("num"), numAttrs = Seq("version"))))
-      else (
-        rows(serving.searchBatchAdcAdaptive(queries, "qid", "v", "allow",
-          Seq.empty, nProbe = 3, k = 5, maxExactFraction = 0.45,
-          numCol = Some("num"), numAttrs = Seq("version"))),
-        rows(serving.searchBatchAdc(queries, "qid", "v", nProbe = 3,
-          k = 5, numCol = Some("num"), numAttrs = Seq("version"))))
-      assert(adaptive.nonEmpty, s"$name: fallback returned nothing")
-      assert(adaptive.sortBy(_._4) == probed.sortBy(_._4),
-        s"$name: the no-escape fallback must equal the probed batch")
-    }
+    // the PQ tier has no adaptive batch surface; the fallback is the
+    // one shared adaptive core, reached here through the SQ8 entry
+    val serving = Serving.open(spark, sqDir)
+    assert(!serving.perQueryAdaptivePlanNum(Map.empty,
+      Seq(("version", "EQ", 1.0)), 0.45), "setup: the EQ-1 " +
+      "set must be unselective or this spec proves nothing")
+    val adaptive = rows(serving.searchBatchSqAdaptive(queries, "qid", "v",
+      "allow", Seq.empty, nProbe = 3, k = 5, maxExactFraction = 0.45,
+      numCol = Some("num"), numAttrs = Seq("version")))
+    val probed = rows(serving.searchBatchSq(queries, "qid", "v", nProbe = 3,
+      k = 5, numCol = Some("num"), numAttrs = Seq("version")))
+    assert(adaptive.nonEmpty, "fallback returned nothing")
+    assert(adaptive.sortBy(_._4) == probed.sortBy(_._4),
+      "the no-escape fallback must equal the probed batch")
   }
 
   test("the numeric exact escape READS only the stats-surviving " +

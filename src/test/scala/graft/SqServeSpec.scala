@@ -147,8 +147,9 @@ class SqServeSpec extends SparkTestBase {
       "batched SQ must equal the per-query packed path")
   }
 
-  test("searchMaxSimBatchSq matches per-qid searchMaxSimSq, query by " +
-      "query (in-plan token quantization == driver-side packLocal)") {
+  test("SQ8 MaxSim batch isolation and routing parity: each qid of " +
+      "searchMaxSimBatch == searchMaxSim over its own tokens; allow-map " +
+      "and per-qid k bind on this tier") {
     val base = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -172,14 +173,14 @@ class SqServeSpec extends SparkTestBase {
       1L -> Seq(byId(2L), byId(3L), byId(4L)),
       2L -> Seq(byId(5L)))
     val queries = groups.toSeq.sortBy(_._1).toDF("qid", "qvecs")
-    val batch = live.searchMaxSimBatchSq(queries, "qid", "qvecs",
+    val batch = live.searchMaxSimBatch(queries, "qid", "qvecs",
         nProbe = 3, k = 5, docCol = "label")
       .collect().groupBy(_.getLong(0))
       .view.mapValues(_.sortBy(_.getLong(3))
         .map(r => (r.getInt(1), r.getDouble(2))).toSeq).toMap
     assert(batch.keySet == groups.keySet)
     for ((qid, vs) <- groups) {
-      val per = live.searchMaxSimSq(vs.map(_.toArray), nProbe = 3,
+      val per = live.searchMaxSim(vs.map(_.toArray), nProbe = 3,
           k = 5, docCol = "label")
         .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
       assert(batch(qid) == per,
@@ -191,9 +192,9 @@ class SqServeSpec extends SparkTestBase {
     val q1 = Seq((0L, groups(0L).map(_.toSeq),
         Option(Map("label" -> Seq("0", "2", "4", "6", "8"))), 2))
       .toDF("qid", "qvecs", "allow", "k")
-    val knobbed = live.searchMaxSimBatchSq(q1, "qid", "qvecs",
-        nProbe = 3, k = 5, docCol = "label",
-        allow = Some(("allow", Seq("label"))), kCol = Some("k"))
+    val knobbed = live.searchMaxSimBatchPerQuery(q1, "qid", "qvecs",
+        "allow", Seq("label"), nProbe = 3, k = 5, docCol = "label",
+        kCol = Some("k"))
       .collect()
     assert(knobbed.length == 2, "per-qid k=2 must clamp")
     knobbed.foreach(r =>

@@ -11,6 +11,9 @@ under `parsed`, as in BENCH_r18.json). A row
 value is seconds, or a {min, med, max} triplet whose `med` is used. Rows
 whose before value is 0 (or missing) have no ratio and are skipped.
 
+Exits 2 with a one-line reason on a missing argument, an unreadable
+record, a record with no rows, or two records that share no row.
+
 Each record's run conditions (`loadavg_start`, `cpus`, `heap_mb`, `env`,
 `contended`) print first; a row listed in either record's
 `contended_rows` is starred, since its ratio may be load, not code.
@@ -23,15 +26,29 @@ import sys
 CONDITIONS = ("loadavg_start", "cpus", "heap_mb", "env", "contended")
 
 
+def fail(msg):
+    print(f"bench_compare: {msg}", file=sys.stderr)
+    sys.exit(2)
+
+
 def load(path):
     """({row name: seconds}, the record's fields) of one record, either
-    shape."""
-    rec = json.load(open(path))
+    shape; exit 2 when it has no rows."""
+    try:
+        rec = json.load(open(path))
+    except OSError as e:
+        fail(f"cannot read {path}: {e.strerror}")
+    except ValueError:
+        fail(f"{path} is not JSON")
+    if not isinstance(rec, dict):
+        fail(f"{path} is not a bench record")
     if rec.get("queries") is None:
         rec = rec.get("parsed") or {}
     queries = rec.get("queries")
     if queries is None:
-        sys.exit(f"{path}: no 'queries' (top level or under 'parsed')")
+        fail(f"{path}: no 'queries' (top level or under 'parsed')")
+    if not queries:
+        fail(f"{path}: 'queries' holds no rows")
     return ({k: v["med"] if isinstance(v, dict) else v
              for k, v in queries.items()}, rec)
 
@@ -43,19 +60,24 @@ def geomean(ratios):
 
 
 def main() -> None:
-    (before, brec), (after, arec) = load(sys.argv[1]), load(sys.argv[2])
+    paths = [a for a in sys.argv[1:] if a != "--md"]
+    if len(paths) != 2:
+        fail("usage: bench_compare.py <before.json> <after.json> [--md]")
+    (before, brec), (after, arec) = load(paths[0]), load(paths[1])
     md = "--md" in sys.argv
-    for side, path, rec in (("before", sys.argv[1], brec),
-                            ("after", sys.argv[2], arec)):
-        cond = " ".join(f"{c}={rec.get(c, 'n/a')}" for c in CONDITIONS)
-        print(f"{side:6s} {path}: {cond}")
     contended = (set(brec.get("contended_rows") or ())
                  | set(arec.get("contended_rows") or ()))
-    print(f"* = contended in either record ({len(contended)} rows)\n")
     rows = [(k + ("*" if k in contended else ""), before[k], after[k],
              after[k] / before[k])
             for k in sorted(before)
             if k in after and before[k] and after[k] is not None]
+    if not rows:
+        fail(f"{paths[0]} and {paths[1]} share no row with a before value")
+    for side, path, rec in (("before", paths[0], brec),
+                            ("after", paths[1], arec)):
+        cond = " ".join(f"{c}={rec.get(c, 'n/a')}" for c in CONDITIONS)
+        print(f"{side:6s} {path}: {cond}")
+    print(f"* = contended in either record ({len(contended)} rows)\n")
     if md:
         print("| query | before s | after s | ratio |")
         print("|---|---|---|---|")
